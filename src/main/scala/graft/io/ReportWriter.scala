@@ -15,13 +15,19 @@ object ReportWriter {
 
   private val Bom = Array[Byte](0xEF.toByte, 0xBB.toByte, 0xBF.toByte)
 
+  /** RFC 4180 quoting: a quote inside a quoted field is doubled
+    * (`"a""b"`), as pandas `to_csv` (`cli.py:350-352`), Go
+    * `encoding/csv` and Excel write and expect. Spark's default escape
+    * is a backslash (`"a\"b"`). */
+  private val CsvOptions = Map("header" -> "true", "escape" -> "\"")
+
   /** Write a (already sorted) DataFrame as ONE csv file with header and
     * UTF-8 BOM at `outFile`. `coalesce(1)` is safe here: the report is
     * bounded (misses, further top-k-cappable) — never call this on an
     * unbounded result. */
   def writeCsvReport(df: DataFrame, outFile: String): Unit = {
     val tmp = outFile + ".spark-tmp"
-    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(tmp)
+    df.coalesce(1).write.mode("overwrite").options(CsvOptions).csv(tmp)
     val part = new File(tmp).listFiles()
       .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
       .getOrElse(sys.error(s"no csv part file under $tmp"))
@@ -44,7 +50,7 @@ object ReportWriter {
     * corrupt the first header name (`﻿用户输入`); normalize it. */
   def readCsvReport(spark: org.apache.spark.sql.SparkSession,
                     path: String): DataFrame = {
-    val df = spark.read.option("header", "true").csv(path)
+    val df = spark.read.options(CsvOptions).csv(path)
     df.columns.headOption match {
       case Some(first) if first.startsWith("﻿") =>
         df.withColumnRenamed(first, first.substring(1))

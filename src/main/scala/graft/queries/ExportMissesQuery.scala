@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
 /** The `export-misses` query (`cli.py:317-359`,
   * `analyzer.go:181-264`): mispredictions (rank > 0), projected and
   * renamed to the Chinese report headers, annotated with the per-text
-  * miss frequency, sorted (frequency desc, input asc).
+  * miss frequency, sorted (frequency desc, input asc). [[run]] reads
+  * the log once per request, however many actions the caller runs.
   */
 object ExportMissesQuery {
 
@@ -66,11 +67,22 @@ object ExportMissesQuery {
 
   /** Full pipeline on a commit-filtered DataFrame. Output columns in the
     * canonical report order (`analyzer.go:202` + pandas' appended
-    * frequency column) regardless of join strategy. */
+    * frequency column) regardless of join strategy.
+    *
+    * The projected miss rows are pinned with a lazy
+    * `localCheckpoint(false)`: `run` starts no job, and the first job
+    * of the first action parses the log once and stores the rows. The
+    * frequency build, the join's probe side and the sort of every
+    * action (`count()`, then the CSV write) read the pinned blocks:
+    * one scan per request, like Go's single read
+    * (`analyzer.go:230-237`). Not `cache()`: the cache manager matches
+    * plans by file path and would serve the next request over a grown
+    * log stale rows. The context cleaner unpersists the pin once the
+    * returned frame is garbage-collected. */
   def run(commits: DataFrame, window: Boolean = false,
           extraCols: Seq[String] = Nil): DataFrame =
-    sorted(withFrequency(misses(commits, extraCols), window),
-      tieBreak = extraCols)
+    sorted(withFrequency(misses(commits, extraCols).localCheckpoint(false),
+      window), tieBreak = extraCols)
       .select((extraCols ++
         Seq(ColInput, ColActual, ColPredicted, ColRank, ColFreq)).map(col): _*)
 }

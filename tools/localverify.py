@@ -6,9 +6,14 @@ compares with the Spark parquet dumps produced by graft.Verify:
 column-name-sorted, row-sorted, exact value compare.
 
 Usage: python3 tools/localverify.py <sfDir> <verifyOutDir>
+
+With SPARK_GRAFT_ONLY=<name,...> set (the same comma-separated list
+graft.Verify honours), only the named entries are checked; a named
+entry without a dump still FAILs.
 """
 import json
 import math
+import os
 import sys
 
 import duckdb
@@ -40,12 +45,24 @@ def eq(a, b):
     return a == b
 
 
+def selected_names():
+    """SPARK_GRAFT_ONLY as SparkEntry.selectedQueries parses it, or
+    None when unset (check everything)."""
+    only = os.environ.get("SPARK_GRAFT_ONLY")
+    if only is None:
+        return None
+    return {n.strip() for n in only.split(",") if n.strip()}
+
+
 def main(sf_dir, out_dir):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    names = selected_names()
+    if names is not None:
+        oracle = {n: q for n, q in oracle.items() if n in names}
     n_ok = n_bad = 0
     for name, sql in sorted(oracle.items()):
         try:
@@ -98,10 +115,10 @@ def main(sf_dir, out_dir):
             n_ok += 1
     # rows-only check for entries without an oracle (mirrors the
     # driver's weaker gate)
-    import os
     for name in sorted(os.listdir(out_dir)):
         path = os.path.join(out_dir, name)
-        if not os.path.isdir(path) or name in oracle:
+        if not os.path.isdir(path) or name in oracle or (
+                names is not None and name not in names):
             continue
         try:
             n = len(con.sql(f"SELECT * FROM '{path}/*.parquet'").df())
@@ -111,6 +128,10 @@ def main(sf_dir, out_dir):
             print(f"{status} {name} (rows-only: {n} rows)")
         except Exception as e:
             print(f"FAIL {name}: rows-only unreadable: {e}")
+            n_bad += 1
+    for name in sorted((names or set()) - set(oracle)):
+        if not os.path.isdir(os.path.join(out_dir, name)):
+            print(f"FAIL {name}: no oracle and no spark output")
             n_bad += 1
     print(f"== {n_ok} ok, {n_bad} fail ==")
     return 1 if n_bad else 0
