@@ -1,22 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.Verify.jsonString
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // ~80 queries in one JVM: without periodic cleanup the shuffle
-      // files and broadcast blocks of earlier queries pile up and a
-      // random later query pays their GC bill as a multi-second spike
-      // (observed moving between unrelated queries run-to-run).
+    // ~80 queries in one JVM: without periodic cleanup the shuffle
+    // files and broadcast blocks of earlier queries pile up and a
+    // random later query pays their GC bill as a multi-second spike
+    // (observed moving between unrelated queries run-to-run).
+    val spark = GraftSession.builder()
       .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // The TIMED ACTION (round-13 verdict finding 1): `.count()` lets
@@ -34,12 +28,6 @@ object Bench {
     def exec(df: org.apache.spark.sql.DataFrame): Unit =
       if (benchAction == "count") { df.count(); () }
       else df.write.mode("overwrite").format("noop").save()
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
     // warm-up: JIT + codegen + parquet footer caches on the smallest SF,
     // so the timed run measures the queries, not JVM warm-up. Warm-up
     // failures are logged (not fatal): a silently-skipped warm-up would
@@ -191,12 +179,12 @@ object Bench {
     // file) for the same reason.
     val fullJson = {
       val qsFull = ok.map { case (k, v, _) =>
-        s"${jstr(k)}:${fmt("%.4f", v)}" }.mkString("{", ",", "}")
+        s"${jsonString(k)}:${fmt("%.4f", v)}" }.mkString("{", ",", "}")
       val errsFull = failed.map { case (k, m) =>
-        s"${jstr(k)}:${jstr(m)}" }.mkString("{", ",", "}")
+        s"${jsonString(k)}:${jsonString(m)}" }.mkString("{", ",", "}")
       val ctrsFull = counterLines.map { case (k, line) =>
-        s"${jstr(k)}:${jstr(line)}" }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt("%.4f", total)},"unit":"sec","queries":$qsFull,"errors":$errsFull,"counters":$ctrsFull,"sf":${jstr(sfDir)}}"""
+        s"${jsonString(k)}:${jsonString(line)}" }.mkString("{", ",", "}")
+      s"""{"metric":"total","value":${fmt("%.4f", total)},"unit":"sec","queries":$qsFull,"errors":$errsFull,"counters":$ctrsFull,"sf":${jsonString(sfDir)}}"""
     }
     // fixed path (the sf is recorded INSIDE the file; the driver runs
     // one bench at a time) — every byte of the contract line counts
@@ -208,7 +196,7 @@ object Bench {
       .map(b => f"$b%02x").mkString
     val errsInline = {
       val shown = failed.take(5).map { case (k, m) =>
-        s"${jstr(shortKey(k))}:${jstr(m.take(80))}" }
+        s"${jsonString(shortKey(k))}:${jsonString(m.take(80))}" }
       val extra =
         if (failed.size > 5) Seq(s""""_more":${failed.size - 5}""")
         else Seq.empty
@@ -232,10 +220,10 @@ object Bench {
           val om = if (omitted > 0) s""","q_omitted":$omitted""" else ""
           s""","queries":${inline.mkString("{", ",", "}")}$om"""
         }
-      s"""{"metric":"total","value":${sec(total)},"unit":"sec"$q,"errors":$errsInline,"full":${jstr(outPath.toString)},"sha":"$digest","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${sec(total)},"unit":"sec"$q,"errors":$errsInline,"full":${jsonString(outPath.toString)},"sha":"$digest","sf":"$sfDir"}"""
     }
     val byCost = ok.sortBy(-_._2)
-      .map { case (k, v, _) => s"${jstr(shortKey(k))}:${sec(v)}" }
+      .map { case (k, v, _) => s"${jsonString(shortKey(k))}:${sec(v)}" }
     val packed = scala.collection.mutable.ArrayBuffer[String]()
     byCost.foreach { e =>
       if (contract((packed :+ e).toSeq, ok.size - packed.size - 1)

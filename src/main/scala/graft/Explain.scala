@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev/audit tool: print the formatted physical plan of named queries
   * (all queries when no names given). Usage:
   *   sbt "runMain graft.Explain [sfDir] [name ...]"
@@ -11,12 +9,9 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.start()
+    // the plans are the output: keep WARN lines (global-Window "No
+    // Partition Defined" and the like) from interleaving with them
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"==== $name ====")

@@ -579,7 +579,7 @@ object SparkEntry {
     * [[dedupArtifacts]] (compute the graph per corpus snapshot,
     * compose reports over it). The k-row PMI result feeds BOTH frames
     * and its lineage is the corpus token scan, so both are pinned
-    * (the round-10 PprRehearsal A/B: 5.1 → 1.9 s at sf0.1,
+    * (PLANS.md "PPR + g8 rehearsal" A/B: 5.1 → 1.9 s at sf0.1,
     * labels identical). Returns (edges(id_a, id_b), words(word, id)). */
   private def wordGraph(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) =
@@ -10756,7 +10756,7 @@ object SparkEntry {
       Some(duckDominantDirSqlWith(withDelta = true))),
 
     // e19 at the PRODUCTION WIDTH, driver-verified (r13 verdict task
-    // 5 — the DominantDirectionRehearsal promoted to an oracle
+    // 5 — PLANS.md "e19 scale rehearsal" promoted to an oracle
     // entry): d = 1024, a width e18's driver form REFUSES, over a
     // deterministic synthetic covariance planted in-plan as the
     // d(d+1)/2 upper-triangle cell frame e17 would produce:

@@ -2,6 +2,7 @@ package graft.cli
 
 import java.nio.file.{Files, Paths}
 
+import graft.GraftSession
 import graft.config.LoggerConfig
 import graft.io.{EventLogReader, ReportWriter}
 import graft.queries.{AnalyzeQuery, ConsoleReport, ExportMissesQuery}
@@ -52,15 +53,7 @@ object Main {
       println(s"❌ 未找到日志文件: $logPath")
       sys.exit(1)
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("rime-graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     try cmd match {
       case "analyze" =>
         println(ConsoleReport.format(

@@ -236,8 +236,9 @@ object Eval {
     * (localCheckpoint) frame and keeps the contract loud: past it
     * the input has violated the quantization contract and must fail
     * EARLY, not grind through a corpus-sized "distinct-value" frame
-    * that was supposed to be a summary. DriftRehearsal exercises the
-    * celled path at this cap with planted-truth shift distributions. */
+    * that was supposed to be a summary. PLANS.md "celledCums scale
+    * rehearsal" measures the celled path at this cap with
+    * planted-truth shift distributions. */
   private[graft] val MaxWindowValues: Long = 1L << 22
 
   /** The guarded constant-join key the FromCounts bodies thread their

@@ -97,8 +97,8 @@ object GraphOps {
     * the per-iteration rounding can sustain a small limit cycle
     * instead of reaching delta 0 — measured on the sf0.1 near-dup
     * graph: delta falls 1.1e6 → 4 over ~75 rounds, then cycles at
-    * amplitude 4 forever (HubRehearsal; PLANS.md "Hub-skew
-    * rehearsal"). Production runs should therefore set epsMicro to a
+    * amplitude 4 forever (PLANS.md "Hub-skew rehearsal").
+    * Production runs should therefore set epsMicro to a
     * few micro-units (noise-floor scale, ~1e-6 of a unit rank —
     * far below any ranking decision) rather than 0, and check the
     * `converged` flag of [[pageRankUntilStats]] instead of trusting
@@ -467,7 +467,8 @@ object GraphOps {
     * Shape at scale: identical to the census — degree-ordered wedge
     * enumeration (each triangle materializes exactly once, at its
     * (deg, id)-minimal apex; a 10k-degree hub yields wedges bounded by
-    * its ORIENTED out-degree, the HubRehearsal result), then each
+    * its ORIENTED out-degree, as measured in PLANS.md "Hub-skew
+    * rehearsal"), then each
     * closed wedge fans out to its 3 member vertices and a map-side
     * combining count folds them. No window anywhere; the explode is
     * 3× the triangle count, not the wedge count. */
@@ -683,9 +684,10 @@ object GraphOps {
     *
     * Shape at scale: triangles enumerate ONCE each at their
     * (degree, id)-minimal apex (the [[localClusteringMicro]] wedge
-    * machinery — hub wedges bounded by oriented out-degree, the
-    * HubRehearsal result), then each closed wedge fans out to its 3
-    * member edges carrying the OPPOSITE vertex as the common neighbor;
+    * machinery — hub wedges bounded by oriented out-degree, as
+    * measured in PLANS.md "Hub-skew rehearsal"), then each closed
+    * wedge fans out to its 3 member edges carrying the OPPOSITE vertex
+    * as the common neighbor;
     * a map-side-combining aggregation on the normalized edge key folds
     * the credits, and the degree frame joins back co-partitioned on
     * keys the plan already carries. No window, no all-pairs — cost is

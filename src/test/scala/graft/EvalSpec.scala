@@ -1611,6 +1611,20 @@ class EvalSpec extends AnyFunSuite {
     assert(d.getLong(3) === 0L && d.getDouble(5) === 0.0)
   }
 
+  test("kmvSetOps above k: planted overlap, estimates within tolerance") {
+    // A = [0, 2000), B = [1500, 3500): union 3500 and intersection 500
+    // by construction, both past k = 1024, so the estimates come from
+    // overflowing sketches (union σ ≈ 3%; the intersection inherits
+    // the sampled Jaccard's noise). The md5 hash fixes every estimate.
+    val df = spark.range(3500).select(col("id").as("u"),
+      (col("id") < 2000L).as("a"), (col("id") >= 1500L).as("b"))
+    val r = Eval.kmvSetOps(df, col("u"), col("a"), col("b"), k = 1024)
+      .head()
+    assert(r.getLong(2) === 3500L && r.getLong(3) === 500L, s"$r")
+    assert(math.abs(r.getDouble(4) / 3500.0 - 1.0) < 0.15, s"$r")
+    assert(math.abs(r.getDouble(5) / 500.0 - 1.0) < 0.30, s"$r")
+  }
+
   test("mcnemar: golden counts and the never-disagree contract") {
     val s = spark
     import s.implicits._

@@ -236,6 +236,50 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(census(byDeg = false) === ((200L, wedgeTotal)))
   }
 
+  // two bridged 4-cliques plus a disjoint 50-leaf star on hub 1000:
+  // the near-dup graph with a boilerplate hub welded on, at fixture size
+  private val clean = (for (c <- Seq(1L, 5L); a <- c to c + 3L;
+    b <- (a + 1) to c + 3L) yield (a, b)) :+ ((4L, 5L))
+  private val hubId = 1000L
+  private val star = (1L to 50L).map(i => (hubId, hubId + i))
+
+  test("welded star: LPA leaves agree, embeddedness unchanged, " +
+    "assortativity drops") {
+    val hubbed = pairs(clean ++ star: _*)
+    // a star is bipartite: synchronous LPA swaps hub and leaf labels
+    // each round, but every leaf sees the same neighborhood, so the
+    // leaves share one label and the star carries at most two
+    val lpa = ranks(GraphOps.labelPropagation(hubbed, "id_a", "id_b", 3))
+    assert(star.map(e => lpa(e._2)).toSet.size === 1, lpa.toString)
+    assert((star.map(e => lpa(e._2)) :+ lpa(hubId)).toSet.size <= 2)
+    // the degree orientation points every leaf edge AT the hub, so the
+    // star adds no wedge and no supported edge
+    def supported(df: org.apache.spark.sql.DataFrame) =
+      GraphOps.edgeEmbeddedness(df, "id_a", "id_b")
+        .filter(col("cn_cnt") > 0).count()
+    assert(supported(hubbed) === supported(pairs(clean: _*)))
+    // a pure star is perfectly disassortative; welding one on drags r
+    def r(df: org.apache.spark.sql.DataFrame) =
+      GraphOps.degreeAssortativity(df, "id_a", "id_b").head().getDouble(1)
+    assert(r(pairs(star: _*)) === -1.0)
+    assert(r(hubbed) < r(pairs(clean: _*)))
+  }
+
+  test("personalizedPageRank under a welded star: leaves tie, " +
+    "clean-seeded ranks unchanged, no mass leaks into the star") {
+    val hubbed = pairs(clean ++ star: _*)
+    val hubSeeded = ranks(GraphOps.personalizedPageRankMicro(
+      hubbed, "id_a", "id_b", seeds = Seq(hubId)))
+    val leafRanks = star.map(e => hubSeeded(e._2)).toSet
+    assert(leafRanks.size === 1 && leafRanks.head > 0L, hubSeeded.toString)
+    val onClean = ranks(GraphOps.personalizedPageRankMicro(
+      pairs(clean: _*), "id_a", "id_b", seeds = Seq(1L)))
+    val onHubbed = ranks(GraphOps.personalizedPageRankMicro(
+      hubbed, "id_a", "id_b", seeds = Seq(1L)))
+    assert(onHubbed.filter(_._1 < hubId) === onClean)
+    assert(onHubbed.filter(_._1 >= hubId).values.forall(_ === 0L))
+  }
+
   test("localClusteringMicro: per-vertex counts on a known graph") {
     val s = spark
     import s.implicits._
@@ -726,6 +770,8 @@ class GraphOpsSpec extends AnyFunSuite {
     // loop exits below the cap — true convergence, not cap exhaustion
     val conv = GraphOps.louvainConverged(p, "id_a", "id_b",
       maxLevels = 8).collect()
+    // labels compose across levels, never expand: one row per node
+    assert(conv.length === 12)
     val labels = conv.map(r => r.getLong(0) -> r.getLong(1)).toMap
     val nLevels = conv.map(r => r.getLong(2)).distinct
     assert(nLevels === Array(4L), conv.mkString(","))

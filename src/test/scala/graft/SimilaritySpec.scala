@@ -727,6 +727,39 @@ class SimilaritySpec extends AnyFunSuite {
     assert(d1 >= deltas.head, s"d1=$d1 d5=${deltas.head}")
   }
 
+  test("dominantDirectionFromCov refuses d > 256; the distributed " +
+    "form recovers a planted spike at that width") {
+    val s = spark
+    import s.implicits._
+    // C = a·uuᵀ + b·I at d = 300, u supported on dims {0, 150, 299}:
+    // the diagonal gives every dimension its cell, the spike's six
+    // upper-triangle cells are exact integers, and off-support cells
+    // are zero (absent), so the frame is d + 3 rows
+    val d = 300
+    val b = 1000L
+    val u = Map(0L -> 1.0, 150L -> -0.5, 299L -> 0.75)
+    val spike = for ((i, ui) <- u.toSeq; (j, uj) <- u.toSeq if i <= j)
+      yield (i, j) -> math.round(1e6 * ui * uj)
+    val cells = (0L until d).map(i => (i, i) -> 0L).toMap ++ spike
+    val cov = cells.toSeq.map { case ((i, j), c) =>
+        (i, j, 1L, c + (if (i == j) b else 0L))
+      }.toDF("i", "j", "n_vecs", "cov_micro")
+    val ex = intercept[IllegalArgumentException] {
+      Similarity.dominantDirectionFromCov(cov, iters = 5)
+    }
+    assert(ex.getMessage.contains(s"d=$d > 256"), ex.getMessage)
+    val out = Similarity.dominantDirectionDistributed(cov, iters = 5)
+      .collect()
+    assert(out.length === d)
+    val v = out.map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the iterate is u scaled to max |u| = 1e6; λ = a·|u|² + b
+    assert(u.keys.map(i => i -> v(i)).toMap ===
+      u.map { case (i, ui) => i -> math.round(1e6 * ui) })
+    assert(v.removedAll(u.keys).values.forall(_ === 0L), v.toString)
+    assert(out.head.getLong(2) === 1812500L + b)
+    assert(out.head.getLong(3) === 0L, "delta_micro")
+  }
+
   test("covarianceMicro: plan is join-free (map-side pair terms)") {
     val s = spark
     import s.implicits._
