@@ -297,14 +297,6 @@ object SparkEntry {
     * `withDelta` appends e19's convergence residual
     * max|v5 − v4| (exact integers — the same replay, one more CTE). */
   private def duckDominantDirSqlWith(withDelta: Boolean): String = {
-    val steps = (1 to 5).map { t =>
-      s"""w$t AS (SELECT fm.i AS j,
-         |    sum(CAST(fm.c AS HUGEINT) * vp.v) AS w
-         |  FROM fm JOIN v${t - 1} vp ON vp.j = fm.j GROUP BY fm.i),
-         |m$t AS (SELECT max(abs(w)) AS m FROM w$t),
-         |v$t AS (SELECT j, CAST(round(1e6 * (CAST(w AS DOUBLE)
-         |    / CAST(m AS DOUBLE))) AS BIGINT) AS v FROM w$t, m$t)"""
-    }.mkString(",\n")
     val deltaCte = if (withDelta)
       """,
         |dl AS (SELECT CAST(max(abs(v5.v - v4.v)) AS BIGINT) AS d
@@ -313,20 +305,7 @@ object SparkEntry {
     val deltaCol =
       if (withDelta) ",\n  dl.d AS delta_micro" else ""
     val deltaFrom = if (withDelta) ", dl" else ""
-    s"""WITH e AS (SELECT vec_id,
-       |    CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |fl AS (SELECT vec_id, CAST(t.i - 1 AS BIGINT) AS i,
-       |    CAST(round(v[t.i] * 1e6) AS BIGINT) AS x
-       |  FROM e, unnest(generate_series(1, len(v))) AS t(i)),
-       |pr AS (SELECT a.i, b.i AS j, CAST(a.x AS HUGEINT) AS x,
-       |    CAST(b.x AS HUGEINT) AS y
-       |  FROM fl a JOIN fl b
-       |    ON a.vec_id = b.vec_id AND a.i <= b.i),
-       |ag AS (SELECT i, j, CAST(count(*) AS BIGINT) AS n_vecs,
-       |    coalesce(sum(x), 0) AS sx,
-       |    coalesce(sum(y), 0) AS sy,
-       |    coalesce(sum(x * y), 0) AS sxy
-       |  FROM pr GROUP BY i, j),
+    s"""WITH $duckCovMomentCtes,
        |cm AS (SELECT i, j,
        |  CAST(round(CAST(n_vecs * sxy - sx * sy AS DOUBLE)
        |    / (CAST(n_vecs AS DOUBLE) * n_vecs * 1e6)) AS BIGINT)
@@ -335,7 +314,7 @@ object SparkEntry {
        |       UNION ALL SELECT j, i, c FROM cm WHERE i <> j),
        |v0 AS (SELECT DISTINCT i AS j, CAST(1000000 AS BIGINT) AS v
        |  FROM fm),
-       |$steps$deltaCte
+       |$duckPowerSteps$deltaCte
        |SELECT v5.j AS dim, v5.v AS v_micro,
        |  CAST(round(CAST(m5.m AS DOUBLE) / 1e6) AS BIGINT)
        |    AS lambda_micro$deltaCol
@@ -434,16 +413,7 @@ object SparkEntry {
           .as("n_lt"),
         sum(when(col("v") <= col("est_chars"), 1L).otherwise(0L))
           .as("n_le"))
-      .withColumn("target_rank", least(col("n"),
-        greatest(lit(1L), expr("(500 * n + 999) div 1000"))))
-      .withColumn("rank_err",
-        when(col("target_rank").between(col("n_lt") + 1L,
-          col("n_le")), 0L)
-          .otherwise(least(
-            abs(col("target_rank") - col("n_lt") - 1L),
-            abs(col("target_rank") - col("n_le")))))
-      .withColumn("bound",
-        greatest(lit(2L), expr(s"(8 * n + ${k - 1}) div $k")))
+      .transform(withRankErr(_, "500", k))
       .select(col("source"), col("n"), col("est_chars"),
         col("target_rank"), col("rank_err"), col("bound"),
         (col("rank_err") <= col("bound")).as("within_bound"),
@@ -462,10 +432,7 @@ object SparkEntry {
   private def kllAuditFrame(vals: DataFrame,
                             st: graft.functions.KllState,
                             k: Int): DataFrame = {
-    import graft.functions.KllSketch
-    val ests = Seq(10L, 250L, 500L, 750L, 990L)
-      .map(q => (q, KllSketch.quantileOf(st, q).getOrElse(0L)))
-    val nRet = KllSketch.numRetained(st).toLong
+    val (ests, nRet) = kllEstimates(st)
     vals.select(col("v"), explode(typedlit(ests)).as("e"))
       .select(col("e._1").as("q_permille"),
         col("e._2").as("est_cents"), col("v"))
@@ -475,15 +442,7 @@ object SparkEntry {
           .as("n_lt"),
         sum(when(col("v") <= col("est_cents"), 1L).otherwise(0L))
           .as("n_le"))
-      .withColumn("target_rank", least(col("n"),
-        greatest(lit(1L), expr("(q_permille * n + 999) div 1000"))))
-      .withColumn("rank_err",
-        when(col("target_rank").between(col("n_lt") + 1L, col("n_le")),
-          0L)
-          .otherwise(least(abs(col("target_rank") - col("n_lt") - 1L),
-            abs(col("target_rank") - col("n_le")))))
-      .withColumn("bound",
-        greatest(lit(2L), expr(s"(8 * n + ${k - 1}) div $k")))
+      .transform(withRankErr(_, "q_permille", k))
       .select(col("q_permille"), col("est_cents"), col("n"),
         col("target_rank"), col("rank_err"), col("bound"),
         (col("rank_err") <= col("bound")).as("within_bound"),
@@ -504,21 +463,8 @@ object SparkEntry {
       .select(col("source"), col("est_chars"), col("n_retained"),
         col("v"), greatest(col("w"), lit(0L)).as("w"))
       .groupBy("source", "est_chars", "n_retained")
-      .agg(coalesce(sum(col("w")), lit(0L)).as("n"),
-        coalesce(sum(when(col("v") < col("est_chars"), col("w"))
-          .otherwise(0L)), lit(0L)).as("n_lt"),
-        coalesce(sum(when(col("v") <= col("est_chars"), col("w"))
-          .otherwise(0L)), lit(0L)).as("n_le"))
-      .withColumn("target_rank", least(col("n"),
-        greatest(lit(1L), expr("(500 * n + 999) div 1000"))))
-      .withColumn("rank_err",
-        when(col("target_rank").between(col("n_lt") + 1L,
-          col("n_le")), 0L)
-          .otherwise(least(
-            abs(col("target_rank") - col("n_lt") - 1L),
-            abs(col("target_rank") - col("n_le")))))
-      .withColumn("bound",
-        greatest(lit(2L), expr(s"(8 * n + ${k - 1}) div $k")))
+      .agg(weightedRankCounts.head, weightedRankCounts.tail: _*)
+      .transform(withRankErr(_, "500", k))
       .select(col("source"), col("n").as("w_total"), col("est_chars"),
         col("target_rank"), col("rank_err"), col("bound"),
         (col("rank_err") <= col("bound")).as("within_bound"),
@@ -536,29 +482,14 @@ object SparkEntry {
   private def weightedKllAuditFrame(vals: DataFrame,
                                     st: graft.functions.KllState,
                                     k: Int): DataFrame = {
-    import graft.functions.KllSketch
-    val ests = Seq(10L, 250L, 500L, 750L, 990L)
-      .map(q => (q, KllSketch.quantileOf(st, q).getOrElse(0L)))
-    val nRet = KllSketch.numRetained(st).toLong
+    val (ests, nRet) = kllEstimates(st)
     vals.select(col("v"), col("w"), explode(typedlit(ests)).as("e"))
       .select(col("e._1").as("q_permille"),
         col("e._2").as("est_chars"), col("v"),
         greatest(col("w"), lit(0L)).as("w"))
       .groupBy("q_permille", "est_chars")
-      .agg(coalesce(sum(col("w")), lit(0L)).as("n"),
-        coalesce(sum(when(col("v") < col("est_chars"), col("w"))
-          .otherwise(0L)), lit(0L)).as("n_lt"),
-        coalesce(sum(when(col("v") <= col("est_chars"), col("w"))
-          .otherwise(0L)), lit(0L)).as("n_le"))
-      .withColumn("target_rank", least(col("n"),
-        greatest(lit(1L), expr("(q_permille * n + 999) div 1000"))))
-      .withColumn("rank_err",
-        when(col("target_rank").between(col("n_lt") + 1L, col("n_le")),
-          0L)
-          .otherwise(least(abs(col("target_rank") - col("n_lt") - 1L),
-            abs(col("target_rank") - col("n_le")))))
-      .withColumn("bound",
-        greatest(lit(2L), expr(s"(8 * n + ${k - 1}) div $k")))
+      .agg(weightedRankCounts.head, weightedRankCounts.tail: _*)
+      .transform(withRankErr(_, "q_permille", k))
       .select(col("q_permille"), col("est_chars"), col("n").as("w_total"),
         col("target_rank"), col("rank_err"), col("bound"),
         (col("rank_err") <= col("bound")).as("within_bound"),
@@ -599,10 +530,10 @@ object SparkEntry {
         (edges, words)
       })
 
-  /** The g8/g13/g14 oracle's shared graph derivation: corpus → PMI
-    * top-300 → hashed edge list (te normalized, ed both directions)
-    * and the word↔id map (wm) — ONE text so the three graph reports
-    * cannot drift onto different graphs. */
+  /** The word-graph oracles' shared derivation (d60, g8, g13, g14,
+    * g15): corpus → PMI top-300 → hashed edge list (te normalized, ed
+    * both directions) and the word↔id map (wm) — ONE text so the graph
+    * reports cannot drift onto different graphs. */
   private lazy val duckWordGraphCtes: String =
     s"""tk AS (SELECT str_split(text, ' ') AS toks
        |  FROM documents),
@@ -709,15 +640,7 @@ object SparkEntry {
     * every consumer (EWMA, ACF, Ljung–Box, MASE), the SQL twin of
     * the Scala side's single `bucketMeansMicro` builder. */
   private lazy val duckSeriesCtes: String =
-    """eb AS (SELECT
-      |    epoch_us(ts) // 3600000000 AS x,
-      |    CAST(round(value * 1e6) AS HUGEINT) AS v
-      |  FROM events
-      |  WHERE ts IS NOT NULL AND value IS NOT NULL
-      |    AND NOT isnan(value)),
-      |bb AS (SELECT x, CAST(count(*) AS HUGEINT) AS c,
-      |    coalesce(sum(v), 0) AS s
-      |  FROM eb GROUP BY x),
+    s"""${duckHourlySums("x")},
       |mm AS (SELECT x, CAST(round(CAST(s AS DOUBLE) / c)
       |    AS BIGINT) AS m FROM bb)""".stripMargin
 
@@ -865,7 +788,16 @@ object SparkEntry {
   /** The g7/g9 oracle: 3 unrolled PPR rounds over the verified pair
     * graph, shared verbatim by the dense and sparse entries — the
     * oracle is what pins that the plan choice never moves a rank. */
-  private lazy val pprOracleSql: String =
+  private lazy val pprOracleSql: String = {
+    val rounds = (1 to 3).map { r =>
+      s"""ppr$r AS (SELECT pge.dst AS id, CAST(
+         |      CASE WHEN pge.dst IN (SELECT id FROM pgs)
+         |        THEN 150000 ELSE 0 END
+         |      + ROUND(0.85 * SUM(ppr${r - 1}.r // pgd.deg)) AS BIGINT)
+         |      AS r
+         |    FROM pge JOIN ppr${r - 1} ON ppr${r - 1}.id = pge.src
+         |    JOIN pgd ON pgd.src = pge.src GROUP BY pge.dst)""".stripMargin
+    }.mkString(",\n")
     s"""WITH ${duckLshVerifiedCtes("documents", 0.3)},
        |pgs AS (SELECT id FROM (SELECT id_a AS id FROM vpairs
        |        UNION SELECT id_b FROM vpairs) u
@@ -879,30 +811,11 @@ object SparkEntry {
        |      (SELECT id FROM pgs) THEN 1000000 ELSE 0 END
        |      AS BIGINT) AS r
        |    FROM pgd),
-       |ppr1 AS (SELECT pge.dst AS id, CAST(
-       |      CASE WHEN pge.dst IN (SELECT id FROM pgs)
-       |        THEN 150000 ELSE 0 END
-       |      + ROUND(0.85 * SUM(ppr0.r // pgd.deg)) AS BIGINT)
-       |      AS r
-       |    FROM pge JOIN ppr0 ON ppr0.id = pge.src
-       |    JOIN pgd ON pgd.src = pge.src GROUP BY pge.dst),
-       |ppr2 AS (SELECT pge.dst AS id, CAST(
-       |      CASE WHEN pge.dst IN (SELECT id FROM pgs)
-       |        THEN 150000 ELSE 0 END
-       |      + ROUND(0.85 * SUM(ppr1.r // pgd.deg)) AS BIGINT)
-       |      AS r
-       |    FROM pge JOIN ppr1 ON ppr1.id = pge.src
-       |    JOIN pgd ON pgd.src = pge.src GROUP BY pge.dst),
-       |ppr3 AS (SELECT pge.dst AS id, CAST(
-       |      CASE WHEN pge.dst IN (SELECT id FROM pgs)
-       |        THEN 150000 ELSE 0 END
-       |      + ROUND(0.85 * SUM(ppr2.r // pgd.deg)) AS BIGINT)
-       |      AS r
-       |    FROM pge JOIN ppr2 ON ppr2.id = pge.src
-       |    JOIN pgd ON pgd.src = pge.src GROUP BY pge.dst)
+       |$rounds
        |SELECT id AS doc_id, r AS rank_micro FROM ppr3
        |ORDER BY rank_micro DESC, doc_id ASC
        |LIMIT 500""".stripMargin
+  }
 
   /** The d56 demo model: 512 micro-integer hashed-feature weights +
     * bias from a fixed integer recurrence — deterministic, so the SAME
@@ -964,7 +877,7 @@ object SparkEntry {
     * llm_pretrain_full capstone so the replayed stage cannot drift
     * between them. */
   private def duckCurateCtes: String =
-    """t AS (SELECT doc_id, str_split(text,' ') AS toks
+    s"""t AS (SELECT doc_id, str_split(text,' ') AS toks
       |  FROM documents),
       |ga AS (SELECT doc_id, list_distinct(list_transform(
       |    generate_series(1, greatest(len(toks)-12, 0)),
@@ -993,25 +906,7 @@ object SparkEntry {
       |band AS (SELECT doc_id FROM d2, n2
       |  WHERE CAST(TRUNC(CAST(sll - ntok * lln AS DOUBLE) / ntok)
       |    AS BIGINT) > -1500000),
-      |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-      |  FROM embeddings),
-      |nrm AS (SELECT vec_id,
-      |    list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-      |      AS nv
-      |  FROM e),
-      |p AS (SELECT vec_id AS pid, v AS pv FROM e
-      |  WHERE vec_id BETWEEN 1 AND 4),
-      |b AS (SELECT nrm.vec_id,
-      |    CAST(SUM(CASE WHEN list_dot_product(nrm.nv, p.pv) > 0
-      |      THEN (CAST(1 AS BIGINT) << (p.pid - 1)) ELSE 0 END)
-      |      AS BIGINT) AS bucket
-      |  FROM nrm, p GROUP BY nrm.vec_id),
-      |dr AS (SELECT DISTINCT c.vec_id AS did
-      |  FROM b a JOIN b c ON a.bucket = c.bucket
-      |    AND a.vec_id < c.vec_id
-      |  JOIN nrm na ON na.vec_id = a.vec_id
-      |  JOIN nrm nc ON nc.vec_id = c.vec_id
-      |  WHERE ROUND(list_dot_product(na.nv, nc.nv), 6) > 0.4),
+      |$duckSemDupCtes,
       |flt AS (SELECT doc_id, text, lang, n_chars FROM documents
       |  WHERE doc_id IN (SELECT doc_id FROM ngkeep)
       |    AND doc_id IN (SELECT doc_id FROM band)
@@ -1100,26 +995,7 @@ object SparkEntry {
     * shared VERBATIM by d66 (one-shot) and d68 (append-only index
     * replay): the replay's contract IS equality with the one-shot. */
   private def duckWinnowPairsSql: String =
-    s"""WITH t AS (SELECT doc_id, str_split(text,' ') AS toks
-       |  FROM documents),
-       |pg AS (SELECT doc_id,
-       |    unnest(generate_series(1, greatest(len(toks)-3, 0)))
-       |      AS pos,
-       |    unnest(list_transform(
-       |      generate_series(1, greatest(len(toks)-3, 0)),
-       |      i -> array_to_string(toks[i:i+3], ' '))) AS gram
-       |  FROM t),
-       |ph AS (SELECT doc_id, pos, ${duckHash60("gram")} AS h
-       |  FROM pg),
-       |ky AS (SELECT doc_id, pos,
-       |    CAST(h AS HUGEINT) * 16777216 + (16777216 - pos)
-       |      AS key FROM ph),
-       |sw AS (SELECT doc_id, pos, MIN(key) OVER (
-       |    PARTITION BY doc_id ORDER BY pos
-       |    ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS skey
-       |  FROM ky),
-       |sel AS (SELECT DISTINCT doc_id, skey FROM sw
-       |  WHERE pos >= 5),
+    s"""WITH $duckWinnowKeyCtes,
        |fh AS (SELECT DISTINCT doc_id, skey // 16777216 AS h
        |  FROM sel),
        |wdf AS (SELECT h FROM fh GROUP BY h
@@ -1136,52 +1012,17 @@ object SparkEntry {
     * buckets — shared VERBATIM by q82 (one-shot) and q83 (stream
     * replay): the replay's contract IS equality with the one-shot. */
   private def duckBinsegSql: String =
-    """WITH eb AS (SELECT
-      |    epoch_us(ts) // 3600000000 AS bucket,
-      |    CAST(round(value * 1e6) AS HUGEINT) AS v
-      |  FROM events
-      |  WHERE ts IS NOT NULL AND value IS NOT NULL
-      |    AND NOT isnan(value)),
-      |bb AS (SELECT bucket, CAST(count(*) AS HUGEINT) AS c,
-      |    coalesce(sum(v), 0) AS s
-      |  FROM eb GROUP BY bucket),
-      |cw AS (SELECT bucket,
-      |    sum(c) OVER (ORDER BY bucket) AS cc,
-      |    sum(s) OVER (ORDER BY bucket) AS cs,
-      |    sum(c) OVER () AS tc,
-      |    sum(s) OVER () AS ts_,
-      |    CAST(count(*) OVER () AS BIGINT) AS nb
-      |  FROM bb),
-      |rt AS (SELECT bucket AS cp_bucket, nb,
-      |    tc * cs - ts_ * cc AS d
-      |  FROM cw ORDER BY abs(tc * cs - ts_ * cc) DESC,
-      |    bucket ASC LIMIT 1),
+    s"""WITH ${duckHourlySums("bucket")},
+      |${duckCusumWalk("cw", "bb")},
+      |${duckCusumSplit("rt", "cw")},
       |lb AS (SELECT * FROM bb
       |  WHERE bucket <= (SELECT cp_bucket FROM rt)),
-      |lw AS (SELECT bucket,
-      |    sum(c) OVER (ORDER BY bucket) AS cc,
-      |    sum(s) OVER (ORDER BY bucket) AS cs,
-      |    sum(c) OVER () AS tc,
-      |    sum(s) OVER () AS ts_,
-      |    CAST(count(*) OVER () AS BIGINT) AS nb
-      |  FROM lb),
-      |lt AS (SELECT bucket AS cp_bucket, nb,
-      |    tc * cs - ts_ * cc AS d
-      |  FROM lw ORDER BY abs(tc * cs - ts_ * cc) DESC,
-      |    bucket ASC LIMIT 1),
+      |${duckCusumWalk("lw", "lb")},
+      |${duckCusumSplit("lt", "lw")},
       |rb AS (SELECT * FROM bb
       |  WHERE bucket > (SELECT cp_bucket FROM rt)),
-      |rw AS (SELECT bucket,
-      |    sum(c) OVER (ORDER BY bucket) AS cc,
-      |    sum(s) OVER (ORDER BY bucket) AS cs,
-      |    sum(c) OVER () AS tc,
-      |    sum(s) OVER () AS ts_,
-      |    CAST(count(*) OVER () AS BIGINT) AS nb
-      |  FROM rb),
-      |rr AS (SELECT bucket AS cp_bucket, nb,
-      |    tc * cs - ts_ * cc AS d
-      |  FROM rw ORDER BY abs(tc * cs - ts_ * cc) DESC,
-      |    bucket ASC LIMIT 1)
+      |${duckCusumWalk("rw", "rb")},
+      |${duckCusumSplit("rr", "rw")}
       |SELECT CAST(1 AS BIGINT) AS level, 'root' AS segment,
       |  cp_bucket, nb AS n_buckets, CAST(d AS DOUBLE) AS cusum
       |FROM rt
@@ -1226,12 +1067,7 @@ object SparkEntry {
        |lcand AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
        |  FROM lband a JOIN lband b2
        |    ON a.b = b2.b AND a.h = b2.h AND a.doc_id < b2.doc_id),
-       |vtok AS (SELECT doc_id AS id,
-       |    unnest(list_distinct(str_split(text, ' '))) AS t
-       |  FROM $rel),
-       |vsz AS (SELECT doc_id AS id,
-       |    len(list_distinct(str_split(text, ' '))) AS n
-       |  FROM $rel),
+       |${duckTokSzCtes("vtok", "vsz", rel)},
        |vinter AS (SELECT c.id_a, c.id_b, count(*) AS i
        |  FROM lcand c
        |  JOIN vtok ta ON ta.id = c.id_a
@@ -1275,18 +1111,8 @@ object SparkEntry {
        |gcand AS (SELECT DISTINCT a.doc_id AS id_new,
        |    b2.doc_id AS id_corpus
        |  FROM gnband a JOIN gcband b2 ON a.b = b2.b AND a.h = b2.h),
-       |gntok AS (SELECT doc_id AS id,
-       |    unnest(list_distinct(str_split(text, ' '))) AS t
-       |  FROM $newRel),
-       |gnsz AS (SELECT doc_id AS id,
-       |    len(list_distinct(str_split(text, ' '))) AS n
-       |  FROM $newRel),
-       |gctok AS (SELECT doc_id AS id,
-       |    unnest(list_distinct(str_split(text, ' '))) AS t
-       |  FROM $corpusRel),
-       |gcsz AS (SELECT doc_id AS id,
-       |    len(list_distinct(str_split(text, ' '))) AS n
-       |  FROM $corpusRel),
+       |${duckTokSzCtes("gntok", "gnsz", newRel)},
+       |${duckTokSzCtes("gctok", "gcsz", corpusRel)},
        |ginter AS (SELECT c.id_new, c.id_corpus, count(*) AS i
        |  FROM gcand c
        |  JOIN gntok ta ON ta.id = c.id_new
@@ -1300,6 +1126,885 @@ object SparkEntry {
        |  WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= $threshold)"""
       .stripMargin
   }
+
+  /** The d35/d37/d41 fragment probes: 12-token slices of every 97th
+    * long document, re-keyed past the corpus ids. */
+  private def containmentFrags(docs: DataFrame): DataFrame =
+    docs
+      .filter(pmod(col("doc_id"), lit(97L)) === 0 &&
+        size(split(col("text"), " ")) >= 40)
+      .select((col("doc_id") + 1000000L).as("doc_id"),
+        concat_ws(" ", slice(split(col("text"), " "), 9, 12))
+          .as("text"))
+
+  /** [[containmentFrags]]'s oracle twin, as a bare SELECT. */
+  private lazy val duckFragSelect: String =
+    """SELECT doc_id + 1000000 AS doc_id,
+      |    array_to_string(str_split(text, ' ')[9:20], ' ') AS text
+      |  FROM documents
+      |  WHERE doc_id % 97 = 0
+      |    AND len(str_split(text, ' ')) >= 40""".stripMargin
+
+  /** CTE `name`: each `rel` doc's distinct word 3-gram shingles
+    * (id, sh) — the prefix-containment oracles' shingle set. */
+  private def duckShingleCte(name: String, rel: String): String =
+    s"""$name AS (SELECT doc_id AS id, unnest(list_distinct(
+       |    list_transform(
+       |      generate_series(0, greatest(len(toks) - 3, 0)),
+       |      i -> array_to_string(toks[i+1:i+3], ' ')))) AS sh
+       |  FROM (SELECT doc_id, str_split(text, ' ') AS toks
+       |        FROM $rel) t)""".stripMargin
+
+  /** CTEs `tok` (id, t: each distinct token) and `sz` (id, n: the
+    * distinct-token count) over `rel`'s (doc_id, text) — the exact
+    * token-set verify step every Jaccard/containment oracle shares. */
+  private def duckTokSzCtes(tok: String, sz: String, rel: String): String =
+    s"""$tok AS (SELECT doc_id AS id,
+       |    unnest(list_distinct(str_split(text, ' '))) AS t
+       |  FROM $rel),
+       |$sz AS (SELECT doc_id AS id,
+       |    len(list_distinct(str_split(text, ' '))) AS n
+       |  FROM $rel)""".stripMargin
+
+  /** d37/d41's shared oracle: [[containmentFrags]] probed against the
+    * whole corpus at containment threshold `t` — each fragment's
+    * ((1 − t)·1e6·nsh) div 1e6 + 3 rarest shingles (integer micro-units)
+    * against the corpus shingle index, then exact token containment
+    * both ways. */
+  private def duckContainmentGateSql(t: Double): String = {
+    val tMicro = math.round(t * 1e6)
+    s"""WITH frag AS (
+       |  $duckFragSelect),
+       |${duckShingleCte("fsh", "frag")},
+       |${duckShingleCte("gsh", "documents")},
+       |gdf AS (SELECT sh, count(*) AS df FROM gsh GROUP BY sh),
+       |fnsh AS (SELECT id, count(*) AS nsh FROM fsh GROUP BY id),
+       |fpre AS (SELECT id, sh, nsh AS pnsh FROM (
+       |    SELECT fsh.id, fsh.sh,
+       |      row_number() OVER (PARTITION BY fsh.id
+       |        ORDER BY COALESCE(gdf.df, 0), fsh.sh) AS rk,
+       |      fnsh.nsh
+       |    FROM fsh LEFT JOIN gdf USING (sh)
+       |    JOIN fnsh ON fnsh.id = fsh.id) r
+       |  WHERE rk <= (${1000000 - tMicro} * nsh) // 1000000 + 3),
+       |gnsh AS (SELECT id, count(*) AS nsh FROM gsh GROUP BY id),
+       |gcand AS (SELECT DISTINCT p.id AS id_a, x.id AS id_b
+       |  FROM fpre p JOIN gsh x ON x.sh = p.sh
+       |  JOIN gnsh xn ON xn.id = x.id
+       |    AND xn.nsh * 1000000 >= $tMicro * p.pnsh - 1000000),
+       |${duckTokSzCtes("ftok", "fsz", "frag")},
+       |${duckTokSzCtes("gtok", "gsz", "documents")},
+       |ginter AS (SELECT c.id_a, c.id_b, count(*) AS i
+       |  FROM gcand c
+       |  JOIN ftok ta ON ta.id = c.id_a
+       |  JOIN gtok tb ON tb.id = c.id_b AND tb.t = ta.t
+       |  GROUP BY c.id_a, c.id_b),
+       |gc AS (SELECT id_a, id_b,
+       |    ROUND(CAST(i AS DOUBLE) / sa.n, 6) AS c_ab,
+       |    ROUND(CAST(i AS DOUBLE) / sb.n, 6) AS c_ba
+       |  FROM ginter
+       |  JOIN fsz sa ON sa.id = id_a
+       |  JOIN gsz sb ON sb.id = id_b)
+       |SELECT id_a, id_b, c_ab, c_ba FROM gc
+       |WHERE c_ab >= $t OR c_ba >= $t
+       |ORDER BY id_a, id_b LIMIT 2000""".stripMargin
+  }
+
+  /** The two-sample drift oracles' pinned-reference split: value
+    * counts of source src0 (`a`) and of the rest (`b`) full-outer
+    * joined over the value domain (`g`: v, ca, cb) — the SQL twin of
+    * Eval.referenceValueCounts + the *AgainstReference join. */
+  private lazy val duckRefCountsCtes: String =
+    """a AS (SELECT n_chars AS v,
+      |    CAST(count(*) AS BIGINT) AS ca
+      |  FROM documents WHERE source = 'src0' GROUP BY 1),
+      |b AS (SELECT n_chars AS v,
+      |    CAST(count(*) AS BIGINT) AS cb
+      |  FROM documents WHERE source <> 'src0' GROUP BY 1),
+      |g AS (SELECT COALESCE(a.v, b.v) AS v,
+      |    COALESCE(a.ca, 0) AS ca, COALESCE(b.cb, 0) AS cb
+      |  FROM a FULL OUTER JOIN b ON a.v = b.v)""".stripMargin
+
+  /** The q45/q49 KS statistic over a value-count CTE `g` (v, ca, cb):
+    * max integer CDF gap, one floor division at the end. */
+  private lazy val duckKsTail: String =
+    """c AS (SELECT v, sum(ca) OVER (ORDER BY v) AS cum_a,
+      |    sum(cb) OVER (ORDER BY v) AS cum_b
+      |  FROM g),
+      |t AS (SELECT CAST(sum(ca) AS BIGINT) AS na,
+      |    CAST(sum(cb) AS BIGINT) AS nb,
+      |    CAST(count(*) AS BIGINT) AS nvals
+      |  FROM g),
+      |d AS (SELECT CAST(max(abs(cum_a * nb - cum_b * na))
+      |      AS BIGINT) AS dnum, na, nb, nvals
+      |  FROM c, t GROUP BY na, nb, nvals)
+      |SELECT CASE WHEN na > 0 AND nb > 0
+      |    THEN (1000000 * dnum) // (na * nb) END AS ks_micro,
+      |  na AS n_a, nb AS n_b, nvals AS n_values
+      |FROM d""".stripMargin
+
+  /** Events' hourly value-micro buckets: `eb` (key, v) and `bb` (key,
+    * c, s) with the hour bucket named `key` — the prefix of the series
+    * ([[duckSeriesCtes]]) and CUSUM oracles. */
+  private def duckHourlySums(key: String): String =
+    s"""eb AS (SELECT
+       |    epoch_us(ts) // 3600000000 AS $key,
+       |    CAST(round(value * 1e6) AS HUGEINT) AS v
+       |  FROM events
+       |  WHERE ts IS NOT NULL AND value IS NOT NULL
+       |    AND NOT isnan(value)),
+       |bb AS (SELECT $key, CAST(count(*) AS HUGEINT) AS c,
+       |    coalesce(sum(v), 0) AS s
+       |  FROM eb GROUP BY $key)""".stripMargin
+
+  /** CTE `name`: the CUSUM walk over bucket relation `rel` (bucket, c,
+    * s) — running and total count/sum plus the bucket count. */
+  private def duckCusumWalk(name: String, rel: String): String =
+    s"""$name AS (SELECT bucket,
+       |    sum(c) OVER (ORDER BY bucket) AS cc,
+       |    sum(s) OVER (ORDER BY bucket) AS cs,
+       |    sum(c) OVER () AS tc,
+       |    sum(s) OVER () AS ts_,
+       |    CAST(count(*) OVER () AS BIGINT) AS nb
+       |  FROM $rel)""".stripMargin
+
+  /** CTE `name`: the max-|CUSUM| split of walk `walk`, ties to the
+    * earliest bucket. */
+  private def duckCusumSplit(name: String, walk: String): String =
+    s"""$name AS (SELECT bucket AS cp_bucket, nb,
+       |    tc * cs - ts_ * cc AS d
+       |  FROM $walk ORDER BY abs(tc * cs - ts_ * cc) DESC,
+       |    bucket ASC LIMIT 1)""".stripMargin
+
+  /** The CUSUM change-point oracle — shared VERBATIM by q80 (one-shot)
+    * and q81 (stream replay): the replay's contract IS equality with
+    * the one-shot. */
+  private lazy val duckCusumSql: String =
+    s"""WITH ${duckHourlySums("bucket")},
+       |${duckCusumWalk("cw", "bb")},
+       |dd AS (SELECT bucket, nb,
+       |    tc * cs - ts_ * cc AS d
+       |  FROM cw)
+       |SELECT bucket AS cp_bucket, nb AS n_buckets,
+       |  CAST(d AS DOUBLE) AS cusum
+       |FROM dd
+       |ORDER BY abs(d) DESC, bucket ASC
+       |LIMIT 1""".stripMargin
+
+  /** llm_clean_pipeline/llm_clean_cc's shared prefix: the quality
+    * filter, exact dedup (min id per text) and the LSH-verified
+    * near-dup pairs `vpairs` at 0.6 over the survivors. */
+  private lazy val duckCleanCtes: String =
+    s"""q AS (
+       |  SELECT doc_id, text, lang, source,
+       |    str_split(text, ' ') AS toks
+       |  FROM documents),
+       |qs AS (
+       |  SELECT doc_id, text, lang, source, len(toks) AS n,
+       |    len(list_distinct(toks)) AS nd,
+       |    len(list_filter(toks, x -> x IN
+       |      ('the','a','an','and','of','to','in','is'))) AS en
+       |  FROM q),
+       |quality AS (
+       |  SELECT doc_id, text, lang, source FROM qs
+       |  WHERE n >= 10 AND n <= 100000 AND nd / CAST(n AS DOUBLE) > 0.1
+       |    AND en / CAST(n AS DOUBLE) < 0.5),
+       |exact AS (
+       |  SELECT * FROM quality
+       |  WHERE doc_id IN (SELECT min(doc_id) FROM quality GROUP BY text)),
+       |${duckLshVerifiedCtes("exact", 0.6)}""".stripMargin
+
+  /** The one-way ANOVA F tail over `ad` (g, v): per-group moments,
+    * micro-quantized between-group terms, one mirrored division —
+    * q87 runs it on the values, q89 (Brown–Forsythe) on the absolute
+    * deviations from the group median; `stat` names the output. */
+  private def duckAnovaTail(stat: String): String =
+    s"""ag AS (SELECT g, CAST(count(*) AS HUGEINT) AS ng,
+       |    coalesce(sum(v), 0) AS sg,
+       |    coalesce(sum(v * v), 0) AS qg
+       |  FROM ad GROUP BY g),
+       |at2 AS (SELECT g, ng, sg, qg,
+       |    CAST(ROUND(1e6 * (CAST(sg AS DOUBLE) / ng)
+       |      * (CAST(sg AS DOUBLE) / ng) * ng) AS HUGEINT)
+       |      AS term FROM ag),
+       |aa AS (SELECT CAST(count(*) AS BIGINT) AS k,
+       |    CAST(sum(ng) AS BIGINT) AS n,
+       |    coalesce(sum(qg), 0) AS ssq,
+       |    coalesce(sum(sg), 0) AS s,
+       |    coalesce(sum(term), 0) AS sumterm FROM at2)
+       |SELECT k AS k_groups, n, k - 1 AS df1, n - k AS df2,
+       |  CASE WHEN k >= 2 AND n > k
+       |    AND (1000000 * ssq - sumterm) > 0 THEN
+       |    ROUND((CAST(sumterm - CAST(ROUND(1e6
+       |        * (CAST(s AS DOUBLE) / n)
+       |        * (CAST(s AS DOUBLE) / n) * n) AS HUGEINT)
+       |        AS DOUBLE) / (k - 1))
+       |      / (CAST(1000000 * ssq - sumterm AS DOUBLE)
+       |        / (n - k)), 6)
+       |  ELSE NULL END AS $stat
+       |FROM aa""".stripMargin
+
+  /** Three synchronous label-propagation rounds over the symmetric
+    * edge CTE `${p}ed` (own id first, then the most frequent neighbour
+    * label, ties to the smallest): emits `${p}l0`…`${p}l3`, the oracle
+    * twin of GraphOps.labelPropagation(rounds = 3). */
+  private def duckLpaCtes(p: String): String =
+    (s"${p}l0 AS (SELECT DISTINCT src AS id, src AS label FROM ${p}ed)" +:
+      (1 to 3).map { r =>
+        s"""${p}c$r AS (SELECT e.src, l.label, count(*) AS cnt
+           |  FROM ${p}ed e JOIN ${p}l${r - 1} l ON e.dst = l.id
+           |  GROUP BY e.src, l.label),
+           |${p}l$r AS (SELECT src AS id, label FROM (
+           |    SELECT src, label, row_number() OVER (
+           |      PARTITION BY src ORDER BY cnt DESC, label ASC)
+           |      AS rn FROM ${p}c$r) w$r WHERE rn = 1)""".stripMargin
+      }).mkString(",\n")
+
+  /** d71/d74's shared epoch plan for a `targetN`-document
+    * sqrt-tempered source mix: per-source size, target count, whole
+    * epochs and the remainder rate in ppm (`me`) — the SQL twin of
+    * Curation.mixEpochPlan. */
+  private def duckMixEpochCtes(targetN: Int): String =
+    s"""mc AS (SELECT source,
+       |    CAST(count(*) AS BIGINT) AS n_in
+       |  FROM documents WHERE source IS NOT NULL
+       |  GROUP BY source),
+       |ms AS (SELECT source, n_in,
+       |    CAST(round(1e6 * sqrt(CAST(n_in AS DOUBLE)))
+       |      AS BIGINT) AS sm FROM mc),
+       |mt AS (SELECT CAST(sum(sm) AS HUGEINT) AS stot FROM ms),
+       |mr AS (SELECT source, n_in,
+       |    CAST(round(CAST($targetN * CAST(sm AS HUGEINT)
+       |        AS DOUBLE) / CAST(stot AS DOUBLE)) AS BIGINT)
+       |      AS target_ct
+       |  FROM ms, mt),
+       |me AS (SELECT source, n_in, target_ct,
+       |    CAST(target_ct // n_in AS BIGINT) AS epochs,
+       |    CAST(round(1e6 * CAST(target_ct % n_in AS DOUBLE)
+       |      / CAST(n_in AS DOUBLE)) AS BIGINT)
+       |      AS rem_rate_ppm
+       |  FROM mr)""".stripMargin
+
+  /** d62/d63's shared span derivation: 13-word grams seen in two or
+    * more documents, their positions chained while the gap is at
+    * most 13 (`spans`: doc_id, span_start, span_end over `t`'s toks)
+    * — the SQL twin of Dedup.dupSpans(n = 13). */
+  private lazy val duckDupSpanCtes: String =
+    s"""${duckPosGramCtes(13)},
+      |dup AS (SELECT gram FROM pg GROUP BY gram
+      |  HAVING min(doc_id) <> max(doc_id)),
+      |ds AS (SELECT doc_id, pos FROM pg JOIN dup USING (gram)),
+      |fl AS (SELECT doc_id, pos, CASE WHEN pos > lag(pos) OVER
+      |    (PARTITION BY doc_id ORDER BY pos) + 13
+      |  THEN 1 ELSE 0 END AS f FROM ds),
+      |gr AS (SELECT doc_id, pos, SUM(f) OVER (
+      |    PARTITION BY doc_id ORDER BY pos
+      |    ROWS UNBOUNDED PRECEDING) AS grp FROM fl),
+      |spans AS (SELECT doc_id, MIN(pos) AS span_start,
+      |    MAX(pos) + 12 AS span_end
+      |  FROM gr GROUP BY doc_id, grp)""".stripMargin
+
+  /** The q17/q17b/q17c per-flag quartile summary: count and rounded
+    * mean price per (l_returnflag, quartile). */
+  private def quartileStats(tiled: DataFrame): DataFrame =
+    tiled
+      .groupBy("l_returnflag", "quartile").agg(
+        count(lit(1)).as("n"),
+        round(avg(col("l_extendedprice")), 6).as("avg_price"))
+      .orderBy("l_returnflag", "quartile")
+
+  /** q17b/q17c: the bucketed ntile(4) of lineitem's price per flag,
+    * summarized by [[quartileStats]]. */
+  private def bucketedQuartiles(s: SparkSession, dir: String,
+                                balanced: Boolean): DataFrame =
+    quartileStats(graft.ops.DistributedRank.bucketedNtile(
+        lineitem(s, dir).select(col("l_returnflag"),
+          col("l_extendedprice"), col("l_orderkey"), col("l_linenumber")),
+        "l_returnflag", "l_extendedprice",
+        Seq("l_orderkey", "l_linenumber"), nTiles = 4,
+        balanced = balanced)
+      .select(col("l_returnflag"), col("ntile").as("quartile"),
+        col("l_extendedprice")))
+
+  /** The q17 family's shared oracle: ONE text because the bucketed
+    * and balanced ntiles must equal the windowed one. */
+  private lazy val duckNtileSql: String =
+    """WITH t AS (SELECT l_returnflag,
+      |    CAST(ntile(4) OVER (PARTITION BY l_returnflag
+      |      ORDER BY l_extendedprice, l_orderkey, l_linenumber)
+      |      AS BIGINT) AS quartile,
+      |    l_extendedprice
+      |  FROM lineitem)
+      |SELECT l_returnflag, quartile, count(*) AS n,
+      |  ROUND(avg(l_extendedprice), 6) AS avg_price
+      |FROM t GROUP BY l_returnflag, quartile
+      |ORDER BY l_returnflag, quartile""".stripMargin
+
+  /** The q74/q96 paired-classifier prefix: d3's langid CASE replayed
+    * per labelled doc — `p` holds the truth (lang = 'en'), the full
+    * heuristic's call `pa` and the stopword-only call `pb`; callers
+    * close the SELECT (q96 adds a third predictor). */
+  private lazy val duckLangIdPredCtes: String =
+    """t AS (SELECT lang, str_split(text, ' ') AS toks,
+      |    length(regexp_replace(text, '[^\x{4e00}-\x{9fff}]',
+      |      '', 'g')) AS cjk,
+      |    length(text) AS lc
+      |  FROM documents
+      |  WHERE text IS NOT NULL AND lang IS NOT NULL),
+      |s AS (SELECT lang, cjk, lc,
+      |    len(list_filter(toks, x -> x IN
+      |      ('the','a','an','and','of','to','in','is'))) AS en,
+      |    len(list_filter(toks, x -> x IN
+      |      ('el','la','los','de','y','en','es','un'))) AS es,
+      |    len(list_filter(toks, x -> x IN
+      |      ('le','la','les','et','de','un','une','est'))) AS fr,
+      |    len(list_filter(toks, x -> x IN
+      |      ('der','die','das','und','ein','ist','zu','von')))
+      |      AS de
+      |  FROM t),
+      |p AS (SELECT (lang = 'en') AS truth,
+      |    (CASE WHEN cjk * 3 > lc THEN 'zh'
+      |          WHEN en >= es AND en >= fr AND en >= de
+      |            AND en > 0 THEN 'en'
+      |          WHEN es >= fr AND es >= de AND es > 0 THEN 'es'
+      |          WHEN fr >= de AND fr > 0 THEN 'fr'
+      |          WHEN de > 0 THEN 'de'
+      |          ELSE 'und' END = 'en') AS pa,
+      |    (en > 0) AS pb""".stripMargin
+
+  /** Embedding row 0, fetched to the driver as the query vector. */
+  private def vec0(emb: DataFrame): Seq[Double] =
+    emb.filter(col("vec_id") === 0).select(col("embedding"))
+      .head().getSeq[Float](0).map(_.toDouble)
+
+  /** The sign-LSH hyperplanes: embedding rows 1-4. */
+  private def signPlanes(emb: DataFrame): Seq[Seq[Double]] =
+    Similarity.vectorsByIds(emb, "vec_id", "embedding",
+      Seq(1L, 2L, 3L, 4L))
+
+  /** The e4/e5/e16 IVF probe: rows 1-16 as centroids, the 2 cells
+    * nearest query row 0, and each vector's best cell (`asg`: rn = 1,
+    * ties to the smaller cid). */
+  private lazy val duckIvfProbeCtes: String =
+    """e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+      |  FROM embeddings),
+      |c AS (SELECT vec_id AS cid, v AS cv FROM e
+      |  WHERE vec_id BETWEEN 1 AND 16),
+      |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
+      |probe AS (SELECT cid FROM c, q
+      |  ORDER BY list_dot_product(cv, qv) DESC, cid LIMIT 2),
+      |asg AS (SELECT vec_id, cid, row_number() OVER (
+      |      PARTITION BY vec_id
+      |      ORDER BY dt DESC, cid ASC) AS rn
+      |  FROM (SELECT e.vec_id, c.cid,
+      |          list_dot_product(e.v, c.cv) AS dt FROM e, c))""".stripMargin
+
+  /** The IVF oracles' rerank: exact cosine to row 0 over the probed
+    * candidates `cand` (vec_id, cell), top 20. */
+  private lazy val duckIvfRerankTail: String =
+    """s AS (SELECT cand.vec_id, cand.cell,
+      |    list_dot_product(e.v, q.qv)
+      |      / (sqrt(list_dot_product(e.v, e.v))
+      |         * sqrt(list_dot_product(q.qv, q.qv))) AS cosine
+      |  FROM cand JOIN e USING (vec_id), q)
+      |SELECT vec_id, ROUND(cosine, 6) AS cosine,
+      |  CAST(cell AS BIGINT) AS cell
+      |FROM s ORDER BY ROUND(cosine, 6) DESC, vec_id
+      |LIMIT 20""".stripMargin
+
+  /** The e4/e5 shared oracle: ONE text because the on-disk index
+    * layout must not change the answer. */
+  private lazy val duckIvfTopkSql: String =
+    s"""WITH $duckIvfProbeCtes,
+       |cand AS (SELECT vec_id, cid AS cell FROM asg
+       |  WHERE rn = 1 AND cid IN (SELECT cid FROM probe)),
+       |$duckIvfRerankTail""".stripMargin
+
+  /** e3/e11's sign-LSH buckets over the unit-normalized vectors
+    * (`nrm`: vec_id, nv; `b`: vec_id, bucket). */
+  private lazy val duckNrmBucketCtes: String =
+    """e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+      |  FROM embeddings),
+      |nrm AS (SELECT vec_id,
+      |    list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
+      |      AS nv
+      |  FROM e),
+      |p AS (SELECT vec_id AS pid, v AS pv FROM e
+      |  WHERE vec_id BETWEEN 1 AND 4),
+      |b AS (SELECT nrm.vec_id,
+      |    CAST(SUM(CASE WHEN list_dot_product(nrm.nv, p.pv) > 0
+      |      THEN (CAST(1 AS BIGINT) << (p.pid - 1)) ELSE 0 END)
+      |      AS BIGINT) AS bucket
+      |  FROM nrm, p GROUP BY nrm.vec_id)""".stripMargin
+
+  /** The ANN oracles' sign-LSH buckets over the raw vectors (`b`:
+    * vec_id, bucket; planes = [[signPlanes]]). */
+  private lazy val duckAnnBucketCtes: String =
+    """e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+      |  FROM embeddings),
+      |p AS (SELECT vec_id AS pid, v AS pv FROM e
+      |  WHERE vec_id BETWEEN 1 AND 4),
+      |b AS (SELECT e.vec_id,
+      |    CAST(SUM(CASE WHEN list_dot_product(e.v, p.pv) > 0
+      |      THEN (CAST(1 AS BIGINT) << (p.pid - 1)) ELSE 0 END)
+      |      AS BIGINT) AS bucket
+      |  FROM e, p GROUP BY e.vec_id)""".stripMargin
+
+  /** e2/e7's oracle: top-20 exact cosine to row 0 among the vectors
+    * whose bucket passes `probe` against row 0's bucket `qbucket`. */
+  private def duckAnnTopkSql(probe: String): String =
+    s"""WITH $duckAnnBucketCtes,
+       |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
+       |qb AS (SELECT bucket AS qbucket FROM b WHERE vec_id = 0),
+       |s AS (SELECT e.vec_id,
+       |    list_dot_product(e.v, q.qv)
+       |      / (sqrt(list_dot_product(e.v, e.v))
+       |         * sqrt(list_dot_product(q.qv, q.qv))) AS cosine,
+       |    b.bucket
+       |  FROM e JOIN b USING (vec_id), q, qb
+       |  WHERE $probe)
+       |SELECT vec_id, ROUND(cosine, 6) AS cosine, bucket
+       |FROM s ORDER BY ROUND(cosine, 6) DESC, vec_id
+       |LIMIT 20""".stripMargin
+
+  /** The BM25 oracles' shared prefix for the query {vector, hash,
+    * merge} (k1 = 1.2, b = 0.75): term frequencies `p`, lengths `l`,
+    * corpus stats `st` and per-term idf `i`; callers score `sc`. */
+  private lazy val duckBm25Ctes: String =
+    """p AS (SELECT doc_id AS id, t AS term,
+      |    CAST(count(*) AS BIGINT) AS tf
+      |  FROM (SELECT doc_id, unnest(str_split(text, ' ')) AS t
+      |        FROM documents) u
+      |  WHERE t IN ('vector', 'hash', 'merge')
+      |  GROUP BY id, t),
+      |l AS (SELECT doc_id AS id, len(str_split(text, ' ')) AS dl
+      |  FROM documents),
+      |st AS (SELECT count(*) AS n_docs,
+      |    CAST(sum(len(str_split(text, ' '))) AS DOUBLE)
+      |      / count(*) AS avgdl
+      |  FROM documents),
+      |i AS (SELECT term, ln(1.0 + (n_docs - df + 0.5)/(df + 0.5))
+      |    AS idf, avgdl
+      |  FROM (SELECT term, count(*) AS df FROM p GROUP BY term)
+      |  CROSS JOIN st)""".stripMargin
+
+  /** Every embedding's rounded cosine to row 0 (`cs`: id, c). */
+  private lazy val duckQ0CosineCtes: String =
+    """e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+      |  FROM embeddings),
+      |qv AS (SELECT v AS q FROM e WHERE vec_id = 0),
+      |cs AS (SELECT vec_id AS id, ROUND(list_dot_product(v, q)
+      |    / (sqrt(list_dot_product(v, v))
+      |       * sqrt(list_dot_product(q, q))), 6) AS c
+      |  FROM e, qv)""".stripMargin
+
+  /** Three micro-unit PageRank rounds (d = 0.85, integer division of
+    * rank by out-degree) over the symmetric edge CTE `ed`: emits `gd`
+    * and `gr0`…`gr3` — the oracle twin of GraphOps.pageRankMicro. */
+  private def duckPageRankCtes(ed: String): String =
+    (s"""gd AS (SELECT src, CAST(count(*) AS BIGINT) AS deg
+        |       FROM $ed GROUP BY src),
+        |gr0 AS (SELECT src AS id, CAST(1000000 AS BIGINT) AS r
+        |        FROM gd)""".stripMargin +:
+      (1 to 3).map { r =>
+        s"""gr$r AS (SELECT $ed.dst AS id, CAST(150000 +
+           |      ROUND(0.85 * SUM(gr${r - 1}.r // gd.deg)) AS BIGINT) AS r
+           |    FROM $ed JOIN gr${r - 1} ON gr${r - 1}.id = $ed.src
+           |    JOIN gd ON gd.src = $ed.src GROUP BY $ed.dst)""".stripMargin
+      }).mkString(",\n")
+
+  /** `t` (doc_id, toks) and `pg`: every `n`-word gram with its
+    * 1-based start position. */
+  private def duckPosGramCtes(n: Int): String =
+    s"""t AS (SELECT doc_id, str_split(text,' ') AS toks
+       |  FROM documents),
+       |pg AS (SELECT doc_id,
+       |    unnest(generate_series(1, greatest(len(toks)-${n - 1}, 0)))
+       |      AS pos,
+       |    unnest(list_transform(
+       |      generate_series(1, greatest(len(toks)-${n - 1}, 0)),
+       |      i -> array_to_string(toks[i:i+${n - 1}], ' '))) AS gram
+       |  FROM t)""".stripMargin
+
+  /** The winnowing key prefix (k = 4, w = 5) shared by d65's summary
+    * and [[duckWinnowPairsSql]] (d66/d68): `sel` holds each doc's
+    * distinct window-minimum keys (hash · 2^24 + (2^24 − pos), so
+    * ties go to the rightmost gram). */
+  private lazy val duckWinnowKeyCtes: String =
+    s"""${duckPosGramCtes(4)},
+       |ph AS (SELECT doc_id, pos, ${duckHash60("gram")} AS h
+       |  FROM pg),
+       |ky AS (SELECT doc_id, pos,
+       |    CAST(h AS HUGEINT) * 16777216 + (16777216 - pos)
+       |      AS key FROM ph),
+       |sw AS (SELECT doc_id, pos, MIN(key) OVER (
+       |    PARTITION BY doc_id ORDER BY pos
+       |    ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS skey
+       |  FROM ky),
+       |sel AS (SELECT DISTINCT doc_id, skey FROM sw
+       |  WHERE pos >= 5)""".stripMargin
+
+  /** The q64/q69 W1 statistic over a value-count CTE `g` (v, ca, cb):
+    * Σ |CDF gap| · (next_v − v) in integers, one floor division. */
+  private lazy val duckW1Tail: String =
+    """c AS (SELECT v, sum(ca) OVER (ORDER BY v) AS cum_a,
+      |    sum(cb) OVER (ORDER BY v) AS cum_b,
+      |    lead(v) OVER (ORDER BY v) AS next_v
+      |  FROM g),
+      |t AS (SELECT CAST(sum(ca) AS HUGEINT) AS na,
+      |    CAST(sum(cb) AS HUGEINT) AS nb,
+      |    CAST(count(*) AS BIGINT) AS nvals FROM g),
+      |w AS (SELECT coalesce(sum(
+      |      abs(cum_a * t.nb - cum_b * t.na)
+      |      * CAST(next_v - v AS HUGEINT)),
+      |    CAST(0 AS HUGEINT)) AS wnum
+      |  FROM c, t WHERE next_v IS NOT NULL)
+      |SELECT CASE WHEN t.na > 0 AND t.nb > 0
+      |    THEN CAST((1000000 * w.wnum) // (t.na * t.nb)
+      |      AS BIGINT) ELSE NULL END AS w1_micro,
+      |  CAST(t.na AS BIGINT) AS n_a, CAST(t.nb AS BIGINT) AS n_b,
+      |  t.nvals AS n_values
+      |FROM t, w""".stripMargin
+
+  /** g16/g17's first Louvain level over the staged near-dup pairs:
+    * degrees `ldg`, total `ls`, and each node's best positive-gain
+    * move to a smaller neighbour (`lpick`, ties to the smaller dst). */
+  private lazy val duckLouvainMoveCtes: String =
+    s"""${duckLshVerifiedCtes("documents", 0.3)},
+       |te AS (SELECT DISTINCT least(id_a, id_b) AS lo,
+       |    greatest(id_a, id_b) AS hi
+       |  FROM vpairs WHERE id_a <> id_b),
+       |led AS (SELECT lo AS src, hi AS dst FROM te
+       |       UNION ALL SELECT hi, lo FROM te),
+       |ldg AS (SELECT id, CAST(count(*) AS BIGINT) AS deg
+       |  FROM (SELECT lo AS id FROM te
+       |        UNION ALL SELECT hi FROM te) u GROUP BY id),
+       |ls AS (SELECT CAST(sum(deg) AS BIGINT) AS s2m FROM ldg),
+       |lmv AS (SELECT e.src, e.dst,
+       |    s2m - ds.deg * dd.deg AS gain
+       |  FROM led e JOIN ldg ds ON ds.id = e.src
+       |            JOIN ldg dd ON dd.id = e.dst, ls
+       |  WHERE e.dst < e.src AND s2m - ds.deg * dd.deg > 0),
+       |lpick AS (SELECT src, dst, gain FROM (
+       |    SELECT src, dst, gain, row_number() OVER (
+       |      PARTITION BY src ORDER BY gain DESC, dst ASC)
+       |      AS rn FROM lmv) w WHERE rn = 1)""".stripMargin
+
+  /** t9/t11: each purchase's latest strictly-earlier click by the same
+    * user, through the as-of join implementation `join`. */
+  private def prevClick(s: SparkSession, dir: String)(
+      join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val ev = rawEvents(s, dir)
+    val purchases = ev.filter(col("event_type") === "purchase")
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("user_id"), col("ts"), col("event_id").as("click_id"))
+    join(purchases, clicks)
+      .select(col("event_id"), col("user_id"),
+        col("asof_click_id").cast("long").as("prev_click_id"))
+      .orderBy("event_id").limit(1000)
+  }
+
+  /** [[prevClick]]'s oracle: ONE text for the generic and the native
+    * as-of join. */
+  private lazy val duckPrevClickSql: String =
+    """WITH w AS (SELECT event_id, user_id, event_type, ts,
+      |  last_value(CASE WHEN event_type = 'click' THEN event_id END
+      |    IGNORE NULLS) OVER (PARTITION BY user_id
+      |    ORDER BY ts,
+      |      CASE WHEN event_type = 'click' THEN 1 ELSE 0 END,
+      |      event_id
+      |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+      |    AS prev_click_id
+      |  FROM events WHERE event_type IN ('click', 'purchase'))
+      |SELECT event_id, user_id,
+      |  CAST(prev_click_id AS BIGINT) AS prev_click_id
+      |FROM w WHERE event_type = 'purchase'
+      |ORDER BY event_id LIMIT 1000""".stripMargin
+
+  /** `rounds` k-core (k = 2) peeling rounds over the undirected edge
+    * CTE `te` (lo, hi): round r keeps the edges whose both ends have
+    * degree >= 2 in `e(r)` (e0 = te); emits `d0`…`d$rounds`. */
+  private def duckKCorePeelCtes(rounds: Int): String = {
+    def degrees(r: Int, e: String): String =
+      s"""d$r AS (SELECT id, CAST(count(*) AS BIGINT) AS deg
+         |  FROM (SELECT lo AS id FROM $e
+         |        UNION ALL SELECT hi FROM $e) u GROUP BY id)""".stripMargin
+    def edges(r: Int): String = if (r == 0) "te" else s"e$r"
+    ((0 until rounds).map { r =>
+      val e = edges(r)
+      s"""${degrees(r, e)},
+         |k$r AS (SELECT id FROM d$r WHERE deg >= 2),
+         |e${r + 1} AS (SELECT $e.lo, $e.hi FROM $e
+         |  JOIN k$r a ON a.id = $e.lo JOIN k$r b ON b.id = $e.hi)"""
+        .stripMargin
+    } :+ degrees(rounds, edges(rounds))).mkString(",\n")
+  }
+
+  /** o1/k1: the export-misses report (event_id kept), first 1000. */
+  private def missReport(s: SparkSession, dir: String): DataFrame =
+    ExportMissesQuery
+      .run(commits(s, dir), window = false, extraCols = Seq("event_id"))
+      .limit(1000)
+
+  /** [[missReport]]'s oracle: ONE text, so the CSV round trip (k1)
+    * answers exactly what the in-memory report (o1) does. */
+  private lazy val duckMissReportSql: String =
+    s"""$commitsCte,
+       |m AS (SELECT event_id,
+       |        source_input_buffer AS 用户输入,
+       |        committed_text AS 实际选择,
+       |        source_first_candidate AS 程序预测,
+       |        selected_candidate_rank AS 选择排名
+       |      FROM c WHERE selected_candidate_rank > 0),
+       |f AS (SELECT 实际选择, count(*) AS 错误频率 FROM m GROUP BY 实际选择)
+       |SELECT m.*, f.错误频率 FROM m JOIN f USING (实际选择)
+       |ORDER BY f.错误频率 DESC, m.用户输入 ASC, m.实际选择 ASC,
+       |  m.选择排名 ASC, m.event_id ASC
+       |LIMIT 1000""".stripMargin
+
+  /** q9/q12's shared oracle: per-flag top-20 quantities with rank and
+    * dense rank (one text for the window and the TopK aggregate). */
+  private lazy val duckQtyRankSql: String =
+    """SELECT l_returnflag, l_orderkey, l_linenumber,
+      |  CAST(rank() OVER w AS BIGINT) AS qty_rank,
+      |  CAST(dense_rank() OVER w AS BIGINT) AS qty_dense_rank
+      |FROM lineitem
+      |WINDOW w AS (PARTITION BY l_returnflag
+      |  ORDER BY l_quantity DESC, l_orderkey ASC, l_linenumber ASC)
+      |QUALIFY qty_rank <= 20
+      |ORDER BY l_returnflag, qty_rank, l_orderkey, l_linenumber
+      |LIMIT 100""".stripMargin
+
+  /** e3/e11/curation's semantic-dup drop set: `dr` = every vector with
+    * a smaller-id same-bucket neighbour at rounded cosine > 0.4. */
+  private lazy val duckSemDupCtes: String =
+    s"""$duckNrmBucketCtes,
+       |dr AS (SELECT DISTINCT c.vec_id AS did
+       |  FROM b a JOIN b c ON a.bucket = c.bucket
+       |    AND a.vec_id < c.vec_id
+       |  JOIN nrm na ON na.vec_id = a.vec_id
+       |  JOIN nrm nc ON nc.vec_id = c.vec_id
+       |  WHERE ROUND(list_dot_product(na.nv, nc.nv), 6) > 0.4)""".stripMargin
+
+  /** d24/d27's cross-document 13-gram stats: per doc its distinct
+    * grams (`tot`: n_grams) and how many also occur in another doc
+    * (`dup`: n_dup_grams). */
+  private lazy val duckDupGramCtes: String =
+    """t AS (SELECT doc_id, str_split(text,' ') AS toks
+      |  FROM documents),
+      |ga AS (SELECT doc_id, list_distinct(list_transform(
+      |    generate_series(1, greatest(len(toks)-12, 0)),
+      |    i -> array_to_string(toks[i:i+12], ' '))) AS gs FROM t),
+      |g AS (SELECT doc_id, unnest(gs) AS gram FROM ga),
+      |dfr AS (SELECT gram, count(*) AS df FROM g GROUP BY gram),
+      |dup AS (SELECT doc_id, CAST(count(*) AS BIGINT)
+      |    AS n_dup_grams
+      |  FROM g JOIN dfr USING (gram) WHERE df > 1
+      |  GROUP BY doc_id),
+      |tot AS (SELECT doc_id, CAST(len(gs) AS BIGINT) AS n_grams
+      |  FROM ga)""".stripMargin
+
+  /** The weighted-median tail over `s` (v, w): the smallest v whose
+    * cumulative weight reaches ⌈0.5 · total⌉. */
+  private lazy val duckWeightedMedianTail: String =
+    """t AS (SELECT CAST(sum(w) AS BIGINT) AS wt FROM s),
+      |kx AS (SELECT wt, greatest(CAST(1 AS BIGINT),
+      |    CAST(ceil(CAST(0.5 AS DOUBLE) * wt) AS BIGINT)) AS k
+      |  FROM t),
+      |c AS (SELECT v, CAST(sum(w) OVER (ORDER BY v
+      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+      |    AS BIGINT) AS cw
+      |  FROM s)
+      |SELECT (SELECT min(v) FROM c, kx WHERE c.cw >= kx.k)
+      |    AS value,
+      |  wt AS w_total, k FROM kx""".stripMargin
+
+  /** q73/q77's Mann–Whitney ranks on lineitem price, open vs the rest:
+    * value-distinct counts `vv` with doubled mid-ranks `r2` (`r`). */
+  private lazy val duckMwRankCtes: String =
+    """d AS (SELECT CAST(l_extendedprice AS DOUBLE) AS v,
+      |    (l_linestatus = 'O') AS a
+      |  FROM lineitem
+      |  WHERE l_extendedprice IS NOT NULL
+      |    AND l_linestatus IS NOT NULL),
+      |vv AS (SELECT v, CAST(count(*) AS HUGEINT) AS c,
+      |    CAST(count(*) FILTER (WHERE a) AS HUGEINT) AS ca
+      |  FROM d GROUP BY v),
+      |r AS (SELECT v, c, ca,
+      |    2 * (sum(c) OVER (ORDER BY v) - c) + c + 1 AS r2
+      |  FROM vv)""".stripMargin
+
+  /** The Mann–Whitney output columns from (n, na, ra2, t): sizes, the
+    * doubled U of side a, the tie term and the tie-corrected z. */
+  private lazy val duckMwZCols: String =
+    """CAST(na AS BIGINT) AS n_a,
+      |  CAST(n - na AS BIGINT) AS n_b,
+      |  CAST(ra2 - na * (na + 1) AS BIGINT) AS u2_a,
+      |  CAST(t AS BIGINT) AS tie_t,
+      |  CASE WHEN n < 2 THEN NULL ELSE
+      |    ROUND(CAST(ra2 - na * (na + 1) - na * (n - na)
+      |        AS DOUBLE) /
+      |      nullif(sqrt(CAST(na * (n - na) AS DOUBLE)
+      |        * CAST(n * n * n - n - t AS DOUBLE)
+      |        / CAST(3 * n * (n - 1) AS DOUBLE)), 0.0), 6)
+      |  END AS z""".stripMargin
+
+  /** The embedding co-moment chain shared by e17 (the covariance
+    * report) and [[duckDominantDirSqlWith]]: micro-quantized
+    * coordinates `fl`, upper-triangle products `pr`, and per-(i, j)
+    * count/sums `ag`. */
+  private lazy val duckCovMomentCtes: String =
+    """e AS (SELECT vec_id,
+      |    CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      |fl AS (SELECT vec_id, CAST(t.i - 1 AS BIGINT) AS i,
+      |    CAST(round(v[t.i] * 1e6) AS BIGINT) AS x
+      |  FROM e, unnest(generate_series(1, len(v))) AS t(i)),
+      |pr AS (SELECT a.i, b.i AS j, CAST(a.x AS HUGEINT) AS x,
+      |    CAST(b.x AS HUGEINT) AS y
+      |  FROM fl a JOIN fl b
+      |    ON a.vec_id = b.vec_id AND a.i <= b.i),
+      |ag AS (SELECT i, j, CAST(count(*) AS BIGINT) AS n_vecs,
+      |    coalesce(sum(x), 0) AS sx,
+      |    coalesce(sum(y), 0) AS sy,
+      |    coalesce(sum(x * y), 0) AS sxy
+      |  FROM pr GROUP BY i, j)""".stripMargin
+
+  /** Five unrolled power-iteration steps over the symmetric matrix
+    * `fm` (i, j, c) from `v0`: exact HUGEINT matvec, exact max-abs,
+    * one double division per component (`w1`…`w5`, `m1`…`m5`,
+    * `v1`…`v5`). */
+  private lazy val duckPowerSteps: String =
+    (1 to 5).map { t =>
+      s"""w$t AS (SELECT fm.i AS j,
+         |    sum(CAST(fm.c AS HUGEINT) * vp.v) AS w
+         |  FROM fm JOIN v${t - 1} vp ON vp.j = fm.j GROUP BY fm.i),
+         |m$t AS (SELECT max(abs(w)) AS m FROM w$t),
+         |v$t AS (SELECT j, CAST(round(1e6 * (CAST(w AS DOUBLE)
+         |    / CAST(m AS DOUBLE))) AS BIGINT) AS v FROM w$t, m$t)""".stripMargin
+    }.mkString(",\n")
+
+  /** d45/d48: the 8 serpentine shards of `documents` by word count. */
+  private def serpentineShards(s: SparkSession, dir: String): DataFrame =
+    Curation.serpentineShards(table(s, dir, "documents"),
+      "doc_id", size(split(col("text"), " ")).cast("long"), nShards = 8)
+
+  /** [[serpentineShards]]' oracle: ONE text, so the partitioned
+    * export round trip (d48) answers exactly what the report (d45)
+    * does. */
+  private lazy val duckSerpentineSql: String =
+    """WITH w AS (SELECT doc_id,
+      |    CAST(len(str_split(text, ' ')) AS BIGINT) AS wt
+      |  FROM documents),
+      |r AS (SELECT doc_id, wt, CAST(row_number() OVER
+      |    (ORDER BY wt DESC, doc_id ASC) AS BIGINT) AS rn
+      |  FROM w),
+      |a AS (SELECT wt, CASE WHEN (rn - 1) % 16 < 8
+      |    THEN (rn - 1) % 16
+      |    ELSE 15 - ((rn - 1) % 16) END AS shard
+      |  FROM r)
+      |SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
+      |  CAST(sum(wt) AS BIGINT) AS total_weight
+      |FROM a GROUP BY shard ORDER BY shard""".stripMargin
+
+  /** The KLL audits' verdict columns over (n, n_lt, n_le): the target
+    * rank ⌈q·n⌉ for the permille `q` (a literal or a column name), the
+    * distance of the estimate's rank interval (n_lt, n_le] from it,
+    * and the 8n/k acceptance bound. */
+  private def withRankErr(df: DataFrame, q: String, k: Int): DataFrame =
+    df.withColumn("target_rank", least(col("n"),
+        greatest(lit(1L), expr(s"($q * n + 999) div 1000"))))
+      .withColumn("rank_err",
+        when(col("target_rank").between(col("n_lt") + 1L, col("n_le")),
+          0L)
+          .otherwise(least(abs(col("target_rank") - col("n_lt") - 1L),
+            abs(col("target_rank") - col("n_le")))))
+      .withColumn("bound",
+        greatest(lit(2L), expr(s"(8 * n + ${k - 1}) div $k")))
+
+  /** The weighted KLL audits' rank interval of `est_chars` over (v, w):
+    * total weight and the weight strictly below / at most the
+    * estimate. */
+  private def weightedRankCounts: Seq[Column] = Seq(
+    coalesce(sum(col("w")), lit(0L)).as("n"),
+    coalesce(sum(when(col("v") < col("est_chars"), col("w"))
+      .otherwise(0L)), lit(0L)).as("n_lt"),
+    coalesce(sum(when(col("v") <= col("est_chars"), col("w"))
+      .otherwise(0L)), lit(0L)).as("n_le"))
+
+  /** A fetched sketch's five audited quantiles (permille, estimate) and
+    * its retained-item count. */
+  private def kllEstimates(st: graft.functions.KllState)
+      : (Seq[(Long, Long)], Long) = {
+    import graft.functions.KllSketch
+    (Seq(10L, 250L, 500L, 750L, 990L)
+       .map(q => (q, KllSketch.quantileOf(st, q).getOrElse(0L))),
+     KllSketch.numRetained(st).toLong)
+  }
+
+  /** d33/q51: the lang × source contingency cells `o` joined to their
+    * row and column totals (rt, ct), and the corpus size n (one
+    * driver count). */
+  private def langSourceCells(s: SparkSession, dir: String)
+      : (DataFrame, Double) = {
+    val docs = table(s, dir, "documents")
+    val n = docs.count().toDouble
+    val cells = docs.groupBy("lang", "source")
+      .agg(count(lit(1)).as("o"))
+    val rows = docs.groupBy("lang").agg(count(lit(1)).as("rt"))
+    val cols = docs.groupBy("source").agg(count(lit(1)).as("ct"))
+    (cells.join(broadcast(rows), "lang").join(broadcast(cols), "source"),
+     n)
+  }
+
+  /** [[langSourceCells]]' oracle twin: n, cells `c`, row totals `r`,
+    * column totals `k`. */
+  private lazy val duckLangSourceCtes: String =
+    """n AS (SELECT CAST(count(*) AS DOUBLE) AS n
+      |  FROM documents),
+      |c AS (SELECT lang, source, CAST(count(*) AS DOUBLE) AS o
+      |  FROM documents GROUP BY lang, source),
+      |r AS (SELECT lang, CAST(count(*) AS DOUBLE) AS rt
+      |  FROM documents GROUP BY lang),
+      |k AS (SELECT source, CAST(count(*) AS DOUBLE) AS ct
+      |  FROM documents GROUP BY source)""".stripMargin
+
+  /** The analyze block's three rate columns over the commits CTE `c`
+    * (a6 reports them alone, q_analyze_metrics with the counts). */
+  private lazy val duckHitRateCols: String =
+    """  ROUND(count(CASE WHEN selected_candidate_rank = 0 THEN 1 END)
+      |    / CAST(count(CASE WHEN selected_candidate_rank >= 0 THEN 1
+      |      END) AS DOUBLE), 6) AS first_choice_hit_rate,
+      |  ROUND(count(CASE WHEN selected_candidate_rank >= 0
+      |      AND selected_candidate_rank < 3 THEN 1 END)
+      |    / CAST(count(CASE WHEN selected_candidate_rank >= 0 THEN 1
+      |      END) AS DOUBLE), 6) AS top3_hit_rate,
+      |  ROUND(count(CASE WHEN selected_candidate_rank = -1 THEN 1 END)
+      |    * CAST(100 AS DOUBLE) / count(*), 6) AS direct_input_rate""".stripMargin
+
+  /** The grouped weighted-median prefix over `s` (grp, v, w): group
+    * totals `t`, the ⌈0.5 · total⌉ target `kx`, and `c`'s running
+    * weight per group, open at its FROM (callers name the source). */
+  private lazy val duckGroupedCumWeightCtes: String =
+    """t AS (SELECT grp, CAST(sum(w) AS BIGINT) AS wt
+      |  FROM s GROUP BY grp),
+      |kx AS (SELECT grp, wt, greatest(CAST(1 AS BIGINT),
+      |    CAST(ceil(CAST(0.5 AS DOUBLE) * wt) AS BIGINT)) AS k
+      |  FROM t),
+      |c AS (SELECT grp, v, CAST(sum(w) OVER (PARTITION BY grp
+      |    ORDER BY v
+      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+      |    AS BIGINT) AS cw""".stripMargin
+
+  /** q53/q113's grouped weighted median over `s`, the group key
+    * reported as `key`. */
+  private def duckGroupedMedianSql(key: String): String =
+    s"""$duckGroupedCumWeightCtes
+       |  FROM s)
+       |SELECT kx.grp AS $key,
+       |  (SELECT min(v) FROM c
+       |   WHERE c.grp = kx.grp AND c.cw >= kx.k) AS value,
+       |  wt AS w_total, k
+       |FROM kx ORDER BY $key""".stripMargin
 
   private lazy val registry: Map[String, Q] = Map(
 
@@ -1505,15 +2210,7 @@ object SparkEntry {
         round(col("direct_input_rate"), 6).as("direct_input_rate")),
       Some(s"""$commitsCte
               |SELECT
-              |  ROUND(count(CASE WHEN selected_candidate_rank = 0 THEN 1 END)
-              |    / CAST(count(CASE WHEN selected_candidate_rank >= 0 THEN 1
-              |      END) AS DOUBLE), 6) AS first_choice_hit_rate,
-              |  ROUND(count(CASE WHEN selected_candidate_rank >= 0
-              |      AND selected_candidate_rank < 3 THEN 1 END)
-              |    / CAST(count(CASE WHEN selected_candidate_rank >= 0 THEN 1
-              |      END) AS DOUBLE), 6) AS top3_hit_rate,
-              |  ROUND(count(CASE WHEN selected_candidate_rank = -1 THEN 1 END)
-              |    * CAST(100 AS DOUBLE) / count(*), 6) AS direct_input_rate
+              |$duckHitRateCols
               |FROM c""".stripMargin)),
 
     "q_analyze_metrics" -> Q(
@@ -1533,15 +2230,7 @@ object SparkEntry {
               |  ROUND(avg(CASE WHEN selected_candidate_rank >= 0
               |    THEN CAST(1 AS DOUBLE) / (selected_candidate_rank + 1) END),
               |    6) AS overall_accuracy_score,
-              |  ROUND(count(CASE WHEN selected_candidate_rank = 0 THEN 1 END)
-              |    / CAST(count(CASE WHEN selected_candidate_rank >= 0 THEN 1
-              |      END) AS DOUBLE), 6) AS first_choice_hit_rate,
-              |  ROUND(count(CASE WHEN selected_candidate_rank >= 0
-              |      AND selected_candidate_rank < 3 THEN 1 END)
-              |    / CAST(count(CASE WHEN selected_candidate_rank >= 0 THEN 1
-              |      END) AS DOUBLE), 6) AS top3_hit_rate,
-              |  ROUND(count(CASE WHEN selected_candidate_rank = -1 THEN 1 END)
-              |    * CAST(100 AS DOUBLE) / count(*), 6) AS direct_input_rate
+              |$duckHitRateCols
               |FROM c""".stripMargin)),
 
     "a7_window_miss_freq" -> Q(
@@ -1567,21 +2256,8 @@ object SparkEntry {
 
     // ---- O: sort / export-misses (SURVEY §2.4, §3.2) ------------------
     "o1_sort_misses" -> Q(
-      (s, dir) => ExportMissesQuery
-        .run(commits(s, dir), window = false, extraCols = Seq("event_id"))
-        .limit(1000),
-      Some(s"""$commitsCte,
-              |m AS (SELECT event_id,
-              |        source_input_buffer AS 用户输入,
-              |        committed_text AS 实际选择,
-              |        source_first_candidate AS 程序预测,
-              |        selected_candidate_rank AS 选择排名
-              |      FROM c WHERE selected_candidate_rank > 0),
-              |f AS (SELECT 实际选择, count(*) AS 错误频率 FROM m GROUP BY 实际选择)
-              |SELECT m.*, f.错误频率 FROM m JOIN f USING (实际选择)
-              |ORDER BY f.错误频率 DESC, m.用户输入 ASC, m.实际选择 ASC,
-              |  m.选择排名 ASC, m.event_id ASC
-              |LIMIT 1000""".stripMargin)),
+      (s, dir) => missReport(s, dir),
+      Some(duckMissReportSql)),
 
     // ---- K1: the CSV report sink itself (BOM + Chinese headers), on
     // the driver-verified path: write the miss report with
@@ -1589,9 +2265,7 @@ object SparkEntry {
     // every row against the same oracle as o1. ------------------------
     "k1_csv_roundtrip" -> Q(
       (s, dir) => {
-        val report = ExportMissesQuery
-          .run(commits(s, dir), window = false, extraCols = Seq("event_id"))
-          .limit(1000)
+        val report = missReport(s, dir)
         val outDir = java.nio.file.Files
           .createTempDirectory("graft_k1").toFile
         val out = new java.io.File(outDir, "report.csv").getPath
@@ -1604,18 +2278,7 @@ object SparkEntry {
           .orderBy(col("错误频率").desc, col("用户输入").asc,
             col("实际选择").asc, col("选择排名").asc, col("event_id").asc)
       },
-      Some(s"""$commitsCte,
-              |m AS (SELECT event_id,
-              |        source_input_buffer AS 用户输入,
-              |        committed_text AS 实际选择,
-              |        source_first_candidate AS 程序预测,
-              |        selected_candidate_rank AS 选择排名
-              |      FROM c WHERE selected_candidate_rank > 0),
-              |f AS (SELECT 实际选择, count(*) AS 错误频率 FROM m GROUP BY 实际选择)
-              |SELECT m.*, f.错误频率 FROM m JOIN f USING (实际选择)
-              |ORDER BY f.错误频率 DESC, m.用户输入 ASC, m.实际选择 ASC,
-              |  m.选择排名 ASC, m.event_id ASC
-              |LIMIT 1000""".stripMargin)),
+      Some(duckMissReportSql)),
 
     // ORC as the second columnar format (Spark ships the native
     // reader/writer; vectorization + predicate pushdown work the same
@@ -1914,66 +2577,22 @@ object SparkEntry {
 
     // ---- T9: as-of join (time-series state attachment) ----------------
     "t9_asof_join" -> Q(
-      (s, dir) => {
-        val ev = rawEvents(s, dir)
-        val purchases = ev.filter(col("event_type") === "purchase")
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("user_id"), col("ts"), col("event_id").as("click_id"))
+      (s, dir) => prevClick(s, dir)((purchases, clicks) =>
         graft.ops.AsOfJoin.asofJoin(purchases, clicks, Seq("user_id"),
-            "ts", Seq("click_id"), tieBreak = Some("click_id"),
-            strict = true)
-          .select(col("event_id"), col("user_id"),
-            col("asof_click_id").cast("long").as("prev_click_id"))
-          .orderBy("event_id").limit(1000)
-      },
-      // semantics-exact oracle: latest click by (ts, event_id) with
-      // ts STRICTLY before the purchase — clicks at the purchase's own
-      // ts sort after it (side flag), so the 1-PRECEDING frame excludes
-      // them, exactly like strict asofJoin. Not fixture-dependent.
-      Some("""WITH w AS (SELECT event_id, user_id, event_type, ts,
-             |  last_value(CASE WHEN event_type = 'click' THEN event_id END
-             |    IGNORE NULLS) OVER (PARTITION BY user_id
-             |    ORDER BY ts,
-             |      CASE WHEN event_type = 'click' THEN 1 ELSE 0 END,
-             |      event_id
-             |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-             |    AS prev_click_id
-             |  FROM events WHERE event_type IN ('click', 'purchase'))
-             |SELECT event_id, user_id,
-             |  CAST(prev_click_id AS BIGINT) AS prev_click_id
-             |FROM w WHERE event_type = 'purchase'
-             |ORDER BY event_id LIMIT 1000""".stripMargin)),
+          "ts", Seq("click_id"), tieBreak = Some("click_id"),
+          strict = true)),
+      Some(duckPrevClickSql)),
 
     // ---- T11: the same as-of join through the NATIVE operator
     // (plans/NativeAsOfJoin: custom LogicalPlan + strategy + sort-merge
     // SparkPlan). Identical oracle to t9 — the operator implementation
     // must not change the answer. --------------------------------------
     "t11_asof_native" -> Q(
-      (s, dir) => {
-        val ev = rawEvents(s, dir)
-        val purchases = ev.filter(col("event_type") === "purchase")
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("user_id"), col("ts"), col("event_id").as("click_id"))
+      (s, dir) => prevClick(s, dir)((purchases, clicks) =>
         graft.plans.NativeAsOfJoin.asofJoin(purchases, clicks,
-            Seq("user_id"), "ts", Seq("click_id"),
-            tieBreak = Some("click_id"), strict = true)
-          .select(col("event_id"), col("user_id"),
-            col("asof_click_id").cast("long").as("prev_click_id"))
-          .orderBy("event_id").limit(1000)
-      },
-      Some("""WITH w AS (SELECT event_id, user_id, event_type, ts,
-             |  last_value(CASE WHEN event_type = 'click' THEN event_id END
-             |    IGNORE NULLS) OVER (PARTITION BY user_id
-             |    ORDER BY ts,
-             |      CASE WHEN event_type = 'click' THEN 1 ELSE 0 END,
-             |      event_id
-             |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-             |    AS prev_click_id
-             |  FROM events WHERE event_type IN ('click', 'purchase'))
-             |SELECT event_id, user_id,
-             |  CAST(prev_click_id AS BIGINT) AS prev_click_id
-             |FROM w WHERE event_type = 'purchase'
-             |ORDER BY event_id LIMIT 1000""".stripMargin)),
+          Seq("user_id"), "ts", Seq("click_id"),
+          tieBreak = Some("click_id"), strict = true)),
+      Some(duckPrevClickSql)),
 
     // ---- T10: bucketed range join ( clicks within 30 min before a
     // purchase, same user) ------------------------------------------------
@@ -2797,15 +3416,7 @@ object SparkEntry {
           .orderBy("l_returnflag", "qty_rank", "l_orderkey", "l_linenumber")
           .limit(100)
       },
-      Some("""SELECT l_returnflag, l_orderkey, l_linenumber,
-             |  CAST(rank() OVER w AS BIGINT) AS qty_rank,
-             |  CAST(dense_rank() OVER w AS BIGINT) AS qty_dense_rank
-             |FROM lineitem
-             |WINDOW w AS (PARTITION BY l_returnflag
-             |  ORDER BY l_quantity DESC, l_orderkey ASC, l_linenumber ASC)
-             |QUALIFY qty_rank <= 20
-             |ORDER BY l_returnflag, qty_rank, l_orderkey, l_linenumber
-             |LIMIT 100""".stripMargin)),
+      Some(duckQtyRankSql)),
 
     // The scale path for q9's semantics: bounded TopK aggregator
     // (partial top-k per map task, k-row buffers through the exchange)
@@ -2836,15 +3447,7 @@ object SparkEntry {
           .orderBy("l_returnflag", "qty_rank", "l_orderkey", "l_linenumber")
           .limit(100)
       },
-      Some("""SELECT l_returnflag, l_orderkey, l_linenumber,
-             |  CAST(rank() OVER w AS BIGINT) AS qty_rank,
-             |  CAST(dense_rank() OVER w AS BIGINT) AS qty_dense_rank
-             |FROM lineitem
-             |WINDOW w AS (PARTITION BY l_returnflag
-             |  ORDER BY l_quantity DESC, l_orderkey ASC, l_linenumber ASC)
-             |QUALIFY qty_rank <= 20
-             |ORDER BY l_returnflag, qty_rank, l_orderkey, l_linenumber
-             |LIMIT 100""".stripMargin)),
+      Some(duckQtyRankSql)),
 
     "q10_running_sum" -> Q(
       (s, dir) => {
@@ -2926,55 +3529,20 @@ object SparkEntry {
         val w = Window.partitionBy("l_returnflag")
           .orderBy(col("l_extendedprice"), col("l_orderkey"),
             col("l_linenumber"))
-        lineitem(s, dir)
+        quartileStats(lineitem(s, dir)
           .select(col("l_returnflag"),
             ntile(4).over(w).cast("long").as("quartile"),
-            col("l_extendedprice"))
-          .groupBy("l_returnflag", "quartile").agg(
-            count(lit(1)).as("n"),
-            round(avg(col("l_extendedprice")), 6).as("avg_price"))
-          .orderBy("l_returnflag", "quartile")
+            col("l_extendedprice")))
       },
-      Some("""WITH t AS (SELECT l_returnflag,
-             |    CAST(ntile(4) OVER (PARTITION BY l_returnflag
-             |      ORDER BY l_extendedprice, l_orderkey, l_linenumber)
-             |      AS BIGINT) AS quartile,
-             |    l_extendedprice
-             |  FROM lineitem)
-             |SELECT l_returnflag, quartile, count(*) AS n,
-             |  ROUND(avg(l_extendedprice), 6) AS avg_price
-             |FROM t GROUP BY l_returnflag, quartile
-             |ORDER BY l_returnflag, quartile""".stripMargin)),
+      Some(duckNtileSql)),
 
     // Scale-safe twin of q17 (same oracle): ntile(4) recomputed by
     // graft.ops.DistributedRank — range-bucketed exact ranks, so the
     // only row-level window partitions by (l_returnflag, cell) instead
     // of sorting ⅓ of the table per task. Mirrors the q9→q12 move.
     "q17b_ntile_bucketed" -> Q(
-      (s, dir) => {
-        val tiled = graft.ops.DistributedRank.bucketedNtile(
-          lineitem(s, dir).select(col("l_returnflag"),
-            col("l_extendedprice"), col("l_orderkey"), col("l_linenumber")),
-          "l_returnflag", "l_extendedprice",
-          Seq("l_orderkey", "l_linenumber"), nTiles = 4)
-        tiled
-          .select(col("l_returnflag"), col("ntile").as("quartile"),
-            col("l_extendedprice"))
-          .groupBy("l_returnflag", "quartile").agg(
-            count(lit(1)).as("n"),
-            round(avg(col("l_extendedprice")), 6).as("avg_price"))
-          .orderBy("l_returnflag", "quartile")
-      },
-      Some("""WITH t AS (SELECT l_returnflag,
-             |    CAST(ntile(4) OVER (PARTITION BY l_returnflag
-             |      ORDER BY l_extendedprice, l_orderkey, l_linenumber)
-             |      AS BIGINT) AS quartile,
-             |    l_extendedprice
-             |  FROM lineitem)
-             |SELECT l_returnflag, quartile, count(*) AS n,
-             |  ROUND(avg(l_extendedprice), 6) AS avg_price
-             |FROM t GROUP BY l_returnflag, quartile
-             |ORDER BY l_returnflag, quartile""".stripMargin)),
+      (s, dir) => bucketedQuartiles(s, dir, balanced = false),
+      Some(duckNtileSql)),
 
     // q17b with PERCENTILE-derived cells (bucketedRankBalanced): the
     // skew-robust bucketizer — equi-width cells collapse under a
@@ -2984,31 +3552,8 @@ object SparkEntry {
     // tiles) are IDENTICAL by construction, so the oracle is q17b's:
     // the entry pins that boundary placement never moves the answer.
     "q17c_ntile_balanced" -> Q(
-      (s, dir) => {
-        val tiled = graft.ops.DistributedRank.bucketedNtile(
-          lineitem(s, dir).select(col("l_returnflag"),
-            col("l_extendedprice"), col("l_orderkey"), col("l_linenumber")),
-          "l_returnflag", "l_extendedprice",
-          Seq("l_orderkey", "l_linenumber"), nTiles = 4,
-          balanced = true)
-        tiled
-          .select(col("l_returnflag"), col("ntile").as("quartile"),
-            col("l_extendedprice"))
-          .groupBy("l_returnflag", "quartile").agg(
-            count(lit(1)).as("n"),
-            round(avg(col("l_extendedprice")), 6).as("avg_price"))
-          .orderBy("l_returnflag", "quartile")
-      },
-      Some("""WITH t AS (SELECT l_returnflag,
-             |    CAST(ntile(4) OVER (PARTITION BY l_returnflag
-             |      ORDER BY l_extendedprice, l_orderkey, l_linenumber)
-             |      AS BIGINT) AS quartile,
-             |    l_extendedprice
-             |  FROM lineitem)
-             |SELECT l_returnflag, quartile, count(*) AS n,
-             |  ROUND(avg(l_extendedprice), 6) AS avg_price
-             |FROM t GROUP BY l_returnflag, quartile
-             |ORDER BY l_returnflag, quartile""".stripMargin)),
+      (s, dir) => bucketedQuartiles(s, dir, balanced = true),
+      Some(duckNtileSql)),
 
     // Correlated scalar subquery through spark.sql — Catalyst
     // decorrelates it into the aggregate+join plan a 100 TB run needs
@@ -3873,14 +4418,8 @@ object SparkEntry {
     // language?
     "d33_chi_square" -> Q(
       (s, dir) => {
-        val docs = table(s, dir, "documents")
-        val n = docs.count().toDouble
-        val cells = docs.groupBy("lang", "source")
-          .agg(count(lit(1)).as("o"))
-        val rows = docs.groupBy("lang").agg(count(lit(1)).as("rt"))
-        val cols = docs.groupBy("source").agg(count(lit(1)).as("ct"))
-        cells.join(broadcast(rows), "lang")
-          .join(broadcast(cols), "source")
+        val (cells, n) = langSourceCells(s, dir)
+        cells
           .select((col("o").cast("double") -
               col("rt").cast("double") * col("ct") / lit(n)).as("_d"),
             (col("rt").cast("double") * col("ct") / lit(n)).as("_e"))
@@ -3889,14 +4428,7 @@ object SparkEntry {
           .agg(sum(col("term_micro")).as("chi2_micro"),
             count(lit(1)).as("n_cells"))
       },
-      Some("""WITH n AS (SELECT CAST(count(*) AS DOUBLE) AS n
-             |  FROM documents),
-             |c AS (SELECT lang, source, CAST(count(*) AS DOUBLE) AS o
-             |  FROM documents GROUP BY lang, source),
-             |r AS (SELECT lang, CAST(count(*) AS DOUBLE) AS rt
-             |  FROM documents GROUP BY lang),
-             |k AS (SELECT source, CAST(count(*) AS DOUBLE) AS ct
-             |  FROM documents GROUP BY source),
+      Some(s"""WITH $duckLangSourceCtes,
              |t AS (SELECT CAST(ROUND(
              |    (o - rt * ct / n) * (o - rt * ct / n)
              |      / (rt * ct / n) * 1e6) AS BIGINT) AS term_micro
@@ -3918,14 +4450,8 @@ object SparkEntry {
     // convention) and never materialize.
     "q51_mutual_information" -> Q(
       (s, dir) => {
-        val docs = table(s, dir, "documents")
-        val n = docs.count().toDouble
-        val cells = docs.groupBy("lang", "source")
-          .agg(count(lit(1)).as("o"))
-        val rows = docs.groupBy("lang").agg(count(lit(1)).as("rt"))
-        val cols = docs.groupBy("source").agg(count(lit(1)).as("ct"))
-        cells.join(broadcast(rows), "lang")
-          .join(broadcast(cols), "source")
+        val (cells, n) = langSourceCells(s, dir)
+        cells
           .select(round((col("o").cast("double") / lit(n)) *
               log(col("o").cast("double") * lit(n) /
                 (col("rt").cast("double") * col("ct").cast("double")))
@@ -3934,14 +4460,7 @@ object SparkEntry {
           .agg(sum(col("term_micro")).as("mi_micro"),
             count(lit(1)).as("n_cells"))
       },
-      Some("""WITH n AS (SELECT CAST(count(*) AS DOUBLE) AS n
-             |  FROM documents),
-             |c AS (SELECT lang, source, CAST(count(*) AS DOUBLE) AS o
-             |  FROM documents GROUP BY lang, source),
-             |r AS (SELECT lang, CAST(count(*) AS DOUBLE) AS rt
-             |  FROM documents GROUP BY lang),
-             |k AS (SELECT source, CAST(count(*) AS DOUBLE) AS ct
-             |  FROM documents GROUP BY source),
+      Some(s"""WITH $duckLangSourceCtes,
              |t AS (SELECT CAST(ROUND(
              |    (o / n) * ln(o * n / (rt * ct)) * 1e6) AS BIGINT)
              |      AS term_micro
@@ -4121,30 +4640,16 @@ object SparkEntry {
     "d35_containment_prefix" -> Q(
       (s, dir) => {
         val docs = table(s, dir, "documents").select("doc_id", "text")
-        val frags = docs
-          .filter(pmod(col("doc_id"), lit(97L)) === 0 &&
-            size(split(col("text"), " ")) >= 40)
-          .select((col("doc_id") + 1000000L).as("doc_id"),
-            concat_ws(" ", slice(split(col("text"), " "), 9, 12))
-              .as("text"))
         Dedup.prefixVerifiedContainmentPairs(
-            docs.unionByName(frags), "doc_id", "text", threshold = 0.8)
+            docs.unionByName(containmentFrags(docs)), "doc_id", "text",
+            threshold = 0.8)
           .orderBy("id_a", "id_b").limit(2000)
       },
       Some(s"""WITH aug AS (
               |  SELECT doc_id, text FROM documents
               |  UNION ALL
-              |  SELECT doc_id + 1000000 AS doc_id,
-              |    array_to_string(str_split(text, ' ')[9:20], ' ') AS text
-              |  FROM documents
-              |  WHERE doc_id % 97 = 0
-              |    AND len(str_split(text, ' ')) >= 40),
-              |csh AS (SELECT doc_id AS id, unnest(list_distinct(
-              |    list_transform(
-              |      generate_series(0, greatest(len(toks) - 3, 0)),
-              |      i -> array_to_string(toks[i+1:i+3], ' ')))) AS sh
-              |  FROM (SELECT doc_id, str_split(text, ' ') AS toks
-              |        FROM aug) t),
+              |  $duckFragSelect),
+              |${duckShingleCte("csh", "aug")},
               |cdf AS (SELECT sh, count(*) AS df FROM csh GROUP BY sh),
               |cnsh AS (SELECT id, count(*) AS nsh FROM csh GROUP BY id),
               |cpre AS (SELECT id, sh, nsh AS pnsh FROM (
@@ -4160,12 +4665,7 @@ object SparkEntry {
               |  FROM cpre p JOIN csh x ON x.sh = p.sh AND x.id <> p.id
               |  JOIN cnsh xn ON xn.id = x.id
               |    AND xn.nsh * 1000000 >= 800000 * p.pnsh - 1000000),
-              |wtok AS (SELECT doc_id AS id,
-              |    unnest(list_distinct(str_split(text, ' '))) AS t
-              |  FROM aug),
-              |wsz AS (SELECT doc_id AS id,
-              |    len(list_distinct(str_split(text, ' '))) AS n
-              |  FROM aug),
+              |${duckTokSzCtes("wtok", "wsz", "aug")},
               |winter AS (SELECT c.id_a, c.id_b, count(*) AS i
               |  FROM ccand c
               |  JOIN wtok ta ON ta.id = c.id_a
@@ -4363,75 +4863,11 @@ object SparkEntry {
     "d37_containment_gate" -> Q(
       (s, dir) => {
         val docs = table(s, dir, "documents").select("doc_id", "text")
-        val frags = docs
-          .filter(pmod(col("doc_id"), lit(97L)) === 0 &&
-            size(split(col("text"), " ")) >= 40)
-          .select((col("doc_id") + 1000000L).as("doc_id"),
-            concat_ws(" ", slice(split(col("text"), " "), 9, 12))
-              .as("text"))
-        Dedup.prefixContainmentPairsAgainst(frags, docs,
+        Dedup.prefixContainmentPairsAgainst(containmentFrags(docs), docs,
             "doc_id", "text", threshold = 0.9)
           .orderBy("id_a", "id_b").limit(2000)
       },
-      Some(s"""WITH frag AS (
-              |  SELECT doc_id + 1000000 AS doc_id,
-              |    array_to_string(str_split(text, ' ')[9:20], ' ') AS text
-              |  FROM documents
-              |  WHERE doc_id % 97 = 0
-              |    AND len(str_split(text, ' ')) >= 40),
-              |fsh AS (SELECT doc_id AS id, unnest(list_distinct(
-              |    list_transform(
-              |      generate_series(0, greatest(len(toks) - 3, 0)),
-              |      i -> array_to_string(toks[i+1:i+3], ' ')))) AS sh
-              |  FROM (SELECT doc_id, str_split(text, ' ') AS toks
-              |        FROM frag) t),
-              |gsh AS (SELECT doc_id AS id, unnest(list_distinct(
-              |    list_transform(
-              |      generate_series(0, greatest(len(toks) - 3, 0)),
-              |      i -> array_to_string(toks[i+1:i+3], ' ')))) AS sh
-              |  FROM (SELECT doc_id, str_split(text, ' ') AS toks
-              |        FROM documents) t),
-              |gdf AS (SELECT sh, count(*) AS df FROM gsh GROUP BY sh),
-              |fnsh AS (SELECT id, count(*) AS nsh FROM fsh GROUP BY id),
-              |fpre AS (SELECT id, sh, nsh AS pnsh FROM (
-              |    SELECT fsh.id, fsh.sh,
-              |      row_number() OVER (PARTITION BY fsh.id
-              |        ORDER BY COALESCE(gdf.df, 0), fsh.sh) AS rk,
-              |      fnsh.nsh
-              |    FROM fsh LEFT JOIN gdf USING (sh)
-              |    JOIN fnsh ON fnsh.id = fsh.id) r
-              |  WHERE rk <= (100000 * nsh) // 1000000 + 3),
-              |gnsh AS (SELECT id, count(*) AS nsh FROM gsh GROUP BY id),
-              |gcand AS (SELECT DISTINCT p.id AS id_a, x.id AS id_b
-              |  FROM fpre p JOIN gsh x ON x.sh = p.sh
-              |  JOIN gnsh xn ON xn.id = x.id
-              |    AND xn.nsh * 1000000 >= 900000 * p.pnsh - 1000000),
-              |ftok AS (SELECT doc_id AS id,
-              |    unnest(list_distinct(str_split(text, ' '))) AS t
-              |  FROM frag),
-              |fsz AS (SELECT doc_id AS id,
-              |    len(list_distinct(str_split(text, ' '))) AS n
-              |  FROM frag),
-              |gtok AS (SELECT doc_id AS id,
-              |    unnest(list_distinct(str_split(text, ' '))) AS t
-              |  FROM documents),
-              |gsz AS (SELECT doc_id AS id,
-              |    len(list_distinct(str_split(text, ' '))) AS n
-              |  FROM documents),
-              |ginter AS (SELECT c.id_a, c.id_b, count(*) AS i
-              |  FROM gcand c
-              |  JOIN ftok ta ON ta.id = c.id_a
-              |  JOIN gtok tb ON tb.id = c.id_b AND tb.t = ta.t
-              |  GROUP BY c.id_a, c.id_b),
-              |gc AS (SELECT id_a, id_b,
-              |    ROUND(CAST(i AS DOUBLE) / sa.n, 6) AS c_ab,
-              |    ROUND(CAST(i AS DOUBLE) / sb.n, 6) AS c_ba
-              |  FROM ginter
-              |  JOIN fsz sa ON sa.id = id_a
-              |  JOIN gsz sb ON sb.id = id_b)
-              |SELECT id_a, id_b, c_ab, c_ba FROM gc
-              |WHERE c_ab >= 0.9 OR c_ba >= 0.9
-              |ORDER BY id_a, id_b LIMIT 2000""".stripMargin)),
+      Some(duckContainmentGateSql(0.9))),
 
     // Batch REPLAY of the streaming containment gate: the fragment
     // set splits into two micro-batches (doc_id parity), the corpus
@@ -4445,12 +4881,7 @@ object SparkEntry {
     "d41_containment_gate_replay" -> Q(
       (s, dir) => {
         val docs = table(s, dir, "documents").select("doc_id", "text")
-        val frags = docs
-          .filter(pmod(col("doc_id"), lit(97L)) === 0 &&
-            size(split(col("text"), " ")) >= 40)
-          .select((col("doc_id") + 1000000L).as("doc_id"),
-            concat_ws(" ", slice(split(col("text"), " "), 9, 12))
-              .as("text"))
+        val frags = containmentFrags(docs)
         val index = Dedup.ContainmentIndex
           .build(docs, "doc_id", "text").pinned
         val batches = Seq(0, 1).map { parity =>
@@ -4461,65 +4892,7 @@ object SparkEntry {
         batches.reduce(_ unionByName _)
           .orderBy("id_a", "id_b").limit(2000)
       },
-      Some(s"""WITH frag AS (
-              |  SELECT doc_id + 1000000 AS doc_id,
-              |    array_to_string(str_split(text, ' ')[9:20], ' ') AS text
-              |  FROM documents
-              |  WHERE doc_id % 97 = 0
-              |    AND len(str_split(text, ' ')) >= 40),
-              |fsh AS (SELECT doc_id AS id, unnest(list_distinct(
-              |    list_transform(
-              |      generate_series(0, greatest(len(toks) - 3, 0)),
-              |      i -> array_to_string(toks[i+1:i+3], ' ')))) AS sh
-              |  FROM (SELECT doc_id, str_split(text, ' ') AS toks
-              |        FROM frag) t),
-              |gsh AS (SELECT doc_id AS id, unnest(list_distinct(
-              |    list_transform(
-              |      generate_series(0, greatest(len(toks) - 3, 0)),
-              |      i -> array_to_string(toks[i+1:i+3], ' ')))) AS sh
-              |  FROM (SELECT doc_id, str_split(text, ' ') AS toks
-              |        FROM documents) t),
-              |gdf AS (SELECT sh, count(*) AS df FROM gsh GROUP BY sh),
-              |fnsh AS (SELECT id, count(*) AS nsh FROM fsh GROUP BY id),
-              |fpre AS (SELECT id, sh, nsh AS pnsh FROM (
-              |    SELECT fsh.id, fsh.sh,
-              |      row_number() OVER (PARTITION BY fsh.id
-              |        ORDER BY COALESCE(gdf.df, 0), fsh.sh) AS rk,
-              |      fnsh.nsh
-              |    FROM fsh LEFT JOIN gdf USING (sh)
-              |    JOIN fnsh ON fnsh.id = fsh.id) r
-              |  WHERE rk <= (200000 * nsh) // 1000000 + 3),
-              |gnsh AS (SELECT id, count(*) AS nsh FROM gsh GROUP BY id),
-              |gcand AS (SELECT DISTINCT p.id AS id_a, x.id AS id_b
-              |  FROM fpre p JOIN gsh x ON x.sh = p.sh
-              |  JOIN gnsh xn ON xn.id = x.id
-              |    AND xn.nsh * 1000000 >= 800000 * p.pnsh - 1000000),
-              |ftok AS (SELECT doc_id AS id,
-              |    unnest(list_distinct(str_split(text, ' '))) AS t
-              |  FROM frag),
-              |fsz AS (SELECT doc_id AS id,
-              |    len(list_distinct(str_split(text, ' '))) AS n
-              |  FROM frag),
-              |gtok AS (SELECT doc_id AS id,
-              |    unnest(list_distinct(str_split(text, ' '))) AS t
-              |  FROM documents),
-              |gsz AS (SELECT doc_id AS id,
-              |    len(list_distinct(str_split(text, ' '))) AS n
-              |  FROM documents),
-              |ginter AS (SELECT c.id_a, c.id_b, count(*) AS i
-              |  FROM gcand c
-              |  JOIN ftok ta ON ta.id = c.id_a
-              |  JOIN gtok tb ON tb.id = c.id_b AND tb.t = ta.t
-              |  GROUP BY c.id_a, c.id_b),
-              |gc AS (SELECT id_a, id_b,
-              |    ROUND(CAST(i AS DOUBLE) / sa.n, 6) AS c_ab,
-              |    ROUND(CAST(i AS DOUBLE) / sb.n, 6) AS c_ba
-              |  FROM ginter
-              |  JOIN fsz sa ON sa.id = id_a
-              |  JOIN gsz sb ON sb.id = id_b)
-              |SELECT id_a, id_b, c_ab, c_ba FROM gc
-              |WHERE c_ab >= 0.8 OR c_ba >= 0.8
-              |ORDER BY id_a, id_b LIMIT 2000""".stripMargin)),
+      Some(duckContainmentGateSql(0.8))),
 
     // Batch REPLAY of the streaming PSI drift monitor: one source's
     // docs arrive as the micro-batch and are scored against the
@@ -4842,28 +5215,15 @@ object SparkEntry {
       (s, dir) => graft.pipeline.Eval.ksMicro(
         table(s, dir, "documents"), col("n_chars"), col("source"),
         "src0", "src1"),
-      Some("""WITH pts AS (SELECT n_chars AS v, source FROM documents
-             |  WHERE source IN ('src0', 'src1')),
-             |g AS (SELECT v,
-             |    CAST(sum(CASE WHEN source = 'src0' THEN 1 ELSE 0 END)
-             |      AS BIGINT) AS ca,
-             |    CAST(sum(CASE WHEN source = 'src1' THEN 1 ELSE 0 END)
-             |      AS BIGINT) AS cb
-             |  FROM pts GROUP BY v),
-             |c AS (SELECT v, sum(ca) OVER (ORDER BY v) AS cum_a,
-             |    sum(cb) OVER (ORDER BY v) AS cum_b
-             |  FROM g),
-             |t AS (SELECT CAST(sum(ca) AS BIGINT) AS na,
-             |    CAST(sum(cb) AS BIGINT) AS nb,
-             |    CAST(count(*) AS BIGINT) AS nvals
-             |  FROM g),
-             |d AS (SELECT CAST(max(abs(cum_a * nb - cum_b * na))
-             |      AS BIGINT) AS dnum, na, nb, nvals
-             |  FROM c, t GROUP BY na, nb, nvals)
-             |SELECT CASE WHEN na > 0 AND nb > 0
-             |    THEN (1000000 * dnum) // (na * nb) END AS ks_micro,
-             |  na AS n_a, nb AS n_b, nvals AS n_values
-             |FROM d""".stripMargin)),
+      Some(s"""WITH pts AS (SELECT n_chars AS v, source FROM documents
+              |  WHERE source IN ('src0', 'src1')),
+              |g AS (SELECT v,
+              |    CAST(sum(CASE WHEN source = 'src0' THEN 1 ELSE 0 END)
+              |      AS BIGINT) AS ca,
+              |    CAST(sum(CASE WHEN source = 'src1' THEN 1 ELSE 0 END)
+              |      AS BIGINT) AS cb
+              |  FROM pts GROUP BY v),
+              |$duckKsTail""".stripMargin)),
 
     // Batch REPLAY of the streaming KS drift monitor: one source's
     // docs arrive as the micro-batch and are KS-scored against the
@@ -4880,29 +5240,8 @@ object SparkEntry {
         graft.pipeline.Eval.ksAgainstReference(
           docs.filter(col("source") === "src0"), refC, col("n_chars"))
       },
-      Some("""WITH a AS (SELECT n_chars AS v,
-             |    CAST(count(*) AS BIGINT) AS ca
-             |  FROM documents WHERE source = 'src0' GROUP BY 1),
-             |b AS (SELECT n_chars AS v,
-             |    CAST(count(*) AS BIGINT) AS cb
-             |  FROM documents WHERE source <> 'src0' GROUP BY 1),
-             |g AS (SELECT COALESCE(a.v, b.v) AS v,
-             |    COALESCE(a.ca, 0) AS ca, COALESCE(b.cb, 0) AS cb
-             |  FROM a FULL OUTER JOIN b ON a.v = b.v),
-             |c AS (SELECT v, sum(ca) OVER (ORDER BY v) AS cum_a,
-             |    sum(cb) OVER (ORDER BY v) AS cum_b
-             |  FROM g),
-             |t AS (SELECT CAST(sum(ca) AS BIGINT) AS na,
-             |    CAST(sum(cb) AS BIGINT) AS nb,
-             |    CAST(count(*) AS BIGINT) AS nvals
-             |  FROM g),
-             |d AS (SELECT CAST(max(abs(cum_a * nb - cum_b * na))
-             |      AS BIGINT) AS dnum, na, nb, nvals
-             |  FROM c, t GROUP BY na, nb, nvals)
-             |SELECT CASE WHEN na > 0 AND nb > 0
-             |    THEN (1000000 * dnum) // (na * nb) END AS ks_micro,
-             |  na AS n_a, nb AS n_b, nvals AS n_values
-             |FROM d""".stripMargin)),
+      Some(s"""WITH $duckRefCountsCtes,
+              |$duckKsTail""".stripMargin)),
 
     // Streaming exact-median drift monitor, batch-replayed (the
     // d41/q42/q49 promotion pattern): the literal foreachBatch body
@@ -4952,8 +5291,7 @@ object SparkEntry {
       (s, dir) => {
         val docs = table(s, dir, "documents")
         val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-          .head().getSeq[Float](0).map(_.toDouble)
+        val q = vec0(emb)
         val run = Retrieval.asRanking(
           emb.select(col("vec_id"),
               round(Similarity.cosine(
@@ -5027,8 +5365,7 @@ object SparkEntry {
     "e14_sign_hamming_topk" -> Q(
       (s, dir) => {
         val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-          .head().getSeq[Float](0).map(_.toDouble)
+        val q = vec0(emb)
         Similarity.signHammingTopK(emb, "vec_id", "embedding", q,
           k = 20, candidates = 100)
       },
@@ -5115,23 +5452,9 @@ object SparkEntry {
     // one max-weight row per shard).
     "d45_serpentine_shards" -> Q(
       (s, dir) => Curation.serpentineShardReport(
-          Curation.serpentineShards(table(s, dir, "documents"),
-            "doc_id", size(split(col("text"), " ")).cast("long"),
-            nShards = 8))
+          serpentineShards(s, dir))
         .orderBy("shard"),
-      Some("""WITH w AS (SELECT doc_id,
-             |    CAST(len(str_split(text, ' ')) AS BIGINT) AS wt
-             |  FROM documents),
-             |r AS (SELECT doc_id, wt, CAST(row_number() OVER
-             |    (ORDER BY wt DESC, doc_id ASC) AS BIGINT) AS rn
-             |  FROM w),
-             |a AS (SELECT wt, CASE WHEN (rn - 1) % 16 < 8
-             |    THEN (rn - 1) % 16
-             |    ELSE 15 - ((rn - 1) % 16) END AS shard
-             |  FROM r)
-             |SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
-             |  CAST(sum(wt) AS BIGINT) AS total_weight
-             |FROM a GROUP BY shard ORDER BY shard""".stripMargin)),
+      Some(duckSerpentineSql)),
 
     // EXACT median without a global sort: iterative range narrowing
     // (per round: one pushable range-filtered scan + a B-cell count,
@@ -5189,19 +5512,9 @@ object SparkEntry {
       (s, dir) => graft.ops.DistributedSelect.exactWeightedQuantile(
         lineitem(s, dir), "l_extendedprice", "l_quantity", q = 0.5,
         buckets = 32, threshold = 500),
-      Some("""WITH s AS (SELECT CAST(l_extendedprice AS DOUBLE) AS v,
+      Some(s"""WITH s AS (SELECT CAST(l_extendedprice AS DOUBLE) AS v,
              |    CAST(l_quantity AS BIGINT) AS w FROM lineitem),
-             |t AS (SELECT CAST(sum(w) AS BIGINT) AS wt FROM s),
-             |kx AS (SELECT wt, greatest(CAST(1 AS BIGINT),
-             |    CAST(ceil(CAST(0.5 AS DOUBLE) * wt) AS BIGINT)) AS k
-             |  FROM t),
-             |c AS (SELECT v, CAST(sum(w) OVER (ORDER BY v
-             |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             |    AS BIGINT) AS cw
-             |  FROM s)
-             |SELECT (SELECT min(v) FROM c, kx WHERE c.cw >= kx.k)
-             |    AS value,
-             |  wt AS w_total, k FROM kx""".stripMargin)),
+             |$duckWeightedMedianTail""".stripMargin)),
 
     // Exact weighted median for EVERY group at once — the group-wise
     // form of q52 with all groups narrowing in the SAME scans: one
@@ -5216,24 +5529,10 @@ object SparkEntry {
       (s, dir) => graft.ops.DistributedSelect.groupedWeightedQuantile(
         lineitem(s, dir), "l_returnflag", "l_extendedprice",
         "l_quantity", q = 0.5, buckets = 32, threshold = 500),
-      Some("""WITH s AS (SELECT l_returnflag AS grp,
+      Some(s"""WITH s AS (SELECT l_returnflag AS grp,
              |    CAST(l_extendedprice AS DOUBLE) AS v,
              |    CAST(l_quantity AS BIGINT) AS w FROM lineitem),
-             |t AS (SELECT grp, CAST(sum(w) AS BIGINT) AS wt
-             |  FROM s GROUP BY grp),
-             |kx AS (SELECT grp, wt, greatest(CAST(1 AS BIGINT),
-             |    CAST(ceil(CAST(0.5 AS DOUBLE) * wt) AS BIGINT)) AS k
-             |  FROM t),
-             |c AS (SELECT grp, v, CAST(sum(w) OVER (PARTITION BY grp
-             |    ORDER BY v
-             |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             |    AS BIGINT) AS cw
-             |  FROM s)
-             |SELECT kx.grp AS l_returnflag,
-             |  (SELECT min(v) FROM c
-             |   WHERE c.grp = kx.grp AND c.cw >= kx.k) AS value,
-             |  wt AS w_total, k
-             |FROM kx ORDER BY l_returnflag""".stripMargin)),
+             |${duckGroupedMedianSql("l_returnflag")}""".stripMargin)),
 
     // EVERY dashboard quantile in SHARED scans: P25/P50/P75/P99 of
     // one column resolved together — one head pass, each round ONE
@@ -5619,7 +5918,7 @@ object SparkEntry {
       (s, dir) => graft.pipeline.Eval.wasserstein1Micro(
         table(s, dir, "documents"), col("n_chars"), col("source"),
         "src0", "src1"),
-      Some("""WITH pts AS (SELECT n_chars AS v, source FROM documents
+      Some(s"""WITH pts AS (SELECT n_chars AS v, source FROM documents
              |  WHERE source IN ('src0', 'src1')
              |    AND n_chars IS NOT NULL),
              |g AS (SELECT v,
@@ -5628,24 +5927,7 @@ object SparkEntry {
              |    CAST(sum(CASE WHEN source = 'src1' THEN 1 ELSE 0 END)
              |      AS BIGINT) AS cb
              |  FROM pts GROUP BY v),
-             |c AS (SELECT v, sum(ca) OVER (ORDER BY v) AS cum_a,
-             |    sum(cb) OVER (ORDER BY v) AS cum_b,
-             |    lead(v) OVER (ORDER BY v) AS next_v
-             |  FROM g),
-             |t AS (SELECT CAST(sum(ca) AS HUGEINT) AS na,
-             |    CAST(sum(cb) AS HUGEINT) AS nb,
-             |    CAST(count(*) AS BIGINT) AS nvals FROM g),
-             |w AS (SELECT coalesce(sum(
-             |      abs(cum_a * t.nb - cum_b * t.na)
-             |      * CAST(next_v - v AS HUGEINT)),
-             |    CAST(0 AS HUGEINT)) AS wnum
-             |  FROM c, t WHERE next_v IS NOT NULL)
-             |SELECT CASE WHEN t.na > 0 AND t.nb > 0
-             |    THEN CAST((1000000 * w.wnum) // (t.na * t.nb)
-             |      AS BIGINT) ELSE NULL END AS w1_micro,
-             |  CAST(t.na AS BIGINT) AS n_a, CAST(t.nb AS BIGINT) AS n_b,
-             |  t.nvals AS n_values
-             |FROM t, w""".stripMargin)),
+             |$duckW1Tail""".stripMargin)),
 
     // Exact Gini coefficient of the corpus token-mass distribution —
     // the concentration report behind chunking/sampling policy (a
@@ -5809,33 +6091,13 @@ object SparkEntry {
     "q73_mannwhitney_u" -> Q(
       (s, dir) => graft.pipeline.Eval.mannWhitneyU(lineitem(s, dir),
         col("l_extendedprice"), col("l_linestatus") === "O"),
-      Some("""WITH d AS (SELECT CAST(l_extendedprice AS DOUBLE) AS v,
-             |    (l_linestatus = 'O') AS a
-             |  FROM lineitem
-             |  WHERE l_extendedprice IS NOT NULL
-             |    AND l_linestatus IS NOT NULL),
-             |vv AS (SELECT v, CAST(count(*) AS HUGEINT) AS c,
-             |    CAST(count(*) FILTER (WHERE a) AS HUGEINT) AS ca
-             |  FROM d GROUP BY v),
-             |r AS (SELECT v, c, ca,
-             |    2 * (sum(c) OVER (ORDER BY v) - c) + c + 1 AS r2
-             |  FROM vv),
+      Some(s"""WITH $duckMwRankCtes,
              |ag AS (SELECT coalesce(sum(c), 0) AS n,
              |    coalesce(sum(ca), 0) AS na,
              |    coalesce(sum(ca * r2), 0) AS ra2,
              |    coalesce(sum(c * c * c - c), 0) AS t
              |  FROM r)
-             |SELECT CAST(na AS BIGINT) AS n_a,
-             |  CAST(n - na AS BIGINT) AS n_b,
-             |  CAST(ra2 - na * (na + 1) AS BIGINT) AS u2_a,
-             |  CAST(t AS BIGINT) AS tie_t,
-             |  CASE WHEN n < 2 THEN NULL ELSE
-             |    ROUND(CAST(ra2 - na * (na + 1) - na * (n - na)
-             |        AS DOUBLE) /
-             |      nullif(sqrt(CAST(na * (n - na) AS DOUBLE)
-             |        * CAST(n * n * n - n - t AS DOUBLE)
-             |        / CAST(3 * n * (n - 1) AS DOUBLE)), 0.0), 6)
-             |  END AS z
+             |SELECT $duckMwZCols
              |FROM ag""".stripMargin)),
 
     // McNemar's paired-classifier test — q63 (DeLong) asked of hard
@@ -5856,32 +6118,7 @@ object SparkEntry {
         graft.pipeline.Eval.mcnemar(docs,
           predA === truthEn, predB === truthEn)
       },
-      Some("""WITH t AS (SELECT lang, str_split(text, ' ') AS toks,
-             |    length(regexp_replace(text, '[^\x{4e00}-\x{9fff}]',
-             |      '', 'g')) AS cjk,
-             |    length(text) AS lc
-             |  FROM documents
-             |  WHERE text IS NOT NULL AND lang IS NOT NULL),
-             |s AS (SELECT lang, cjk, lc,
-             |    len(list_filter(toks, x -> x IN
-             |      ('the','a','an','and','of','to','in','is'))) AS en,
-             |    len(list_filter(toks, x -> x IN
-             |      ('el','la','los','de','y','en','es','un'))) AS es,
-             |    len(list_filter(toks, x -> x IN
-             |      ('le','la','les','et','de','un','une','est'))) AS fr,
-             |    len(list_filter(toks, x -> x IN
-             |      ('der','die','das','und','ein','ist','zu','von')))
-             |      AS de
-             |  FROM t),
-             |p AS (SELECT (lang = 'en') AS truth,
-             |    (CASE WHEN cjk * 3 > lc THEN 'zh'
-             |          WHEN en >= es AND en >= fr AND en >= de
-             |            AND en > 0 THEN 'en'
-             |          WHEN es >= fr AND es >= de AND es > 0 THEN 'es'
-             |          WHEN fr >= de AND fr > 0 THEN 'fr'
-             |          WHEN de > 0 THEN 'de'
-             |          ELSE 'und' END = 'en') AS pa,
-             |    (en > 0) AS pb
+      Some(s"""WITH $duckLangIdPredCtes
              |  FROM s),
              |m AS (SELECT CAST(count(*) AS BIGINT) AS n,
              |    CAST(count(*) FILTER (WHERE (pa = truth)
@@ -5917,32 +6154,7 @@ object SparkEntry {
         graft.pipeline.Eval.cochranQ(docs, Seq(
           predA === truthEn, predB === truthEn, predC === truthEn))
       },
-      Some("""WITH t AS (SELECT lang, str_split(text, ' ') AS toks,
-             |    length(regexp_replace(text, '[^\x{4e00}-\x{9fff}]',
-             |      '', 'g')) AS cjk,
-             |    length(text) AS lc
-             |  FROM documents
-             |  WHERE text IS NOT NULL AND lang IS NOT NULL),
-             |s AS (SELECT lang, cjk, lc,
-             |    len(list_filter(toks, x -> x IN
-             |      ('the','a','an','and','of','to','in','is'))) AS en,
-             |    len(list_filter(toks, x -> x IN
-             |      ('el','la','los','de','y','en','es','un'))) AS es,
-             |    len(list_filter(toks, x -> x IN
-             |      ('le','la','les','et','de','un','une','est'))) AS fr,
-             |    len(list_filter(toks, x -> x IN
-             |      ('der','die','das','und','ein','ist','zu','von')))
-             |      AS de
-             |  FROM t),
-             |p AS (SELECT (lang = 'en') AS truth,
-             |    (CASE WHEN cjk * 3 > lc THEN 'zh'
-             |          WHEN en >= es AND en >= fr AND en >= de
-             |            AND en > 0 THEN 'en'
-             |          WHEN es >= fr AND es >= de AND es > 0 THEN 'es'
-             |          WHEN fr >= de AND fr > 0 THEN 'fr'
-             |          WHEN de > 0 THEN 'de'
-             |          ELSE 'und' END = 'en') AS pa,
-             |    (en > 0) AS pb,
+      Some(s"""WITH $duckLangIdPredCtes,
              |    (cjk * 3 <= lc) AS pc
              |  FROM s),
              |f AS (SELECT
@@ -6410,20 +6622,10 @@ object SparkEntry {
           .select(col("n_chars").cast("long").as("v"),
             TextStats.tokenCount(col("text")).as("w")),
         "v", "w", q = 0.5, buckets = 32, threshold = 500),
-      Some("""WITH s AS (SELECT CAST(n_chars AS DOUBLE) AS v,
+      Some(s"""WITH s AS (SELECT CAST(n_chars AS DOUBLE) AS v,
              |    CAST(len(str_split(text, ' ')) AS BIGINT) AS w
              |  FROM documents),
-             |t AS (SELECT CAST(sum(w) AS BIGINT) AS wt FROM s),
-             |kx AS (SELECT wt, greatest(CAST(1 AS BIGINT),
-             |    CAST(ceil(CAST(0.5 AS DOUBLE) * wt) AS BIGINT)) AS k
-             |  FROM t),
-             |c AS (SELECT v, CAST(sum(w) OVER (ORDER BY v
-             |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             |    AS BIGINT) AS cw
-             |  FROM s)
-             |SELECT (SELECT min(v) FROM c, kx WHERE c.cw >= kx.k)
-             |    AS value,
-             |  wt AS w_total, k FROM kx""".stripMargin)),
+             |$duckWeightedMedianTail""".stripMargin)),
 
     // The GROUPED form of q110 — one token-weighted KLL sketch per
     // source from a single grouped pass, the production per-domain
@@ -6469,25 +6671,11 @@ object SparkEntry {
           .select(col("source"), col("n_chars").cast("long").as("v"),
             TextStats.tokenCount(col("text")).as("w")),
         "source", "v", "w", q = 0.5, buckets = 32, threshold = 500),
-      Some("""WITH s AS (SELECT source AS grp,
+      Some(s"""WITH s AS (SELECT source AS grp,
              |    CAST(n_chars AS DOUBLE) AS v,
              |    CAST(len(str_split(text, ' ')) AS BIGINT) AS w
              |  FROM documents),
-             |t AS (SELECT grp, CAST(sum(w) AS BIGINT) AS wt
-             |  FROM s GROUP BY grp),
-             |kx AS (SELECT grp, wt, greatest(CAST(1 AS BIGINT),
-             |    CAST(ceil(CAST(0.5 AS DOUBLE) * wt) AS BIGINT)) AS k
-             |  FROM t),
-             |c AS (SELECT grp, v, CAST(sum(w) OVER (PARTITION BY grp
-             |    ORDER BY v
-             |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             |    AS BIGINT) AS cw
-             |  FROM s)
-             |SELECT kx.grp AS source,
-             |  (SELECT min(v) FROM c
-             |   WHERE c.grp = kx.grp AND c.cw >= kx.k) AS value,
-             |  wt AS w_total, k
-             |FROM kx ORDER BY source""".stripMargin)),
+             |${duckGroupedMedianSql("source")}""".stripMargin)),
 
     // Welch's unequal-variance t-test — q73's parametric companion on
     // the SAME split (rank test vs mean test over the identical
@@ -6556,17 +6744,7 @@ object SparkEntry {
             nullif(lit(2.0d) * col("n_a").cast("double") *
               col("n_b").cast("double"), lit(0.0d)), 6)
             .as("a_hat")),
-      Some("""WITH d AS (SELECT CAST(l_extendedprice AS DOUBLE) AS v,
-             |    (l_linestatus = 'O') AS a
-             |  FROM lineitem
-             |  WHERE l_extendedprice IS NOT NULL
-             |    AND l_linestatus IS NOT NULL),
-             |vv AS (SELECT v, CAST(count(*) AS HUGEINT) AS c,
-             |    CAST(count(*) FILTER (WHERE a) AS HUGEINT) AS ca
-             |  FROM d GROUP BY v),
-             |r AS (SELECT v, c, ca,
-             |    2 * (sum(c) OVER (ORDER BY v) - c) + c + 1 AS r2
-             |  FROM vv),
+      Some(s"""WITH $duckMwRankCtes,
              |ag AS (SELECT coalesce(sum(c), 0) AS n,
              |    coalesce(sum(ca), 0) AS na,
              |    coalesce(sum(ca * r2), 0) AS ra2
@@ -6602,7 +6780,7 @@ object SparkEntry {
         graft.pipeline.Eval.mwAgainstReference(
           docs.filter(col("source") === "src0"), refC, col("n_chars"))
       },
-      Some("""WITH ma AS (SELECT CAST(n_chars AS DOUBLE) AS v,
+      Some(s"""WITH ma AS (SELECT CAST(n_chars AS DOUBLE) AS v,
              |    CAST(count(*) AS HUGEINT) AS ca
              |  FROM documents
              |  WHERE source = 'src0' AND n_chars IS NOT NULL
@@ -6624,17 +6802,7 @@ object SparkEntry {
              |    coalesce(sum(ca * r2), 0) AS ra2,
              |    coalesce(sum(c * c * c - c), 0) AS t
              |  FROM mr)
-             |SELECT CAST(na AS BIGINT) AS n_a,
-             |  CAST(n - na AS BIGINT) AS n_b,
-             |  CAST(ra2 - na * (na + 1) AS BIGINT) AS u2_a,
-             |  CAST(t AS BIGINT) AS tie_t,
-             |  CASE WHEN n < 2 THEN NULL ELSE
-             |    ROUND(CAST(ra2 - na * (na + 1) - na * (n - na)
-             |        AS DOUBLE) /
-             |      nullif(sqrt(CAST(na * (n - na) AS DOUBLE)
-             |        * CAST(n * n * n - n - t AS DOUBLE)
-             |        / CAST(3 * n * (n - 1) AS DOUBLE)), 0.0), 6)
-             |  END AS z
+             |SELECT $duckMwZCols
              |FROM mg""".stripMargin)),
 
     // Per-GROUP Mann–Whitney in shared scans (the q53/q57 grouped
@@ -6647,7 +6815,7 @@ object SparkEntry {
       (s, dir) => graft.pipeline.Eval.groupedMannWhitneyU(
         table(s, dir, "documents"), col("n_chars"),
         col("source") === "src0", col("lang")),
-      Some("""WITH gd AS (SELECT lang AS g,
+      Some(s"""WITH gd AS (SELECT lang AS g,
              |    CAST(n_chars AS DOUBLE) AS v,
              |    (source = 'src0') AS a
              |  FROM documents
@@ -6665,17 +6833,7 @@ object SparkEntry {
              |    coalesce(sum(ca * r2), 0) AS ra2,
              |    coalesce(sum(c * c * c - c), 0) AS t
              |  FROM gr GROUP BY g)
-             |SELECT g AS "group", CAST(na AS BIGINT) AS n_a,
-             |  CAST(n - na AS BIGINT) AS n_b,
-             |  CAST(ra2 - na * (na + 1) AS BIGINT) AS u2_a,
-             |  CAST(t AS BIGINT) AS tie_t,
-             |  CASE WHEN n < 2 THEN NULL ELSE
-             |    ROUND(CAST(ra2 - na * (na + 1) - na * (n - na)
-             |        AS DOUBLE) /
-             |      nullif(sqrt(CAST(na * (n - na) AS DOUBLE)
-             |        * CAST(n * n * n - n - t AS DOUBLE)
-             |        / CAST(3 * n * (n - 1) AS DOUBLE)), 0.0), 6)
-             |  END AS z
+             |SELECT g AS "group", $duckMwZCols
              |FROM gg ORDER BY g""".stripMargin)),
 
     // Per-GROUP Welch in one shared scan — q78's parametric twin on
@@ -6733,30 +6891,7 @@ object SparkEntry {
           !isnan(col("value"))),
         round(col("value") * 1e6).cast("long"),
         expr("(ts div 1000) div 3600000000")),
-      Some("""WITH eb AS (SELECT
-             |    epoch_us(ts) // 3600000000 AS bucket,
-             |    CAST(round(value * 1e6) AS HUGEINT) AS v
-             |  FROM events
-             |  WHERE ts IS NOT NULL AND value IS NOT NULL
-             |    AND NOT isnan(value)),
-             |bb AS (SELECT bucket, CAST(count(*) AS HUGEINT) AS c,
-             |    coalesce(sum(v), 0) AS s
-             |  FROM eb GROUP BY bucket),
-             |cw AS (SELECT bucket,
-             |    sum(c) OVER (ORDER BY bucket) AS cc,
-             |    sum(s) OVER (ORDER BY bucket) AS cs,
-             |    sum(c) OVER () AS tc,
-             |    sum(s) OVER () AS ts_,
-             |    CAST(count(*) OVER () AS BIGINT) AS nb
-             |  FROM bb),
-             |dd AS (SELECT bucket, nb,
-             |    tc * cs - ts_ * cc AS d
-             |  FROM cw)
-             |SELECT bucket AS cp_bucket, nb AS n_buckets,
-             |  CAST(d AS DOUBLE) AS cusum
-             |FROM dd
-             |ORDER BY abs(d) DESC, bucket ASC
-             |LIMIT 1""".stripMargin)),
+      Some(duckCusumSql)),
 
     // MULTI-shift changepoint localization: binary segmentation (one
     // recursion level, the unrolled-replay discipline) — root CUSUM
@@ -6811,17 +6946,7 @@ object SparkEntry {
           !isnan(col("value"))),
         round(col("value") * 1e6).cast("long"),
         expr("(ts div 1000) div 3600000000")),
-      Some("""WITH eb AS (SELECT
-             |    epoch_us(ts) // 3600000000 AS x,
-             |    CAST(round(value * 1e6) AS HUGEINT) AS v
-             |  FROM events
-             |  WHERE ts IS NOT NULL AND value IS NOT NULL
-             |    AND NOT isnan(value)),
-             |bb AS (SELECT x, CAST(count(*) AS HUGEINT) AS c,
-             |    coalesce(sum(v), 0) AS s
-             |  FROM eb GROUP BY x),
-             |mm AS (SELECT x, CAST(round(CAST(s AS DOUBLE) / c)
-             |    AS BIGINT) AS m FROM bb),
+      Some(s"""WITH $duckSeriesCtes,
              |pr AS (SELECT
              |    CASE WHEN b.m > a.m THEN 1
              |         WHEN b.m < a.m THEN -1 ELSE 0 END AS sgn,
@@ -6868,17 +6993,7 @@ object SparkEntry {
           !isnan(col("value"))),
         round(col("value") * 1e6).cast("long"),
         expr("(ts div 1000) div 3600000000")),
-      Some("""WITH eb AS (SELECT
-             |    epoch_us(ts) // 3600000000 AS x,
-             |    CAST(round(value * 1e6) AS HUGEINT) AS v
-             |  FROM events
-             |  WHERE ts IS NOT NULL AND value IS NOT NULL
-             |    AND NOT isnan(value)),
-             |bb AS (SELECT x, CAST(count(*) AS HUGEINT) AS c,
-             |    coalesce(sum(v), 0) AS s
-             |  FROM eb GROUP BY x),
-             |mm AS (SELECT x, CAST(round(CAST(s AS DOUBLE) / c)
-             |    AS BIGINT) AS m FROM bb),
+      Some(s"""WITH $duckSeriesCtes,
              |md AS (SELECT m AS med, nb FROM (
              |    SELECT m, row_number() OVER (ORDER BY m, x) AS rn,
              |      CAST(count(*) OVER () AS BIGINT) AS nb FROM mm)
@@ -6918,33 +7033,10 @@ object SparkEntry {
     "q87_anova_f" -> Q(
       (s, dir) => graft.pipeline.Eval.anovaF(
         table(s, dir, "documents"), col("n_chars"), col("lang")),
-      Some("""WITH ad AS (SELECT lang AS g,
+      Some(s"""WITH ad AS (SELECT lang AS g,
              |    CAST(n_chars AS HUGEINT) AS v FROM documents
              |  WHERE lang IS NOT NULL AND n_chars IS NOT NULL),
-             |ag AS (SELECT g, CAST(count(*) AS HUGEINT) AS ng,
-             |    coalesce(sum(v), 0) AS sg,
-             |    coalesce(sum(v * v), 0) AS qg
-             |  FROM ad GROUP BY g),
-             |at2 AS (SELECT g, ng, sg, qg,
-             |    CAST(ROUND(1e6 * (CAST(sg AS DOUBLE) / ng)
-             |      * (CAST(sg AS DOUBLE) / ng) * ng) AS HUGEINT)
-             |      AS term FROM ag),
-             |aa AS (SELECT CAST(count(*) AS BIGINT) AS k,
-             |    CAST(sum(ng) AS BIGINT) AS n,
-             |    coalesce(sum(qg), 0) AS ssq,
-             |    coalesce(sum(sg), 0) AS s,
-             |    coalesce(sum(term), 0) AS sumterm FROM at2)
-             |SELECT k AS k_groups, n, k - 1 AS df1, n - k AS df2,
-             |  CASE WHEN k >= 2 AND n > k
-             |    AND (1000000 * ssq - sumterm) > 0 THEN
-             |    ROUND((CAST(sumterm - CAST(ROUND(1e6
-             |        * (CAST(s AS DOUBLE) / n)
-             |        * (CAST(s AS DOUBLE) / n) * n) AS HUGEINT)
-             |        AS DOUBLE) / (k - 1))
-             |      / (CAST(1000000 * ssq - sumterm AS DOUBLE)
-             |        / (n - k)), 6)
-             |  ELSE NULL END AS f_stat
-             |FROM aa""".stripMargin)),
+             |${duckAnovaTail("f_stat")}""".stripMargin)),
 
     // Kruskal-Wallis H: the rank-based twin of q87's ANOVA (as MW is
     // to Welch) — does ANY language's length distribution sit higher,
@@ -6995,7 +7087,7 @@ object SparkEntry {
       (s, dir) => graft.pipeline.Eval.brownForsytheF(
         table(s, dir, "documents"), col("n_chars"), col("lang"),
         buckets = 32, threshold = 500),
-      Some("""WITH s AS (SELECT lang AS g,
+      Some(s"""WITH s AS (SELECT lang AS g,
              |    CAST(n_chars AS BIGINT) AS v FROM documents
              |  WHERE lang IS NOT NULL AND n_chars IS NOT NULL),
              |t AS (SELECT g, CAST(count(*) AS BIGINT) AS wt
@@ -7013,30 +7105,7 @@ object SparkEntry {
              |  FROM kx),
              |ad AS (SELECT s.g, CAST(abs(s.v - m.med) AS HUGEINT)
              |    AS v FROM s JOIN m ON m.g = s.g),
-             |ag AS (SELECT g, CAST(count(*) AS HUGEINT) AS ng,
-             |    coalesce(sum(v), 0) AS sg,
-             |    coalesce(sum(v * v), 0) AS qg
-             |  FROM ad GROUP BY g),
-             |at2 AS (SELECT g, ng, sg, qg,
-             |    CAST(ROUND(1e6 * (CAST(sg AS DOUBLE) / ng)
-             |      * (CAST(sg AS DOUBLE) / ng) * ng) AS HUGEINT)
-             |      AS term FROM ag),
-             |aa AS (SELECT CAST(count(*) AS BIGINT) AS k,
-             |    CAST(sum(ng) AS BIGINT) AS n,
-             |    coalesce(sum(qg), 0) AS ssq,
-             |    coalesce(sum(sg), 0) AS s,
-             |    coalesce(sum(term), 0) AS sumterm FROM at2)
-             |SELECT k AS k_groups, n, k - 1 AS df1, n - k AS df2,
-             |  CASE WHEN k >= 2 AND n > k
-             |    AND (1000000 * ssq - sumterm) > 0 THEN
-             |    ROUND((CAST(sumterm - CAST(ROUND(1e6
-             |        * (CAST(s AS DOUBLE) / n)
-             |        * (CAST(s AS DOUBLE) / n) * n) AS HUGEINT)
-             |        AS DOUBLE) / (k - 1))
-             |      / (CAST(1000000 * ssq - sumterm AS DOUBLE)
-             |        / (n - k)), 6)
-             |  ELSE NULL END AS w_stat
-             |FROM aa""".stripMargin)),
+             |${duckAnovaTail("w_stat")}""".stripMargin)),
 
     // Jarque–Bera normality audit of the document-length
     // distribution: exact decimal power sums Σv..Σv⁴ in ONE
@@ -7510,30 +7579,7 @@ object SparkEntry {
         }
         out
       },
-      Some("""WITH eb AS (SELECT
-             |    epoch_us(ts) // 3600000000 AS bucket,
-             |    CAST(round(value * 1e6) AS HUGEINT) AS v
-             |  FROM events
-             |  WHERE ts IS NOT NULL AND value IS NOT NULL
-             |    AND NOT isnan(value)),
-             |bb AS (SELECT bucket, CAST(count(*) AS HUGEINT) AS c,
-             |    coalesce(sum(v), 0) AS s
-             |  FROM eb GROUP BY bucket),
-             |cw AS (SELECT bucket,
-             |    sum(c) OVER (ORDER BY bucket) AS cc,
-             |    sum(s) OVER (ORDER BY bucket) AS cs,
-             |    sum(c) OVER () AS tc,
-             |    sum(s) OVER () AS ts_,
-             |    CAST(count(*) OVER () AS BIGINT) AS nb
-             |  FROM bb),
-             |dd AS (SELECT bucket, nb,
-             |    tc * cs - ts_ * cc AS d
-             |  FROM cw)
-             |SELECT bucket AS cp_bucket, nb AS n_buckets,
-             |  CAST(d AS DOUBLE) AS cusum
-             |FROM dd
-             |ORDER BY abs(d) DESC, bucket ASC
-             |LIMIT 1""".stripMargin)),
+      Some(duckCusumSql)),
 
     // W1 against a PINNED REFERENCE (the q49 convention): the batch
     // operator w1DriftStream's foreachBatch sink runs per micro-batch,
@@ -7549,33 +7595,8 @@ object SparkEntry {
         graft.pipeline.Eval.w1AgainstReference(
           docs.filter(col("source") === "src0"), refC, col("n_chars"))
       },
-      Some("""WITH a AS (SELECT n_chars AS v,
-             |    CAST(count(*) AS BIGINT) AS ca
-             |  FROM documents WHERE source = 'src0' GROUP BY 1),
-             |b AS (SELECT n_chars AS v,
-             |    CAST(count(*) AS BIGINT) AS cb
-             |  FROM documents WHERE source <> 'src0' GROUP BY 1),
-             |g AS (SELECT COALESCE(a.v, b.v) AS v,
-             |    COALESCE(a.ca, 0) AS ca, COALESCE(b.cb, 0) AS cb
-             |  FROM a FULL OUTER JOIN b ON a.v = b.v),
-             |c AS (SELECT v, sum(ca) OVER (ORDER BY v) AS cum_a,
-             |    sum(cb) OVER (ORDER BY v) AS cum_b,
-             |    lead(v) OVER (ORDER BY v) AS next_v
-             |  FROM g),
-             |t AS (SELECT CAST(sum(ca) AS HUGEINT) AS na,
-             |    CAST(sum(cb) AS HUGEINT) AS nb,
-             |    CAST(count(*) AS BIGINT) AS nvals FROM g),
-             |w AS (SELECT coalesce(sum(
-             |      abs(cum_a * t.nb - cum_b * t.na)
-             |      * CAST(next_v - v AS HUGEINT)),
-             |    CAST(0 AS HUGEINT)) AS wnum
-             |  FROM c, t WHERE next_v IS NOT NULL)
-             |SELECT CASE WHEN t.na > 0 AND t.nb > 0
-             |    THEN CAST((1000000 * w.wnum) // (t.na * t.nb)
-             |      AS BIGINT) ELSE NULL END AS w1_micro,
-             |  CAST(t.na AS BIGINT) AS n_a, CAST(t.nb AS BIGINT) AS n_b,
-             |  t.nvals AS n_values
-             |FROM t, w""".stripMargin)),
+      Some(s"""WITH $duckRefCountsCtes,
+             |$duckW1Tail""".stripMargin)),
 
     // DeLong's test comparing two quality signals' ROC-AUCs on the
     // SAME labeled rows (paired structural-component covariance —
@@ -7675,18 +7696,10 @@ object SparkEntry {
       (s, dir) => graft.ops.DistributedSelect.groupedMad(
         lineitem(s, dir), "l_returnflag", "l_extendedprice",
         "l_quantity", buckets = 32, threshold = 500),
-      Some("""WITH s AS (SELECT l_returnflag AS grp,
+      Some(s"""WITH s AS (SELECT l_returnflag AS grp,
              |    CAST(l_extendedprice AS DOUBLE) AS v,
              |    CAST(l_quantity AS BIGINT) AS w FROM lineitem),
-             |t AS (SELECT grp, CAST(sum(w) AS BIGINT) AS wt
-             |  FROM s GROUP BY grp),
-             |kx AS (SELECT grp, wt, greatest(CAST(1 AS BIGINT),
-             |    CAST(ceil(CAST(0.5 AS DOUBLE) * wt) AS BIGINT)) AS k
-             |  FROM t),
-             |c AS (SELECT grp, v, CAST(sum(w) OVER (PARTITION BY grp
-             |    ORDER BY v
-             |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             |    AS BIGINT) AS cw FROM s),
+             |$duckGroupedCumWeightCtes FROM s),
              |m AS (SELECT kx.grp,
              |    (SELECT min(v) FROM c
              |     WHERE c.grp = kx.grp AND c.cw >= kx.k) AS med,
@@ -7772,8 +7785,7 @@ object SparkEntry {
       (s, dir) => {
         val docs = table(s, dir, "documents")
         val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-          .head().getSeq[Float](0).map(_.toDouble)
+        val q = vec0(emb)
         val lex = Retrieval.bm25TopK(docs, "doc_id", "text",
             Seq("vector", "hash", "merge"), k = 50)
           .select(col("id"), col("bm25").as("score"))
@@ -7783,22 +7795,7 @@ object SparkEntry {
             .as("score"))
         graft.pipeline.Eval.kendallTauBMicro(lex, sem)
       },
-      Some("""WITH p AS (SELECT doc_id AS id, t AS term,
-             |    CAST(count(*) AS BIGINT) AS tf
-             |  FROM (SELECT doc_id, unnest(str_split(text, ' ')) AS t
-             |        FROM documents) u
-             |  WHERE t IN ('vector', 'hash', 'merge')
-             |  GROUP BY id, t),
-             |l AS (SELECT doc_id AS id, len(str_split(text, ' ')) AS dl
-             |  FROM documents),
-             |st AS (SELECT count(*) AS n_docs,
-             |    CAST(sum(len(str_split(text, ' '))) AS DOUBLE)
-             |      / count(*) AS avgdl
-             |  FROM documents),
-             |i AS (SELECT term, ln(1.0 + (n_docs - df + 0.5)/(df + 0.5))
-             |    AS idf, avgdl
-             |  FROM (SELECT term, count(*) AS df FROM p GROUP BY term)
-             |  CROSS JOIN st),
+      Some(s"""WITH $duckBm25Ctes,
              |sc AS (SELECT p.id,
              |    ROUND(sum(i.idf * p.tf * 2.2
              |      / (p.tf + 1.2 * (1 - 0.75 + 0.75 * l.dl / i.avgdl))),
@@ -7807,13 +7804,7 @@ object SparkEntry {
              |  GROUP BY p.id),
              |lex AS (SELECT id, s FROM sc
              |  ORDER BY s DESC, id ASC LIMIT 50),
-             |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-             |  FROM embeddings),
-             |qv AS (SELECT v AS q FROM e WHERE vec_id = 0),
-             |cs AS (SELECT vec_id AS id, ROUND(list_dot_product(v, q)
-             |    / (sqrt(list_dot_product(v, v))
-             |       * sqrt(list_dot_product(q, q))), 6) AS c
-             |  FROM e, qv),
+             |$duckQ0CosineCtes,
              |j AS (SELECT lex.id, lex.s AS sa, cs.c AS sb
              |  FROM lex JOIN cs USING (id)),
              |pr AS (SELECT a.sa AS a1, a.sb AS b1, b.sa AS a2,
@@ -8024,33 +8015,7 @@ object SparkEntry {
       Some(s"""WITH ${duckLshVerifiedCtes("documents", 0.3)},
               |te AS (SELECT DISTINCT id_a AS lo, id_b AS hi
               |       FROM vpairs WHERE id_a < id_b),
-              |d0 AS (SELECT id, CAST(count(*) AS BIGINT) AS deg
-              |  FROM (SELECT lo AS id FROM te
-              |        UNION ALL SELECT hi FROM te) u GROUP BY id),
-              |k0 AS (SELECT id FROM d0 WHERE deg >= 2),
-              |e1 AS (SELECT te.lo, te.hi FROM te
-              |  JOIN k0 a ON a.id = te.lo JOIN k0 b ON b.id = te.hi),
-              |d1 AS (SELECT id, CAST(count(*) AS BIGINT) AS deg
-              |  FROM (SELECT lo AS id FROM e1
-              |        UNION ALL SELECT hi FROM e1) u GROUP BY id),
-              |k1 AS (SELECT id FROM d1 WHERE deg >= 2),
-              |e2 AS (SELECT e1.lo, e1.hi FROM e1
-              |  JOIN k1 a ON a.id = e1.lo JOIN k1 b ON b.id = e1.hi),
-              |d2 AS (SELECT id, CAST(count(*) AS BIGINT) AS deg
-              |  FROM (SELECT lo AS id FROM e2
-              |        UNION ALL SELECT hi FROM e2) u GROUP BY id),
-              |k2 AS (SELECT id FROM d2 WHERE deg >= 2),
-              |e3 AS (SELECT e2.lo, e2.hi FROM e2
-              |  JOIN k2 a ON a.id = e2.lo JOIN k2 b ON b.id = e2.hi),
-              |d3 AS (SELECT id, CAST(count(*) AS BIGINT) AS deg
-              |  FROM (SELECT lo AS id FROM e3
-              |        UNION ALL SELECT hi FROM e3) u GROUP BY id),
-              |k3 AS (SELECT id FROM d3 WHERE deg >= 2),
-              |e4 AS (SELECT e3.lo, e3.hi FROM e3
-              |  JOIN k3 a ON a.id = e3.lo JOIN k3 b ON b.id = e3.hi),
-              |d4 AS (SELECT id, CAST(count(*) AS BIGINT) AS deg
-              |  FROM (SELECT lo AS id FROM e4
-              |        UNION ALL SELECT hi FROM e4) u GROUP BY id)
+              |${duckKCorePeelCtes(4)}
               |SELECT id AS doc_id, deg FROM d4 WHERE deg >= 2
               |ORDER BY doc_id LIMIT 2000""".stripMargin
         // force CTE materialization: each peel level references the
@@ -8078,28 +8043,7 @@ object SparkEntry {
               |       FROM vpairs WHERE id_a < id_b),
               |ed AS (SELECT lo AS src, hi AS dst FROM te
               |       UNION ALL SELECT hi, lo FROM te),
-              |l0 AS (SELECT DISTINCT src AS id, src AS label FROM ed),
-              |c1 AS (SELECT e.src, l.label, count(*) AS cnt
-              |  FROM ed e JOIN l0 l ON e.dst = l.id
-              |  GROUP BY e.src, l.label),
-              |l1 AS (SELECT src AS id, label FROM (
-              |    SELECT src, label, row_number() OVER (
-              |      PARTITION BY src ORDER BY cnt DESC, label ASC)
-              |      AS rn FROM c1) w1 WHERE rn = 1),
-              |c2 AS (SELECT e.src, l.label, count(*) AS cnt
-              |  FROM ed e JOIN l1 l ON e.dst = l.id
-              |  GROUP BY e.src, l.label),
-              |l2 AS (SELECT src AS id, label FROM (
-              |    SELECT src, label, row_number() OVER (
-              |      PARTITION BY src ORDER BY cnt DESC, label ASC)
-              |      AS rn FROM c2) w2 WHERE rn = 1),
-              |c3 AS (SELECT e.src, l.label, count(*) AS cnt
-              |  FROM ed e JOIN l2 l ON e.dst = l.id
-              |  GROUP BY e.src, l.label),
-              |l3 AS (SELECT src AS id, label FROM (
-              |    SELECT src, label, row_number() OVER (
-              |      PARTITION BY src ORDER BY cnt DESC, label ASC)
-              |      AS rn FROM c3) w3 WHERE rn = 1)
+              |${duckLpaCtes("")}
               |SELECT id AS doc_id, CAST(label AS BIGINT) AS label
               |FROM l3 ORDER BY doc_id LIMIT 2000""".stripMargin
         .replace(" AS (", " AS MATERIALIZED ("))),
@@ -8121,34 +8065,9 @@ object SparkEntry {
           .orderBy("word").limit(2000)
       },
       Some(s"""WITH $duckWordGraphCtes,
-             |l0 AS (SELECT DISTINCT src AS id, src AS label FROM ed),
-             |c1 AS (SELECT e.src, l.label, count(*) AS cnt
-             |  FROM ed e JOIN l0 l ON e.dst = l.id
-             |  GROUP BY e.src, l.label),
-             |l1 AS (SELECT src AS id, label FROM (
-             |    SELECT src, label, row_number() OVER (
-             |      PARTITION BY src ORDER BY cnt DESC, label ASC)
-             |      AS rn FROM c1) w1 WHERE rn = 1),
-             |c2 AS (SELECT e.src, l.label, count(*) AS cnt
-             |  FROM ed e JOIN l1 l ON e.dst = l.id
-             |  GROUP BY e.src, l.label),
-             |l2 AS (SELECT src AS id, label FROM (
-             |    SELECT src, label, row_number() OVER (
-             |      PARTITION BY src ORDER BY cnt DESC, label ASC)
-             |      AS rn FROM c2) w2 WHERE rn = 1),
-             |c3 AS (SELECT e.src, l.label, count(*) AS cnt
-             |  FROM ed e JOIN l2 l ON e.dst = l.id
-             |  GROUP BY e.src, l.label),
-             |l3 AS (SELECT src AS id, label FROM (
-             |    SELECT src, label, row_number() OVER (
-             |      PARTITION BY src ORDER BY cnt DESC, label ASC)
-             |      AS rn FROM c3) w3 WHERE rn = 1),
-             |wd AS (SELECT DISTINCT wu.w AS word,
-             |    ${duckHash60("wu.w")} AS id
-             |  FROM (SELECT unnest([str_split(bg, ' ')[1],
-             |      str_split(bg, ' ')[2]]) AS w FROM pm) wu)
-             |SELECT wd.word, CAST(l3.label AS BIGINT) AS label
-             |FROM l3 JOIN wd ON wd.id = l3.id
+             |${duckLpaCtes("")}
+             |SELECT wm.word, CAST(l3.label AS BIGINT) AS label
+             |FROM l3 JOIN wm ON wm.id = l3.id
              |ORDER BY word LIMIT 2000""".stripMargin
         .replace(" AS (", " AS MATERIALIZED ("))),
 
@@ -8182,59 +8101,10 @@ object SparkEntry {
           .select(col("word"), col("rank_micro"))
           .orderBy(desc("rank_micro"), asc("word")).limit(100)
       },
-      Some(s"""WITH tk AS (SELECT str_split(text, ' ') AS toks
-             |  FROM documents),
-             |tt AS (SELECT CAST(sum(len(toks)) AS BIGINT) AS nt,
-             |    CAST(sum(greatest(len(toks) - 1, 0)) AS BIGINT) AS nb
-             |  FROM tk),
-             |u AS (SELECT ut.tok, CAST(count(*) AS BIGINT) AS c1
-             |  FROM tk, unnest(toks) AS ut(tok) GROUP BY ut.tok),
-             |bf AS (SELECT bg, CAST(count(*) AS BIGINT) AS c2
-             |  FROM (SELECT unnest(list_transform(
-             |      generate_series(1, greatest(len(toks) - 1, 0)),
-             |      i -> toks[i] || ' ' || toks[i+1])) AS bg FROM tk) b
-             |  GROUP BY bg HAVING count(*) >= 10),
-             |pm AS (SELECT bf.bg FROM bf
-             |  JOIN u u1 ON u1.tok = str_split(bf.bg, ' ')[1]
-             |  JOIN u u2 ON u2.tok = str_split(bf.bg, ' ')[2]
-             |  CROSS JOIN tt
-             |  ORDER BY CAST(round(1e6 * ln(
-             |      (CAST(bf.c2 AS DOUBLE) * tt.nt * tt.nt)
-             |      / (tt.nb * CAST(u1.c1 AS DOUBLE)
-             |         * CAST(u2.c1 AS DOUBLE)))) AS BIGINT) DESC,
-             |    bg ASC
-             |  LIMIT 300),
-             |wh AS (SELECT bg,
-             |    ${duckHash60("str_split(bg, ' ')[1]")} AS ha,
-             |    ${duckHash60("str_split(bg, ' ')[2]")} AS hb
-             |  FROM pm),
-             |te AS (SELECT DISTINCT least(ha, hb) AS lo,
-             |    greatest(ha, hb) AS hi
-             |  FROM wh WHERE ha <> hb),
-             |ge AS (SELECT lo AS src, hi AS dst FROM te
-             |       UNION ALL SELECT hi, lo FROM te),
-             |gd AS (SELECT src, CAST(count(*) AS BIGINT) AS deg
-             |       FROM ge GROUP BY src),
-             |gr0 AS (SELECT src AS id, CAST(1000000 AS BIGINT) AS r
-             |        FROM gd),
-             |gr1 AS (SELECT ge.dst AS id, CAST(150000 +
-             |      ROUND(0.85 * SUM(gr0.r // gd.deg)) AS BIGINT) AS r
-             |    FROM ge JOIN gr0 ON gr0.id = ge.src
-             |    JOIN gd ON gd.src = ge.src GROUP BY ge.dst),
-             |gr2 AS (SELECT ge.dst AS id, CAST(150000 +
-             |      ROUND(0.85 * SUM(gr1.r // gd.deg)) AS BIGINT) AS r
-             |    FROM ge JOIN gr1 ON gr1.id = ge.src
-             |    JOIN gd ON gd.src = ge.src GROUP BY ge.dst),
-             |gr3 AS (SELECT ge.dst AS id, CAST(150000 +
-             |      ROUND(0.85 * SUM(gr2.r // gd.deg)) AS BIGINT) AS r
-             |    FROM ge JOIN gr2 ON gr2.id = ge.src
-             |    JOIN gd ON gd.src = ge.src GROUP BY ge.dst),
-             |wd AS (SELECT DISTINCT wu.w AS word,
-             |    ${duckHash60("wu.w")} AS id
-             |  FROM (SELECT unnest([str_split(bg, ' ')[1],
-             |      str_split(bg, ' ')[2]]) AS w FROM pm) wu)
-             |SELECT wd.word, gr3.r AS rank_micro
-             |FROM gr3 JOIN wd ON wd.id = gr3.id
+      Some(s"""WITH $duckWordGraphCtes,
+             |${duckPageRankCtes("ed")}
+             |SELECT wm.word, gr3.r AS rank_micro
+             |FROM gr3 JOIN wm ON wm.id = gr3.id
              |ORDER BY rank_micro DESC, word ASC
              |LIMIT 100""".stripMargin
         .replace(" AS (", " AS MATERIALIZED ("))),
@@ -8317,27 +8187,7 @@ object SparkEntry {
         .select(col("id").as("doc_id"), col("span_start"),
           col("span_end"), col("span_words"), col("span_text"))
         .orderBy("doc_id", "span_start").limit(5000),
-      Some("""WITH t AS (SELECT doc_id, str_split(text,' ') AS toks
-             |  FROM documents),
-             |pg AS (SELECT doc_id,
-             |    unnest(generate_series(1, greatest(len(toks)-12, 0)))
-             |      AS pos,
-             |    unnest(list_transform(
-             |      generate_series(1, greatest(len(toks)-12, 0)),
-             |      i -> array_to_string(toks[i:i+12], ' '))) AS gram
-             |  FROM t),
-             |dup AS (SELECT gram FROM pg GROUP BY gram
-             |  HAVING min(doc_id) <> max(doc_id)),
-             |ds AS (SELECT doc_id, pos FROM pg JOIN dup USING (gram)),
-             |fl AS (SELECT doc_id, pos, CASE WHEN pos > lag(pos) OVER
-             |    (PARTITION BY doc_id ORDER BY pos) + 13
-             |  THEN 1 ELSE 0 END AS f FROM ds),
-             |gr AS (SELECT doc_id, pos, SUM(f) OVER (
-             |    PARTITION BY doc_id ORDER BY pos
-             |    ROWS UNBOUNDED PRECEDING) AS grp FROM fl),
-             |spans AS (SELECT doc_id, MIN(pos) AS span_start,
-             |    MAX(pos) + 12 AS span_end
-             |  FROM gr GROUP BY doc_id, grp)
+      Some(s"""WITH $duckDupSpanCtes
              |SELECT s.doc_id, span_start, span_end,
              |  span_end - span_start + 1 AS span_words,
              |  array_to_string(toks[span_start:span_end], ' ')
@@ -8359,27 +8209,7 @@ object SparkEntry {
         .select(col("id").as("doc_id"), col("n_spans"),
           col("n_words"), col("n_removed"), col("clean_text"))
         .orderBy("doc_id").limit(2000),
-      Some("""WITH t AS (SELECT doc_id, str_split(text,' ') AS toks
-             |  FROM documents),
-             |pg AS (SELECT doc_id,
-             |    unnest(generate_series(1, greatest(len(toks)-12, 0)))
-             |      AS pos,
-             |    unnest(list_transform(
-             |      generate_series(1, greatest(len(toks)-12, 0)),
-             |      i -> array_to_string(toks[i:i+12], ' '))) AS gram
-             |  FROM t),
-             |dup AS (SELECT gram FROM pg GROUP BY gram
-             |  HAVING min(doc_id) <> max(doc_id)),
-             |ds AS (SELECT doc_id, pos FROM pg JOIN dup USING (gram)),
-             |fl AS (SELECT doc_id, pos, CASE WHEN pos > lag(pos) OVER
-             |    (PARTITION BY doc_id ORDER BY pos) + 13
-             |  THEN 1 ELSE 0 END AS f FROM ds),
-             |gr AS (SELECT doc_id, pos, SUM(f) OVER (
-             |    PARTITION BY doc_id ORDER BY pos
-             |    ROWS UNBOUNDED PRECEDING) AS grp FROM fl),
-             |spans AS (SELECT doc_id, MIN(pos) AS span_start,
-             |    MAX(pos) + 12 AS span_end
-             |  FROM gr GROUP BY doc_id, grp),
+      Some(s"""WITH $duckDupSpanCtes,
              |sagg AS (SELECT doc_id, CAST(count(*) AS BIGINT)
              |    AS n_spans,
              |  CAST(SUM(span_end - span_start + 1) AS BIGINT)
@@ -8415,26 +8245,7 @@ object SparkEntry {
         .select(col("id").as("doc_id"), col("n_grams"),
           col("n_windows"), col("n_fp"))
         .orderBy("doc_id").limit(2000),
-      Some(s"""WITH t AS (SELECT doc_id, str_split(text,' ') AS toks
-             |  FROM documents),
-             |pg AS (SELECT doc_id,
-             |    unnest(generate_series(1, greatest(len(toks)-3, 0)))
-             |      AS pos,
-             |    unnest(list_transform(
-             |      generate_series(1, greatest(len(toks)-3, 0)),
-             |      i -> array_to_string(toks[i:i+3], ' '))) AS gram
-             |  FROM t),
-             |ph AS (SELECT doc_id, pos, ${duckHash60("gram")} AS h
-             |  FROM pg),
-             |ky AS (SELECT doc_id, pos,
-             |    CAST(h AS HUGEINT) * 16777216 + (16777216 - pos)
-             |      AS key FROM ph),
-             |sw AS (SELECT doc_id, pos, MIN(key) OVER (
-             |    PARTITION BY doc_id ORDER BY pos
-             |    ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS skey
-             |  FROM ky),
-             |sel AS (SELECT DISTINCT doc_id, skey FROM sw
-             |  WHERE pos >= 5),
+      Some(s"""WITH $duckWinnowKeyCtes,
              |ng AS (SELECT doc_id,
              |    CAST(greatest(len(toks)-3, 0) AS BIGINT) AS n_grams
              |  FROM t),
@@ -8579,22 +8390,7 @@ object SparkEntry {
               |ge AS (SELECT id_a AS src, id_b AS dst FROM vpairs
               |       UNION ALL
               |       SELECT id_b AS src, id_a AS dst FROM vpairs),
-              |gd AS (SELECT src, CAST(count(*) AS BIGINT) AS deg
-              |       FROM ge GROUP BY src),
-              |gr0 AS (SELECT src AS id, CAST(1000000 AS BIGINT) AS r
-              |        FROM gd),
-              |gr1 AS (SELECT ge.dst AS id, CAST(150000 +
-              |      ROUND(0.85 * SUM(gr0.r // gd.deg)) AS BIGINT) AS r
-              |    FROM ge JOIN gr0 ON gr0.id = ge.src
-              |    JOIN gd ON gd.src = ge.src GROUP BY ge.dst),
-              |gr2 AS (SELECT ge.dst AS id, CAST(150000 +
-              |      ROUND(0.85 * SUM(gr1.r // gd.deg)) AS BIGINT) AS r
-              |    FROM ge JOIN gr1 ON gr1.id = ge.src
-              |    JOIN gd ON gd.src = ge.src GROUP BY ge.dst),
-              |gr3 AS (SELECT ge.dst AS id, CAST(150000 +
-              |      ROUND(0.85 * SUM(gr2.r // gd.deg)) AS BIGINT) AS r
-              |    FROM ge JOIN gr2 ON gr2.id = ge.src
-              |    JOIN gd ON gd.src = ge.src GROUP BY ge.dst)
+              |${duckPageRankCtes("ge")}
               |SELECT id AS doc_id, r AS rank_micro FROM gr3
               |ORDER BY rank_micro DESC, doc_id ASC
               |LIMIT 500""".stripMargin)),
@@ -8724,28 +8520,7 @@ object SparkEntry {
               |  FROM vpairs WHERE id_a <> id_b),
               |med AS (SELECT lo AS src, hi AS dst FROM mte
               |       UNION ALL SELECT hi, lo FROM mte),
-              |ml0 AS (SELECT DISTINCT src AS id, src AS label FROM med),
-              |mc1 AS (SELECT e.src, l.label, count(*) AS cnt
-              |  FROM med e JOIN ml0 l ON e.dst = l.id
-              |  GROUP BY e.src, l.label),
-              |ml1 AS (SELECT src AS id, label FROM (
-              |    SELECT src, label, row_number() OVER (
-              |      PARTITION BY src ORDER BY cnt DESC, label ASC)
-              |      AS rn FROM mc1) w1 WHERE rn = 1),
-              |mc2 AS (SELECT e.src, l.label, count(*) AS cnt
-              |  FROM med e JOIN ml1 l ON e.dst = l.id
-              |  GROUP BY e.src, l.label),
-              |ml2 AS (SELECT src AS id, label FROM (
-              |    SELECT src, label, row_number() OVER (
-              |      PARTITION BY src ORDER BY cnt DESC, label ASC)
-              |      AS rn FROM mc2) w2 WHERE rn = 1),
-              |mc3 AS (SELECT e.src, l.label, count(*) AS cnt
-              |  FROM med e JOIN ml2 l ON e.dst = l.id
-              |  GROUP BY e.src, l.label),
-              |ml3 AS (SELECT src AS id, label FROM (
-              |    SELECT src, label, row_number() OVER (
-              |      PARTITION BY src ORDER BY cnt DESC, label ASC)
-              |      AS rn FROM mc3) w3 WHERE rn = 1),
+              |${duckLpaCtes("m")},
               |mdg AS (SELECT id, CAST(count(*) AS BIGINT) AS deg
               |  FROM (SELECT lo AS id FROM mte
               |        UNION ALL SELECT hi FROM mte) u GROUP BY id),
@@ -8935,25 +8710,7 @@ object SparkEntry {
           dedupArtifacts(s, dir).pairs, "id_a", "id_b")
         .withColumnRenamed("id", "doc_id")
         .orderBy("doc_id").limit(2000),
-      Some(s"""WITH ${duckLshVerifiedCtes("documents", 0.3)},
-              |te AS (SELECT DISTINCT least(id_a, id_b) AS lo,
-              |    greatest(id_a, id_b) AS hi
-              |  FROM vpairs WHERE id_a <> id_b),
-              |led AS (SELECT lo AS src, hi AS dst FROM te
-              |       UNION ALL SELECT hi, lo FROM te),
-              |ldg AS (SELECT id, CAST(count(*) AS BIGINT) AS deg
-              |  FROM (SELECT lo AS id FROM te
-              |        UNION ALL SELECT hi FROM te) u GROUP BY id),
-              |ls AS (SELECT CAST(sum(deg) AS BIGINT) AS s2m FROM ldg),
-              |lmv AS (SELECT e.src, e.dst,
-              |    s2m - ds.deg * dd.deg AS gain
-              |  FROM led e JOIN ldg ds ON ds.id = e.src
-              |            JOIN ldg dd ON dd.id = e.dst, ls
-              |  WHERE e.dst < e.src AND s2m - ds.deg * dd.deg > 0),
-              |lpick AS (SELECT src, dst, gain FROM (
-              |    SELECT src, dst, gain, row_number() OVER (
-              |      PARTITION BY src ORDER BY gain DESC, dst ASC)
-              |      AS rn FROM lmv) w WHERE rn = 1)
+      Some(s"""WITH $duckLouvainMoveCtes
               |SELECT d.id AS doc_id, d.deg,
               |  CAST(coalesce(b.dst, d.id) AS BIGINT) AS community,
               |  CAST(coalesce(b.gain, 0) AS BIGINT) AS gain_scaled
@@ -8973,25 +8730,7 @@ object SparkEntry {
       (s, dir) => graft.pipeline.GraphOps.louvainTwoLevel(
           dedupArtifacts(s, dir).pairs, "id_a", "id_b")
         .orderBy("community_l1").limit(2000),
-      Some(s"""WITH ${duckLshVerifiedCtes("documents", 0.3)},
-              |te AS (SELECT DISTINCT least(id_a, id_b) AS lo,
-              |    greatest(id_a, id_b) AS hi
-              |  FROM vpairs WHERE id_a <> id_b),
-              |led AS (SELECT lo AS src, hi AS dst FROM te
-              |       UNION ALL SELECT hi, lo FROM te),
-              |ldg AS (SELECT id, CAST(count(*) AS BIGINT) AS deg
-              |  FROM (SELECT lo AS id FROM te
-              |        UNION ALL SELECT hi FROM te) u GROUP BY id),
-              |ls AS (SELECT CAST(sum(deg) AS BIGINT) AS s2m FROM ldg),
-              |lmv AS (SELECT e.src, e.dst,
-              |    s2m - ds.deg * dd.deg AS gain
-              |  FROM led e JOIN ldg ds ON ds.id = e.src
-              |            JOIN ldg dd ON dd.id = e.dst, ls
-              |  WHERE e.dst < e.src AND s2m - ds.deg * dd.deg > 0),
-              |lpick AS (SELECT src, dst, gain FROM (
-              |    SELECT src, dst, gain, row_number() OVER (
-              |      PARTITION BY src ORDER BY gain DESC, dst ASC)
-              |      AS rn FROM lmv) w WHERE rn = 1),
+      Some(s"""WITH $duckLouvainMoveCtes,
               |la AS (SELECT d.id, coalesce(b.dst, d.id) AS comm
               |  FROM ldg d LEFT JOIN lpick b ON b.src = d.id),
               |ce AS (SELECT a.comm AS ca, b.comm AS cb FROM te
@@ -9119,19 +8858,7 @@ object SparkEntry {
         .select(col("id").as("doc_id"), col("n_grams"),
           col("n_dup_grams"), col("dup_frac"))
         .orderBy("doc_id").limit(2000),
-      Some("""WITH t AS (SELECT doc_id, str_split(text,' ') AS toks
-             |  FROM documents),
-             |ga AS (SELECT doc_id, list_distinct(list_transform(
-             |    generate_series(1, greatest(len(toks)-12, 0)),
-             |    i -> array_to_string(toks[i:i+12], ' '))) AS gs FROM t),
-             |g AS (SELECT doc_id, unnest(gs) AS gram FROM ga),
-             |dfr AS (SELECT gram, count(*) AS df FROM g GROUP BY gram),
-             |dup AS (SELECT doc_id, CAST(count(*) AS BIGINT)
-             |    AS n_dup_grams
-             |  FROM g JOIN dfr USING (gram) WHERE df > 1
-             |  GROUP BY doc_id),
-             |tot AS (SELECT doc_id, CAST(len(gs) AS BIGINT) AS n_grams
-             |  FROM ga)
+      Some(s"""WITH $duckDupGramCtes
              |SELECT tot.doc_id, n_grams,
              |  COALESCE(n_dup_grams, 0) AS n_dup_grams,
              |  CASE WHEN n_grams > 0 THEN
@@ -9152,19 +8879,7 @@ object SparkEntry {
           maxDupFrac = 0.2)
         .select(col("id").as("doc_id"), col("n_grams"), col("dup_frac"))
         .orderBy("doc_id").limit(2000),
-      Some("""WITH t AS (SELECT doc_id, str_split(text,' ') AS toks
-             |  FROM documents),
-             |ga AS (SELECT doc_id, list_distinct(list_transform(
-             |    generate_series(1, greatest(len(toks)-12, 0)),
-             |    i -> array_to_string(toks[i:i+12], ' '))) AS gs FROM t),
-             |g AS (SELECT doc_id, unnest(gs) AS gram FROM ga),
-             |dfr AS (SELECT gram, count(*) AS df FROM g GROUP BY gram),
-             |dup AS (SELECT doc_id, CAST(count(*) AS BIGINT)
-             |    AS n_dup_grams
-             |  FROM g JOIN dfr USING (gram) WHERE df > 1
-             |  GROUP BY doc_id),
-             |tot AS (SELECT doc_id, CAST(len(gs) AS BIGINT) AS n_grams
-             |  FROM ga),
+      Some(s"""WITH $duckDupGramCtes,
              |st AS (SELECT tot.doc_id, n_grams,
              |  CASE WHEN n_grams > 0 THEN
              |    ROUND(CAST(COALESCE(n_dup_grams, 0) AS DOUBLE)
@@ -9390,25 +9105,7 @@ object SparkEntry {
               coalesce(col("n_rem"), lit(0L))).as("realized_ct"))
           .orderBy("source")
       },
-      Some(s"""WITH mc AS (SELECT source,
-              |    CAST(count(*) AS BIGINT) AS n_in
-              |  FROM documents WHERE source IS NOT NULL
-              |  GROUP BY source),
-              |ms AS (SELECT source, n_in,
-              |    CAST(round(1e6 * sqrt(CAST(n_in AS DOUBLE)))
-              |      AS BIGINT) AS sm FROM mc),
-              |mt AS (SELECT CAST(sum(sm) AS HUGEINT) AS stot FROM ms),
-              |mr AS (SELECT source, n_in,
-              |    CAST(round(CAST(1000 * CAST(sm AS HUGEINT)
-              |        AS DOUBLE) / CAST(stot AS DOUBLE)) AS BIGINT)
-              |      AS target_ct
-              |  FROM ms, mt),
-              |me AS (SELECT source, n_in, target_ct,
-              |    CAST(target_ct // n_in AS BIGINT) AS epochs,
-              |    CAST(round(1e6 * CAST(target_ct % n_in AS DOUBLE)
-              |      / CAST(n_in AS DOUBLE)) AS BIGINT)
-              |      AS rem_rate_ppm
-              |  FROM mr),
+      Some(s"""WITH ${duckMixEpochCtes(1000)},
               |mk AS (SELECT d.source, CAST(count(*) AS BIGINT)
               |    AS n_rem
               |  FROM documents d JOIN me USING (source)
@@ -9464,25 +9161,7 @@ object SparkEntry {
             (col("dev") <= col("bound")).as("within_bound"))
           .orderBy("source")
       },
-      Some(s"""WITH mc AS (SELECT source,
-              |    CAST(count(*) AS BIGINT) AS n_in
-              |  FROM documents WHERE source IS NOT NULL
-              |  GROUP BY source),
-              |ms AS (SELECT source, n_in,
-              |    CAST(round(1e6 * sqrt(CAST(n_in AS DOUBLE)))
-              |      AS BIGINT) AS sm FROM mc),
-              |mt AS (SELECT CAST(sum(sm) AS HUGEINT) AS stot FROM ms),
-              |mr AS (SELECT source, n_in,
-              |    CAST(round(CAST(1337 * CAST(sm AS HUGEINT)
-              |        AS DOUBLE) / CAST(stot AS DOUBLE)) AS BIGINT)
-              |      AS target_ct
-              |  FROM ms, mt),
-              |me AS (SELECT source, n_in, target_ct,
-              |    CAST(target_ct // n_in AS BIGINT) AS epochs,
-              |    CAST(round(1e6 * CAST(target_ct % n_in AS DOUBLE)
-              |      / CAST(n_in AS DOUBLE)) AS BIGINT)
-              |      AS rem_rate_ppm
-              |  FROM mr),
+      Some(s"""WITH ${duckMixEpochCtes(1337)},
               |mx AS (SELECT d.source, CAST(t.e AS BIGINT) AS epoch_no
               |  FROM documents d JOIN me USING (source),
               |    unnest(generate_series(1, me.epochs)) AS t(e)
@@ -9770,28 +9449,11 @@ object SparkEntry {
           .select(col("doc_id"), col("lang"), col("source"))
           .orderBy("doc_id").limit(2000)
       },
-      Some(s"""WITH q AS (
-             |  SELECT doc_id, text, lang, source,
-             |    str_split(text, ' ') AS toks
-             |  FROM documents),
-             |qs AS (
-             |  SELECT doc_id, text, lang, source, len(toks) AS n,
-             |    len(list_distinct(toks)) AS nd,
-             |    len(list_filter(toks, x -> x IN
-             |      ('the','a','an','and','of','to','in','is'))) AS en
-             |  FROM q),
-             |quality AS (
-             |  SELECT doc_id, text, lang, source FROM qs
-             |  WHERE n >= 10 AND n <= 100000 AND nd / CAST(n AS DOUBLE) > 0.1
-             |    AND en / CAST(n AS DOUBLE) < 0.5),
-             |exact AS (
-             |  SELECT * FROM quality
-             |  WHERE doc_id IN (SELECT min(doc_id) FROM quality GROUP BY text)),
-             |${duckLshVerifiedCtes("exact", 0.6)},
-             |dup AS (SELECT DISTINCT id_b FROM vpairs)
-             |SELECT doc_id, lang, source FROM exact
-             |WHERE doc_id NOT IN (SELECT id_b FROM dup)
-             |ORDER BY doc_id LIMIT 2000""".stripMargin)),
+      Some(s"""WITH $duckCleanCtes,
+              |dup AS (SELECT DISTINCT id_b FROM vpairs)
+              |SELECT doc_id, lang, source FROM exact
+              |WHERE doc_id NOT IN (SELECT id_b FROM dup)
+              |ORDER BY doc_id LIMIT 2000""".stripMargin)),
 
     // The round-6 curation showpiece: every new signal composed into
     // one pipeline. Corpus-wide signals first (they must be computed
@@ -9977,24 +9639,7 @@ object SparkEntry {
         graft.pipeline.CleanPipeline
           .ccWithCounters(table(s, dir, "documents"), threshold = 0.6)
           .cleaned.orderBy("doc_id").limit(2000),
-      Some(s"""WITH RECURSIVE q AS (
-             |  SELECT doc_id, text, lang, source,
-             |    str_split(text, ' ') AS toks
-             |  FROM documents),
-             |qs AS (
-             |  SELECT doc_id, text, lang, source, len(toks) AS n,
-             |    len(list_distinct(toks)) AS nd,
-             |    len(list_filter(toks, x -> x IN
-             |      ('the','a','an','and','of','to','in','is'))) AS en
-             |  FROM q),
-             |quality AS (
-             |  SELECT doc_id, text, lang, source FROM qs
-             |  WHERE n >= 10 AND n <= 100000 AND nd / CAST(n AS DOUBLE) > 0.1
-             |    AND en / CAST(n AS DOUBLE) < 0.5),
-             |exact AS (
-             |  SELECT * FROM quality
-             |  WHERE doc_id IN (SELECT min(doc_id) FROM quality GROUP BY text)),
-             |${duckLshVerifiedCtes("exact", 0.6)},
+      Some(s"""WITH RECURSIVE $duckCleanCtes,
              |cedges AS (SELECT id_a AS a, id_b AS b FROM vpairs
              |  UNION SELECT id_b, id_a FROM vpairs),
              |reach(s, d) AS (
@@ -10013,8 +9658,7 @@ object SparkEntry {
         val emb = table(s, dir, "embeddings")
         // parameter fetch: the single query vector (bounded, not a
         // distributed-data collect)
-        val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-          .head().getSeq[Float](0).map(_.toDouble)
+        val q = vec0(emb)
         val scored = emb.select(col("vec_id"),
           Similarity.cosine(Similarity.toDouble(col("embedding")),
             typedlit(q)).as("cosine"))
@@ -10051,34 +9695,11 @@ object SparkEntry {
     "e4_ivf_topk" -> Q(
       (s, dir) => {
         val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-          .head().getSeq[Float](0).map(_.toDouble)
+        val q = vec0(emb)
         Similarity.ivfTopKData(emb, "vec_id", "embedding", q, k = 20,
           centroidIds = (1L to 16L))
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-             |  FROM embeddings),
-             |c AS (SELECT vec_id AS cid, v AS cv FROM e
-             |  WHERE vec_id BETWEEN 1 AND 16),
-             |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-             |probe AS (SELECT cid FROM c, q
-             |  ORDER BY list_dot_product(cv, qv) DESC, cid LIMIT 2),
-             |asg AS (SELECT vec_id, cid, row_number() OVER (
-             |      PARTITION BY vec_id
-             |      ORDER BY dt DESC, cid ASC) AS rn
-             |  FROM (SELECT e.vec_id, c.cid,
-             |          list_dot_product(e.v, c.cv) AS dt FROM e, c)),
-             |cand AS (SELECT vec_id, cid AS cell FROM asg
-             |  WHERE rn = 1 AND cid IN (SELECT cid FROM probe)),
-             |s AS (SELECT cand.vec_id, cand.cell,
-             |    list_dot_product(e.v, q.qv)
-             |      / (sqrt(list_dot_product(e.v, e.v))
-             |         * sqrt(list_dot_product(q.qv, q.qv))) AS cosine
-             |  FROM cand JOIN e USING (vec_id), q)
-             |SELECT vec_id, ROUND(cosine, 6) AS cosine,
-             |  CAST(cell AS BIGINT) AS cell
-             |FROM s ORDER BY ROUND(cosine, 6) DESC, vec_id
-             |LIMIT 20""".stripMargin)),
+      Some(duckIvfTopkSql)),
 
     // ---- E5: the on-disk IVF index. Same semantics as e4 (identical
     // oracle — the LAYOUT must not change the answer), but the probe
@@ -10087,8 +9708,7 @@ object SparkEntry {
     "e5_ivf_indexed" -> Q(
       (s, dir) => {
         val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-          .head().getSeq[Float](0).map(_.toDouble)
+        val q = vec0(emb)
         val idxPath = cachedArtifact(s"e5|$dir") { p =>
           Similarity.writeIvfIndex(emb, "vec_id", "embedding", p,
             centroidIds = (1L to 16L))
@@ -10096,52 +9716,17 @@ object SparkEntry {
         Similarity.ivfTopKIndexed(s, idxPath, "vec_id", "embedding", q,
           k = 20, centroidIds = (1L to 16L))
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-             |  FROM embeddings),
-             |c AS (SELECT vec_id AS cid, v AS cv FROM e
-             |  WHERE vec_id BETWEEN 1 AND 16),
-             |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-             |probe AS (SELECT cid FROM c, q
-             |  ORDER BY list_dot_product(cv, qv) DESC, cid LIMIT 2),
-             |asg AS (SELECT vec_id, cid, row_number() OVER (
-             |      PARTITION BY vec_id
-             |      ORDER BY dt DESC, cid ASC) AS rn
-             |  FROM (SELECT e.vec_id, c.cid,
-             |          list_dot_product(e.v, c.cv) AS dt FROM e, c)),
-             |cand AS (SELECT vec_id, cid AS cell FROM asg
-             |  WHERE rn = 1 AND cid IN (SELECT cid FROM probe)),
-             |s AS (SELECT cand.vec_id, cand.cell,
-             |    list_dot_product(e.v, q.qv)
-             |      / (sqrt(list_dot_product(e.v, e.v))
-             |         * sqrt(list_dot_product(q.qv, q.qv))) AS cosine
-             |  FROM cand JOIN e USING (vec_id), q)
-             |SELECT vec_id, ROUND(cosine, 6) AS cosine,
-             |  CAST(cell AS BIGINT) AS cell
-             |FROM s ORDER BY ROUND(cosine, 6) DESC, vec_id
-             |LIMIT 20""".stripMargin)),
+      Some(duckIvfTopkSql)),
 
     "e3_embedding_neardup" -> Q(
       (s, dir) => {
         val emb = table(s, dir, "embeddings")
-        val hp = Similarity.vectorsByIds(emb, "vec_id", "embedding",
-          Seq(1L, 2L, 3L, 4L))
+        val hp = signPlanes(emb)
         Dedup.embeddingNearDupPairsWith(emb, "vec_id", "embedding", hp)
           .orderBy(col("cosine").desc, col("id_a").asc, col("id_b").asc)
           .limit(100)
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-             |  FROM embeddings),
-             |nrm AS (SELECT vec_id,
-             |    list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-             |      AS nv
-             |  FROM e),
-             |p AS (SELECT vec_id AS pid, v AS pv FROM e
-             |  WHERE vec_id BETWEEN 1 AND 4),
-             |b AS (SELECT nrm.vec_id,
-             |    CAST(SUM(CASE WHEN list_dot_product(nrm.nv, p.pv) > 0
-             |      THEN (CAST(1 AS BIGINT) << (p.pid - 1)) ELSE 0 END)
-             |      AS BIGINT) AS bucket
-             |  FROM nrm, p GROUP BY nrm.vec_id)
+      Some(s"""WITH $duckNrmBucketCtes
              |SELECT a.vec_id AS id_a, c.vec_id AS id_b,
              |  ROUND(list_dot_product(na.nv, nc.nv), 6) AS cosine
              |FROM b a JOIN b c ON a.bucket = c.bucket
@@ -10158,32 +9743,13 @@ object SparkEntry {
     "e11_semdedup" -> Q(
       (s, dir) => {
         val emb = table(s, dir, "embeddings")
-        val hp = Similarity.vectorsByIds(emb, "vec_id", "embedding",
-          Seq(1L, 2L, 3L, 4L))
+        val hp = signPlanes(emb)
         Dedup.semanticDedupKeep(emb, "vec_id", "embedding", hp,
             minCosine = 0.4)
           .select(col("vec_id"), col("label"))
           .orderBy("vec_id").limit(5000)
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-             |  FROM embeddings),
-             |nrm AS (SELECT vec_id,
-             |    list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-             |      AS nv
-             |  FROM e),
-             |p AS (SELECT vec_id AS pid, v AS pv FROM e
-             |  WHERE vec_id BETWEEN 1 AND 4),
-             |b AS (SELECT nrm.vec_id,
-             |    CAST(SUM(CASE WHEN list_dot_product(nrm.nv, p.pv) > 0
-             |      THEN (CAST(1 AS BIGINT) << (p.pid - 1)) ELSE 0 END)
-             |      AS BIGINT) AS bucket
-             |  FROM nrm, p GROUP BY nrm.vec_id),
-             |dr AS (SELECT DISTINCT c.vec_id AS did
-             |  FROM b a JOIN b c ON a.bucket = c.bucket
-             |    AND a.vec_id < c.vec_id
-             |  JOIN nrm na ON na.vec_id = a.vec_id
-             |  JOIN nrm nc ON nc.vec_id = c.vec_id
-             |  WHERE ROUND(list_dot_product(na.nv, nc.nv), 6) > 0.4)
+      Some(s"""WITH $duckSemDupCtes
              |SELECT vec_id, label FROM embeddings
              |WHERE vec_id NOT IN (SELECT did FROM dr)
              |ORDER BY vec_id LIMIT 5000""".stripMargin)),
@@ -10258,33 +9824,11 @@ object SparkEntry {
     "e2_ann_lsh_topk" -> Q(
       (s, dir) => {
         val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-          .head().getSeq[Float](0).map(_.toDouble)
-        val hp = Similarity.vectorsByIds(emb, "vec_id", "embedding",
-          Seq(1L, 2L, 3L, 4L))
+        val q = vec0(emb)
+        val hp = signPlanes(emb)
         Similarity.annTopKWith(emb, "vec_id", "embedding", q, k = 20, hp)
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-             |  FROM embeddings),
-             |p AS (SELECT vec_id AS pid, v AS pv FROM e
-             |  WHERE vec_id BETWEEN 1 AND 4),
-             |b AS (SELECT e.vec_id,
-             |    CAST(SUM(CASE WHEN list_dot_product(e.v, p.pv) > 0
-             |      THEN (CAST(1 AS BIGINT) << (p.pid - 1)) ELSE 0 END)
-             |      AS BIGINT) AS bucket
-             |  FROM e, p GROUP BY e.vec_id),
-             |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-             |qb AS (SELECT bucket AS qbucket FROM b WHERE vec_id = 0),
-             |s AS (SELECT e.vec_id,
-             |    list_dot_product(e.v, q.qv)
-             |      / (sqrt(list_dot_product(e.v, e.v))
-             |         * sqrt(list_dot_product(q.qv, q.qv))) AS cosine,
-             |    b.bucket
-             |  FROM e JOIN b USING (vec_id), q, qb
-             |  WHERE b.bucket = qb.qbucket)
-             |SELECT vec_id, ROUND(cosine, 6) AS cosine, bucket
-             |FROM s ORDER BY ROUND(cosine, 6) DESC, vec_id
-             |LIMIT 20""".stripMargin)),
+      Some(duckAnnTopkSql("b.bucket = qb.qbucket"))),
 
     // Multi-probe ANN: same data-derived planes as e2, but the scan
     // covers every bucket within Hamming distance 1 of the query's —
@@ -10293,34 +9837,12 @@ object SparkEntry {
     "e7_ann_multiprobe" -> Q(
       (s, dir) => {
         val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-          .head().getSeq[Float](0).map(_.toDouble)
-        val hp = Similarity.vectorsByIds(emb, "vec_id", "embedding",
-          Seq(1L, 2L, 3L, 4L))
+        val q = vec0(emb)
+        val hp = signPlanes(emb)
         Similarity.annTopKWith(emb, "vec_id", "embedding", q, k = 20, hp,
           probeHamming = 1)
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-             |  FROM embeddings),
-             |p AS (SELECT vec_id AS pid, v AS pv FROM e
-             |  WHERE vec_id BETWEEN 1 AND 4),
-             |b AS (SELECT e.vec_id,
-             |    CAST(SUM(CASE WHEN list_dot_product(e.v, p.pv) > 0
-             |      THEN (CAST(1 AS BIGINT) << (p.pid - 1)) ELSE 0 END)
-             |      AS BIGINT) AS bucket
-             |  FROM e, p GROUP BY e.vec_id),
-             |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-             |qb AS (SELECT bucket AS qbucket FROM b WHERE vec_id = 0),
-             |s AS (SELECT e.vec_id,
-             |    list_dot_product(e.v, q.qv)
-             |      / (sqrt(list_dot_product(e.v, e.v))
-             |         * sqrt(list_dot_product(q.qv, q.qv))) AS cosine,
-             |    b.bucket
-             |  FROM e JOIN b USING (vec_id), q, qb
-             |  WHERE bit_count(xor(b.bucket, qb.qbucket)) <= 1)
-             |SELECT vec_id, ROUND(cosine, 6) AS cosine, bucket
-             |FROM s ORDER BY ROUND(cosine, 6) DESC, vec_id
-             |LIMIT 20""".stripMargin)),
+      Some(duckAnnTopkSql("bit_count(xor(b.bucket, qb.qbucket)) <= 1"))),
 
     // Batch kNN join: top-5 neighbors for five query vectors in ONE
     // bucket-keyed equi-join over Hamming-1 probe buckets, per-query
@@ -10329,22 +9851,13 @@ object SparkEntry {
     "e8_knn_join" -> Q(
       (s, dir) => {
         val emb = table(s, dir, "embeddings")
-        val hp = Similarity.vectorsByIds(emb, "vec_id", "embedding",
-          Seq(1L, 2L, 3L, 4L))
+        val hp = signPlanes(emb)
         val queries = emb.filter(col("vec_id").between(10, 14))
         Similarity.knnJoin(queries, emb, "vec_id", "embedding", k = 5,
             hp, probeHamming = 1)
           .orderBy("query_id", "rnk").limit(100)
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-             |  FROM embeddings),
-             |p AS (SELECT vec_id AS pid, v AS pv FROM e
-             |  WHERE vec_id BETWEEN 1 AND 4),
-             |b AS (SELECT e.vec_id,
-             |    CAST(SUM(CASE WHEN list_dot_product(e.v, p.pv) > 0
-             |      THEN (CAST(1 AS BIGINT) << (p.pid - 1)) ELSE 0 END)
-             |      AS BIGINT) AS bucket
-             |  FROM e, p GROUP BY e.vec_id),
+      Some(s"""WITH $duckAnnBucketCtes,
              |q AS (SELECT e.vec_id AS query_id, e.v AS qv,
              |    b.bucket AS qb
              |  FROM e JOIN b USING (vec_id)
@@ -10374,21 +9887,12 @@ object SparkEntry {
     "e15_ann_recall_audit" -> Q(
       (s, dir) => {
         val emb = table(s, dir, "embeddings")
-        val hp = Similarity.vectorsByIds(emb, "vec_id", "embedding",
-          Seq(1L, 2L, 3L, 4L))
+        val hp = signPlanes(emb)
         Similarity.annRecallAudit(emb, "vec_id", "embedding",
           queryIds = Seq(10L, 11L, 12L, 13L, 14L), k = 10, hp,
           probeHamming = 1)
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-             |  FROM embeddings),
-             |p AS (SELECT vec_id AS pid, v AS pv FROM e
-             |  WHERE vec_id BETWEEN 1 AND 4),
-             |b AS (SELECT e.vec_id,
-             |    CAST(SUM(CASE WHEN list_dot_product(e.v, p.pv) > 0
-             |      THEN (CAST(1 AS BIGINT) << (p.pid - 1)) ELSE 0 END)
-             |      AS BIGINT) AS bucket
-             |  FROM e, p GROUP BY e.vec_id),
+      Some(s"""WITH $duckAnnBucketCtes,
              |q AS (SELECT e.vec_id AS query_id, e.v AS qv,
              |    b.bucket AS qb
              |  FROM e JOIN b USING (vec_id)
@@ -10439,8 +9943,7 @@ object SparkEntry {
     "e9_quantized_topk" -> Q(
       (s, dir) => {
         val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-          .head().getSeq[Float](0).map(_.toDouble)
+        val q = vec0(emb)
         Similarity.quantizedTopK(emb, "vec_id", "embedding", q, k = 20)
       },
       Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
@@ -10469,8 +9972,7 @@ object SparkEntry {
     "e10_pq_adc_topk" -> Q(
       (s, dir) => {
         val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-          .head().getSeq[Float](0).map(_.toDouble)
+        val q = vec0(emb)
         Similarity.pqTopK(emb, "vec_id", "embedding", q, k = 20,
           centroidIds = Seq(1L, 2L, 3L, 4L), m = 4)
       },
@@ -10515,22 +10017,7 @@ object SparkEntry {
       (s, dir) => Retrieval.bm25TopK(table(s, dir, "documents"),
           "doc_id", "text", Seq("vector", "hash", "merge"), k = 20)
         .select(col("id").as("doc_id"), col("bm25")),
-      Some("""WITH p AS (SELECT doc_id AS id, t AS term,
-             |    CAST(count(*) AS BIGINT) AS tf
-             |  FROM (SELECT doc_id, unnest(str_split(text, ' ')) AS t
-             |        FROM documents) u
-             |  WHERE t IN ('vector', 'hash', 'merge')
-             |  GROUP BY id, t),
-             |l AS (SELECT doc_id AS id, len(str_split(text, ' ')) AS dl
-             |  FROM documents),
-             |st AS (SELECT count(*) AS n_docs,
-             |    CAST(sum(len(str_split(text, ' '))) AS DOUBLE)
-             |      / count(*) AS avgdl
-             |  FROM documents),
-             |i AS (SELECT term, ln(1.0 + (n_docs - df + 0.5)/(df + 0.5))
-             |    AS idf, avgdl
-             |  FROM (SELECT term, count(*) AS df FROM p GROUP BY term)
-             |  CROSS JOIN st),
+      Some(s"""WITH $duckBm25Ctes,
              |sc AS (SELECT p.id,
              |    sum(i.idf * p.tf * 2.2
              |      / (p.tf + 1.2 * (1 - 0.75 + 0.75 * l.dl / i.avgdl)))
@@ -10554,8 +10041,7 @@ object SparkEntry {
     "r3_mmr_diversified" -> Q(
       (s, dir) => {
         val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-          .head().getSeq[Float](0).map(_.toDouble)
+        val q = vec0(emb)
         Retrieval.mmrTopK(emb.filter(col("vec_id") =!= 0), "vec_id",
             "embedding", q, k = 10, pool = 50)
           .orderBy("mmr_rank")
@@ -10591,7 +10077,26 @@ object SparkEntry {
           "doc_id", "text", Seq("vector", "hash", "merge"), k = 20,
           feedbackDocs = 10, expansion = 5)
         .select(col("id").as("doc_id"), col("bm25")),
-      Some("""WITH tok AS (SELECT doc_id,
+      Some {
+        // one BM25 scoring round `s$r` over the terms `in`
+        def bm25Round(r: Int, in: String): String =
+          s"""p$r AS (SELECT doc_id AS id, t AS term,
+             |    CAST(count(*) AS BIGINT) AS tf
+             |  FROM tok WHERE t IN $in
+             |  GROUP BY id, t),
+             |i$r AS (SELECT term,
+             |    ln(1.0 + (n_docs - df + 0.5)/(df + 0.5)) AS idf,
+             |    avgdl
+             |  FROM (SELECT term, count(*) AS df FROM p$r
+             |        GROUP BY term)
+             |  CROSS JOIN st),
+             |s$r AS (SELECT p$r.id,
+             |    sum(i$r.idf * p$r.tf * 2.2
+             |      / (p$r.tf + 1.2 * (1 - 0.75 + 0.75 * l.dl
+             |        / i$r.avgdl))) AS s
+             |  FROM p$r JOIN i$r USING (term) JOIN l ON l.id = p$r.id
+             |  GROUP BY p$r.id)""".stripMargin
+        s"""WITH tok AS (SELECT doc_id,
              |    unnest(str_split(text, ' ')) AS t FROM documents),
              |l AS (SELECT doc_id AS id, len(str_split(text, ' '))
              |    AS dl FROM documents),
@@ -10599,22 +10104,7 @@ object SparkEntry {
              |    CAST(sum(len(str_split(text, ' '))) AS DOUBLE)
              |      / count(*) AS avgdl
              |  FROM documents),
-             |p1 AS (SELECT doc_id AS id, t AS term,
-             |    CAST(count(*) AS BIGINT) AS tf
-             |  FROM tok WHERE t IN ('vector', 'hash', 'merge')
-             |  GROUP BY id, t),
-             |i1 AS (SELECT term,
-             |    ln(1.0 + (n_docs - df + 0.5)/(df + 0.5)) AS idf,
-             |    avgdl
-             |  FROM (SELECT term, count(*) AS df FROM p1
-             |        GROUP BY term)
-             |  CROSS JOIN st),
-             |s1 AS (SELECT p1.id,
-             |    sum(i1.idf * p1.tf * 2.2
-             |      / (p1.tf + 1.2 * (1 - 0.75 + 0.75 * l.dl
-             |        / i1.avgdl))) AS s
-             |  FROM p1 JOIN i1 USING (term) JOIN l ON l.id = p1.id
-             |  GROUP BY p1.id),
+             |${bm25Round(1, "('vector', 'hash', 'merge')")},
              |t1 AS (SELECT id, ROUND(s, 6) AS bm25 FROM s1
              |  ORDER BY bm25 DESC, id ASC LIMIT 10),
              |tr AS (SELECT id, CAST(row_number() OVER (
@@ -10627,25 +10117,11 @@ object SparkEntry {
              |  GROUP BY tok.t ORDER BY w DESC, term ASC LIMIT 5),
              |qt AS (SELECT term FROM ex UNION ALL
              |       SELECT unnest(['vector', 'hash', 'merge'])),
-             |p2 AS (SELECT doc_id AS id, t AS term,
-             |    CAST(count(*) AS BIGINT) AS tf
-             |  FROM tok WHERE t IN (SELECT term FROM qt)
-             |  GROUP BY id, t),
-             |i2 AS (SELECT term,
-             |    ln(1.0 + (n_docs - df + 0.5)/(df + 0.5)) AS idf,
-             |    avgdl
-             |  FROM (SELECT term, count(*) AS df FROM p2
-             |        GROUP BY term)
-             |  CROSS JOIN st),
-             |s2 AS (SELECT p2.id,
-             |    sum(i2.idf * p2.tf * 2.2
-             |      / (p2.tf + 1.2 * (1 - 0.75 + 0.75 * l.dl
-             |        / i2.avgdl))) AS s
-             |  FROM p2 JOIN i2 USING (term) JOIN l ON l.id = p2.id
-             |  GROUP BY p2.id)
+             |${bm25Round(2, "(SELECT term FROM qt)")}
              |SELECT id AS doc_id, ROUND(s, 6) AS bm25 FROM s2
              |ORDER BY bm25 DESC, doc_id ASC
-             |LIMIT 20""".stripMargin)),
+             |LIMIT 20""".stripMargin
+      }),
 
     // IVF-probed MMR — the production ANN -> diversified-re-rank
     // composition: the pool feeding r3's greedy is e4's probed cells
@@ -10655,8 +10131,7 @@ object SparkEntry {
     "e16_ivf_mmr" -> Q(
       (s, dir) => {
         val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-          .head().getSeq[Float](0).map(_.toDouble)
+        val q = vec0(emb)
         val pool = Similarity.ivfProbedCandidatesData(emb, "vec_id",
             "embedding", q, centroidIds = (1L to 16L))
           .filter(col("vec_id") =!= 0)
@@ -10665,18 +10140,7 @@ object SparkEntry {
           .orderBy("mmr_rank")
       },
       Some {
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-           |  FROM embeddings),
-           |c AS (SELECT vec_id AS cid, v AS cv FROM e
-           |  WHERE vec_id BETWEEN 1 AND 16),
-           |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-           |probe AS (SELECT cid FROM c, q
-           |  ORDER BY list_dot_product(cv, qv) DESC, cid LIMIT 2),
-           |asg AS (SELECT vec_id, cid, row_number() OVER (
-           |      PARTITION BY vec_id
-           |      ORDER BY dt DESC, cid ASC) AS rn
-           |  FROM (SELECT e.vec_id, c.cid,
-           |          list_dot_product(e.v, c.cv) AS dt FROM e, c)),
+        s"""WITH $duckIvfProbeCtes,
            |pc AS (SELECT vec_id FROM asg
            |  WHERE rn = 1 AND cid IN (SELECT cid FROM probe)
            |    AND vec_id <> 0),
@@ -10706,20 +10170,7 @@ object SparkEntry {
     // signless (the d28 house rule).
     "e17_embedding_covariance" -> Q(
       (s, dir) => covarianceStaged(s, dir).orderBy("i", "j"),
-      Some("""WITH e AS (SELECT vec_id,
-             |    CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-             |fl AS (SELECT vec_id, CAST(t.i - 1 AS BIGINT) AS i,
-             |    CAST(round(v[t.i] * 1e6) AS BIGINT) AS x
-             |  FROM e, unnest(generate_series(1, len(v))) AS t(i)),
-             |pr AS (SELECT a.i, b.i AS j, CAST(a.x AS HUGEINT) AS x,
-             |    CAST(b.x AS HUGEINT) AS y
-             |  FROM fl a JOIN fl b
-             |    ON a.vec_id = b.vec_id AND a.i <= b.i),
-             |ag AS (SELECT i, j, CAST(count(*) AS BIGINT) AS n_vecs,
-             |    coalesce(sum(x), 0) AS sx,
-             |    coalesce(sum(y), 0) AS sy,
-             |    coalesce(sum(x * y), 0) AS sxy
-             |  FROM pr GROUP BY i, j)
+      Some(s"""WITH $duckCovMomentCtes
              |SELECT i, j, n_vecs,
              |  CAST(round(CAST(n_vecs * sxy - sx * sy AS DOUBLE)
              |    / (CAST(n_vecs AS DOUBLE) * n_vecs * 1e6)) AS BIGINT)
@@ -10795,14 +10246,6 @@ object SparkEntry {
           .withColumn("converged", col("delta_micro") < lit(10000L))
       },
       Some({
-        val steps = (1 to 5).map { t =>
-          s"""w$t AS (SELECT fm.i AS j,
-             |    sum(CAST(fm.c AS HUGEINT) * vp.v) AS w
-             |  FROM fm JOIN v${t - 1} vp ON vp.j = fm.j GROUP BY fm.i),
-             |m$t AS (SELECT max(abs(w)) AS m FROM w$t),
-             |v$t AS (SELECT j, CAST(round(1e6 * (CAST(w AS DOUBLE)
-             |    / CAST(m AS DOUBLE))) AS BIGINT) AS v FROM w$t, m$t)"""
-        }.mkString(",\n")
         s"""WITH uu AS (SELECT CAST(g.j AS BIGINT) AS j,
            |    ((CAST(((g.j * 2654435761) & 65535) AS DOUBLE)
            |      / 65535.0 - 0.5) * 2.0) AS u
@@ -10816,7 +10259,7 @@ object SparkEntry {
            |       UNION ALL SELECT j, i, c FROM cm WHERE i <> j),
            |v0 AS (SELECT DISTINCT i AS j, CAST(1000000 AS BIGINT) AS v
            |  FROM fm),
-           |$steps,
+           |$duckPowerSteps,
            |dl AS (SELECT CAST(max(abs(v5.v - v4.v)) AS BIGINT) AS d
            |  FROM v5 JOIN v4 USING (j))
            |SELECT v5.j AS dim, v5.v AS v_micro,
@@ -10831,8 +10274,7 @@ object SparkEntry {
       (s, dir) => {
         val docs = table(s, dir, "documents")
         val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-          .head().getSeq[Float](0).map(_.toDouble)
+        val q = vec0(emb)
         val lex = Retrieval.asRanking(
           Retrieval.bm25TopK(docs, "doc_id", "text",
             Seq("vector", "hash", "merge"), k = 50), "id", "bm25")
@@ -10846,22 +10288,7 @@ object SparkEntry {
         Retrieval.rrfFuse(Seq(lex, sem), k = 20)
           .select(col("id").as("doc_id"), col("rrf"), col("n_lists"))
       },
-      Some("""WITH p AS (SELECT doc_id AS id, t AS term,
-             |    CAST(count(*) AS BIGINT) AS tf
-             |  FROM (SELECT doc_id, unnest(str_split(text, ' ')) AS t
-             |        FROM documents) u
-             |  WHERE t IN ('vector', 'hash', 'merge')
-             |  GROUP BY id, t),
-             |l AS (SELECT doc_id AS id, len(str_split(text, ' ')) AS dl
-             |  FROM documents),
-             |st AS (SELECT count(*) AS n_docs,
-             |    CAST(sum(len(str_split(text, ' '))) AS DOUBLE)
-             |      / count(*) AS avgdl
-             |  FROM documents),
-             |i AS (SELECT term, ln(1.0 + (n_docs - df + 0.5)/(df + 0.5))
-             |    AS idf, avgdl
-             |  FROM (SELECT term, count(*) AS df FROM p GROUP BY term)
-             |  CROSS JOIN st),
+      Some(s"""WITH $duckBm25Ctes,
              |sc AS (SELECT p.id,
              |    ROUND(sum(i.idf * p.tf * 2.2
              |      / (p.tf + 1.2 * (1 - 0.75 + 0.75 * l.dl / i.avgdl))),
@@ -10871,13 +10298,7 @@ object SparkEntry {
              |lex AS (SELECT id, CAST(row_number() OVER
              |    (ORDER BY s DESC, id ASC) AS BIGINT) AS rank
              |  FROM (SELECT * FROM sc ORDER BY s DESC, id ASC LIMIT 50)),
-             |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-             |  FROM embeddings),
-             |qv AS (SELECT v AS q FROM e WHERE vec_id = 0),
-             |cs AS (SELECT vec_id AS id, ROUND(list_dot_product(v, q)
-             |    / (sqrt(list_dot_product(v, v))
-             |       * sqrt(list_dot_product(q, q))), 6) AS c
-             |  FROM e, qv),
+             |$duckQ0CosineCtes,
              |sem AS (SELECT id, CAST(row_number() OVER
              |    (ORDER BY c DESC, id ASC) AS BIGINT) AS rank
              |  FROM (SELECT * FROM cs ORDER BY c DESC, id ASC LIMIT 50)),
@@ -10898,69 +10319,48 @@ object SparkEntry {
     "e6_ivf_trained" -> Q(
       (s, dir) => {
         val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0).select(col("embedding"))
-          .head().getSeq[Float](0).map(_.toDouble)
+        val q = vec0(emb)
         Similarity.ivfTopKTrained(emb, "vec_id", "embedding", q, k = 20,
           initIds = (1L to 8L), iters = 2, nProbes = 2)
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-             |  FROM embeddings),
-             |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-             |c0 AS (SELECT vec_id - 1 AS cell, v AS cv FROM e
-             |  WHERE vec_id BETWEEN 1 AND 8),
-             |a0 AS (SELECT vec_id, cell FROM (
-             |    SELECT e.vec_id, c0.cell, row_number() OVER (
+      Some {
+        def assign(name: String, c: String): String =
+          s"""$name AS (SELECT vec_id, cell FROM (
+             |    SELECT e.vec_id, $c.cell, row_number() OVER (
              |        PARTITION BY e.vec_id
-             |        ORDER BY list_dot_product(e.v, c0.cv) DESC,
-             |          c0.cell ASC) AS rn
-             |    FROM e, c0) t WHERE rn = 1),
-             |m1 AS (SELECT cell, dim, avg(val) AS m FROM (
-             |    SELECT a0.cell, generate_subscripts(e.v, 1) AS dim,
+             |        ORDER BY list_dot_product(e.v, $c.cv) DESC,
+             |          $c.cell ASC) AS rn
+             |    FROM e, $c) t WHERE rn = 1)""".stripMargin
+        // two Lloyd rounds: assign to c(r-1), re-center to the normalized
+        // per-dim mean (an emptied cell keeps its centroid)
+        val lloyd = (1 to 2).map { r =>
+          val (a, c) = (s"a${r - 1}", s"c${r - 1}")
+          s"""${assign(a, c)},
+             |m$r AS (SELECT cell, dim, avg(val) AS m FROM (
+             |    SELECT $a.cell, generate_subscripts(e.v, 1) AS dim,
              |      unnest(e.v) AS val
-             |    FROM a0 JOIN e USING (vec_id)) u GROUP BY cell, dim),
-             |n1 AS (SELECT cell, list(ROUND(m / nrm, 6) ORDER BY dim)
+             |    FROM $a JOIN e USING (vec_id)) u GROUP BY cell, dim),
+             |n$r AS (SELECT cell, list(ROUND(m / nrm, 6) ORDER BY dim)
              |    AS cv FROM (
              |    SELECT cell, dim, m,
              |      sqrt(sum(m * m) OVER (PARTITION BY cell)) AS nrm
-             |    FROM m1) t GROUP BY cell),
-             |c1 AS (SELECT c0.cell, coalesce(n1.cv, c0.cv) AS cv
-             |  FROM c0 LEFT JOIN n1 USING (cell)),
-             |a1 AS (SELECT vec_id, cell FROM (
-             |    SELECT e.vec_id, c1.cell, row_number() OVER (
-             |        PARTITION BY e.vec_id
-             |        ORDER BY list_dot_product(e.v, c1.cv) DESC,
-             |          c1.cell ASC) AS rn
-             |    FROM e, c1) t WHERE rn = 1),
-             |m2 AS (SELECT cell, dim, avg(val) AS m FROM (
-             |    SELECT a1.cell, generate_subscripts(e.v, 1) AS dim,
-             |      unnest(e.v) AS val
-             |    FROM a1 JOIN e USING (vec_id)) u GROUP BY cell, dim),
-             |n2 AS (SELECT cell, list(ROUND(m / nrm, 6) ORDER BY dim)
-             |    AS cv FROM (
-             |    SELECT cell, dim, m,
-             |      sqrt(sum(m * m) OVER (PARTITION BY cell)) AS nrm
-             |    FROM m2) t GROUP BY cell),
-             |c2 AS (SELECT c1.cell, coalesce(n2.cv, c1.cv) AS cv
-             |  FROM c1 LEFT JOIN n2 USING (cell)),
-             |probe AS (SELECT cell FROM c2, q
-             |  ORDER BY list_dot_product(cv, qv) DESC, cell LIMIT 2),
-             |asg AS (SELECT vec_id, cell FROM (
-             |    SELECT e.vec_id, c2.cell, row_number() OVER (
-             |        PARTITION BY e.vec_id
-             |        ORDER BY list_dot_product(e.v, c2.cv) DESC,
-             |          c2.cell ASC) AS rn
-             |    FROM e, c2) t WHERE rn = 1),
-             |cand AS (SELECT vec_id, cell FROM asg
-             |  WHERE cell IN (SELECT cell FROM probe)),
-             |s AS (SELECT cand.vec_id, cand.cell,
-             |    list_dot_product(e.v, q.qv)
-             |      / (sqrt(list_dot_product(e.v, e.v))
-             |         * sqrt(list_dot_product(q.qv, q.qv))) AS cosine
-             |  FROM cand JOIN e USING (vec_id), q)
-             |SELECT vec_id, ROUND(cosine, 6) AS cosine,
-             |  CAST(cell AS BIGINT) AS cell
-             |FROM s ORDER BY ROUND(cosine, 6) DESC, vec_id
-             |LIMIT 20""".stripMargin)),
+             |    FROM m$r) t GROUP BY cell),
+             |c$r AS (SELECT $c.cell, coalesce(n$r.cv, $c.cv) AS cv
+             |  FROM $c LEFT JOIN n$r USING (cell))""".stripMargin
+        }.mkString(",\n")
+        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+           |  FROM embeddings),
+           |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
+           |c0 AS (SELECT vec_id - 1 AS cell, v AS cv FROM e
+           |  WHERE vec_id BETWEEN 1 AND 8),
+           |$lloyd,
+           |probe AS (SELECT cell FROM c2, q
+           |  ORDER BY list_dot_product(cv, qv) DESC, cell LIMIT 2),
+           |${assign("asg", "c2")},
+           |cand AS (SELECT vec_id, cell FROM asg
+           |  WHERE cell IN (SELECT cell FROM probe)),
+           |$duckIvfRerankTail""".stripMargin
+      }),
 
     // KMV distinct-count sketch: bounded mergeable state like q8's HLL,
     // but a pure function of the input set under the portable md5 hash
@@ -11311,9 +10711,7 @@ object SparkEntry {
     "d48_shard_export_roundtrip" -> Q(
       (s, dir) => {
         val out = cachedArtifact(s"d48|$dir") { p =>
-          Curation.serpentineShards(table(s, dir, "documents"),
-              "doc_id", size(split(col("text"), " ")).cast("long"),
-              nShards = 8)
+          serpentineShards(s, dir)
             .select(col("doc_id"), col("_w"), col("shard"))
             .write.mode("overwrite").partitionBy("shard").parquet(p)
         }
@@ -11325,19 +10723,7 @@ object SparkEntry {
             col("n_docs"), col("total_weight"))
           .orderBy("shard")
       },
-      Some("""WITH w AS (SELECT doc_id,
-             |    CAST(len(str_split(text, ' ')) AS BIGINT) AS wt
-             |  FROM documents),
-             |r AS (SELECT doc_id, wt, CAST(row_number() OVER
-             |    (ORDER BY wt DESC, doc_id ASC) AS BIGINT) AS rn
-             |  FROM w),
-             |a AS (SELECT wt, CASE WHEN (rn - 1) % 16 < 8
-             |    THEN (rn - 1) % 16
-             |    ELSE 15 - ((rn - 1) % 16) END AS shard
-             |  FROM r)
-             |SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
-             |  CAST(sum(wt) AS BIGINT) AS total_weight
-             |FROM a GROUP BY shard ORDER BY shard""".stripMargin)))
+      Some(duckSerpentineSql)))
 
   /** One per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -46,19 +46,14 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) { println("usage: analyze|export-misses|status [--log <path>]"); sys.exit(2) }
-    val cmd = args.head
     val flags = parseFlags(args.drop(1).toSeq)
-    val logPath = resolveLog(flags)
-    if (!Files.exists(Paths.get(logPath))) {
-      println(s"❌ 未找到日志文件: $logPath")
-      sys.exit(1)
-    }
-    val spark = GraftSession.start()
-    try cmd match {
-      case "analyze" =>
+    // match the command before resolving the log or starting Spark, so
+    // a mistyped command fails at once
+    val run: (SparkSession, String) => Unit = args.head match {
+      case "analyze" => (spark, logPath) =>
         println(ConsoleReport.format(
           AnalyzeQuery.run(readCommits(spark, logPath))))
-      case "export-misses" =>
+      case "export-misses" => (spark, logPath) =>
         val out = flags.getOrElse("output",
           sys.props("user.home") + "/rime_mispredictions_report.csv")
         val misses = ExportMissesQuery.run(readCommits(spark, logPath))
@@ -68,12 +63,19 @@ object Main {
           ReportWriter.writeCsvReport(misses, out)
           println(s"✅ 已导出 $n 条错误预测记录到: $out")
         }
-      case "status" =>
+      case "status" => (spark, logPath) =>
         val commits = readCommits(spark, logPath)
         println(s"日志文件: $logPath")
         println(s"text_committed 事件数: ${commits.count()}")
       case other =>
         println(s"unknown command: $other"); sys.exit(2)
-    } finally spark.stop()
+    }
+    val logPath = resolveLog(flags)
+    if (!Files.exists(Paths.get(logPath))) {
+      println(s"❌ 未找到日志文件: $logPath")
+      sys.exit(1)
+    }
+    val spark = GraftSession.start()
+    try run(spark, logPath) finally spark.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft.io
 
 import java.io.{File, FileOutputStream}
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 
 /** Report sinks (SURVEY §2.8).

@@ -26,8 +26,33 @@ import org.apache.spark.sql.Observation
 object Counters {
   private final case class Entry(tag: String, label: String,
                                  obs: Observation)
-  private val reg =
-    new java.util.concurrent.ConcurrentLinkedQueue[Entry]
+
+  /** Bound on undrained observations and on undrained notes: both are
+    * added unconditionally from library operators, and a long-running
+    * process that never drains (only the bench main does; perfbench,
+    * the CLI and the test JVM never do) must not leak — beyond the cap
+    * the OLDEST are dropped (the artifact wants the latest run's
+    * numbers anyway). */
+  val MaxUndrainedNotes: Int = 1024
+
+  /** FIFO that drops its oldest element beyond [[MaxUndrainedNotes]]. */
+  private final class Capped[A <: AnyRef] {
+    private val q = new java.util.concurrent.ConcurrentLinkedQueue[A]
+    private val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    def add(a: A): Unit = {
+      q.add(a)
+      if (n.incrementAndGet() > MaxUndrainedNotes && q.poll() != null)
+        n.decrementAndGet()
+    }
+    def drainAll(): Vector[A] = {
+      val v = Iterator.continually(q.poll()).takeWhile(_ != null).toVector
+      n.addAndGet(-v.size)
+      v
+    }
+  }
+
+  private val reg = new Capped[Entry]
+  private val notes = new Capped[(String, String, Map[String, Any])]
 
   /** Register `obs` under `tag` (the query/pipeline name) and `label`
     * (the stage). Returns `obs` for inline use. */
@@ -35,16 +60,6 @@ object Counters {
     reg.add(Entry(tag, label, obs))
     obs
   }
-
-  private val notes = new java.util.concurrent.ConcurrentLinkedQueue[
-    (String, String, Map[String, Any])]
-  private val noteCount = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Bound on undrained notes: note() is called unconditionally from
-    * library operators, and a long-running service that never drains
-    * (only the bench main does) must not leak — beyond the cap the
-    * OLDEST notes are dropped (the artifact wants the latest run's
-    * numbers anyway). */
-  val MaxUndrainedNotes: Int = 1024
 
   /** DRIVER-LOOP counter: for operators whose cost driver is a
     * driver-side iteration (the exact-selection narrowing rounds, a
@@ -58,10 +73,6 @@ object Counters {
   def note(tag: String, label: String,
            values: Map[String, Any]): Unit = {
     notes.add((tag, label, values))
-    if (noteCount.incrementAndGet() > MaxUndrainedNotes) {
-      notes.poll()
-      noteCount.decrementAndGet()
-    }
   }
 
   /** Non-blocking drain: every registered observation that has FIRED,
@@ -70,9 +81,7 @@ object Counters {
     * of the same (tag, label) — e.g. the bench's two timed runs —
     * dedupe to the LAST fired instance. */
   def drain(): Seq[(String, String, Map[String, Any])] = {
-    import scala.jdk.CollectionConverters._
-    val items = reg.asScala.toVector
-    reg.clear()
+    val items = reg.drainAll()
     // bounded-wait read (getOrEmpty is private[sql]): the observation
     // listener fires ASYNCHRONOUSLY after the action returns, so a
     // drain immediately after .count() can race it — wait up to 250 ms
@@ -99,13 +108,7 @@ object Counters {
           (e.tag, e.label, m)
         }
       }
-    val noted = {
-      import scala.jdk.CollectionConverters._
-      val v = notes.asScala.toVector
-      notes.clear()
-      noteCount.set(0)
-      v
-    }
+    val noted = notes.drainAll()
     // keep last per (tag, label), preserve first-seen order
     val all = fired ++ noted
     val last = all.map { case (t, l, m) => (t, l) -> m }.toMap

@@ -1734,59 +1734,6 @@ object Dedup {
         coalesce(col("component"), col("id")).as("component"))
   }
 
-  /** Frontier-localized [[mergeComponents]] — the g9 sparse-frontier
-    * discipline applied to CC: only components owning an id the batch
-    * touches ride the re-convergence; every other assignment row
-    * passes through verbatim. Untouched components' star edges share
-    * no vertex with (affected ∪ batch) — their members are in no
-    * batch pair (or they would be touched) and star edges never cross
-    * components — so CC over the disjoint union factorizes and
-    * dropping them cannot change any touched label (DedupSpec pins
-    * bit-equality with the plain merge and the one-shot recompute).
-    * PRECONDITION (shared with the plain merge's singleton handling
-    * but load-bearing here): `assign` must be a
-    * [[connectedComponents]]/[[mergeComponents]] OUTPUT — component
-    * labels are the minimum reachable id (the algorithm's fixed
-    * point). An arbitrary relabeling (e.g. root named by max id)
-    * passes through verbatim on the untouched side while the plain
-    * merge would re-canonicalize it, voiding the equality contract
-    * (round-11 review).
-    *
-    * WHEN to prefer it: per-batch contraction cost is proportional to
-    * the cluster state the batch touches, never to corpus history —
-    * the fleet shape once the standing star-edge state dwarfs a
-    * batch's reach (the final id-keyed re-attach join is the one
-    * unavoidable assignment-sized pass, co-located when the standing
-    * assignment is bucketed by id). BELOW that regime the two extra
-    * semi-join stages cost more than they save: the round-11 A/B at
-    * sf0.1 (d44's three-batch replay, ~500 star edges) measured the
-    * localized path consistently SLOWER (see PLANS.md "d44 decision"),
-    * which is why the replay entry ships on the plain merge and this
-    * form is the explicitly-chosen scale path. */
-  def mergeComponentsLocalized(assign: DataFrame, newPairs: DataFrame,
-                               idACol: String, idBCol: String,
-                               maxRounds: Int = 50): DataFrame = {
-    val np = newPairs.select(col(idACol).as("u"), col(idBCol).as("v"))
-    val touched = np.select(col("u").as("id"))
-      .union(np.select(col("v").as("id"))).distinct()
-    val touchedComps = assign.join(touched, Seq("id"), "left_semi")
-      .select(col("component").as("_tc")).distinct()
-    val stars = componentStarEdges(assign)
-    val affected = stars.join(touchedComps,
-      stars("u") === col("_tc"), "left_semi")
-    val merged = connectedComponents(affected.union(np), "u", "v",
-        maxRounds)
-      .withColumnRenamed("component", "_newc")
-    // full-outer on id: merged-only ids are new docs from the batch;
-    // assign-only ids are untouched and keep their old component
-    // (roots and non-roots of touched clusters all sit on an affected
-    // star edge or a batch pair, so they are in merged)
-    assign.select(col("id"), col("component").as("_oldc"))
-      .join(merged, Seq("id"), "full_outer")
-      .select(col("id"),
-        coalesce(col("_newc"), col("_oldc")).as("component"))
-  }
-
   /** Cluster-size histogram of a computed component assignment —
     * (cluster_size, n_clusters, n_docs), the one-screen dedup report
     * (how much of the corpus sits in 2-clusters vs giant components

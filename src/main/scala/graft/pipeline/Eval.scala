@@ -1631,28 +1631,6 @@ object Eval {
     cusumBinsegFromBuckets(cusumFold(batch, valueMicro, bucket, state,
       maxBuckets))
 
-  /** Streaming CUSUM changepoint monitor: every micro-batch folds its
-    * bucket counts into the standing state and reports the current
-    * changepoint estimate for the stream SO FAR — one
-    * (cp_bucket, n_buckets, cusum, batch_id) row per batch to `sink`.
-    * The sink body IS [[cusumBatchUpdate]], so batch and stream
-    * cannot drift. */
-  def cusumDriftStream(docs: DataFrame, valueMicro: Column,
-                       bucket: Column, maxBuckets: Int = 8192)(
-                       sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val state = new java.util.concurrent.atomic.AtomicReference[
-      Map[Long, (Long, BigDecimal)]](Map.empty)
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        sink(cusumBatchUpdate(batch, valueMicro, bucket, state,
-            maxBuckets)
-          .withColumn("batch_id", lit(batchId)))
-      }
-      .start()
-  }
-
   /** Binary-segmentation changepoint localization (Scott & Knott's
     * recursion, one level deep) — the MULTI-shift extension of
     * [[cusumChangepoint]]: q80 localizes ONE mean shift; this re-runs
@@ -2220,7 +2198,6 @@ object Eval {
   /** The AD arithmetic over a prebuilt (v, l, la) value-count frame —
     * shared with [[driftPanel]] (the ksFromCounts discipline). */
   private def adFromCounts(gIn: DataFrame): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
     // lazy pin: the totals fetch below materializes the checkpoint in
     // the same job (one pass over the lineage instead of a separate
     // materialization job — r15, guide §1.2 job-count)

@@ -287,10 +287,13 @@ object GraphOps {
     val spark = edges.sparkSession
     import spark.implicits._
     // seeds restricted to graph nodes (an absent seed has no edges to
-    // flow through and must not appear — the dense contract)
-    val seedRows = broadcast(seeds.distinct.toDF("id"))
-      .join(deg, col("id") === col("src"), "leftsemi")
-      .localCheckpoint() // tiny; reused every round
+    // flow through and must not appear — the dense contract); deg is
+    // one row per node, so a filter by the seed list is that set. The
+    // <= |seeds| ids come back to the driver: a local relation is
+    // reused every round and the planner knows it is tiny (a filtered
+    // deg would be estimated at deg's size and lose the broadcast)
+    val seedRows = deg.filter(col("src").isin(seeds.distinct: _*))
+      .select(col("src")).as[Long].collect().toSeq.toDF("id")
     var state = seedRows.select(col("id"),
       lit(1000000L).as("rank_micro"))
     for (it <- 1 to iterations) {
@@ -1100,11 +1103,13 @@ object GraphOps {
     val edges = e.select(col("lo").as("src"), col("hi").as("dst"))
       .union(e.select(col("hi").as("src"), col("lo").as("dst")))
       .localCheckpoint() // reused every round
-    val nodes = edges.select(col("src").as("id")).distinct()
-    var settled = broadcast(seeds.distinct.toDF("id"))
-      .join(nodes, Seq("id"), "leftsemi")
+    // seeds absent from the graph drop out; the <= |seeds| present ids
+    // come back to the driver, so the first frontier is a local
+    // relation the planner knows is tiny
+    var settled = edges.select(col("src").as("id")).distinct()
+      .filter(col("id").isin(seeds.distinct: _*))
+      .as[Long].collect().toSeq.toDF("id")
       .select(col("id"), lit(0L).as("hops"))
-      .localCheckpoint()
     var frontier = settled.select("id")
     var hop = 1
     while (hop <= maxHops && !frontier.isEmpty) {

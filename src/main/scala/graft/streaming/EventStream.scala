@@ -1,10 +1,8 @@
 package graft.streaming
 
-import graft.model.LogEvent
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.StringType
 
 /** Structured Streaming views of the append-only event log
   * (SURVEY §2.1 S4, §2.6 T7/T8, §2.8 K3).

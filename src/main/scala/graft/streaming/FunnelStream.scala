@@ -261,7 +261,7 @@ object FunnelStream {
       .getOrElse(Long.MaxValue)
     val wNs =
       if (wMs == Long.MaxValue) Long.MaxValue else wMs * 1000000L
-    var st = state.getOption.getOrElse(
+    val st = state.getOption.getOrElse(
       BufferedFunnelState(FunnelState(None, None, None), Nil,
         Long.MinValue))
     val incoming = boundedBatch(user, events)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.model.LogEvent
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** A raw producer-side event, before the producer's derivations: one row

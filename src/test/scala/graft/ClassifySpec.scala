@@ -24,7 +24,7 @@ class ClassifySpec extends AnyFunSuite {
     val counts = toks.groupBy(t => (t._2, t._3)).view
       .mapValues(_.size.toLong).toMap
     val labels = classTok.keys.toSeq.sorted
-    val preds = docs.map { case (id, text, lab) =>
+    val preds = docs.map { case (_, text, lab) =>
       val best = labels.map { l =>
         val prior = roundMicro(math.log(
           docCnt(l).toDouble / docs.size))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.config.{LoggerConfig, LoggerPreset}
+import graft.config.LoggerConfig
 import graft.ops.WritePipeline
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite

@@ -385,51 +385,18 @@ class DedupSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(merged === Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L,
       5L -> 4L))
-  }
-
-  test("localized merge: frontier splice relabels only touched clusters") {
-    val s = spark
-    import s.implicits._
-    // standing clusters {1,2,3}, {10,11}, {20,21}, singleton 30; the
-    // batch splices the first two (3-11) and opens a new cluster
-    // (40-41). {20,21} and 30 are untouched: their labels must pass
-    // through verbatim — the frontier-localized merge re-converges
-    // ONLY the touched components' star edges plus the batch.
-    val assign = Seq((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L),
+    // a batch splicing two standing clusters (3-11) and opening a new
+    // one (40-41) relabels only the touched clusters: {20,21} and 30
+    // keep their labels
+    val standing = Seq((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L),
       (11L, 10L), (20L, 20L), (21L, 20L), (30L, 30L))
       .toDF("id", "component")
-    val batch = pairsDf(Seq((3L, 11L), (40L, 41L)))
-    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 1L,
+    val spliced = Dedup.mergeComponents(standing,
+        pairsDf(Seq((3L, 11L), (40L, 41L))), "id_a", "id_b")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(spliced === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 1L,
       11L -> 1L, 20L -> 20L, 21L -> 20L, 30L -> 30L, 40L -> 40L,
-      41L -> 40L)
-    val localized = Dedup.mergeComponentsLocalized(assign, batch,
-        "id_a", "id_b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(localized === want)
-    // and it is bit-equal to the plain merge on the same input
-    val plain = Dedup.mergeComponents(assign, batch, "id_a", "id_b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(plain === want)
-  }
-
-  test("localized merge equals the plain merge on random batches") {
-    for (seed <- 1 to 3) {
-      val rnd = new scala.util.Random(300 + seed)
-      val n = 30
-      def randomPairs(k: Int) = Seq.fill(k)(
-          (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter { case (a, b) => a != b }
-      val assign = Dedup.connectedComponents(
-        pairsDf(randomPairs(15)), "id_a", "id_b")
-      val batch = randomPairs(10)
-      val plain = Dedup.mergeComponents(assign, pairsDf(batch),
-          "id_a", "id_b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val localized = Dedup.mergeComponentsLocalized(assign,
-          pairsDf(batch), "id_a", "id_b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(localized === plain, s"seed $seed")
-    }
+      41L -> 40L))
   }
 
   test("clusterSizeHistogram reports over a precomputed assignment") {
@@ -466,7 +433,6 @@ class DedupSpec extends AnyFunSuite {
 
   test("ContainmentIndex save/load roundtrip: same gate results, exchange-free id join") {
     val s = spark
-    import s.implicits._
     val corpus = docsDf(Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
       (2L, "lambda mu nu xi omicron pi rho sigma tau upsilon"),

@@ -157,7 +157,6 @@ class ExportMissesQuerySpec extends AnyFunSuite {
   }
 
   test("the pinned miss rows are released once the report is dropped") {
-    val sc = spark.sparkContext
     val pinned = exportRequest(Fixtures.writeJsonl(Fixtures.mixedLog))._4
     assert(pinned.nonEmpty)
     val deadline = System.nanoTime() + 30L * 1000000000L

@@ -44,8 +44,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("real PNG round-trip: imageio reproduces synthesized dims and color") {
-    val s = spark
-    import s.implicits._
     val metas = Multimodal.decodeMeta(Multimodal.attachImages(docs))
       .orderBy("doc_id").collect()
     assert(metas.map(_.doc_id).toSeq === Seq(0L, 3L)) // doc_id % 3 == 0

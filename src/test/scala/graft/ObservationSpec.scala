@@ -211,6 +211,19 @@ class ObservationSpec extends AnyFunSuite {
     assert(graft.ops.Counters.drain().isEmpty) // cleared
   }
 
+  test("undrained observations are capped, oldest dropped first") {
+    import graft.ops.Counters
+    Counters.drain() // isolate
+    val obs = Observation("capped")
+    spark.range(1).observe(obs, count(lit(1)).as("n")).collect()
+    val n = Counters.MaxUndrainedNotes + 6
+    (0 until n).foreach(i => Counters.register("cap", s"l$i", obs))
+    val cs = Counters.drain()
+    assert(cs.size === Counters.MaxUndrainedNotes)
+    assert(cs.head._2 === "l6" && cs.last._2 === s"l${n - 1}")
+    assert(Counters.drain().isEmpty)
+  }
+
   test("drain waits ONE shared deadline across unfired observations " +
     "(round-9 advice)") {
     graft.ops.Counters.drain() // isolate

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.RangeJoin
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class RangeJoinSpec extends AnyFunSuite {

@@ -79,8 +79,6 @@ class WinnowSpec extends AnyFunSuite {
   }
 
   test("summary envelope and the local-match guarantee") {
-    val s = spark
-    import s.implicits._
     val rnd = new scala.util.Random(23)
     val shared = (1 to 10).map(i => s"s$i").mkString(" ") // 10 words
     def noise(n: Int) = Seq.fill(n)(s"n${rnd.nextInt(1000)}")
