@@ -51,14 +51,9 @@ object SparkEntry {
     * changes cost, never answers. */
   private def dedupArtifacts(s: SparkSession, dir: String)
       : graft.pipeline.DedupArtifacts =
-    graft.pipeline.DedupArtifacts.staged(s, s"$dir|documents|0.3")(
+    Staged(s, "dedup|documents|0.3", dir)(
       graft.pipeline.DedupArtifacts.buildPinned(
         table(s, dir, "documents"), "doc_id", "text", threshold = 0.3))
-
-  // keyed by (applicationId, sfDir): localCheckpoint state dies with
-  // the SparkContext (the DedupArtifacts.staged convention)
-  private val covarianceCache =
-    scala.collection.concurrent.TrieMap[(String, String), DataFrame]()
 
   /** The anisotropy audit's shared state: the e17 upper-triangle
     * covariance matrix over `embeddings`, staged ONCE per
@@ -68,15 +63,9 @@ object SparkEntry {
     * spectral question reads the staging table). Both oracles keep
     * their full standalone SQL replays. */
   private def covarianceStaged(s: SparkSession, dir: String): DataFrame =
-    covarianceCache.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir),
+    Staged(s, "covariance", dir)(
       Similarity.covarianceMicro(table(s, dir, "embeddings"),
         "vec_id", "embedding").localCheckpoint())
-
-  // keyed by (applicationId, sfDir): localCheckpoint state dies with
-  // the SparkContext (the DedupArtifacts.staged convention)
-  private val winnowKeysCache =
-    scala.collection.concurrent.TrieMap[(String, String), DataFrame]()
 
   /** The winnowing family's shared state: the (doc, fingerprint-key)
     * frame over `documents` at (k=4, w=5), staged ONCE per
@@ -88,20 +77,9 @@ object SparkEntry {
     * computing its OWN three batch key-frames — the append-only
     * replay equivalence is the thing it tests. */
   private def winnowKeysStaged(s: SparkSession, dir: String): DataFrame =
-    winnowKeysCache.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir),
+    Staged(s, "winnowKeys", dir)(
       Dedup.winnowKeys(table(s, dir, "documents"), "doc_id", "text",
         k = 4, w = 5).localCheckpoint())
-
-  // keyed by (applicationId, sfDir): the winnowKeys discipline.
-  // Deliberately unbounded + never unpersisted (r13 ADVICE,
-  // adjudicated): the gate harness sees at most a handful of sfDirs
-  // per JVM and each entry is a 1024-row checkpointed table; a
-  // long-lived multi-dataset SERVICE embedding this entry should
-  // evict (unpersist + remove) per retired dataset — the cache is a
-  // harness staging convention, not a production artifact store.
-  private val dsirRatiosCache =
-    scala.collection.concurrent.TrieMap[(String, String), DataFrame]()
 
   /** DSIR's trained artifact, staged ONCE per (application, sfDir):
     * the 1024-bucket hashed-bigram log-ratio table between the
@@ -110,12 +88,11 @@ object SparkEntry {
     * scoring (a production run trains the ratio table once per
     * target; every selection pass reads it). */
   private def dsirRatiosStaged(s: SparkSession, dir: String): DataFrame =
-    dsirRatiosCache.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir), {
-        val docs = table(s, dir, "documents")
-        Curation.dsirLogRatios(docs.filter(col("lang") === "en"),
-          docs, "text", buckets = 1024).localCheckpoint()
-      })
+    Staged(s, "dsirRatios", dir) {
+      val docs = table(s, dir, "documents")
+      Curation.dsirLogRatios(docs.filter(col("lang") === "en"),
+        docs, "text", buckets = 1024).localCheckpoint()
+    }
 
   /** d75/d76's shared oracle prefix: the DSIR bigram bucketing, the
     * two bucket distributions (target = lang 'en', raw = all), and
@@ -497,12 +474,6 @@ object SparkEntry {
       .orderBy("q_permille")
   }
 
-  // keyed by (applicationId, sfDir): localCheckpoint state dies with
-  // the SparkContext (the DedupArtifacts.staged convention)
-  private val wordGraphCache =
-    scala.collection.concurrent.TrieMap[(String, String),
-      (DataFrame, DataFrame)]()
-
   /** The word-collocation graph family's shared state: the top-300
     * PMI collocations as 60-bit portable-hash edges plus the word↔id
     * map, staged ONCE per (application, sfDir) and consumed by the
@@ -514,21 +485,20 @@ object SparkEntry {
     * labels identical). Returns (edges(id_a, id_b), words(word, id)). */
   private def wordGraph(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) =
-    wordGraphCache.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir), {
-        val pmi = TextStats.pmiCollocations(
-          table(s, dir, "documents"), "doc_id", "text",
-          minCount = 10, k = 300).localCheckpoint()
-        val w1 = element_at(split(col("bigram"), " "), 1)
-        val w2 = element_at(split(col("bigram"), " "), 2)
-        val edges = pmi.select(Dedup.md5Long60(w1).as("id_a"),
-          Dedup.md5Long60(w2).as("id_b")).localCheckpoint()
-        val words = pmi
-          .select(explode(array(w1, w2)).as("word")).distinct()
-          .withColumn("id", Dedup.md5Long60(col("word")))
-          .localCheckpoint()
-        (edges, words)
-      })
+    Staged(s, "wordGraph", dir) {
+      val pmi = TextStats.pmiCollocations(
+        table(s, dir, "documents"), "doc_id", "text",
+        minCount = 10, k = 300).localCheckpoint()
+      val w1 = element_at(split(col("bigram"), " "), 1)
+      val w2 = element_at(split(col("bigram"), " "), 2)
+      val edges = pmi.select(Dedup.md5Long60(w1).as("id_a"),
+        Dedup.md5Long60(w2).as("id_b")).localCheckpoint()
+      val words = pmi
+        .select(explode(array(w1, w2)).as("word")).distinct()
+        .withColumn("id", Dedup.md5Long60(col("word")))
+        .localCheckpoint()
+      (edges, words)
+    }
 
   /** The word-graph oracles' shared derivation (d60, g8, g13, g14,
     * g15): corpus → PMI top-300 → hashed edge list (te normalized, ed
@@ -734,26 +704,6 @@ object SparkEntry {
 
   private case class Q(fn: (SparkSession, String) => DataFrame,
                        sql: Option[String])
-
-  /** One-time side artifacts (the S5 JSONL rewrite, the E5 IVF index):
-    * built once per (artifact, sfDir) in this JVM and reused, so
-    * repeated invocations — bench warm-up + min-of-2 — measure the
-    * READ path rather than artifact construction, and temp space stays
-    * bounded. Removed on JVM exit. */
-  private val artifactCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def cachedArtifact(key: String)(build: String => Unit): String =
-    artifactCache.computeIfAbsent(key, { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_artifact")
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(dir.toFile)
-      }
-      build(dir.toString)
-      dir.toString
-    })
 
   /** Verification preset for the P8/P9 write-cascade queries: enables
     * commits (non-first-choice only) and views, keeps a 2-3 field mask
@@ -2032,7 +1982,7 @@ object SparkEntry {
     // filter; oracle = the plain projection. ---------------------------
     "s5_dsv2_scan" -> Q(
       (s, dir) => {
-        val out = cachedArtifact(s"s5|$dir") { p =>
+        val out = Staged.dir(s, "s5", dir) { p =>
           commits(s, dir)
             .select(col("event_id").cast("string").as("timestamp"),
               lit("text_committed").as("event_type"),
@@ -2101,8 +2051,7 @@ object SparkEntry {
     // out instead of failing analysis. -------------------------------
     "p6_sparse_columns" -> Q(
       (s, dir) => {
-        val sparseDir = java.nio.file.Files
-          .createTempDirectory("graft_p6").toString
+        val sparseDir = Staged.scratch("graft_p6")
         commits(s, dir)
           .select("event_id", "committed_text", "selected_candidate_rank")
           .write.mode("overwrite").parquet(sparseDir)
@@ -2266,9 +2215,8 @@ object SparkEntry {
     "k1_csv_roundtrip" -> Q(
       (s, dir) => {
         val report = missReport(s, dir)
-        val outDir = java.nio.file.Files
-          .createTempDirectory("graft_k1").toFile
-        val out = new java.io.File(outDir, "report.csv").getPath
+        val out = new java.io.File(Staged.scratch("graft_k1"), "report.csv")
+          .getPath
         graft.io.ReportWriter.writeCsvReport(report, out)
         graft.io.ReportWriter.readCsvReport(s, out)
           .select(col("event_id").cast("long").as("event_id"),
@@ -2289,8 +2237,7 @@ object SparkEntry {
     // size-targeted files via TableLayout.compact) transfers as-is.
     "k4_orc_roundtrip" -> Q(
       (s, dir) => {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_k4").toFile.getPath
+        val out = Staged.scratch("graft_k4")
         table(s, dir, "documents").write.mode("overwrite").orc(out)
         s.read.orc(out)
           .groupBy("lang", "source").agg(
@@ -2311,8 +2258,7 @@ object SparkEntry {
     // oracle (null rank → key omitted → null again). ------------------
     "t8_jsonl_roundtrip" -> Q(
       (s, dir) => {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_t8").toString
+        val out = Staged.scratch("graft_t8")
         commits(s, dir)
           .select(col("event_id"), col("committed_text"), rk)
           .write.mode("overwrite").json(out)
@@ -4991,9 +4937,9 @@ object SparkEntry {
     // batch2's texts equal batch1's (exact dups, id-shifted), so every
     // batch2 doc must surface its admitted twin at jaccard 1.0 plus
     // whatever corpus near-dups the bands find — all SQL-replayed.
-    // Index build+append run once per (JVM, sfDir) via cachedArtifact;
-    // the timed path is the gate against staged tables (the recurring
-    // production cost).
+    // Index build+append run once per (application, sfDir) via Staged,
+    // which holds the tables' name prefix; the timed path is the gate
+    // against staged tables (the recurring production cost).
     "d50_index_append_replay" -> Q(
       (s, dir) => {
         val docs = table(s, dir, "documents").select("doc_id", "text")
@@ -5003,15 +4949,16 @@ object SparkEntry {
           .select((col("doc_id") + offset).as("doc_id"),
             expr("array_join(slice(split(text, ' '), 1, " +
               "size(split(text, ' ')) - 1), ' ')").as("text"))
-        val prefix = s"d50_ix_${math.abs(dir.hashCode)}"
-        cachedArtifact(s"d50|$dir") { _ =>
+        val prefix = Staged(s, "d50", dir) {
+          val ix = s"d50_ix_${math.abs(dir.hashCode)}"
           Dedup.ResemblanceIndex.save(
             Dedup.ResemblanceIndex.build(docs, "doc_id", "text"),
-            prefix, buckets = 8)
+            ix, buckets = 8)
           Dedup.ResemblanceIndex.append(
             Dedup.ResemblanceIndex.build(mut(3000000L), "doc_id",
               "text"),
-            prefix, buckets = 8)
+            ix, buckets = 8)
+          ix
         }
         Dedup.lshVerifiedPairsAgainstIndex(mut(4000000L),
             Dedup.ResemblanceIndex.load(s, prefix),
@@ -9709,7 +9656,7 @@ object SparkEntry {
       (s, dir) => {
         val emb = table(s, dir, "embeddings")
         val q = vec0(emb)
-        val idxPath = cachedArtifact(s"e5|$dir") { p =>
+        val idxPath = Staged.dir(s, "e5", dir) { p =>
           Similarity.writeIvfIndex(emb, "vec_id", "embedding", p,
             centroidIds = (1L to 16L))
         }
@@ -10710,7 +10657,7 @@ object SparkEntry {
     // the partition pruning path sees exactly the exported rows.
     "d48_shard_export_roundtrip" -> Q(
       (s, dir) => {
-        val out = cachedArtifact(s"d48|$dir") { p =>
+        val out = Staged.dir(s, "d48", dir) { p =>
           serpentineShards(s, dir)
             .select(col("doc_id"), col("_w"), col("shard"))
             .write.mode("overwrite").partitionBy("shard").parquet(p)

@@ -43,7 +43,7 @@ object AsOfJoin {
         tieBreak.map(col(_).cast("long")).getOrElse(lit(0L)))
     val rAligned = lAligned.columns.foldLeft(r)((df, c) =>
       if (df.columns.contains(c)) df else df.withColumn(c, lit(null)))
-      .select(lAligned.columns.map(col): _*)
+      .select(lAligned.columns.toSeq.map(col): _*)
     val unioned = lAligned.unionByName(rAligned)
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(tsCol).asc, col("_side").asc, col("_tb").asc)
@@ -107,7 +107,7 @@ object AsOfJoin {
       struct(rightCols.map(c => m("_v")(c).as(s"asof_$c")): _*)
     }
     joined.withColumn("_m", annotated)
-      .select(left.columns.map(col) ++
+      .select(left.columns.toSeq.map(col) ++
         rightCols.map(c => col(s"_m.asof_$c")): _*)
   }
 }

@@ -147,20 +147,4 @@ object Bpe {
       concat_ws(" ", symbolsOf(col("enc"))).as("segmentation"))
   }
 
-  /** Apply an ALREADY-TRAINED merge sequence to arbitrary words —
-    * inference against a saved merge table: encode, replay the
-    * merges in rank order, split. `merges` is (lhs, rhs) in training
-    * order (a model parameter, literal-folded — tens to tens of
-    * thousands of rows driver-side, the standard tokenizer-model
-    * size). */
-  def applyMerges(words: DataFrame, wordCol: String,
-                  merges: Seq[(String, String)]): DataFrame = {
-    val enc0 = concat_ws("", transform(split(col(wordCol), ""),
-      c => concat(lit("("), c, lit(")"))))
-    val encN = merges.foldLeft(enc0) { case (e, (l, r)) =>
-      replace(e, lit(s"($l)($r)"), lit(s"(${l + r})"))
-    }
-    words.withColumn("subwords", symbolsOf(encN))
-  }
-
 }

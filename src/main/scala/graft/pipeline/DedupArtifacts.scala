@@ -21,9 +21,10 @@ import graft.io.TableLayout
   * answers.
   *
   * Two staging forms:
-  *  - [[DedupArtifacts.staged]]: per-session memoization with
-  *    `localCheckpoint` pinning — the suite/notebook form (state dies
-  *    with the SparkContext).
+  *  - [[DedupArtifacts.buildPinned]] held in [[graft.Staged]]:
+  *    `localCheckpoint`-pinned frames shared per (name, corpus dir,
+  *    dir fingerprint) within one application — the suite/notebook
+  *    form (state dies with the SparkContext).
   *  - [[DedupArtifacts.save]]/[[DedupArtifacts.load]]: durable
   *    hash-bucketed staging tables keyed by each frame's join key
   *    (the ContainmentIndex convention) — the cross-session form; a
@@ -35,8 +36,8 @@ final case class DedupArtifacts(pairs: DataFrame, components: DataFrame)
 object DedupArtifacts {
 
   /** Build both frames from the corpus — un-pinned lineage (each
-    * consumer action recomputes); use [[staged]] or [[save]] when more
-    * than one report will read them. */
+    * consumer action recomputes); use [[buildPinned]] or [[save]] when
+    * more than one report will read them. */
   def build(docs: DataFrame, idCol: String, textCol: String,
             threshold: Double): DedupArtifacts = {
     val pairs = Dedup.lshVerifiedJaccardPairs(docs, idCol, textCol,
@@ -56,24 +57,6 @@ object DedupArtifacts {
       Dedup.connectedComponents(pairs, "id_a", "id_b")
         .localCheckpoint())
   }
-
-  // keyed by (applicationId, caller key): localCheckpoint state lives
-  // and dies with the SparkContext, so a fresh application rebuilds
-  private val stagedCache =
-    scala.collection.concurrent.TrieMap[(String, String), DedupArtifacts]()
-
-  /** Memoized [[buildPinned]]: the first caller per (application, key)
-    * pays the pair pipeline + contraction; later callers (the rest of
-    * the report family) reuse the pinned frames. `key` should identify
-    * the corpus + parameters (e.g. "dir|0.3"). */
-  def staged(spark: SparkSession, key: String)
-            (mk: => DedupArtifacts): DedupArtifacts =
-    stagedCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, key), mk)
-
-  /** Test hook: drop the memoized state (e.g. between suites that
-    * mutate the underlying fixtures). */
-  private[graft] def clearStaged(): Unit = stagedCache.clear()
 
   /** Durable staging: both frames as hash-bucketed tables keyed by
     * their join keys (`id_a` for pairs, `id` for components), so a

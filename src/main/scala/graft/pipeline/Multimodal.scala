@@ -785,51 +785,6 @@ object Multimodal {
     })
   }
 
-  /** STUB resize: scale media metadata (and, in a real build, the
-    * payload) to fit a bounding box, preserving aspect ratio. Batched
-    * per partition like decode; the deterministic fake rescales the
-    * stub dimensions and truncates the payload proportionally, so tests
-    * can assert exact outputs. */
-  def resizeMeta(metas: Dataset[MediaMeta], maxSide: Int)
-      : Dataset[MediaMeta] = {
-    import metas.sparkSession.implicits._
-    metas.mapPartitions { it =>
-      it.map { m =>
-        // error rows (width/height = -1) pass through untouched
-        if (m.width < 0 || m.height < 0) m
-        else {
-          // --- STUB: a real build calls the codec's scaler here
-          val scale = math.min(1.0, maxSide.toDouble / math.max(m.width,
-            m.height))
-          m.copy(
-            width = math.max(1, (m.width * scale).toInt),
-            height = math.max(1, (m.height * scale).toInt),
-            n_bytes = math.max(1L, (m.n_bytes * scale * scale).toLong))
-          // --- end STUB
-        }
-      }
-    }
-  }
-
-  /** Frame/chunk sampling on the binary column itself — pure column
-    * expressions, no decode: k evenly spaced fixed-size byte windows
-    * (the shape of video frame-sampling before decode). The stride is
-    * span/(k-1), so the FIRST window starts at byte 1 and the LAST
-    * ends exactly at the payload's end — a /k stride would never
-    * sample the final chunkBytes. Payloads of at most chunkBytes
-    * yield k copies of the whole payload. */
-  def sampleChunks(media: org.apache.spark.sql.Column, k: Int,
-                   chunkBytes: Int): org.apache.spark.sql.Column = {
-    require(k >= 1 && chunkBytes >= 1, "k and chunkBytes must be >= 1")
-    if (k == 1) array(substring(media, 1, chunkBytes))
-    else ExprUtils.let(
-      greatest(octet_length(media) - chunkBytes, lit(0))) { span =>
-      transform(sequence(lit(0), lit(k - 1)),
-        i => substring(media, (i * span / (k - 1) + 1).cast("int"),
-          lit(chunkBytes)))
-    }
-  }
-
   /** End-to-end pipeline over the documents fixture: attach binary,
     * decode per partition, aggregate per (media_type, format). The
     * `image` payloads here are text bytes — NOT valid images — so the

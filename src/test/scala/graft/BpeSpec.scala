@@ -88,20 +88,4 @@ class BpeSpec extends AnyFunSuite {
       "newest" -> ((5L, 2L, "n ewest")),
       "widest" -> ((3L, 4L, "w i d est"))))
   }
-
-  test("applyMerges segments UNSEEN words with a trained merge table") {
-    val s = spark
-    import s.implicits._
-    // trained merges from the textbook corpus: es, est, ew, ewest
-    val trained = Seq(("e", "s"), ("es", "t"), ("e", "w"),
-      ("ew", "est"))
-    val got = Bpe.applyMerges(
-        Seq("lowest", "newest", "w").toDF("word"), "word", trained)
-      .collect()
-      .map(r => r.getString(0) -> r.getSeq[String](1)).toMap
-    // lowest: es then est apply, ew cannot (its 'e' was consumed)
-    assert(got("lowest") === Seq("l", "o", "w", "est"))
-    assert(got("newest") === Seq("n", "ewest"))
-    assert(got("w") === Seq("w"))
-  }
 }

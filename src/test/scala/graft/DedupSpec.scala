@@ -878,7 +878,7 @@ class DedupSpec extends AnyFunSuite {
     assert(got === Map(2L -> 2L, 3L -> 2L))
   }
 
-  test("DedupArtifacts: pinned equality, staged memoization, durable roundtrip") {
+  test("DedupArtifacts: pinned equality and durable roundtrip") {
     import graft.pipeline.DedupArtifacts
     val s = spark
     // the planted near-dup trio from the lshVerifiedJaccardPairs test
@@ -899,15 +899,6 @@ class DedupSpec extends AnyFunSuite {
     val pinned = DedupArtifacts.buildPinned(corpus, "doc_id", "text", 0.3)
     assert(pc(pinned) === direct)
     assert(direct._1.nonEmpty && direct._2.nonEmpty)
-    // staged: same key returns the SAME instance (the memoized state);
-    // a different key builds fresh
-    DedupArtifacts.clearStaged()
-    val a1 = DedupArtifacts.staged(s, "k1")(
-      DedupArtifacts.buildPinned(corpus, "doc_id", "text", 0.3))
-    val a2 = DedupArtifacts.staged(s, "k1")(
-      fail("second staged() call with the same key must not rebuild"))
-    assert(a1 eq a2)
-    DedupArtifacts.clearStaged()
     // durable roundtrip: bucketed staging tables reload row-equal, and
     // a components self-join on the bucket key plans exchange-free
     DedupArtifacts.save(pinned, "da_rt", buckets = 4)

@@ -99,8 +99,9 @@ class ExportMissesQuerySpec extends AnyFunSuite {
 
   /** Bytes read through Hadoop's local file system, all threads. */
   private def localBytesRead(): Long =
-    FileSystem.getAllStatistics.asScala
-      .filter(_.getScheme == "file").map(_.getBytesRead).sum
+    FileSystem.getGlobalStorageStatistics.iterator.asScala
+      .filter(_.getScheme == "file")
+      .map(_.getLong("bytesRead").longValue).sum
 
   /** One CLI `export-misses` request (`graft.cli.Main`'s sequence) in
     * its own job group: (jobs started by `run` itself, miss count, log

@@ -50,7 +50,7 @@ class MisraGriesSpec extends AnyFunSuite {
       val exact = xs.groupBy(identity).view.mapValues(_.size.toLong)
       val mustHave = exact.filter(_._2 > n / (m + 1)).keySet
       assert(mustHave.subsetOf(mg.keySet),
-        s"missing ${mustHave -- mg.keySet} (seed=$seed parts=$parts)")
+        s"missing ${mustHave.diff(mg.keySet)} (seed=$seed parts=$parts)")
       for ((k, w) <- mg) {
         assert(w <= exact(k), s"overcount of $k")
         assert(w >= exact(k) - n / (m + 1), s"undercount of $k")

@@ -126,36 +126,6 @@ class MultimodalSpec extends AnyFunSuite {
     }
   }
 
-  test("chunk sampling yields k windows of the binary column") {
-    val out = Multimodal.attachBinary(docs)
-      .select(Multimodal.sampleChunks(col("media"), 3, 4).as("chunks"))
-      .head().getSeq[Array[Byte]](0)
-    assert(out.length === 3)
-    assert(out.forall(_.length <= 4))
-  }
-
-  test("resize stub: bounded dimensions, aspect ratio and determinism") {
-    val s = spark
-    import s.implicits._
-    val recs = Multimodal.attachBinary(docs).as[MediaRecord]
-    val metas = Multimodal.decodeMeta(recs)
-    val resized = Multimodal.resizeMeta(metas, maxSide = 64)
-      .orderBy("doc_id").collect()
-    val original = metas.orderBy("doc_id").collect()
-    resized.zip(original).foreach { case (r, o) =>
-      assert(r.width <= 64 && r.height <= 64)
-      if (math.max(o.width, o.height) <= 64)
-        assert(r.width === o.width && r.height === o.height)
-      else {
-        // each side lands within 1 px of the ideal scaled size (int
-        // floor + the 1-px floor guard)
-        val scale = 64.0 / math.max(o.width, o.height)
-        assert(math.abs(r.width - o.width * scale) <= 1.0)
-        assert(math.abs(r.height - o.height * scale) <= 1.0)
-      }
-    }
-  }
-
   test("real image resize: scaled dims, preserved color, pass-throughs") {
     val s = spark
     import s.implicits._

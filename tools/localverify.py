@@ -7,6 +7,9 @@ column-name-sorted, row-sorted, exact value compare.
 
 Usage: python3 tools/localverify.py <sfDir> <verifyOutDir>
 
+Each oracle's line ends with its DuckDB oracle seconds and compare
+seconds; the 10 slowest entries are listed before the summary.
+
 With SPARK_GRAFT_ONLY=<name,...> set (the same comma-separated list
 graft.Verify honours), only the named entries are checked; a named
 entry without a dump still FAILs.
@@ -15,6 +18,7 @@ import json
 import math
 import os
 import sys
+import time
 
 import duckdb
 
@@ -54,6 +58,38 @@ def selected_names():
     return {n.strip() for n in only.split(",") if n.strip()}
 
 
+def compare(con, name, out_dir, want):
+    """The ok/FAIL line for one entry's Spark dump against the
+    oracle's canonical frame."""
+    try:
+        got = canon(con.sql(
+            f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df())
+    except Exception as e:
+        return f"FAIL {name}: spark output unreadable: {e}"
+    if list(want.columns) != list(got.columns):
+        return (f"FAIL {name}: columns want={list(want.columns)} "
+                f"got={list(got.columns)}")
+    if len(want) != len(got):
+        return f"FAIL {name}: rows want={len(want)} got={len(got)}"
+    wv, gv = want.to_numpy(), got.to_numpy()
+    for i in range(len(want)):
+        for j in range(len(want.columns)):
+            # numpy object arrays: compare via python semantics
+            a, b = wv[i][j], gv[i][j]
+            try:
+                if isinstance(a, float) or isinstance(b, float):
+                    ok = eq(float(a) if a is not None else None,
+                            float(b) if b is not None else None)
+                else:
+                    ok = eq(a, b)
+            except (TypeError, ValueError):
+                ok = str(a) == str(b)
+            if not ok:
+                return (f"FAIL {name}: row {i} col {want.columns[j]}: "
+                        f"want={a!r} got={b!r}")
+    return f"ok   {name} ({len(want)} rows)"
+
+
 def main(sf_dir, out_dir):
     con = duckdb.connect()
     for t in TABLES:
@@ -64,55 +100,25 @@ def main(sf_dir, out_dir):
     if names is not None:
         oracle = {n: q for n, q in oracle.items() if n in names}
     n_ok = n_bad = 0
+    secs = {}
     for name, sql in sorted(oracle.items()):
+        t0 = time.perf_counter()
         try:
             want = canon(con.sql(sql).df())
         except Exception as e:
-            print(f"FAIL {name}: oracle error: {e}")
+            print(f"FAIL {name}: oracle error: {e} "
+                  f"[oracle {time.perf_counter() - t0:.2f}s]")
             n_bad += 1
             continue
-        try:
-            got = canon(con.sql(
-                f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df())
-        except Exception as e:
-            print(f"FAIL {name}: spark output unreadable: {e}")
-            n_bad += 1
-            continue
-        if list(want.columns) != list(got.columns):
-            print(f"FAIL {name}: columns want={list(want.columns)} "
-                  f"got={list(got.columns)}")
-            n_bad += 1
-            continue
-        if len(want) != len(got):
-            print(f"FAIL {name}: rows want={len(want)} got={len(got)}")
-            n_bad += 1
-            continue
-        bad = None
-        wv, gv = want.to_numpy(), got.to_numpy()
-        for i in range(len(want)):
-            for j in range(len(want.columns)):
-                # numpy object arrays: compare via python semantics
-                a, b = wv[i][j], gv[i][j]
-                try:
-                    if isinstance(a, float) or isinstance(b, float):
-                        ok = eq(float(a) if a is not None else None,
-                                float(b) if b is not None else None)
-                    else:
-                        ok = eq(a, b)
-                except (TypeError, ValueError):
-                    ok = str(a) == str(b)
-                if not ok:
-                    bad = (i, want.columns[j], a, b)
-                    break
-            if bad:
-                break
-        if bad:
-            i, c, a, b = bad
-            print(f"FAIL {name}: row {i} col {c}: want={a!r} got={b!r}")
-            n_bad += 1
-        else:
-            print(f"ok   {name} ({len(want)} rows)")
+        t1 = time.perf_counter()
+        line = compare(con, name, out_dir, want)
+        t2 = time.perf_counter()
+        secs[name] = t2 - t0
+        print(f"{line} [oracle {t1 - t0:.2f}s, compare {t2 - t1:.2f}s]")
+        if line.startswith("ok"):
             n_ok += 1
+        else:
+            n_bad += 1
     # rows-only check for entries without an oracle (mirrors the
     # driver's weaker gate)
     for name in sorted(os.listdir(out_dir)):
@@ -133,6 +139,9 @@ def main(sf_dir, out_dir):
         if not os.path.isdir(os.path.join(out_dir, name)):
             print(f"FAIL {name}: no oracle and no spark output")
             n_bad += 1
+    print("slowest:")
+    for name, t in sorted(secs.items(), key=lambda kv: -kv[1])[:10]:
+        print(f"  {t:8.2f}s  {name}")
     print(f"== {n_ok} ok, {n_bad} fail ==")
     return 1 if n_bad else 0
 
