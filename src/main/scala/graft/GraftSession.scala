@@ -13,6 +13,9 @@ import org.apache.spark.sql.SparkSession
   *     contract of `SyntheticEvents.readEventsTable`);
   *   - the engine's SQL functions and planner strategy installed by
   *     [[graft.functions.GraftExtensions]];
+  *   - a warehouse under the [[Staged]] root, so catalog tables an
+  *     entry writes (d50's bucketed index) never land in the working
+  *     directory and go when the JVM exits;
   *   - no UI.
   *
   * Callers add only what is specific to them before `getOrCreate`. */
@@ -39,6 +42,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config("spark.sql.warehouse.dir", Staged.scratch("warehouse"))
       .config("spark.ui.enabled", "false")
   }
 

@@ -4818,7 +4818,7 @@ object SparkEntry {
     // Batch REPLAY of the streaming containment gate: the fragment
     // set splits into two micro-batches (doc_id parity), the corpus
     // ContainmentIndex is built and PINNED once, and each batch runs
-    // prefixContainmentPairsAgainstIndex — the literal foreachBatch
+    // prefixContainmentPairsAgainstIndex — the literal per-batch
     // body of Dedup.containmentGateStream — with the results unioned.
     // Per-probe prefix ranking depends only on corpus df, so the
     // union over disjoint batches must equal the one-shot whole-set
@@ -4843,7 +4843,7 @@ object SparkEntry {
     // Batch REPLAY of the streaming PSI drift monitor: one source's
     // docs arrive as the micro-batch and are scored against the
     // pinned histogram of the REST of the corpus — the literal
-    // foreachBatch body of Eval.psiDriftStream (referenceHistogram +
+    // per-batch body of Eval.psiDriftStream (referenceHistogram +
     // psiAgainstReference, full-outer bucket domain, Laplace
     // smoothing, micro-quantized terms), driver-oracle-checked
     // rather than spec-only.
@@ -4893,7 +4893,7 @@ object SparkEntry {
     // into two micro-batches by parity; the corpus ResemblanceIndex
     // (banded signatures + token/size tables) is built and PINNED
     // once, each batch runs lshVerifiedPairsAgainstIndex — the literal
-    // foreachBatch body of Dedup.nearDupGateStream — and the union is
+    // per-batch body of Dedup.nearDupGateStream — and the union is
     // oracle-checked against the one-shot whole-set SQL replay.
     // Candidates and verification for an arriving doc depend only on
     // (that doc, the corpus index), so the per-batch union must equal
@@ -5175,7 +5175,7 @@ object SparkEntry {
     // Batch REPLAY of the streaming KS drift monitor: one source's
     // docs arrive as the micro-batch and are KS-scored against the
     // pinned value counts of the REST of the corpus — the literal
-    // foreachBatch body of Eval.ksDriftStream (referenceValueCounts +
+    // per-batch body of Eval.ksDriftStream (referenceValueCounts +
     // ksAgainstReference, full-outer value domain, shared
     // integer-exact arithmetic), driver-oracle-checked rather than
     // spec-only (the q42/d41 promotion pattern).
@@ -5191,7 +5191,7 @@ object SparkEntry {
               |$duckKsTail""".stripMargin)),
 
     // Streaming exact-median drift monitor, batch-replayed (the
-    // d41/q42/q49 promotion pattern): the literal foreachBatch body
+    // d41/q42/q49 promotion pattern): the literal per-batch body
     // of Eval.quantileDriftStream (= quantileOfBatch, the narrowing
     // selection running its driver-coordinated rounds inside the
     // sink) over three deterministic micro-batches of the events
@@ -5814,7 +5814,7 @@ object SparkEntry {
     // Batch REPLAY of the streaming KMV distinct-count monitor: the
     // orders stream splits into three deterministic pmod batches,
     // each batch's sketch unions into the standing k-long state (the
-    // literal kmvDistinctStream foreachBatch body — the d41/q42/q56
+    // literal kmvDistinctStream per-batch step — the d41/q42/q56
     // convention), and every running estimate must equal the one-shot
     // sketch over the rows seen so far: KMV union is associative AND
     // commutative, which is the semantic being pinned. The oracle
@@ -5825,12 +5825,13 @@ object SparkEntry {
         val hashed = table(s, dir, "orders").select(
           Dedup.md5Long60(col("o_custkey").cast("string")).as("h"),
           pmod(col("o_orderkey"), lit(3L)).as("_b"))
-        val state = new java.util.concurrent.atomic.AtomicReference[
-          Seq[Long]](Seq.empty[Long])
-        val rows = (0L until 3L).map { b =>
-          val r = graft.pipeline.Eval.kmvBatchUpdate(
-            hashed.filter(col("_b") === b), col("h"), k, state).head()
-          (b, r.getLong(0), r.getDouble(1))
+        val reports = graft.streaming.Monitor.replay(
+          (0L until 3L).map(b => hashed.filter(col("_b") === b)),
+          Seq.empty[Long])(graft.pipeline.Eval.kmvBatchUpdate(_, col("h"),
+          k, _))
+        val rows = reports.zipWithIndex.map { case (report, b) =>
+          val r = report.head()
+          (b.toLong, r.getLong(0), r.getDouble(1))
         }
         import s.implicits._
         rows.toDF("batch_id", "n_in_sketch", "est_distinct")
@@ -6715,8 +6716,8 @@ object SparkEntry {
     // distribution stochastically dominate the rest of the corpus? —
     // completing the reference-monitor symmetry (KS shape, W1 area,
     // PSI likelihood, quantile location, KMV cardinality, now rank
-    // dominance). The batch operator IS mwDriftStream's foreachBatch
-    // sink body; StatProperties pins its equivalence to q73's
+    // dominance). The batch operator IS mwDriftStream's per-batch
+    // body; StatProperties pins its equivalence to q73's
     // row-level form over the union.
     "q76_mw_reference" -> Q(
       (s, dir) => {
@@ -6865,16 +6866,13 @@ object SparkEntry {
       (s, dir) => {
         val ev = rawEvents(s, dir).filter(col("value").isNotNull &&
           !isnan(col("value")))
-        val state = new java.util.concurrent.atomic.AtomicReference[
-          Map[Long, (Long, BigDecimal)]](Map.empty)
-        var out: DataFrame = null
-        (0 until 3).foreach { b =>
-          out = graft.pipeline.Eval.cusumBinsegUpdate(
-            ev.filter(pmod(col("event_id"), lit(3L)) === b),
+        graft.streaming.Monitor.replay(
+          (0 until 3).map(b =>
+            ev.filter(pmod(col("event_id"), lit(3L)) === b)),
+          Map.empty: graft.pipeline.Eval.BucketSums)(
+          graft.pipeline.Eval.cusumBinsegUpdate(_,
             round(col("value") * 1e6).cast("long"),
-            expr("(ts div 1000) div 3600000000"), state)
-        }
-        out
+            expr("(ts div 1000) div 3600000000"), _)).last
       },
       Some(duckBinsegSql)),
 
@@ -7365,17 +7363,14 @@ object SparkEntry {
       (s, dir) => {
         val ev = rawEvents(s, dir).filter(col("value").isNotNull &&
           !isnan(col("value")))
-        val state = new java.util.concurrent.atomic.AtomicReference[
-          Map[Long, (Long, BigDecimal)]](Map.empty)
-        var out: DataFrame = null
-        (0 until 3).foreach { b =>
-          out = graft.pipeline.Eval.ewmaBatchUpdate(
-            ev.filter(pmod(col("event_id"), lit(3L)) === b),
+        graft.streaming.Monitor.replay(
+          (0 until 3).map(b =>
+            ev.filter(pmod(col("event_id"), lit(3L)) === b)),
+          Map.empty: graft.pipeline.Eval.BucketSums)(
+          graft.pipeline.Eval.ewmaBatchUpdate(_,
             round(col("value") * 1e6).cast("long"),
-            expr("(ts div 1000) div 3600000000"), state,
-            window = 16)
-        }
-        out
+            expr("(ts div 1000) div 3600000000"), _,
+            window = 16)).last
       },
       Some(duckEwmaSql)),
 
@@ -7515,21 +7510,18 @@ object SparkEntry {
       (s, dir) => {
         val ev = rawEvents(s, dir).filter(col("value").isNotNull &&
           !isnan(col("value")))
-        val state = new java.util.concurrent.atomic.AtomicReference[
-          Map[Long, (Long, BigDecimal)]](Map.empty)
-        var out: DataFrame = null
-        (0 until 3).foreach { b =>
-          out = graft.pipeline.Eval.cusumBatchUpdate(
-            ev.filter(pmod(col("event_id"), lit(3L)) === b),
+        graft.streaming.Monitor.replay(
+          (0 until 3).map(b =>
+            ev.filter(pmod(col("event_id"), lit(3L)) === b)),
+          Map.empty: graft.pipeline.Eval.BucketSums)(
+          graft.pipeline.Eval.cusumBatchUpdate(_,
             round(col("value") * 1e6).cast("long"),
-            expr("(ts div 1000) div 3600000000"), state)
-        }
-        out
+            expr("(ts div 1000) div 3600000000"), _)).last
       },
       Some(duckCusumSql)),
 
     // W1 against a PINNED REFERENCE (the q49 convention): the batch
-    // operator w1DriftStream's foreachBatch sink runs per micro-batch,
+    // operator w1DriftStream's per-batch body runs per micro-batch,
     // oracle-checked outside the streaming harness. Completes the
     // drift-monitor symmetry — KS, PSI, exact-quantile, and now W1
     // all have batch + reference-stream forms.
@@ -8759,7 +8751,7 @@ object SparkEntry {
     // Batch REPLAY of incremental cluster maintenance: the verified
     // near-dup pairs split into three deterministic batches and fold
     // into a standing assignment via mergeComponents — the
-    // foreachBatch production shape for a corpus that clusters as it
+    // per-batch production shape for a corpus that clusters as it
     // ingests — and the final assignment must equal the ONE-SHOT
     // transitive closure over all pairs (d23's oracle, verbatim).
     // Order-independence of the fold is the semantic being pinned:
@@ -9235,7 +9227,7 @@ object SparkEntry {
     // the d73/q107 replay discipline, closing the one streaming
     // family member whose replay equivalence was spec-only): d77's
     // train slice splits into 3 deterministic batches, each drives
-    // the SAME batch body the stream's foreachBatch runs
+    // the SAME batch body the stream runs per batch
     // (Dedup.decontaminateBatch over the pinned decontaminateState),
     // and the union of emitted clean ids must equal the one-shot
     // contaminationReport-filtered clean set BIT-FOR-BIT — the
@@ -9270,8 +9262,8 @@ object SparkEntry {
     // Batch REPLAY of the streaming DSIR quality gate (the d79
     // discipline applied to the DSIR artifact — completing the
     // stateless-gate pair): documents split into 3 deterministic
-    // batches, each scored through the SAME batch body the stream's
-    // foreachBatch runs (Curation.dsirGateBatch over the staged d75
+    // batches, each scored through the SAME batch body the stream
+    // runs per batch (Curation.dsirGateBatch over the staged d75
     // ratio table — exact, immutable, stream-independent state), and
     // the union of emitted gate reports must equal the one-shot
     // d76 scoring filtered at the threshold BIT-FOR-BIT. The oracle

@@ -488,19 +488,13 @@ object Curation {
     * and stream-independent, so the gate inherits the strongest
     * replay story in the streaming family (the decontaminateStream
     * argument): re-delivered rows re-score identically under any
-    * failure interleaving — no batchId guard or commit ordering
-    * needed, nothing mutates. */
+    * failure interleaving. */
   def dsirGateStream(docs: DataFrame, idCol: String, textCol: String,
                      ratios: DataFrame, minScoreMicro: Long)
                     (sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        sink(dsirGateBatch(batch.toDF(), idCol, textCol, ratios,
-          minScoreMicro).withColumn("batch_id", lit(batchId)))
-      }
-      .start()
+    graft.streaming.Monitor.each(docs)(
+      dsirGateBatch(_, idCol, textCol, ratios, minScoreMicro))(sink)
 
   /** Sequence packing: assign documents to fixed-token-budget training
     * sequences — the step between chunking (d12) and training order.

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops.Counters
+import graft.streaming.Monitor
 
 /** Deduplication operators, designed for 100 TB:
   *
@@ -810,8 +811,9 @@ object Dedup {
   /** Streaming form of the containment gate: the corpus
     * [[ContainmentIndex]] is built and PINNED once, then every
     * micro-batch of arriving docs probes it and hands the verified
-    * pairs to `sink` — foreachBatch, like [[nearDupGateStream]], but
-    * catching the fragment⊂corpus shape the resemblance gate misses. */
+    * pairs (with `batch_id`) to `sink` — like [[nearDupGateStream]],
+    * but catching the fragment⊂corpus shape the resemblance gate
+    * misses. */
   def containmentGateStream(docs: DataFrame, corpus: DataFrame,
                             idCol: String, textCol: String,
                             threshold: Double, shingleSize: Int = 3)
@@ -819,13 +821,8 @@ object Dedup {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val index = ContainmentIndex.build(corpus, idCol, textCol,
       shingleSize).pinned
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], _: Long) =>
-        sink(prefixContainmentPairsAgainstIndex(batch, index, idCol,
-          textCol, threshold, shingleSize))
-      }
-      .start()
+    Monitor.each(docs)(prefixContainmentPairsAgainstIndex(_, index, idCol,
+      textCol, threshold, shingleSize))(sink)
   }
 
   /** Shared finalization — |union| from per-doc set sizes, the jaccard
@@ -955,22 +952,17 @@ object Dedup {
   /** Streaming form of the gate: the corpus [[ResemblanceIndex]] is
     * built and PINNED once, then each micro-batch of incoming docs
     * probes it with [[lshVerifiedPairsAgainstIndex]] and hands the
-    * verified pairs to `sink` — the foreachBatch production pattern
-    * for incremental corpus admission, now paying the corpus signature
-    * scan once per stream instead of once per micro-batch (the
-    * [[containmentGateStream]] convention). */
+    * verified pairs (with `batch_id`) to `sink` — the production
+    * pattern for incremental corpus admission, paying the corpus
+    * signature scan once per stream instead of once per micro-batch
+    * (the [[containmentGateStream]] convention). */
   def nearDupGateStream(docs: DataFrame, corpus: DataFrame,
                         idCol: String, textCol: String, threshold: Double)
                        (sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val index = ResemblanceIndex.build(corpus, idCol, textCol).pinned
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], _: Long) =>
-        sink(lshVerifiedPairsAgainstIndex(batch, index, idCol, textCol,
-          threshold))
-      }
-      .start()
+    Monitor.each(docs)(lshVerifiedPairsAgainstIndex(_, index, idCol,
+      textCol, threshold))(sink)
   }
 
   /** Streaming EXACT dedup: keep the FIRST ARRIVAL of each content
@@ -998,9 +990,8 @@ object Dedup {
     * filter `bits` rejects (definitely new — the bits literal is
     * captured in the plan), and return that frame alongside the
     * FOLDED filter (bits OR the batch's own filter). Pure with
-    * respect to the standing state: the CALLER commits the folded
-    * filter, and only after its sink has consumed the emitted rows —
-    * folding first would mean a failed sink permanently drops the
+    * respect to the standing state: folding before the sink consumed
+    * the emitted rows would mean a failed sink permanently drops the
     * batch's new keys (the probe would reject them as already-seen on
     * every retry). The fetched filters are m/64 longs — bounded
     * parameters, never data. */
@@ -1031,39 +1022,15 @@ object Dedup {
     * volume and the loss rate is (1−e^(−kn/m))^k.
     *
     * Duplicates WITHIN one batch collapse exactly before the probe
-    * (batch-local distinct on the hash). Because the batch's keys
-    * fold in before the next batch and OR-insert is idempotent, an
-    * at-least-once BATCH replay re-emits nothing after a SUCCESSFUL
-    * delivery — emission is at-most-once per key on the happy path.
-    * The fold commits only AFTER `sink` returns: a sink failure
-    * leaves the standing filter unchanged, so the micro-batch retry
-    * re-probes against the pre-batch state and the batch's new keys
-    * re-emit (at-least-once on the failure path — a partially-
-    * consumed failed attempt can hand an idempotent downstream the
-    * same keys twice) instead of being permanently dropped, which is
-    * what folding-before-delivery did. State lives in the
-    * foreachBatch closure (the kllQuantileStream convention).
-    *
-    * CONTRACT (r13 ADVICE): commit-after-sink delivers its guarantee
-    * only if `sink` synchronously MATERIALIZES the novel frame before
-    * returning (collect/write/count — every sink in this repo does);
-    * a deferred/async sink lets the fold commit before delivery and
-    * reintroduces the permanent-key-loss mode this ordering fixed. */
+    * (batch-local distinct on the hash); across batches emission is
+    * at-most-once per key under the [[Monitor]] commit rule. A failed
+    * sink re-emits the batch's new keys on the retry (at-least-once
+    * on the failure path) instead of dropping them. */
   def bloomGateStream(docs: DataFrame, key: Column, mBits: Int, k: Int)
                      (sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val state = new java.util.concurrent.atomic.AtomicReference[
-      Seq[Long]](new graft.functions.BloomFilter60(mBits, k).zero)
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        val (novel, folded) =
-          bloomGateBatch(batch, key, mBits, k, state.get)
-        sink(novel.withColumn("batch_id", lit(batchId)))
-        state.set(folded) // commit point: delivery succeeded
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    Monitor.fold(docs, new graft.functions.BloomFilter60(mBits, k).zero)(
+      bloomGateBatch(_, key, mBits, k, _))(sink)
 
   /** 64-bit SimHash over tokens: per token take xxhash64, vote ±1 per
     * bit position, the sign of each vote sum becomes the output bit.
@@ -1370,8 +1337,6 @@ object Dedup {
     * re-evaluate identically, so at-least-once delivery degrades to
     * duplicate emission of CLEAN rows only — no key is ever lost and
     * no contaminated row ever leaks, under any failure interleaving.
-    * (Contrast kllGuardedUpdate's batchId guard and the Bloom gate's
-    * commit-after-sink — both exist because their state mutates.)
     * The anti-join is NULL-SAFE on the id, so a contaminated row
     * with a NULL id drops every null-id row in its batch —
     * conservative in the safe direction; supply unique ids for
@@ -1382,13 +1347,7 @@ object Dedup {
       (sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val bg = decontaminateState(bench, benchTextCol, k)
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        sink(decontaminateBatch(batch.toDF(), idCol, textCol, bg, k)
-          .withColumn("batch_id", lit(batchId)))
-      }
-      .start()
+    Monitor.each(docs)(decontaminateBatch(_, idCol, textCol, bg, k))(sink)
   }
 
   /** The decontamination gate's STANDING STATE, pinned once: the

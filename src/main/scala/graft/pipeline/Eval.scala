@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.streaming.Monitor
+
 /** Evaluation & monitoring operators for a training-data pipeline:
   * the measurements run AGAINST the corpus and its quality signals —
   * does a score actually separate good from bad (ROC-AUC), and has a
@@ -416,7 +418,7 @@ object Eval {
     reference.groupBy(value.as("v")).agg(count(lit(1)).as("cb"))
 
   /** KS of one arriving frame against prebuilt reference value counts
-    * — the EXACT computation [[ksDriftStream]]'s foreachBatch sink
+    * — the EXACT computation [[ksDriftStream]]'s per-batch body
     * runs per micro-batch, exposed as a batch operator so the gate is
     * oracle-checkable outside a streaming harness. The value domain
     * is the FULL OUTER join of the two observed value sets (a value
@@ -442,17 +444,11 @@ object Eval {
                     value: Column)(sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val refC = referenceValueCounts(reference, value).localCheckpoint()
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        sink(ksAgainstReference(batch, refC, value)
-          .withColumn("batch_id", lit(batchId)))
-      }
-      .start()
+    Monitor.each(docs)(ksAgainstReference(_, refC, value))(sink)
   }
 
   /** The exact q-quantile of one arriving frame — the computation
-    * [[quantileDriftStream]]'s foreachBatch sink runs per micro-batch,
+    * [[quantileDriftStream]]'s per-batch body runs per micro-batch,
     * exposed as a batch operator so the monitor is oracle-checkable
     * outside a streaming harness (the ksAgainstReference convention).
     * One row (value, n, k) via the narrowing selection operator. */
@@ -467,7 +463,7 @@ object Eval {
     * location analogue of [[ksDriftStream]] (KS flags a shape change;
     * the median/P99 trend says which way and how far the location
     * moved, in the value's own units). The narrowing selection runs
-    * its driver-coordinated rounds INSIDE foreachBatch (a micro-batch
+    * its driver-coordinated rounds INSIDE the per-batch body (a micro-batch
     * is an ordinary DataFrame, so multi-job operators compose), and
     * the sink body IS [[quantileOfBatch]], so batch and stream cannot
     * drift. One (value, n, k, batch_id) row per batch to `sink`. */
@@ -476,13 +472,8 @@ object Eval {
                           threshold: Long = 100000)
                          (sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        sink(quantileOfBatch(batch, value, q, buckets, threshold)
-          .withColumn("batch_id", lit(batchId)))
-      }
-      .start()
+    Monitor.each(docs)(quantileOfBatch(_, value, q, buckets, threshold))(
+      sink)
 
   /** Graded ranking-quality metrics of a retrieval `run` against a
     * relevance judgment set `qrels`: one row (ndcg_micro, mrr_micro,
@@ -618,7 +609,7 @@ object Eval {
     reference.groupBy(bucket.as("bucket")).agg(count(lit(1)).as("cb"))
 
   /** PSI of one arriving frame against a prebuilt reference histogram
-    * — the EXACT computation [[psiDriftStream]]'s foreachBatch sink
+    * — the EXACT computation [[psiDriftStream]]'s per-batch body
     * runs per micro-batch, exposed as a batch operator so the gate's
     * semantics are oracle-checkable outside a streaming harness. The
     * histogram domain is the FULL OUTER join of the two bucket sets
@@ -649,13 +640,7 @@ object Eval {
                      bucket: Column)(sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val refH = referenceHistogram(reference, bucket).localCheckpoint()
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        sink(psiAgainstReference(batch, refH, bucket)
-          .withColumn("batch_id", lit(batchId)))
-      }
-      .start()
+    Monitor.each(docs)(psiAgainstReference(_, refH, bucket))(sink)
   }
 
   /** Cohen's kappa between two BINARY raters — the agreement audit a
@@ -705,29 +690,27 @@ object Eval {
   }
 
   /** One micro-batch of the streaming KMV distinct-count monitor —
-    * the literal foreachBatch body, shared with the q66 batch-replay
+    * the [[kmvDistinctStream]] step, shared with the q66 batch-replay
     * entry (the ksAgainstReference convention): aggregate the batch's
     * KMV sketch (one map-side-combining pass over the batch), union
     * it into the standing sketch (k longs of driver-side state — a
     * bounded parameter, never data; union is associative and
     * commutative so batching order cannot change the final sketch),
-    * and report (n_in_sketch, est_distinct) for the stream so far.
-    * The estimate uses the same IEEE ops as the column form, so the
-    * streaming report is bit-identical to a one-shot q25 sketch over
-    * the same rows. */
+    * and report (n_in_sketch, est_distinct) for the stream so far,
+    * with the merged sketch. The estimate uses the same IEEE ops as
+    * the column form, so the streaming report is bit-identical to a
+    * one-shot q25 sketch over the same rows. */
   def kmvBatchUpdate(batch: DataFrame, hash: Column, k: Int,
-                     state: java.util.concurrent.atomic.AtomicReference[
-                       Seq[Long]]): DataFrame = {
+                     state: Seq[Long]): (DataFrame, Seq[Long]) = {
     val sk = batch.agg(graft.functions.KMinValues.agg(k, hash))
       .head().getSeq[Long](0)
-    val merged = graft.functions.KMinValues
-      .mergeSketches(state.get, sk, k)
-    state.set(merged)
+    val merged = graft.functions.KMinValues.mergeSketches(state, sk, k)
     val est = BigDecimal(graft.functions.KMinValues.estimateOf(merged, k))
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val spark = batch.sparkSession
     import spark.implicits._
-    Seq((merged.length.toLong, est)).toDF("n_in_sketch", "est_distinct")
+    (Seq((merged.length.toLong, est)).toDF("n_in_sketch", "est_distinct"),
+      merged)
   }
 
   /** Streaming approximate-distinct monitor: every micro-batch folds
@@ -735,30 +718,18 @@ object Eval {
     * estimate — "how many distinct users/documents has this stream
     * seen" with O(k) state, the mergeable-sketch streaming pattern
     * (HLL-style monitoring, but KMV so the oracle replays it
-    * hash-exactly). State lives in the foreachBatch closure; at-least-
-    * once batch replays are safe because union is idempotent on
-    * duplicate hashes (set semantics). */
+    * hash-exactly). */
   def kmvDistinctStream(docs: DataFrame, hash: Column, k: Int)
                        (sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val state = new java.util.concurrent.atomic.AtomicReference[
-      Seq[Long]](Seq.empty[Long])
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        sink(kmvBatchUpdate(batch, hash, k, state)
-          .withColumn("batch_id", lit(batchId)))
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    Monitor.fold(docs, Seq.empty[Long])(kmvBatchUpdate(_, hash, k, _))(
+      sink)
 
   /** One micro-batch of [[kllQuantileStream]]: sketch the arriving
     * frame (one bounded-state aggregation), merge into the standing
-    * sketch, report the running quantile estimates. Pure with
-    * respect to the standing state — returns (report, merged) and
-    * the CALLER commits the merged sketch (after its sink succeeds,
-    * the bloomGateBatch discipline). The fetched sketch is O(k)
-    * longs — a bounded parameter, never data. */
+    * sketch, report the running quantile estimates with the merged
+    * sketch. The fetched sketch is O(k) longs — a bounded parameter,
+    * never data. */
   private[graft] def kllBatchUpdate(batch: DataFrame, value: Column,
       k: Int, qsPermille: Seq[Long],
       state: graft.functions.KllState)
@@ -776,37 +747,6 @@ object Eval {
       .toDF("q_permille", "est", "n_seen", "n_retained"), merged)
   }
 
-  /** The guarded foreachBatch body of [[kllQuantileStream]], exposed
-    * for direct spec coverage (a real redelivery cannot be staged
-    * through MemoryStream): skip any batchId at or below the last
-    * APPLIED one — Spark redelivers a failed micro-batch under the
-    * SAME id, so the check turns KLL merge's non-idempotence (an
-    * at-least-once replay would double-count the batch's weight —
-    * merge conserves weight, unlike the Bloom gate's idempotent OR)
-    * into at-most-once application per id. Both commits (sketch +
-    * last-applied id) happen only after `sink` returns: a failed
-    * sink leaves the state untouched and the retry re-applies.
-    *
-    * CONTRACT (r13 ADVICE): that guarantee holds only if `sink`
-    * synchronously MATERIALIZES the report before returning
-    * (collect/write/count — every sink in this repo does). A sink
-    * that merely registers the plan or defers the action lets the
-    * commit land before delivery, silently reintroducing the
-    * permanent-loss failure mode this ordering exists to prevent. */
-  private[graft] def kllGuardedUpdate(batch: DataFrame, value: Column,
-      k: Int, qsPermille: Seq[Long], batchId: Long,
-      state: java.util.concurrent.atomic.AtomicReference[
-        graft.functions.KllState],
-      lastApplied: java.util.concurrent.atomic.AtomicLong)
-      (sink: DataFrame => Unit): Unit =
-    if (batchId > lastApplied.get) {
-      val (report, merged) =
-        kllBatchUpdate(batch, value, k, qsPermille, state.get)
-      sink(report.withColumn("batch_id", lit(batchId)))
-      state.set(merged) // commit point: delivery succeeded
-      lastApplied.set(batchId)
-    }
-
   /** Streaming quantile monitor over a KLL sketch: every micro-batch
     * folds its own sketch into the standing one and reports running
     * quantile estimates — the BOUNDED-state answer to the question
@@ -814,41 +754,22 @@ object Eval {
     * per batch: right for audits, corpus-sized work per batch; this
     * keeps O(k) state and touches each row once — what a 100 TB
     * stream actually holds). Same pairing as [[kmvDistinctStream]]/
-    * q25: the sketch monitors, the exact twin verifies.
-    *
-    * Unlike KMV's set-semantics union, KLL merge is NOT idempotent —
-    * an at-least-once replay of a batch would double-count its
-    * weight — so the foreachBatch body is GUARDED by the
-    * last-applied batchId (one Long of extra state): Spark
-    * redelivers a failed micro-batch under the same id, and
-    * [[kllGuardedUpdate]] skips ids already applied, upgrading the
-    * old "run only under exactly-once delivery" caveat into the same
-    * replay safety the Bloom gate gets from OR-idempotence. State
-    * lives in the foreachBatch closure (the cusum/psi monitor
-    * convention). */
+    * q25: the sketch monitors, the exact twin verifies. KLL merge is
+    * not idempotent (a replayed batch would double-count its weight);
+    * the [[Monitor]] id guard applies each batch at most once. */
   def kllQuantileStream(docs: DataFrame, value: Column, k: Int,
                         qsPermille: Seq[Long])
                        (sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val state = new java.util.concurrent.atomic.AtomicReference[
-      graft.functions.KllState](new graft.functions.KllSketch(k).zero)
-    val lastApplied = new java.util.concurrent.atomic.AtomicLong(-1L)
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        kllGuardedUpdate(batch, value, k, qsPermille, batchId,
-          state, lastApplied)(sink)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    Monitor.fold(docs, new graft.functions.KllSketch(k).zero)(
+      kllBatchUpdate(_, value, k, qsPermille, _))(sink)
 
   /** One micro-batch of [[kllGroupedQuantileStream]]: ONE grouped
     * aggregation sketches the arriving frame per domain, each
     * domain's sketch folds into its standing one, and the report
-    * carries every domain's running quantile. Pure w.r.t. the
-    * standing map (the kllBatchUpdate discipline — the caller
-    * commits). The fetched state is one O(k) sketch per domain —
-    * bounded by mixture cardinality, enforced by `maxGroups`. */
+    * carries every domain's running quantile, with the merged map.
+    * The fetched state is one O(k) sketch per domain — bounded by
+    * mixture cardinality, enforced by `maxGroups`. */
   private[graft] def kllGroupedBatchUpdate(batch: DataFrame,
       group: Column, value: Column, k: Int, qPermille: Long,
       state: Map[String, graft.functions.KllState],
@@ -878,27 +799,6 @@ object Eval {
       merged)
   }
 
-  /** The guarded foreachBatch body of [[kllGroupedQuantileStream]] —
-    * the [[kllGuardedUpdate]] shape over the per-domain state map:
-    * skip redelivered batchIds (KLL merge is not idempotent), commit
-    * map + id only after the sink returns. Same sink contract as
-    * [[kllGuardedUpdate]]: `sink` must materialize synchronously, or
-    * the commit precedes delivery. */
-  private[graft] def kllGroupedGuardedUpdate(batch: DataFrame,
-      group: Column, value: Column, k: Int, qPermille: Long,
-      batchId: Long, maxGroups: Int,
-      state: java.util.concurrent.atomic.AtomicReference[
-        Map[String, graft.functions.KllState]],
-      lastApplied: java.util.concurrent.atomic.AtomicLong)
-      (sink: DataFrame => Unit): Unit =
-    if (batchId > lastApplied.get) {
-      val (report, merged) = kllGroupedBatchUpdate(batch, group,
-        value, k, qPermille, state.get, maxGroups)
-      sink(report.withColumn("batch_id", lit(batchId)))
-      state.set(merged) // commit point: delivery succeeded
-      lastApplied.set(batchId)
-    }
-
   /** PER-DOMAIN streaming quantile monitor — the production
     * drift-watch shape: one bounded KLL sketch per source held
     * forever, each micro-batch folded in through ONE grouped
@@ -906,24 +806,14 @@ object Eval {
     * quantile ([[kllQuantileStream]] is the single-column form; q108
     * is this monitor's one-shot batch twin and q44 the exact grouped
     * twin). State is |domains| × O(k) longs — bounded by mixture
-    * cardinality (`maxGroups` enforces it), not by stream length —
-    * and the batchId guard + commit-after-sink give the same
-    * at-most-once application per id as [[kllQuantileStream]]. */
+    * cardinality (`maxGroups` enforces it), not by stream length. */
   def kllGroupedQuantileStream(docs: DataFrame, group: Column,
       value: Column, k: Int, qPermille: Long, maxGroups: Int = 4096)
       (sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val state = new java.util.concurrent.atomic.AtomicReference[
-      Map[String, graft.functions.KllState]](Map.empty)
-    val lastApplied = new java.util.concurrent.atomic.AtomicLong(-1L)
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        kllGroupedGuardedUpdate(batch, group, value, k, qPermille,
-          batchId, maxGroups, state, lastApplied)(sink)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    Monitor.fold(docs, Map.empty[String, graft.functions.KllState])(
+      kllGroupedBatchUpdate(_, group, value, k, qPermille, _,
+        maxGroups))(sink)
 
   /** Exact 1-D Wasserstein-1 (earth mover's) distance between two
     * segments of an INTEGER-VALUED column — the drift metric that
@@ -950,7 +840,7 @@ object Eval {
 
   /** W1 of one arriving frame against prebuilt reference value counts
     * ([[referenceValueCounts]] over the cast-to-long column) — the
-    * exact computation [[w1DriftStream]]'s foreachBatch sink runs per
+    * exact computation [[w1DriftStream]]'s per-batch body runs per
     * micro-batch, exposed as a batch operator so the monitor is
     * oracle-checkable outside a streaming harness (the
     * ksAgainstReference convention; full-outer value domain, missing
@@ -977,13 +867,7 @@ object Eval {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val refC = referenceValueCounts(reference, value.cast("long"))
       .localCheckpoint()
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        sink(w1AgainstReference(batch, refC, value)
-          .withColumn("batch_id", lit(batchId)))
-      }
-      .start()
+    Monitor.each(docs)(w1AgainstReference(_, refC, value))(sink)
   }
 
   /** The W1 arithmetic over a prebuilt (v, ca, cb) value-count frame —
@@ -1379,13 +1263,7 @@ object Eval {
                     value: Column)(sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val refC = referenceValueCounts(reference, value).localCheckpoint()
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        sink(mwAgainstReference(batch, refC, value)
-          .withColumn("batch_id", lit(batchId)))
-      }
-      .start()
+    Monitor.each(docs)(mwAgainstReference(_, refC, value))(sink)
   }
 
   /** Per-GROUP Mann–Whitney in shared scans — every group's rank
@@ -1557,6 +1435,10 @@ object Eval {
         col("d").cast("double").as("cusum"))
   }
 
+  /** The standing state of the streaming series monitors: per time
+    * bucket, (count, exact integral micro-sum). */
+  type BucketSums = Map[Long, (Long, BigDecimal)]
+
   /** One micro-batch of the streaming CUSUM changepoint monitor (the
     * kmvBatchUpdate convention): collapse the batch to its ≤B-row
     * bucket counts, MERGE them into the standing per-bucket (count,
@@ -1565,39 +1447,27 @@ object Eval {
     * batching order cannot change it — and re-run the shared argmax
     * tail over the standing buckets. The report is therefore
     * bit-identical to a one-shot [[cusumChangepoint]] over the rows
-    * so far (StatProperties pins it on random splits). */
+    * so far (StatProperties pins it on random splits). Returns the
+    * report with the merged state. */
   def cusumBatchUpdate(batch: DataFrame, valueMicro: Column,
-                       bucket: Column,
-                       state: java.util.concurrent.atomic.AtomicReference[
-                         Map[Long, (Long, BigDecimal)]],
-                       maxBuckets: Int = 8192): DataFrame = {
-    cusumFromBuckets(cusumFold(batch, valueMicro, bucket, state,
-      maxBuckets))
+                       bucket: Column, state: BucketSums,
+                       maxBuckets: Int = 8192): (DataFrame, BucketSums) = {
+    val merged = cusumFold(batch, valueMicro, bucket, state, maxBuckets)
+    (cusumFromBuckets(bucketSumsFrame(batch, merged)), merged)
   }
 
-  /** The shared fold of the two streaming changepoint monitors:
-    * collapse the batch, merge into the standing per-bucket state
-    * (guarded by maxBuckets — the house bounded-fetch rule: a
-    * per-second or per-event bucket expression must fail loudly, not
-    * grow driver state silently), and return the state as a bucket
-    * FRAME for whichever argmax tail the caller runs.
-    *
-    * The exact integral sums round-trip as STRINGS, not BigDecimal:
-    * the default encoder pins scala BigDecimal to decimal(38,18),
-    * silently capping integral headroom at ~1e20 where the batch path
-    * has the full decimal(38,0) range — an overflowing bucket would
-    * diverge from the one-shot the fold claims bit-equality with
-    * (round-10 advice). toString of an integral BigDecimal is exact,
-    * and the cast restores decimal(38,0). */
+  /** The shared fold of the streaming series monitors (CUSUM, binseg,
+    * EWMA): collapse the batch and merge it into the standing
+    * per-bucket state, guarded by maxBuckets — the house bounded-fetch
+    * rule: a per-second or per-event bucket expression must fail
+    * loudly, not grow driver state silently. */
   private def cusumFold(batch: DataFrame, valueMicro: Column,
-                        bucket: Column,
-                        state: java.util.concurrent.atomic.AtomicReference[
-                          Map[Long, (Long, BigDecimal)]],
-                        maxBuckets: Int): DataFrame = {
+                        bucket: Column, state: BucketSums,
+                        maxBuckets: Int): BucketSums = {
     val upd = cusumBuckets(batch, valueMicro, bucket).collect()
       .map(r => (r.getLong(0),
         (r.getLong(1), BigDecimal(r.getDecimal(2)))))
-    val merged = upd.foldLeft(state.get()) { case (m, (b, (c, s))) =>
+    val merged = upd.foldLeft(state) { case (m, (b, (c, s))) =>
       val (c0, s0) = m.getOrElse(b, (0L, BigDecimal(0)))
       m.updated(b, (c0 + c, s0 + s))
     }
@@ -1606,7 +1476,21 @@ object Eval {
         s"maxBuckets=$maxBuckets: the bucket expression is too " +
         "fine-grained for driver-side state; coarsen it or raise " +
         "maxBuckets deliberately")
-    state.set(merged)
+    merged
+  }
+
+  /** The folded state as a (bucket, c, s) FRAME for whichever argmax
+    * tail the caller runs — a local relation of ≤maxBuckets rows.
+    *
+    * The exact integral sums round-trip as STRINGS, not BigDecimal:
+    * the default encoder pins scala BigDecimal to decimal(38,18),
+    * silently capping integral headroom at ~1e20 where the batch path
+    * has the full decimal(38,0) range — an overflowing bucket would
+    * diverge from the one-shot the fold claims bit-equality with
+    * (round-10 advice). toString of an integral BigDecimal is exact,
+    * and the cast restores decimal(38,0). */
+  private def bucketSumsFrame(batch: DataFrame,
+                              merged: BucketSums): DataFrame = {
     val spark = batch.sparkSession
     import spark.implicits._
     merged.toSeq
@@ -1624,12 +1508,12 @@ object Eval {
     * relation (≤maxBuckets rows), so the three argmax consumers need
     * no checkpoint. */
   def cusumBinsegUpdate(batch: DataFrame, valueMicro: Column,
-                        bucket: Column,
-                        state: java.util.concurrent.atomic.AtomicReference[
-                          Map[Long, (Long, BigDecimal)]],
-                        maxBuckets: Int = 8192): DataFrame =
-    cusumBinsegFromBuckets(cusumFold(batch, valueMicro, bucket, state,
-      maxBuckets))
+                        bucket: Column, state: BucketSums,
+                        maxBuckets: Int = 8192)
+      : (DataFrame, BucketSums) = {
+    val merged = cusumFold(batch, valueMicro, bucket, state, maxBuckets)
+    (cusumBinsegFromBuckets(bucketSumsFrame(batch, merged)), merged)
+  }
 
   /** Binary-segmentation changepoint localization (Scott & Knott's
     * recursion, one level deep) — the MULTI-shift extension of
@@ -2711,16 +2595,14 @@ object Eval {
     * same rows, because the bucket-mean series is a pure function of
     * the folded (count, sum) state. */
   def ewmaBatchUpdate(batch: DataFrame, valueMicro: Column,
-                      bucket: Column,
-                      state: java.util.concurrent.atomic.AtomicReference[
-                        Map[Long, (Long, BigDecimal)]],
+                      bucket: Column, state: BucketSums,
                       window: Int = 16,
-                      maxBuckets: Int = 8192): DataFrame = {
+                      maxBuckets: Int = 8192): (DataFrame, BucketSums) = {
     require(window >= 1 && window <= 62,
       s"window must be in [1, 62] (got $window)")
-    ewmaFromMeans(
-      meansFromBuckets(cusumFold(batch, valueMicro, bucket, state,
-        maxBuckets)), window)
+    val merged = cusumFold(batch, valueMicro, bucket, state, maxBuckets)
+    (ewmaFromMeans(meansFromBuckets(bucketSumsFrame(batch, merged)),
+      window), merged)
   }
 
   /** The [[ewmaForecast]] body over an already-built (x, m) mean

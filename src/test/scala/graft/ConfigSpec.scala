@@ -93,9 +93,9 @@ class ConfigSpec extends AnyFunSuite {
 
   test("round-trip: advanced-preset write then tolerant read keeps commit analytics") {
     val masked = WritePipeline.applyPreset(producerDf, LoggerConfig.Advanced)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-roundtrip")
-    masked.write.mode("overwrite").json(tmp.toString)
-    val back = graft.io.EventLogReader.readJsonl(spark, tmp.toString)
+    val tmp = Staged.scratch("graft-roundtrip")
+    masked.write.mode("overwrite").json(tmp)
+    val back = graft.io.EventLogReader.readJsonl(spark, tmp)
       .filter(col("event_type") === "text_committed")
     assert(back.count() === 3)
     assert(back.filter(col("selected_candidate_rank") === 2).count() === 1)

@@ -528,80 +528,6 @@ class EvalSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("kllGroupedGuardedUpdate: redelivered batchId is skipped; " +
-    "maxGroups bounds the standing map") {
-    val s = spark
-    import s.implicits._
-    import graft.functions.KllSketch
-    val state = new java.util.concurrent.atomic.AtomicReference[
-      Map[String, graft.functions.KllState]](Map.empty)
-    val lastApplied = new java.util.concurrent.atomic.AtomicLong(-1L)
-    var sinks = 0
-    val b0 = Seq(("a", 1L), ("a", 2L), ("b", 5L)).toDF("src", "v")
-    def apply(id: Long): Unit = Eval.kllGroupedGuardedUpdate(b0,
-      col("src"), col("v"), 64, 500L, id, 4096, state, lastApplied)(
-      _ => sinks += 1)
-    apply(0L)
-    assert(sinks === 1 &&
-      KllSketch.totalWeight(state.get()("a")) === 2L)
-    // at-least-once redelivery: same id, no double-count, no re-emit
-    apply(0L)
-    assert(sinks === 1 &&
-      KllSketch.totalWeight(state.get()("a")) === 2L)
-    apply(1L)
-    assert(sinks === 2 &&
-      KllSketch.totalWeight(state.get()("a")) === 4L)
-    // the cardinality guard: a third domain over a cap of 2 refuses
-    val tiny = new java.util.concurrent.atomic.AtomicReference[
-      Map[String, graft.functions.KllState]](Map.empty)
-    val tinyLast = new java.util.concurrent.atomic.AtomicLong(-1L)
-    intercept[IllegalArgumentException] {
-      Eval.kllGroupedGuardedUpdate(
-        Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("src", "v"),
-        col("src"), col("v"), 64, 500L, 0L, 2, tiny, tinyLast)(_ => ())
-    }
-  }
-
-  test("kllGuardedUpdate: redelivered batchId leaves state and sink " +
-    "untouched; failed sink leaves state unapplied") {
-    val s = spark
-    import s.implicits._
-    import graft.functions.KllSketch
-    val k = 64
-    val state = new java.util.concurrent.atomic.AtomicReference[
-      graft.functions.KllState](new KllSketch(k).zero)
-    val lastApplied = new java.util.concurrent.atomic.AtomicLong(-1L)
-    val sunk = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-    def goodSink(df: org.apache.spark.sql.DataFrame): Unit =
-      sunk ++= df.collect().map(r =>
-        (r.getAs[Long]("batch_id"), r.getAs[Long]("n_seen")))
-    val b0 = (1L to 50L).toDF("v")
-    // a sink failure before the commit point: neither the sketch nor
-    // the last-applied id advance, so the retry (same id) re-applies
-    intercept[RuntimeException] {
-      Eval.kllGuardedUpdate(b0, col("v"), k, Seq(500L), 0L,
-        state, lastApplied)(_ => throw new RuntimeException("sink"))
-    }
-    assert(KllSketch.totalWeight(state.get) === 0L &&
-      lastApplied.get === -1L)
-    Eval.kllGuardedUpdate(b0, col("v"), k, Seq(500L), 0L,
-      state, lastApplied)(goodSink)
-    assert(sunk.toList === List((0L, 50L)) && lastApplied.get === 0L)
-    // an at-least-once REDELIVERY of batch 0 after success: KLL merge
-    // is not idempotent, so without the guard this would double the
-    // weight to 100; the id check skips it — state and sink unchanged
-    Eval.kllGuardedUpdate(b0, col("v"), k, Seq(500L), 0L,
-      state, lastApplied)(goodSink)
-    assert(sunk.toList === List((0L, 50L)),
-      "replayed id must not re-emit")
-    assert(KllSketch.totalWeight(state.get) === 50L,
-      "replayed id must not double-count weight")
-    // the next fresh id still applies
-    Eval.kllGuardedUpdate((51L to 60L).toDF("v"), col("v"), k,
-      Seq(500L), 1L, state, lastApplied)(goodSink)
-    assert(sunk.toList === List((0L, 50L), (1L, 60L)))
-  }
-
   test("KMV sketch union is associative and commutative (the q66 pin)") {
     import graft.functions.KMinValues
     val rnd = new scala.util.Random(88)
@@ -944,6 +870,36 @@ class EvalSpec extends AnyFunSuite {
       empty.isNullAt(4))
   }
 
+  test("mwDriftStream: each batch's row equals mwAgainstReference over " +
+    "that batch, tagged with its batch_id") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sq = s.sqlContext
+    val reference = Seq(1L, 2L, 2L, 3L, 4L, 5L, 5L, 5L).toDF("v")
+    val refC = Eval.referenceValueCounts(reference, col("v"))
+    val batches = Seq(Seq(2L, 3L, 5L, 7L), Seq(8L, 8L, 9L, 1L, 10L))
+    val mem = MemoryStream[Long]
+    val seen = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
+    val q = Eval.mwDriftStream(mem.toDF().toDF("v"), reference,
+        col("v")) { m =>
+      seen ++= m.collect().map(_.toSeq)
+    }
+    try {
+      batches.foreach { b =>
+        mem.addData(b: _*)
+        q.processAllAvailable()
+      }
+      val want = batches.zipWithIndex.map { case (b, id) =>
+        Eval.mwAgainstReference(b.toDF("v"), refC, col("v")).head().toSeq :+
+          id.toLong
+      }
+      assert(seen.toList === want.toList)
+      // the shifted second batch scores above the reference
+      assert(seen(1)(4).asInstanceOf[Double] > 0.0, seen.toString)
+    } finally q.stop()
+  }
+
   test("welchT: golden statistic and degenerate NULL contracts") {
     val s = spark
     import s.implicits._
@@ -1220,16 +1176,13 @@ class EvalSpec extends AnyFunSuite {
     }
     val oneShot = Eval.cusumBinseg(rows.toDF("b", "v"), col("v"),
       col("b")).collect().toSeq
-    val state = new java.util.concurrent.atomic.AtomicReference[
-      Map[Long, (Long, BigDecimal)]](Map.empty)
     val batches = rows.groupBy { case (b, v) =>
       math.abs((b * 31 + v).toInt) % 3 }
-    var out: Seq[org.apache.spark.sql.Row] = Seq.empty
-    (0 until 3).foreach { k =>
-      out = Eval.cusumBinsegUpdate(
-        batches.getOrElse(k, Seq.empty).toDF("b", "v"),
-        col("v"), col("b"), state).collect().toSeq
-    }
+    val out = graft.streaming.Monitor.replay(
+      (0 until 3).map(k => batches.getOrElse(k, Seq.empty).toDF("b", "v")),
+      Map.empty: Eval.BucketSums)(
+      Eval.cusumBinsegUpdate(_, col("v"), col("b"), _))
+      .last.collect().toSeq
     assert(out === oneShot, s"fold\n${out.mkString("\n")}\nvs\n" +
       oneShot.mkString("\n"))
   }
@@ -1237,8 +1190,7 @@ class EvalSpec extends AnyFunSuite {
   test("cusumBatchUpdate: >1e20 integral sums and the maxBuckets guard") {
     val s = spark
     import s.implicits._
-    def freshState = new java.util.concurrent.atomic.AtomicReference[
-      Map[Long, (Long, BigDecimal)]](Map.empty)
+    val freshState: Eval.BucketSums = Map.empty
     // a bucket whose micro-sum (20 × 9e18 = 1.8e20) exceeds the
     // integral headroom of decimal(38,18) — the type the default
     // BigDecimal encoder would pin — so this pins the explicit
@@ -1247,7 +1199,7 @@ class EvalSpec extends AnyFunSuite {
     val big = (Seq.fill(20)(1L -> 9000000000000000000L) ++
       Seq.fill(5)(2L -> 1L)).toDF("b", "v")
     val folded =
-      Eval.cusumBatchUpdate(big, col("v"), col("b"), freshState).head()
+      Eval.cusumBatchUpdate(big, col("v"), col("b"), freshState)._1.head()
     val oneShot = Eval.cusumChangepoint(big, col("v"), col("b")).head()
     assert(folded === oneShot, s"fold $folded vs one-shot $oneShot")
     // bounded-state contract: a bucket expression finer than
@@ -1564,15 +1516,13 @@ class EvalSpec extends AnyFunSuite {
     val df = rows.toDF("b", "v")
     val oneShot = Eval.ewmaForecast(df, col("v"), col("b"),
       window = 3).collect().toSeq
-    val state = new java.util.concurrent.atomic.AtomicReference[
-      Map[Long, (Long, BigDecimal)]](Map.empty)
-    var out: Seq[org.apache.spark.sql.Row] = Seq.empty
-    (0 until 3).foreach { k =>
-      val batch = rows.filter { case (b, v) =>
-        math.abs((b * 31 + v).toInt) % 3 == k }
-      out = Eval.ewmaBatchUpdate(batch.toDF("b", "v"), col("v"),
-        col("b"), state, window = 3).collect().toSeq
-    }
+    val out = graft.streaming.Monitor.replay(
+      (0 until 3).map { k =>
+        rows.filter { case (b, v) =>
+          math.abs((b * 31 + v).toInt) % 3 == k }.toDF("b", "v")
+      }, Map.empty: Eval.BucketSums)(
+      Eval.ewmaBatchUpdate(_, col("v"), col("b"), _, window = 3))
+      .last.collect().toSeq
     assert(out === oneShot, s"fold\n${out.mkString("\n")}\nvs\n" +
       oneShot.mkString("\n"))
   }

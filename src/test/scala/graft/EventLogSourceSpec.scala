@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,7 +10,7 @@ class EventLogSourceSpec extends AnyFunSuite {
   private val Fmt = "graft.sources.EventLogSource"
 
   private def writeLog(lines: Seq[String]): String = {
-    val f = Files.createTempFile("eventlog", ".jsonl")
+    val f = Paths.get(Staged.scratch("eventlog"), "log.jsonl")
     Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
     f.toString
   }
@@ -87,7 +87,7 @@ class EventLogSourceSpec extends AnyFunSuite {
     val s2 = spark
     import s2.implicits._
     import graft.model.LogEvent
-    val dir = Files.createTempDirectory("eventlog_w").toString
+    val dir = Staged.scratch("eventlog_w")
     def events(n: Int, tag: String) = (1 to n).map(i =>
       LogEvent("text_committed", s"$tag$i", Some(s"w$i"), None, None,
         Some(i % 5), None, Some(Seq("a", "b")), None)).toDF()
@@ -115,7 +115,7 @@ class EventLogSourceSpec extends AnyFunSuite {
   }
 
   test("v2 micro-batch stream: incremental byte offsets, no duplicates") {
-    val f = Files.createTempFile("eventlog_stream", ".jsonl")
+    val f = Paths.get(Staged.scratch("eventlog_stream"), "log.jsonl")
     def append(lines: Seq[String]): Unit =
       Files.write(f, (lines.mkString("\n") + "\n").getBytes("UTF-8"),
         java.nio.file.StandardOpenOption.APPEND)
@@ -137,7 +137,7 @@ class EventLogSourceSpec extends AnyFunSuite {
   }
 
   test("maxBytesPerTrigger caps each micro-batch; backlog still drains fully") {
-    val f = Files.createTempFile("eventlog_admission", ".jsonl")
+    val f = Paths.get(Staged.scratch("eventlog_admission"), "log.jsonl")
     val lines = (1 to 20).map(i => commitLine(i, 0))
     Files.write(f, (lines.mkString("\n") + "\n").getBytes("UTF-8"))
     val totalBytes = f.toFile.length()

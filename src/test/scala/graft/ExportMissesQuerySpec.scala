@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
@@ -55,7 +55,7 @@ class ExportMissesQuerySpec extends AnyFunSuite {
   }
 
   test("csv report round-trips through readCsvReport (BOM stripped)") {
-    val tmp = Files.createTempDirectory("graft-csv-rt")
+    val tmp = Paths.get(Staged.scratch("graft-csv-rt"))
     val outFile = tmp.resolve("report.csv").toString
     ReportWriter.writeCsvReport(ExportMissesQuery.run(commitsDf), outFile)
     val back = ReportWriter.readCsvReport(spark, outFile)
@@ -65,7 +65,7 @@ class ExportMissesQuerySpec extends AnyFunSuite {
   }
 
   test("csv report has utf-8 BOM, Chinese header, sorted body") {
-    val tmp: Path = Files.createTempDirectory("graft-csv")
+    val tmp = Paths.get(Staged.scratch("graft-csv"))
     val outFile = tmp.resolve("report.csv").toString
     ReportWriter.writeCsvReport(ExportMissesQuery.run(commitsDf), outFile)
     val bytes = Files.readAllBytes(java.nio.file.Paths.get(outFile))
@@ -81,8 +81,8 @@ class ExportMissesQuerySpec extends AnyFunSuite {
   test("csv quoting doubles embedded quotes (RFC 4180, as pandas and Go)") {
     val s = spark
     import s.implicits._
-    val outFile = Files.createTempDirectory("graft-csv-quote")
-      .resolve("report.csv").toString
+    val outFile = Paths.get(Staged.scratch("graft-csv-quote"), "report.csv")
+      .toString
     ReportWriter.writeCsvReport(Seq(("a\"b", "c,d", "e")).toDF("x", "y", "z"),
       outFile)
     val bytes = Files.readAllBytes(java.nio.file.Paths.get(outFile))
@@ -128,7 +128,7 @@ class ExportMissesQuerySpec extends AnyFunSuite {
       val runJobs = jobs.get()
       val n = report.count()
       ReportWriter.writeCsvReport(report,
-        Files.createTempDirectory("graft-csv-once").resolve("r.csv").toString)
+        Paths.get(Staged.scratch("graft-csv-once"), "r.csv").toString)
       assert(spark.sharedState.cacheManager
         .lookupCachedData(castToImpl(report)).isEmpty)
       (runJobs, n, localBytesRead() - read0,

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 import graft.model.LogEvent
 
@@ -62,9 +62,8 @@ object Fixtures {
   }
 
   def writeJsonl(lines: Seq[String]): Path = {
-    val p = Files.createTempFile("graft-fixture", ".jsonl")
+    val p = Paths.get(Staged.scratch("graft-fixture"), "log.jsonl")
     Files.write(p, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    p.toFile.deleteOnExit()
     p
   }
 

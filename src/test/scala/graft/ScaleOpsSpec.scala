@@ -11,8 +11,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   test("runtime bloom filter prunes the fact side of a selective join") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_bloom").toString
+    val dir = Staged.scratch("graft_bloom")
     // fact large relative to dim, dim selective: the injected bloom
     // filter on the fact scan is how Spark cuts shuffle input at scale
     // without any manual pre-filter
@@ -47,8 +46,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   test("compaction shrinks the file count and preserves every row") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_compact").resolve("t").toString
+    val dir = s"${Staged.scratch("graft_compact")}/t"
     val df = (1L to 2000L).toDF("id")
     df.repartition(24).write.parquet(dir) // 24 deliberately-small files
     val (before, after) = TableLayout.compact(s, dir,
@@ -162,8 +160,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val df = (1L to 300L)
       .map(i => (i, Seq("click", "view", "purchase")((i % 3).toInt)))
       .toDF("id", "event_type")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_events_part").toString
+    val path = Staged.scratch("graft_events_part")
     TableLayout.writePartitioned(df, path, Seq("event_type"))
     val scan = s2.read.parquet(path)
       .filter(col("event_type") === "click")
@@ -180,8 +177,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val rows = (1 to 20000).map(_ =>
       (rnd.nextInt(1000).toDouble, rnd.nextInt(1000).toDouble))
     val df = rows.toDF("x", "y")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_zorder").toString
+    val dir = Staged.scratch("graft_zorder")
     val z = TableLayout.zValue(Seq(
       TableLayout.binColumn(col("x"), 0, 999, 8),
       TableLayout.binColumn(col("y"), 0, 999, 8)), 8)

@@ -99,8 +99,7 @@ class SimilaritySpec extends AnyFunSuite {
     val q = df.filter(col("vec_id") === 0).select(col("embedding"))
       .head().getSeq[Float](0).map(_.toDouble)
     val cids = (1L to 4L)
-    val path = java.nio.file.Files
-      .createTempDirectory("ivf_idx_spec").toString
+    val path = Staged.scratch("ivf_idx_spec")
     Similarity.writeIvfIndex(df, "vec_id", "embedding", path, cids)
     // layout: one directory per cell
     val cellDirs = new java.io.File(path).listFiles()
@@ -154,8 +153,7 @@ class SimilaritySpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
     val base = vecs(0 to 40)
     val cids = (1L to 4L)
-    val path = java.nio.file.Files
-      .createTempDirectory("ivf_idx_append").toString
+    val path = Staged.scratch("ivf_idx_append")
     Similarity.writeIvfIndex(base, "vec_id", "embedding", path, cids)
     // incremental maintenance: same codebook, append-only
     val cents = Similarity.vectorsByIds(base, "vec_id", "embedding", cids)

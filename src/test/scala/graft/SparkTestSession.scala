@@ -6,16 +6,11 @@ import org.apache.spark.sql.SparkSession
   * forked JVM; building a session per suite would dominate test time).
   * Built by [[GraftSession]] like every entry point's session, with
   * its own env: two cores and no `SPARK_MASTER`, so the suite's plans
-  * do not depend on the shell it runs from. Warehouse and derby home
-  * go to a temp dir, so a run leaves no tables in the checkout. */
+  * do not depend on the shell it runs from. */
 object SparkTestSession {
   val Cores = 2
 
-  lazy val spark: SparkSession = {
-    val wh = java.nio.file.Files.createTempDirectory("graft-warehouse")
-    System.setProperty("derby.system.home", wh.toString)
+  lazy val spark: SparkSession =
     GraftSession.builder(Map("SPARK_GRAFT_CPUS" -> Cores.toString))
-      .config("spark.sql.warehouse.dir", wh.toString)
       .getOrCreate()
-  }
 }

@@ -7,6 +7,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
@@ -148,5 +149,18 @@ class StagedSpec extends AnyFunSuite {
         assert(!src.contains(w), s"$f contains $w")
       }
     }
+  }
+
+  test("test sources make temp dirs and files only through " +
+    "Staged.scratch") {
+    Files.walk(Paths.get("src/test/scala")).iterator().asScala
+      .filter(f => f.toString.endsWith(".scala") &&
+        f.getFileName.toString != "StagedSpec.scala")
+      .foreach { f =>
+        val src = Files.readString(f)
+        Seq("createTempDirectory", "createTempFile").foreach { w =>
+          assert(!src.contains(w), s"$f contains $w")
+        }
+      }
   }
 }

@@ -210,15 +210,12 @@ object StatProperties extends Properties("graft.stat") {
       } yield (b, v))), Gen.choose(2, 4)) { (rows, nBatches) =>
       val s = spark
       import s.implicits._
-      val state = new java.util.concurrent.atomic.AtomicReference[
-        Map[Long, (Long, BigDecimal)]](Map.empty)
-      var last: org.apache.spark.sql.Row = null
-      (0 until nBatches).foreach { i =>
-        val batch = rows.zipWithIndex
-          .filter(_._2 % nBatches == i).map(_._1)
-        last = Eval.cusumBatchUpdate(batch.toDF("b", "v"), col("v"),
-          col("b"), state).head()
-      }
+      val last = graft.streaming.Monitor.replay(
+        (0 until nBatches).map { i =>
+          rows.zipWithIndex.filter(_._2 % nBatches == i).map(_._1)
+            .toDF("b", "v")
+        }, Map.empty: Eval.BucketSums)(
+        Eval.cusumBatchUpdate(_, col("v"), col("b"), _)).last.head()
       val oneShot = Eval.cusumChangepoint(rows.toDF("b", "v"),
         col("v"), col("b")).head()
       Prop(last.toSeq == oneShot.toSeq) :|

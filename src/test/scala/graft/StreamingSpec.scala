@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import graft.model.LogEvent
 import graft.streaming.{EventStream, RankRederivation, RawKeyEvent}
@@ -279,17 +279,16 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("S4/T8: file-source stream round trip with corrupt lines") {
-    val inDir = Files.createTempDirectory("graft-stream-in")
-    val outDir = Files.createTempDirectory("graft-stream-out")
-    val ckDir = Files.createTempDirectory("graft-stream-ck")
+    val inDir = Paths.get(Staged.scratch("graft-stream-in"))
+    val outDir = Staged.scratch("graft-stream-out")
+    val ckDir = Staged.scratch("graft-stream-ck")
     Files.write(inDir.resolve("log1.jsonl"),
       Fixtures.mixedLog.mkString("\n").getBytes("UTF-8"))
     val stream = EventStream.readJsonlStream(spark, inDir.toString)
       .filter(col("event_type") === "text_committed")
-    val q = EventStream.writeJsonlStream(stream, outDir.toString,
-      ckDir.toString)
+    val q = EventStream.writeJsonlStream(stream, outDir, ckDir)
     try q.processAllAvailable() finally q.stop()
-    val back = graft.io.EventLogReader.readJsonl(spark, outDir.toString)
+    val back = graft.io.EventLogReader.readJsonl(spark, outDir)
     assert(back.count() === 14)
   }
 
@@ -317,13 +316,13 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("T8 exactly-once: restart from checkpoint neither drops nor duplicates") {
-    val inDir = Files.createTempDirectory("graft-ck-in")
-    val outDir = Files.createTempDirectory("graft-ck-out")
-    val ckDir = Files.createTempDirectory("graft-ck-ck")
+    val inDir = Paths.get(Staged.scratch("graft-ck-in"))
+    val outDir = Staged.scratch("graft-ck-out")
+    val ckDir = Staged.scratch("graft-ck-ck")
     def startQuery() = EventStream.writeJsonlStream(
       EventStream.readJsonlStream(spark, inDir.toString)
         .filter(col("event_type") === "text_committed"),
-      outDir.toString, ckDir.toString)
+      outDir, ckDir)
     Files.write(inDir.resolve("a.jsonl"),
       Fixtures.commitLines.take(7).mkString("\n").getBytes("UTF-8"))
     val q1 = startQuery()
@@ -333,7 +332,7 @@ class StreamingSpec extends AnyFunSuite {
       Fixtures.commitLines.drop(7).mkString("\n").getBytes("UTF-8"))
     val q2 = startQuery()
     try q2.processAllAvailable() finally q2.stop()
-    val back = graft.io.EventLogReader.readJsonl(spark, outDir.toString)
+    val back = graft.io.EventLogReader.readJsonl(spark, outDir)
     assert(back.count() === 14) // all commits, no duplicates
     assert(back.select("timestamp").distinct().count() === 14)
   }
@@ -342,17 +341,16 @@ class StreamingSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val outDir = Files.createTempDirectory("graft-fb-out")
-    val ckDir = Files.createTempDirectory("graft-fb-ck")
+    val outDir = Staged.scratch("graft-fb-out")
+    val ckDir = Staged.scratch("graft-fb-ck")
     val mem = MemoryStream[graft.model.LogEvent]
-    val q = EventStream.writeBatchedParquet(mem.toDF(), outDir.toString,
-      ckDir.toString)
+    val q = EventStream.writeBatchedParquet(mem.toDF(), outDir, ckDir)
     try {
       val (b1, b2) = Fixtures.commitEvents.splitAt(6)
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
     } finally q.stop()
-    val back = spark.read.parquet(outDir.toString)
+    val back = spark.read.parquet(outDir)
     assert(back.count() === 14)
     assert(back.select("batch_id").distinct().count() === 2)
   }
