@@ -21,13 +21,10 @@ object Bench {
     // row through the full plan (no aggregate pushdown, no column
     // pruning of the final projection), uniformly for all entries,
     // and still fires in-plan Observation counters (the observe +
-    // writer pattern). SPARK_GRAFT_BENCH_ACTION=count keeps the old
-    // action available for historical A/Bs; the one-time count-vs-full
-    // delta is recorded in PLANS.md ("r14 bench action change").
-    val benchAction = sys.env.getOrElse("SPARK_GRAFT_BENCH_ACTION", "full")
+    // writer pattern). The one-time count-vs-full delta is recorded in
+    // PLANS.md ("r14 bench action change").
     def exec(df: org.apache.spark.sql.DataFrame): Unit =
-      if (benchAction == "count") { df.count(); () }
-      else df.write.mode("overwrite").format("noop").save()
+      df.write.mode("overwrite").format("noop").save()
     // warm-up: JIT + codegen + parquet footer caches on the smallest SF,
     // so the timed run measures the queries, not JVM warm-up. Warm-up
     // failures are logged (not fatal): a silently-skipped warm-up would

@@ -1693,7 +1693,7 @@ object SparkEntry {
   /** o1/k1: the export-misses report (event_id kept), first 1000. */
   private def missReport(s: SparkSession, dir: String): DataFrame =
     ExportMissesQuery
-      .run(commits(s, dir), window = false, extraCols = Seq("event_id"))
+      .run(commits(s, dir), extraCols = Seq("event_id"))
       .limit(1000)
 
   /** [[missReport]]'s oracle: ONE text, so the CSV round trip (k1)

@@ -101,37 +101,18 @@ object GraphOps {
     * Production runs should therefore set epsMicro to a
     * few micro-units (noise-floor scale, ~1e-6 of a unit rank —
     * far below any ranking decision) rather than 0, and check the
-    * `converged` flag of [[pageRankUntilStats]] instead of trusting
-    * maxIterations. Expected rounds to a target eps:
-    * log(n·1e6/eps)/log(1/damping). */
-  def pageRankUntil(pairs: DataFrame, idACol: String, idBCol: String,
-                    epsMicro: Long = 0L, maxIterations: Int = 50,
-                    damping: Double = 0.85,
-                    checkpointEvery: Int = 5): DataFrame =
-    pageRankUntilStats(pairs, idACol, idBCol, epsMicro, maxIterations,
-      damping, checkpointEvery)._1
-
-  /** [[pageRankUntil]] plus its run stats — (ranks, iterations run,
-    * converged?) — for callers that must DETECT a non-converged run
-    * (the rounding limit cycle under a too-small epsMicro, or
-    * maxIterations hit) instead of silently shipping the last
-    * vector. Per-probe deltas log to stderr under GRAFT_PR_DEBUG=1. */
-  def pageRankUntilStats(pairs: DataFrame, idACol: String,
-                         idBCol: String, epsMicro: Long = 0L,
-                         maxIterations: Int = 50,
-                         damping: Double = 0.85,
-                         checkpointEvery: Int = 5)
-      : (DataFrame, Int, Boolean) = {
-    val r = pageRankUntilRun(pairs, idACol, idBCol, epsMicro,
-      maxIterations, damping, checkpointEvery)
-    (r.ranks, r.iterations, r.converged)
-  }
-
-  /** Full run record of [[pageRankUntilStats]], adding `probes` — the
-    * number of blocking driver convergence checks the run issued, one
-    * per checkpoint round (≈ iterations / checkpointEvery) rather than
-    * one per round. Exposed so the probe-batching contract is
-    * assertable, not just claimed. */
+    * returned `converged` flag instead of trusting maxIterations.
+    * Expected rounds to a target eps:
+    * log(n·1e6/eps)/log(1/damping).
+    *
+    * Returns the full run record — the ranks, the iterations run, the
+    * `converged` flag (so a caller can DETECT a non-converged run: the
+    * rounding limit cycle under a too-small epsMicro, or maxIterations
+    * hit, instead of silently shipping the last vector) and `probes`,
+    * the number of blocking driver convergence checks the run issued,
+    * one per checkpoint round (≈ iterations / checkpointEvery) rather
+    * than one per round, so the probe-batching contract is assertable,
+    * not just claimed. */
   def pageRankUntilRun(pairs: DataFrame, idACol: String,
                        idBCol: String, epsMicro: Long = 0L,
                        maxIterations: Int = 50,
@@ -167,10 +148,6 @@ object GraphOps {
             .as("d"))
           .head()
         converged = delta.isNullAt(0) || delta.getLong(0) <= epsMicro
-        if (sys.env.contains("GRAFT_PR_DEBUG"))
-          System.err.println(s"[pr] it=$it delta=" +
-            (if (delta.isNullAt(0)) "null"
-             else delta.getLong(0).toString))
       }
       ranks = next
     }

@@ -3,7 +3,6 @@ package graft.queries
 import graft.ops.EventOps
 import graft.ops.EventOps._
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The `export-misses` query (`cli.py:317-359`,
@@ -31,29 +30,21 @@ object ExportMissesQuery {
         col("source_first_candidate").as(ColPredicted),
         EventOps.rank.as(ColRank))): _*)
 
-  /** Miss-frequency annotation, two strategies:
-    *
-    *   - `window = true`: `count(*) over (partition by 实际选择)` — the
-    *     literal pandas `transform('count')` shape (`cli.py:347`). Fine
-    *     at moderate scale, but the partition key (committed text) is
-    *     Zipf-skewed at 100 TB: a hyper-frequent word funnels into one
-    *     window partition.
-    *   - `window = false` (default, scale-safe): `groupBy(实际选择).count()`
-    *     + broadcast join back. Partial (map-side) aggregation shrinks
-    *     the shuffle to one row per distinct text per partition, the
-    *     distinct-text table is small, and the join back is broadcast —
-    *     no skewed exchange of the full miss set. This is also exactly
-    *     Go's two-pass map-build/annotate (`analyzer.go:230-237`).
+  /** Miss-frequency annotation: `groupBy(实际选择).count()` + broadcast
+    * join back, not the literal pandas `transform('count')` shape
+    * (`count(*) over (partition by 实际选择)`, `cli.py:347`). The
+    * committed text is Zipf-skewed at 100 TB, so a window would funnel
+    * a hyper-frequent word into one partition. Partial (map-side)
+    * aggregation shrinks the shuffle to one row per distinct text per
+    * partition, the distinct-text table is small, and the join back is
+    * broadcast — no skewed exchange of the full miss set. This is also
+    * exactly Go's two-pass map-build/annotate (`analyzer.go:230-237`).
     */
-  def withFrequency(missRows: DataFrame, window: Boolean = false): DataFrame =
-    if (window)
-      missRows.withColumn(ColFreq,
-        count(lit(1)).over(Window.partitionBy(col(ColActual))))
-    else {
-      val freqs = missRows.groupBy(col(ColActual))
-        .agg(count(lit(1)).as(ColFreq))
-      missRows.join(broadcast(freqs), Seq(ColActual))
-    }
+  def withFrequency(missRows: DataFrame): DataFrame = {
+    val freqs = missRows.groupBy(col(ColActual))
+      .agg(count(lit(1)).as(ColFreq))
+    missRows.join(broadcast(freqs), Seq(ColActual))
+  }
 
   /** Deterministic report sort: (frequency desc, input asc) per
     * `cli.py:348` / `analyzer.go:239-248`, plus explicit tie-break keys —
@@ -67,7 +58,7 @@ object ExportMissesQuery {
 
   /** Full pipeline on a commit-filtered DataFrame. Output columns in the
     * canonical report order (`analyzer.go:202` + pandas' appended
-    * frequency column) regardless of join strategy.
+    * frequency column).
     *
     * The projected miss rows are pinned with a lazy
     * `localCheckpoint(false)`: `run` starts no job, and the first job
@@ -79,10 +70,9 @@ object ExportMissesQuery {
     * plans by file path and would serve the next request over a grown
     * log stale rows. The context cleaner unpersists the pin once the
     * returned frame is garbage-collected. */
-  def run(commits: DataFrame, window: Boolean = false,
-          extraCols: Seq[String] = Nil): DataFrame =
-    sorted(withFrequency(misses(commits, extraCols).localCheckpoint(false),
-      window), tieBreak = extraCols)
+  def run(commits: DataFrame, extraCols: Seq[String] = Nil): DataFrame =
+    sorted(withFrequency(misses(commits, extraCols).localCheckpoint(false)),
+      tieBreak = extraCols)
       .select((extraCols ++
         Seq(ColInput, ColActual, ColPredicted, ColRank, ColFreq)).map(col): _*)
 }

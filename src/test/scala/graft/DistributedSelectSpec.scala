@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import graft.ops.DistributedSelect
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -345,5 +349,15 @@ class DistributedSelectSpec extends AnyFunSuite {
     // bucket 0 (94 rows), buckets 1-2 are empty, the rest go right
     assert(rows(0L) === 94L && rows(1L) === 0L && rows(2L) === 0L &&
       rows(3L) === 6L)
+  }
+
+  test("one descent: the cell walk appears once under src/main") {
+    val hits = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        "while \\(c < buckets".r
+          .findAllMatchIn(Files.readString(p)).map(_ => p.getFileName.toString)
+      }.toSeq
+    assert(hits === Seq("DistributedSelect.scala"))
   }
 }

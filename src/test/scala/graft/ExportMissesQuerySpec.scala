@@ -41,9 +41,16 @@ class ExportMissesQuerySpec extends AnyFunSuite {
   }
 
   test("window and groupBy+broadcast strategies agree") {
-    val a = ExportMissesQuery.run(commitsDf, window = false)
+    import ExportMissesQuery._
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, count, lit}
+    val a = ExportMissesQuery.run(commitsDf)
       .collect().map(_.toSeq).toSet
-    val b = ExportMissesQuery.run(commitsDf, window = true)
+    // the literal pandas transform('count') shape as the reference
+    val b = misses(commitsDf)
+      .withColumn(ColFreq,
+        count(lit(1)).over(Window.partitionBy(col(ColActual))))
+      .select(ColInput, ColActual, ColPredicted, ColRank, ColFreq)
       .collect().map(_.toSeq).toSet
     assert(a === b)
   }

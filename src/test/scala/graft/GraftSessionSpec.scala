@@ -76,4 +76,19 @@ class GraftSessionSpec extends AnyFunSuite {
       }.toSeq
     assert(hits === Seq("GraftSession.scala"))
   }
+
+  test("src/main names only the allowlisted SPARK_*/GRAFT_* environment " +
+    "variables") {
+    val allowed = Set("SPARK_GRAFT_CPUS", "SPARK_MASTER",
+      "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_WARMUP_DIR", "SPARK_GRAFT_ONLY")
+    val named = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        "\\b(?:SPARK|GRAFT)_[A-Z][A-Z0-9_]*".r
+          .findAllIn(Files.readString(p)).map(p.getFileName.toString -> _)
+      }.toSeq
+    assert(named.nonEmpty, "the scan found no names at all")
+    val unknown = named.filterNot { case (_, n) => allowed(n) }
+    assert(unknown.isEmpty, s"knobs outside the allowlist: $unknown")
+  }
 }

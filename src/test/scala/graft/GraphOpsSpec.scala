@@ -152,12 +152,12 @@ class GraphOpsSpec extends AnyFunSuite {
     // near-dup graph in the PLANS.md rehearsal)
     val p = pairs((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L), (4L, 6L),
       (5L, 6L), (3L, 4L))
-    val fixed = GraphOps.pageRankUntil(p, "id_a", "id_b", epsMicro = 0L,
-      maxIterations = 60, checkpointEvery = 4)
+    val fixed = GraphOps.pageRankUntilRun(p, "id_a", "id_b",
+      epsMicro = 0L, maxIterations = 60, checkpointEvery = 4).ranks
     val got = ranks(fixed)
     // a true fixed point: one more exact-integer step changes nothing
-    val again = ranks(GraphOps.pageRankUntil(p, "id_a", "id_b",
-      epsMicro = 0L, maxIterations = 61, checkpointEvery = 4))
+    val again = ranks(GraphOps.pageRankUntilRun(p, "id_a", "id_b",
+      epsMicro = 0L, maxIterations = 61, checkpointEvery = 4).ranks)
     assert(got === again)
     // the bridge endpoints are the centrality winners, mirror-equal;
     // ordering agrees with the oracle-expressible 3-iteration g1 form
@@ -168,8 +168,8 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(order(got) === order(three))
     // an isolated-pair graph converges instantly (both ends pinned at
     // exactly 1e6 every round) instead of looping to maxIterations
-    val iso = ranks(GraphOps.pageRankUntil(pairs((10L, 11L)), "id_a",
-      "id_b", epsMicro = 0L, maxIterations = 50))
+    val iso = ranks(GraphOps.pageRankUntilRun(pairs((10L, 11L)), "id_a",
+      "id_b", epsMicro = 0L, maxIterations = 50).ranks)
     assert(iso === Map(10L -> 1000000L, 11L -> 1000000L))
   }
 
