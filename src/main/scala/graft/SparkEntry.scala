@@ -6235,9 +6235,9 @@ object SparkEntry {
     // drift dashboard: KS sup, W1 integral, MW stochastic dominance,
     // AD tail weight, energy distance, over the same cents split —
     // the q101 shared-scan argument applied to the two-sample
-    // family. Each stat rides its standalone FromCounts body over
-    // the one collapsed value frame (bit-equal by construction,
-    // pinned in spec).
+    // family. Every stat comes from the one two-sample engine its
+    // standalone operator runs over the one collapsed value frame
+    // (bit-equal by construction, pinned in spec).
     "q104_drift_panel" -> Q(
       (s, dir) => graft.pipeline.Eval.driftPanel(
         lineitem(s, dir),

@@ -407,10 +407,13 @@ object DistributedSelect {
     val top = math.max(math.abs(h.lo - m), math.abs(h.hi - m))
     val known = Option.when(!m.isInfinite && !top.isInfinite)(
       Map(NoGroup -> Head(0.0, top, h.wf, 0L, h.wn + h.wp, h.nf)))
-    val mad = narrow(prepare(vals, abs(col("_v") - lit(m))),
+    // the MAD ranks the SURVIVING deviations (an infinite m makes the
+    // same-signed infinities' deviations NaN, which drop) — the
+    // groupedMad rule; with a finite m that is every value
+    val dev = narrow(prepare(vals, abs(col("_v") - lit(m))),
         grouped = false, buckets, threshold, known = known,
-        what = "non-null row count")(_ => Seq(k))
-      .value(k)
+        what = "non-null row count")(n => Seq(rank(0.5, n)))
+    val mad = dev.value(rank(0.5, dev.total))
     table(df, "median", "mad", "n")(Seq((m, mad, med.total)))
   }
 

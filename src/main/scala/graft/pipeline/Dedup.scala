@@ -291,10 +291,10 @@ object Dedup {
   def md5Long60(c: Column): Column =
     conv(substring(md5(c.cast("binary")), 1, 15), 16, 10).cast("long")
 
-  /** 60-bit SimHash over tokens using [[md5Long60]]: same vote-per-bit
-    * construction as [[simhash64Expr]], reproducible cross-engine. The
-    * hashed-token array is let-bound so each token is hashed once, not
-    * once per bit. */
+  /** 60-bit SimHash over tokens using [[md5Long60]]: per token, vote
+    * ±1 per bit position; the sign of each vote sum becomes the output
+    * bit. Reproducible cross-engine. The hashed-token array is
+    * let-bound so each token is hashed once, not once per bit. */
   def simhash60Portable(tokens: Column): Column =
     ExprUtils.let(transform(tokens, t => md5Long60(t))) { hs =>
       ExprUtils.let(
@@ -1031,23 +1031,6 @@ object Dedup {
       : org.apache.spark.sql.streaming.StreamingQuery =
     Monitor.fold(docs, new graft.functions.BloomFilter60(mBits, k).zero)(
       bloomGateBatch(_, key, mBits, k, _))(sink)
-
-  /** 64-bit SimHash over tokens: per token take xxhash64, vote ±1 per
-    * bit position, the sign of each vote sum becomes the output bit.
-    * Per-row map work only — no shuffle. `tokensExpr` must be a SQL
-    * expression yielding array<string>. */
-  def simhash64Expr(tokensExpr: String): Column = expr(
-    s"""aggregate(
-       |  sequence(0, 63),
-       |  cast(0 as bigint),
-       |  (acc, b) -> acc + if(
-       |    aggregate($tokensExpr, cast(0 as bigint),
-       |      (s, t) -> s + if(((xxhash64(t) >> b) & 1) = 1, 1, -1)) > 0,
-       |    shiftleft(cast(1 as bigint), b), cast(0 as bigint))
-       |)""".stripMargin)
-
-  /** Hamming distance between two simhashes. */
-  def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** Embedding-cosine near-dup candidates: deterministic
     * random-hyperplane LSH buckets (shared with [[Similarity]]), pairs

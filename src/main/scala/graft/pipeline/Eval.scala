@@ -212,9 +212,9 @@ object Eval {
     * any engine. Shape at scale: the corpus collapses to its
     * value-distinct frame first (map-side combine); the cumulative
     * window rides THAT bounded frame only (the [[rocAuc]] contract —
-    * quantize continuous values first so the frame stays bounded).
-    * Totals join back on a constant key (attribute-dependent, so
-    * constant folding cannot re-plan a nested-loop join).
+    * quantize continuous values first so the frame stays bounded);
+    * totals are the [[twoSample]] engine's 1-row driver fetch, folded
+    * in as literals.
     *
     * Exactness bound: the scaled numerator 1e6·|…| must fit a long —
     * exact for n_a·n_b ≤ 9.2e12 (two ~3M-row segments). Beyond that,
@@ -224,12 +224,13 @@ object Eval {
     * counts still reported (the rocAuc degenerate contract). */
   def ksMicro(df: DataFrame, value: Column, segment: Column,
               segA: String, segB: String): DataFrame =
-    ksFromCounts(df.filter(segment.isin(segA, segB))
+    twoSample(df.filter(segment.isin(segA, segB))
       .groupBy(value.as("v"))
       .agg(sum(when(segment === segA, 1L).otherwise(0L)).as("ca"),
-        sum(when(segment === segB, 1L).otherwise(0L)).as("cb")))
+        sum(when(segment === segB, 1L).otherwise(0L)).as("cb")),
+      "ksMicro")._1.select(ksCols: _*)
 
-  /** Hard ceiling on the FromCounts family's value frame: the
+  /** Hard ceiling on the two-sample family's value frame: the
     * (v, ca, cb) frame is bounded by VALUE CARDINALITY (the ksMicro
     * contract — quantize continuous columns first). Since the r14
     * celledCums refit the cumulatives are distributed across
@@ -242,22 +243,6 @@ object Eval {
     * rehearsal" measures the celled path at this cap with
     * planted-truth shift distributions. */
   private[graft] val MaxWindowValues: Long = 1L << 22
-
-  /** The guarded constant-join key the FromCounts bodies thread their
-    * totals through: passes 0 below the cap, raises in-plan above it.
-    * It rides the BROADCAST side of the totals join, which
-    * materializes before the probe side's global window sorts — so a
-    * contract-violating cardinality kills the query before the
-    * expensive (and memory-unsafe) work starts, the
-    * exactTopK/RangeJoin in-plan-guard convention. */
-  private[graft] def guardedOneKey(nvals: Column, cap: Long,
-                                   op: String): Column =
-    when(nvals <= cap, lit(0L))
-      .otherwise(raise_error(concat(
-        lit(s"$op: value cardinality "), nvals,
-        lit(s" exceeds $cap — the global value window is bounded by"),
-        lit(" distinct values; quantize the column first (the"),
-        lit(" ksMicro contract)")))).cast("int")
 
   /** DISTRIBUTED cumulative sums over a per-distinct-value frame —
     * the [[midrankDoubled]] cell trick generalized, closing the
@@ -363,49 +348,13 @@ object Eval {
       Seq("_cell", "_next_first")): _*)
   }
 
-  /** The KS arithmetic over a prebuilt (v, ca, cb) value-count frame —
-    * shared by the two-segment batch form and the streaming drift
-    * monitor so the cumulative/quantization semantics cannot drift
-    * (the psiFromCounts discipline). Cumulatives run through the
-    * distributed [[celledCums]] (bit-equal to the former global
-    * window; the MaxWindowValues guard still bounds the frame). */
-  private def ksFromCounts(gIn: DataFrame): DataFrame = {
-    // lazy pin: the celled envelope fetch materializes it in the same
-    // job; the cum pass and totals read the blocks — the lineage (a
-    // corpus scan in the standalone form) still runs once (r15)
-    val g = gIn.localCheckpoint(false)
-    ksFinish(celledCums(g, "v",
-      Seq("cum_a" -> col("ca"), "cum_b" -> col("cb")),
-      withNextV = false), g, "ksFromCounts")
-  }
-
-  /** The KS statistic's scalar tail over columns named (dnum, na,
-    * nb) — ONE definition shared by [[ksFinish]] and [[driftPanel]]'s
-    * fused finish (the single-source arithmetic rule). */
-  private val ksStatExpr = "(1000000 * dnum) div (na * nb)"
-
-  /** The KS finish over a frame already carrying INCLUSIVE cum_a /
-    * cum_b (and the g frame for totals) — shared by the standalone
-    * form and [[driftPanel]]'s single shared cum pass, so the
-    * arithmetic exists once. */
-  private def ksFinish(c: DataFrame, g: DataFrame,
-                       op: String): DataFrame = {
-    val totals = g.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"),
-        count(lit(1)).as("nvals"))
-      .withColumn("_one",
-        guardedOneKey(col("nvals"), MaxWindowValues, op))
-    c.withColumn("_one",
-        pmod(col("cum_a") + col("cum_b"), lit(1L)).cast("int"))
-      .join(broadcast(totals), "_one")
-      .groupBy("na", "nb", "nvals")
-      .agg(max(abs(col("cum_a") * col("nb") - col("cum_b") * col("na")))
-        .as("dnum"))
-      .select(
-        when(col("na") > 0 && col("nb") > 0,
-          expr(ksStatExpr)).as("ks_micro"),
-        col("na").as("n_a"), col("nb").as("n_b"),
-        col("nvals").as("n_values"))
-  }
+  /** The KS face's columns over [[twoSample]]'s frame — the statistic
+    * is ONE definition shared with [[driftPanel]]: D·1e6 floor-divided
+    * by n_a·n_b, NULL when either side is empty. */
+  private def ksStat: Column = when(col("na") > 0 && col("nb") > 0,
+    expr("(1000000 * dnum) div (na * nb)"))
+  private def ksCols: Seq[Column] = Seq(ksStat.as("ks_micro"),
+    col("na").as("n_a"), col("nb").as("n_b"), col("n_values"))
 
   /** The reference side of the KS drift monitor: the pinned-once
     * per-value counts a stream (or nightly batch) scores arrivals
@@ -421,17 +370,24 @@ object Eval {
     * — the EXACT computation [[ksDriftStream]]'s per-batch body
     * runs per micro-batch, exposed as a batch operator so the gate is
     * oracle-checkable outside a streaming harness. The value domain
-    * is the FULL OUTER join of the two observed value sets (a value
-    * seen on either side is a CDF step for both; missing counts are
-    * 0), then the shared [[ksFromCounts]] arithmetic. */
+    * is the FULL OUTER join of the two observed value sets
+    * ([[againstReference]]), then the [[twoSample]] engine. */
   def ksAgainstReference(batch: DataFrame, refCounts: DataFrame,
-                         value: Column): DataFrame = {
-    val bh = batch.groupBy(value.as("v")).agg(count(lit(1)).as("ca"))
-    ksFromCounts(bh.join(refCounts, Seq("v"), "full_outer")
+                         value: Column): DataFrame =
+    twoSample(againstReference(
+        batch.groupBy(value.as("v")).agg(count(lit(1)).as("ca")),
+        refCounts), "ksAgainstReference")._1.select(ksCols: _*)
+
+  /** The (v, ca, cb) frame of arriving (v, ca) counts against
+    * reference (v, cb) counts: the FULL OUTER value domain (a value
+    * seen on either side is a CDF step for both; missing counts are
+    * 0) — shared by every AgainstReference face. */
+  private def againstReference(batchCounts: DataFrame,
+                               refCounts: DataFrame): DataFrame =
+    batchCounts.join(refCounts, Seq("v"), "full_outer")
       .select(col("v"),
         coalesce(col("ca"), lit(0L)).as("ca"),
-        coalesce(col("cb"), lit(0L)).as("cb")))
-  }
+        coalesce(col("cb"), lit(0L)).as("cb"))
 
   /** Streaming KS drift monitor: every micro-batch's `value`
     * distribution is KS-scored against a REFERENCE corpus's pinned
@@ -833,10 +789,11 @@ object Eval {
     * UNITS (not a probability); NULL when either segment is empty. */
   def wasserstein1Micro(df: DataFrame, value: Column, segment: Column,
                         segA: String, segB: String): DataFrame =
-    w1FromCounts(df.filter(segment.isin(segA, segB) && value.isNotNull)
+    twoSample(df.filter(segment.isin(segA, segB) && value.isNotNull)
       .groupBy(value.cast("long").as("v"))
       .agg(sum(when(segment === segA, 1L).otherwise(0L)).as("ca"),
-        sum(when(segment === segB, 1L).otherwise(0L)).as("cb")))
+        sum(when(segment === segB, 1L).otherwise(0L)).as("cb")),
+      "wasserstein1Micro")._1.select(w1Cols: _*)
 
   /** W1 of one arriving frame against prebuilt reference value counts
     * ([[referenceValueCounts]] over the cast-to-long column) — the
@@ -846,15 +803,10 @@ object Eval {
     * ksAgainstReference convention; full-outer value domain, missing
     * counts are 0). */
   def w1AgainstReference(batch: DataFrame, refCounts: DataFrame,
-                         value: Column): DataFrame = {
-    val bh = batch.filter(value.isNotNull)
-      .groupBy(value.cast("long").as("v"))
-      .agg(count(lit(1)).as("ca"))
-    w1FromCounts(bh.join(refCounts, Seq("v"), "full_outer")
-      .select(col("v"),
-        coalesce(col("ca"), lit(0L)).as("ca"),
-        coalesce(col("cb"), lit(0L)).as("cb")))
-  }
+                         value: Column): DataFrame =
+    twoSample(againstReference(batch.filter(value.isNotNull)
+        .groupBy(value.cast("long").as("v")).agg(count(lit(1)).as("ca")),
+        refCounts), "w1AgainstReference")._1.select(w1Cols: _*)
 
   /** Streaming W1 drift monitor: each micro-batch's integer-valued
     * distribution scored by earth mover's distance against a pinned
@@ -870,53 +822,15 @@ object Eval {
     Monitor.each(docs)(w1AgainstReference(_, refC, value))(sink)
   }
 
-  /** The W1 arithmetic over a prebuilt (v, ca, cb) value-count frame —
-    * shared by the two-segment batch form and the reference monitor
-    * (the ksFromCounts discipline). */
-  private def w1FromCounts(gIn: DataFrame): DataFrame = {
-    // lazy pin: the celled envelope fetch materializes it (r15)
-    val g = gIn.localCheckpoint(false)
-    w1Finish(celledCums(g, "v",
-      Seq("cum_a" -> col("ca"), "cum_b" -> col("cb")),
-      withNextV = true), g, "w1FromCounts")
-  }
-
-  /** The W1 statistic's scalar tail over columns named (wnum, na,
-    * nb) — shared by [[w1Finish]] and [[driftPanel]]'s fused finish
-    * (the ksStatExpr discipline). */
-  private val w1StatExpr =
-    "(1000000 * coalesce(wnum, CAST(0 AS DECIMAL(38,0))))" +
-      " div (cast(na as decimal(38,0)) * nb)"
-
-  /** The W1 finish over a frame carrying INCLUSIVE cum_a / cum_b and
-    * next_v — shared by the standalone form and [[driftPanel]]'s
-    * single cum pass (the ksFinish discipline). */
-  private def w1Finish(cIn: DataFrame, g: DataFrame,
-                       op: String): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    val c = cIn.filter(col("next_v").isNotNull)
-    val totals = g.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"),
-        count(lit(1)).as("nvals"))
-      .withColumn("_one",
-        guardedOneKey(col("nvals"), MaxWindowValues, op))
-    // terms grouped on the constant key, then a LEFT join from totals:
-    // a single-support-value input has no intervals (empty terms) and
-    // must report W1 = 0, not an empty frame
-    val terms = c
-      .withColumn("_one",
-        pmod(col("cum_a") + col("cum_b"), lit(1L)).cast("int"))
-      .join(broadcast(totals.select("_one", "na", "nb")), "_one")
-      .groupBy("_one")
-      .agg(sum(dec(abs(col("cum_a") * col("nb") -
-          col("cum_b") * col("na"))) *
-        dec(col("next_v") - col("v"))).as("wnum"))
-    totals.join(terms, Seq("_one"), "left")
-      .select(
-        when(col("na") > 0 && col("nb") > 0,
-          expr(w1StatExpr)).as("w1_micro"),
-        col("na").as("n_a"), col("nb").as("n_b"),
-        col("nvals").as("n_values"))
-  }
+  /** The W1 face's columns over [[twoSample]]'s frame (the ksStat
+    * discipline): the summed interval terms ·1e6 floor-divided by
+    * n_a·n_b — 0 for a single support value (no intervals), NULL when
+    * either side is empty. */
+  private def w1Stat: Column = when(col("na") > 0 && col("nb") > 0,
+    expr("(1000000 * coalesce(wnum, CAST(0 AS DECIMAL(38,0))))" +
+      " div (cast(na as decimal(38,0)) * nb)"))
+  private def w1Cols: Seq[Column] = Seq(w1Stat.as("w1_micro"),
+    col("na").as("n_a"), col("nb").as("n_b"), col("n_values"))
 
   /** DeLong's test (DeLong, DeLong & Clarke-Pearson, Biometrics 1988)
     * comparing the ROC-AUCs of TWO scores over the SAME labeled rows —
@@ -1197,10 +1111,10 @@ object Eval {
     * rank-sum identity U_A = R_A − n_A(n_A+1)/2 over pooled
     * average-tie midranks.
     *
-    * Midranks ride the spearmanRho machinery: one corpus pass
-    * collapses to the distinct-value table with per-group counts,
-    * DOUBLED midranks (always integral) derive from [[midrankDoubled]]
-    * (the spearmanRho machinery, shared) — no global window touches a
+    * One corpus pass collapses to the distinct-value table with
+    * per-group counts; DOUBLED midranks (always integral) derive from
+    * the [[twoSample]] engine's celled inclusive cums,
+    * r2 = 2·(cumΣ − c) + c + 1 — no global window touches a
     * data-sized frame. 2·U_A = Σ(c_A·r2) − n_A(n_A+1)
     * stays integral and is reported as `u2_a` (hash-exact; NULL past
     * ~4.3e9 pooled rows where 2·n_a·n_b outgrows a long — z still
@@ -1212,17 +1126,9 @@ object Eval {
     * NULL/NaN values and NULL group flags drop. Returns one row
     * (n_a, n_b, u2_a, tie_t, z). */
   def mannWhitneyU(df: DataFrame, value: Column, isA: Column,
-                   cells: Int = 1024): DataFrame = {
-    require(cells >= 1, "cells must be >= 1")
-    val data = df.select(value.cast("double").as("v"),
-        isA.cast("boolean").as("a"))
-      .filter(col("v").isNotNull && !isnan(col("v")) &&
-        col("a").isNotNull)
-    mwFromValueCounts(data.groupBy("v").agg(
-      count(lit(1)).as("c"),
-      coalesce(sum(when(col("a"), 1L).otherwise(0L)), lit(0L))
-        .as("ca")), cells)
-  }
+                   cells: Int = 1024): DataFrame =
+    twoSample(splitCounts(df, value.cast("double"), isA,
+        !isnan(col("v"))), "mannWhitneyU", cells)._1.select(mwCols: _*)
 
   /** Mann–Whitney of one arriving frame AGAINST prebuilt reference
     * value counts — the rank-based member of the pinned-reference
@@ -1240,18 +1146,14 @@ object Eval {
     * ksAgainstReference convention). */
   def mwAgainstReference(batch: DataFrame, refCounts: DataFrame,
                          value: Column, cells: Int = 1024): DataFrame = {
-    require(cells >= 1, "cells must be >= 1")
     val bh = batch.select(value.cast("double").as("v"))
       .filter(col("v").isNotNull && !isnan(col("v")))
       .groupBy("v").agg(count(lit(1)).as("ca"))
     val rc = refCounts.select(col("v").cast("double").as("v"),
         col("cb"))
       .filter(col("v").isNotNull && !isnan(col("v")))
-    mwFromValueCounts(bh.join(rc, Seq("v"), "full_outer")
-      .select(col("v"),
-        (coalesce(col("ca"), lit(0L)) + coalesce(col("cb"), lit(0L)))
-          .as("c"),
-        coalesce(col("ca"), lit(0L)).as("ca")), cells)
+    twoSample(againstReference(bh, rc), "mwAgainstReference", cells)
+      ._1.select(mwCols: _*)
   }
 
   /** Streaming rank-based drift monitor: every micro-batch is
@@ -1300,66 +1202,53 @@ object Eval {
     val (lo, hi) =
       if (mmRow.isNullAt(0)) (0.0, 0.0)
       else (mmRow.getDouble(0), mmRow.getDouble(1))
-    mwFinish(midrankDoubled(vals, "v", "c", lo, hi, cells, Seq("g")),
-      Seq("g"))
+    mwFinish(midrankDoubled(vals, "v", "c", lo, hi, cells, Seq("g")))
       .orderBy("group")
   }
 
-  /** The shared tail of [[mannWhitneyU]] / [[mwAgainstReference]]:
-    * the exact statistic from a (v, c, ca) distinct-value frame. */
-  private def mwFromValueCounts(valsIn: DataFrame,
-                                cells: Int): DataFrame = {
-    // lazy pin: the 1-row envelope fetch materializes it; the ranked
-    // aggregation reads the blocks — the lineage (a corpus scan or
-    // the reference merge) still runs once (r15, guide §1.2)
-    val vals = valsIn.localCheckpoint(false)
-    val mmRow = vals.agg(min(col("v")), max(col("v"))).head()
-    val (lo, hi) =
-      if (mmRow.isNullAt(0)) (0.0, 0.0)
-      else (mmRow.getDouble(0), mmRow.getDouble(1))
-    mwFinish(midrankDoubled(vals, "v", "c", lo, hi, cells), Nil)
-  }
-
-  /** The ONE closed-form finish behind every Mann–Whitney face
-    * (global, reference, grouped) — a one-sided edge-case fix here
-    * cannot diverge the forms. Aggregates a (c, ca, r2) ranked frame
-    * (optionally per `groupCols`, reported as `group`) into
-    * (n_a, n_b, u2_a, tie_t, z). Both long reports guard their
-    * decimal→long cast: u2_a can reach 2·n_a·n_b ≈ n²/2 (NULL past
-    * ~4.3e9 pooled rows), and tie_t = Σ(t³−t) outgrows a long as soon
-    * as ONE value carries ≥ ~2.1e6 tied rows — the heavily-tied case
-    * this operator is FOR, so an unguarded cast would be an ANSI
-    * crash on production shapes; z carries the statistic either way
-    * (its intermediates stay decimal). */
-  private def mwFinish(ranked: DataFrame,
-                       groupCols: Seq[String]): DataFrame = {
+  /** The grouped Mann–Whitney finish ([[groupedMannWhitneyU]]):
+    * aggregates a (g, c, ca, r2) ranked frame per group (reported as
+    * `group`) into [[mwReport]]'s columns. */
+  private def mwFinish(ranked: DataFrame): DataFrame = {
     def dec(c: Column): Column = c.cast("decimal(38,0)")
     val z0 = lit(0L).cast("decimal(38,0)")
-    def longOrNull(x: Column): Column =
-      when(x <= lit(Long.MaxValue), x.cast("long"))
-        .otherwise(lit(null).cast("long"))
     val aggs = Seq(
       coalesce(sum(dec(col("c"))), z0).as("n"),
       coalesce(sum(dec(col("ca"))), z0).as("na"),
       coalesce(sum(dec(col("ca")) * dec(col("r2"))), z0).as("ra2"),
       coalesce(sum(dec(col("c")) * dec(col("c")) * dec(col("c")) -
         dec(col("c"))), z0).as("t"))
-    val agged =
-      if (groupCols.isEmpty) ranked.agg(aggs.head, aggs.tail: _*)
-      else ranked.groupBy(groupCols.map(col): _*)
-        .agg(aggs.head, aggs.tail: _*)
-    agged.select(groupCols.map(c => col(c).as("group")) ++ Seq(
-      col("na").cast("long").as("n_a"),
-      (col("n") - col("na")).cast("long").as("n_b"),
-      longOrNull(col("ra2") - col("na") * (col("na") + lit(1L)))
-        .as("u2_a"),
-      longOrNull(col("t")).as("tie_t"),
-      mwZ(col("n"), col("na"), col("ra2"), col("t")).as("z")): _*)
+    ranked.groupBy("g").agg(aggs.head, aggs.tail: _*)
+      .select(col("g").as("group") +:
+        mwReport(col("n"), col("na"), col("ra2"), col("t")): _*)
   }
 
+  /** The ONE (n_a, n_b, u2_a, tie_t, z) report behind every
+    * Mann–Whitney face (global and reference over [[twoSample]]'s
+    * frame, grouped over [[mwFinish]]) from exact-decimal aggregates
+    * (n, na, ra2 = Σ ca·r2, t = Σ(c³−c)) — a one-sided edge-case fix
+    * here cannot diverge the forms. Both long reports guard their
+    * decimal→long cast: u2_a can reach 2·n_a·n_b ≈ n²/2 (NULL past
+    * ~4.3e9 pooled rows), and tie_t = Σ(t³−t) outgrows a long as soon
+    * as ONE value carries ≥ ~2.1e6 tied rows — the heavily-tied case
+    * this operator is FOR, so an unguarded cast would be an ANSI
+    * crash on production shapes; z carries the statistic either way
+    * (its intermediates stay decimal). */
+  private def mwReport(n: Column, na: Column, ra2: Column,
+                       t: Column): Seq[Column] = {
+    def longOrNull(x: Column): Column =
+      when(x <= lit(Long.MaxValue), x.cast("long"))
+        .otherwise(lit(null).cast("long"))
+    Seq(na.cast("long").as("n_a"), (n - na).cast("long").as("n_b"),
+      longOrNull(ra2 - na * (na + lit(1L))).as("u2_a"),
+      longOrNull(t).as("tie_t"), mwZ(n, na, ra2, t).as("z"))
+  }
+  private def mwCols: Seq[Column] =
+    mwReport(col("mw_n"), col("mw_na"), col("mw_ra2"), col("mw_t"))
+
   /** The tie-corrected Mann–Whitney z over aggregated exact-decimal
-    * (n, na, ra2, t) columns — shared by [[mwFinish]] and
-    * [[driftPanel]]'s fused finish (the ksStatExpr discipline). */
+    * (n, na, ra2, t) columns — shared by [[mwReport]] and
+    * [[driftPanel]]. */
   private def mwZ(n: Column, na: Column, ra2: Column,
                   t: Column): Column =
     when(n < 2, lit(null).cast("double")).otherwise(
@@ -2071,56 +1960,14 @@ object Eval {
     * (n_a, n_b, n_values, ad_micro). */
   def andersonDarling2(df: DataFrame, value: Column,
                        isA: Column): DataFrame =
-    adFromCounts(df.select(value.cast("double").as("v"),
-        isA.cast("boolean").as("a"))
-      .filter(col("v").isNotNull && !isnan(col("v")) &&
-        col("a").isNotNull)
-      .groupBy("v").agg(count(lit(1)).as("l"),
-        coalesce(sum(when(col("a"), 1L).otherwise(0L)), lit(0L))
-          .as("la")))
+    twoSample(splitCounts(df, value.cast("double"), isA,
+        !isnan(col("v"))), "andersonDarling2")._1
+      .select(col("na").as("n_a"), col("nb").as("n_b"),
+        col("n_values"), col("ad").as("ad_micro"))
 
-  /** The AD arithmetic over a prebuilt (v, l, la) value-count frame —
-    * shared with [[driftPanel]] (the ksFromCounts discipline). */
-  private def adFromCounts(gIn: DataFrame): DataFrame = {
-    // lazy pin: the totals fetch below materializes the checkpoint in
-    // the same job (one pass over the lineage instead of a separate
-    // materialization job — r15, guide §1.2 job-count)
-    val g = gIn.localCheckpoint(false)
-    // 1-row bounded parameter fetch: totals + distinct-value count +
-    // the value envelope for the celled pass (folded in — r15)
-    val tot = g.agg(coalesce(sum(col("l")), lit(0L)),
-      coalesce(sum(col("la")), lit(0L)), count(lit(1)),
-      min(col("v").cast("double")), max(col("v").cast("double"))).head()
-    val n = tot.getLong(0)
-    val na = tot.getLong(1)
-    val nb = n - na
-    val nVals = tot.getLong(2)
-    val envelope =
-      if (tot.isNullAt(3)) (0.0, 0.0)
-      else (tot.getDouble(3), tot.getDouble(4))
-    // the driver already fetched the cardinality — guard it here,
-    // BEFORE the celled cumulative-sum jobs launch (the ks/w1
-    // guardedOneKey contract, free on this code path)
-    require(nVals <= MaxWindowValues,
-      s"adFromCounts: value cardinality $nVals exceeds " +
-        s"$MaxWindowValues — quantize the column first (the ksMicro " +
-        "contract)")
-    // distributed inclusive cums (celledCums — bit-equal to the
-    // former global window), then the same exclusive-doubled forms
-    val cc = celledCums(g, "v", Seq(
-      "_cl" -> col("l"), "_cla" -> col("la"),
-      "_clb" -> (col("l") - col("la"))), withNextV = false,
-      envelope = Some(envelope))
-    adFinish(cc, g, n, na, nb, nVals)
-  }
-
-  /** The AD finish over a frame carrying INCLUSIVE _cl / _cla / _clb
-    * cums of l / la / (l − la) — shared by the standalone form and
-    * [[driftPanel]]'s single cum pass (the ksFinish discipline). */
-  /** The per-row AD term (micro) over the doubled forms — shared by
-    * [[adFinish]] and [[driftPanel]]'s fused finish (the ksStatExpr
-    * discipline): both sides' tail-weighted squared CDF gaps at one
-    * distinct value, n/na/nb folded in as exact literals. */
+  /** The per-row AD term (micro) over the doubled forms: both sides'
+    * tail-weighted squared CDF gaps at one distinct value, n/na/nb
+    * folded in as exact literals. */
   private def adTermMicro(n: Long, na: Long, nb: Long, l: Column,
                           b2: Column, ma2: Column,
                           mb2: Column): Column = {
@@ -2138,27 +1985,6 @@ object Eval {
     side(ma2, na) + side(mb2, nb)
   }
 
-  private def adFinish(cc: DataFrame, g: DataFrame, n: Long, na: Long,
-                       nb: Long, nVals: Long): DataFrame = {
-    val cum = cc.select(col("l"), col("la"),
-      (col("l") - col("la")).as("lb"),
-      (lit(2L) * (col("_cl") - col("l")) + col("l")).as("b2"),
-      (lit(2L) * (col("_cla") - col("la")) + col("la")).as("ma2"),
-      (lit(2L) * (col("_clb") - (col("l") - col("la"))) +
-        (col("l") - col("la"))).as("mb2"))
-    val out =
-      if (na == 0L || nb == 0L || nVals < 2L)
-        g.agg(count(lit(1))).select(lit(na).as("n_a"),
-          lit(nb).as("n_b"), lit(nVals).as("n_values"),
-          lit(null).cast("long").as("ad_micro"))
-      else
-        cum.agg(coalesce(sum(adTermMicro(n, na, nb, col("l"),
-            col("b2"), col("ma2"), col("mb2"))), lit(0L)).as("ad"))
-          .select(lit(na).as("n_a"), lit(nb).as("n_b"),
-            lit(nVals).as("n_values"), col("ad").as("ad_micro"))
-    out
-  }
-
   /** Energy distance (Székely & Rizzo 2004) between the two segments
     * — the two-sample test with POWER AGAINST ANY alternative
     * (location, scale, shape): E = 2·E|X−Y| − E|X−X'| − E|Y−Y'| ≥ 0,
@@ -2174,39 +2000,12 @@ object Eval {
     * (n_a, n_b, energy_micro). */
   def energyDistance(df: DataFrame, valueMicro: Column,
                      isA: Column): DataFrame =
-    energyFromCounts(df.select(valueMicro.cast("long").as("v"),
-        isA.cast("boolean").as("a"))
-      .filter(col("v").isNotNull && col("a").isNotNull)
-      .groupBy("v").agg(
-        coalesce(sum(when(col("a"), 1L).otherwise(0L)), lit(0L))
-          .as("la"),
-        coalesce(sum(when(!col("a"), 1L).otherwise(0L)), lit(0L))
-          .as("lb")))
+    twoSample(splitCounts(df, valueMicro.cast("long"), isA),
+        "energyDistance")._1
+      .select(col("na").as("n_a"), col("nb").as("n_b"),
+        energyStat.as("energy_micro"))
 
-  /** The energy-distance arithmetic over a prebuilt (v, la, lb)
-    * value-count frame — shared with [[driftPanel]] (the
-    * ksFromCounts discipline). */
-  private def energyFromCounts(gIn: DataFrame): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    // lazy pin: the celled envelope fetch materializes it in the same
-    // job, and the main pass reads the blocks (r15, guide §1.2)
-    val g = gIn.localCheckpoint(false)
-    // prefix counts/sums of STRICTLY smaller values, per side —
-    // inclusive distributed cums (celledCums) minus the row's own
-    // contribution, bit-equal to the former global window
-    energyFinish(celledCums(g, "v", Seq(
-      "_ca" -> col("la"), "_cb" -> col("lb"),
-      "_sa" -> (dec(col("la")) * dec(col("v"))),
-      "_sb" -> (dec(col("lb")) * dec(col("v")))), withNextV = false))
-  }
-
-  /** The energy finish over a frame carrying INCLUSIVE _ca / _cb /
-    * _sa / _sb cums of la / lb / la·v / lb·v — shared by the
-    * standalone form and [[driftPanel]]'s single cum pass (the
-    * ksFinish discipline). */
-  /** One S_UV pairwise-mass term at a distinct value — shared by
-    * [[energyFinish]] and [[driftPanel]]'s fused finish (the
-    * ksStatExpr discipline):
+  /** One S_UV pairwise-mass term at a distinct value:
     * S_UV = Σ_j (v·cntU< − sumU<)·lV_j + (v·cntV< − sumV<)·lU_j. */
   private def energyMassTerm(v: Column, cu: Column, su: Column,
                              lv: Column, cv: Column, sv: Column,
@@ -2216,134 +2015,88 @@ object Eval {
       (dec(v) * dec(cv) - sv) * dec(lu)
   }
 
-  /** The energy-distance scalar tail over aggregated (na, nb, sab,
-    * saa2, sbb2) — shared by [[energyFinish]] and [[driftPanel]]'s
-    * fused finish. */
-  private def energyStat(na: Column, nb: Column, sab: Column,
-                         saa2: Column, sbb2: Column): Column = {
+  /** The energy-distance scalar tail over [[twoSample]]'s aggregated
+    * (na, nb, sab, saa2, sbb2) — saa2/sbb2 count the ordered pairs of
+    * the SAME side twice, which is exactly the ΣΣ over all ordered
+    * pairs E|X−X'| needs (n² pairs, |x−x| = 0 included). */
+  private def energyStat: Column = {
     def dec(c: Column): Column = c.cast("decimal(38,0)")
+    val (na, nb) = (col("na"), col("nb"))
     when(na > 0 && nb > 0,
-      round((dec(lit(2L)) * sab * dec(na) * dec(nb) -
-        saa2 * dec(nb) * dec(nb) -
-        sbb2 * dec(na) * dec(na)).cast("double") /
+      round((dec(lit(2L)) * col("sab") * dec(na) * dec(nb) -
+        col("saa2") * dec(nb) * dec(nb) -
+        col("sbb2") * dec(na) * dec(na)).cast("double") /
         (dec(na) * dec(na) * dec(nb) * dec(nb)).cast("double"), 6))
       .otherwise(lit(null).cast("double"))
   }
 
-  private def energyFinish(cc: DataFrame): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    val z0 = lit(0L).cast("decimal(38,0)")
-    val cum = cc.select(col("v"), col("la"), col("lb"),
-      (col("_ca") - col("la")).as("ca"),
-      (col("_cb") - col("lb")).as("cb"),
-      (col("_sa") - dec(col("la")) * dec(col("v"))).as("sa"),
-      (col("_sb") - dec(col("lb")) * dec(col("v"))).as("sb"))
-    val agg = cum.agg(
-      coalesce(sum(col("la")), lit(0L)).as("na"),
-      coalesce(sum(col("lb")), lit(0L)).as("nb"),
-      coalesce(sum(energyMassTerm(col("v"), col("ca"), col("sa"),
-        col("lb"), col("cb"), col("sb"), col("la"))), z0).as("sab"),
-      coalesce(sum(energyMassTerm(col("v"), col("ca"), col("sa"),
-        col("la"), col("ca"), col("sa"), col("la"))), z0).as("saa2"),
-      coalesce(sum(energyMassTerm(col("v"), col("cb"), col("sb"),
-        col("lb"), col("cb"), col("sb"), col("lb"))), z0).as("sbb2"))
-    // saa2/sbb2 double-count ordered pairs of the SAME side — which
-    // is exactly the ΣΣ over all ordered pairs E|X−X'| needs (the
-    // within-side mass uses n² ordered pairs, |x−x|=0 included)
-    agg.select(col("na").as("n_a"), col("nb").as("n_b"),
-      energyStat(col("na"), col("nb"), col("sab"), col("saa2"),
-        col("sbb2")).as("energy_micro"))
-  }
-
-  /** The WHOLE two-sample family from ONE corpus aggregation — the
-    * drift dashboard a segment comparison actually runs: KS (sup of
-    * the CDF gap), W1 (its integral, in the column's units), the
-    * Mann–Whitney z (stochastic dominance), Anderson–Darling
-    * (tail-weighted), and energy distance (any-alternative) — the
-    * [[seriesPanel]] argument applied to the two-sample family. The
-    * corpus collapses ONCE to the distinct-value per-side count frame
-    * (localCheckpointed — five consumers must not re-aggregate), and
-    * each check rides its existing FromCounts body, so every stat is
-    * bit-equal to its standalone operator given the same inputs (the
-    * panel cannot drift from the individual reports; pinned in spec).
-    *
-    * `valueMicro` must be an integer quantization (W1/energy are
-    * unit-bearing; MW/AD read the same values as doubles, exact
-    * below 2^53). Returns (check, stat) rows ordered by check; NULL
-    * stats carry the operators' degenerate contracts. */
-  def driftPanel(df: DataFrame, valueMicro: Column, isA: Column,
-                 cells: Int = 1024): DataFrame = {
-    require(cells >= 1, "cells must be >= 1")
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
-    val g = df.select(valueMicro.cast("long").as("v"),
-        isA.cast("boolean").as("a"))
-      .filter(col("v").isNotNull && col("a").isNotNull)
+  /** The (v, ca, cb) count frame of an `isA` split: ca/cb count the
+    * rows with the flag true/false at each distinct `v`; rows whose
+    * `v` or flag is NULL, or that fail `keep`, drop. */
+  private def splitCounts(df: DataFrame, v: Column, isA: Column,
+                          keep: Column = lit(true)): DataFrame =
+    df.select(v.as("v"), isA.cast("boolean").as("a"))
+      .filter(col("v").isNotNull && keep && col("a").isNotNull)
       .groupBy("v").agg(
         coalesce(sum(when(col("a"), 1L).otherwise(0L)), lit(0L))
           .as("ca"),
         coalesce(sum(when(!col("a"), 1L).otherwise(0L)), lit(0L))
           .as("cb"))
-      // lazy pin: the totals fetch below materializes it (r15)
-      .localCheckpoint(false)
-    // ONE shared distributed cum pass feeds ks, w1, ad AND energy
-    // (their finishes read disjoint projections of the same
-    // inclusive cums — Σl = Σca+Σcb, the per-side value-weighted
-    // sums ride as decimal columns), pinned once; mw keeps its own
-    // midrankDoubled machinery (already celled). Before the r14
-    // celledCums refit each body ran its own single-partition global
-    // window over the value frame — 4 sorts of up to MaxWindowValues
-    // rows through one task; now it is one celled pass + four cheap
-    // finishes, and the per-stat arithmetic still lives in exactly
-    // one place (the FromCounts/Finish split — panel ≡ standalone is
-    // pinned in spec).
-    //
-    // ad's bounded parameters (the adFromCounts driver fetch, off
-    // the pinned g) — fetched BEFORE the celled pass so the
-    // MaxWindowValues contract fails EARLY, not after the eager cum
-    // machinery has ground through a contract-violating frame (r14
-    // review: the panel had the fetch after the checkpointed cums)
+
+  /** The ONE two-sample engine: every KS, W1, Mann–Whitney,
+    * Anderson–Darling and energy-distance face — and [[driftPanel]],
+    * which reports all five — is its own input projection to a
+    * (v, ca, cb) per-distinct-value count frame (side A / side B
+    * multiplicities), this call, and a select of its own columns from
+    * the returned 1-row frame. Steps, each once:
+    *   - a lazy pin of the count frame (the totals fetch materializes
+    *     it; the celled pass reads the blocks, so the lineage — a
+    *     corpus scan or a reference merge — runs once);
+    *   - a 1-row driver fetch of n, na, the distinct-value count and
+    *     the value envelope;
+    *   - the MaxWindowValues guard on that fetched cardinality, an
+    *     IllegalArgumentException BEFORE any celled job launches;
+    *   - one [[celledCums]] pass (inclusive cums of ca, cb and the
+    *     per-side value-weighted sums, plus next_v);
+    *   - one fused aggregation: every statistic's reduction is an
+    *     order-free max/sum over the SAME cum frame, each built by its
+    *     shared term builder.
+    * A face selects only its own aggregates; Catalyst's column pruning
+    * drops the cums and sums nothing reads (a ksMicro plan carries no
+    * AD or energy sums), so the engine has no per-statistic branch.
+    * Degenerate rule for every face: one row, counts reported (0 on
+    * empty input), each statistic NULL where it is undefined (an empty
+    * side; AD also on < 2 distinct values; MW's z also on n < 2 or
+    * σ = 0). Returns the frame (dnum, wnum, mw_n, mw_na, mw_ra2,
+    * mw_t, sab, saa2, sbb2, ad, na, nb, n_values) with the fetched n
+    * and distinct-value count. */
+  private def twoSample(counts: DataFrame, op: String,
+                        cells: Int = 1024): (DataFrame, Long, Long) = {
+    require(cells >= 1, "cells must be >= 1")
+    def dec(c: Column): Column = c.cast("decimal(38,0)")
+    val g = counts.localCheckpoint(false)
     val tot = g.agg(coalesce(sum(col("ca") + col("cb")), lit(0L)),
       coalesce(sum(col("ca")), lit(0L)), count(lit(1)),
       min(col("v").cast("double")), max(col("v").cast("double"))).head()
     val (n, na, nVals) = (tot.getLong(0), tot.getLong(1),
       tot.getLong(2))
-    // the value envelope folds into the same 1-row fetch (r15): the
-    // celled pass no longer runs its own min/max job
     val envelope =
       if (tot.isNullAt(3)) (0.0, 0.0)
       else (tot.getDouble(3), tot.getDouble(4))
     require(nVals <= MaxWindowValues,
-      s"driftPanel: value cardinality $nVals exceeds " +
+      s"$op: value cardinality $nVals exceeds " +
         s"$MaxWindowValues — quantize the column first (the ksMicro " +
         "contract)")
-    // driver-loop counter (the q85 convention): the distinct-value
-    // cardinality is the panel's cost driver — rows flat but time up
-    // adjudicates as box/plan from the artifact alone
-    graft.ops.Counters.note("drift_panel", "stage",
-      Map("values" -> nVals, "rows" -> n))
     val nb = n - na
     val cc = celledCums(g, "v", Seq(
         "cum_a" -> col("ca"), "cum_b" -> col("cb"),
         "_sa" -> (dec(col("ca")) * dec(col("v"))),
         "_sb" -> (dec(col("cb")) * dec(col("v")))),
       withNextV = true, cells = cells, envelope = Some(envelope))
-    // ONE fused finish aggregation (r14, guide §1.2/§2.4): every
-    // stat's reduction is an order-free max/sum over the SAME cum
-    // frame, so the five finish jobs (plus mw's second celled
-    // midrank pass — its doubled midrank r2 = 2·(cumΣ − c) + c + 1
-    // derives from the inclusive cums already on cc) collapse into
-    // one wide aggregation, and cc itself no longer needs a
-    // localCheckpoint: the celled pass has exactly one consumer.
-    // Totals (n, na, nb, nVals) were fetched driver-side above, so
-    // they fold in as exact literals — the same longs the standalone
-    // finishes thread through their broadcast totals join. Each
-    // per-row term and each scalar tail is the SHARED builder its
-    // standalone finish uses (ksStatExpr / w1StatExpr / mwZ /
-    // adTermMicro / energyMassTerm / energyStat), so the panel still
-    // cannot drift from the individual operators (pinned in spec).
-    // Measured on q104 (sf0.1, 583k distinct values): 6 jobs over
-    // the value frame + 2 checkpoints + a second celled pass → 1
-    // job + 1 checkpoint (g).
+    // totals (n, na, nb) fold in as exact literals; MW's doubled
+    // midrank r2 = 2·(cumΣ − c) + c + 1 and AD's doubled midpoint
+    // forms derive from the same inclusive cums, energy's
+    // strictly-smaller prefixes by subtracting the row's own share
     val z0 = lit(0L).cast("decimal(38,0)")
     val c = col("ca") + col("cb")
     val cumC = col("cum_a") + col("cum_b")
@@ -2351,18 +2104,16 @@ object Eval {
     val wide = cc.select(
       col("v"), col("ca"), col("cb"), col("next_v"),
       c.as("_c"), gap.as("_gap"),
-      // mw's doubled midrank over the pooled counts
       (lit(2L) * (cumC - c) + c + lit(1L)).as("_r2"),
-      // ad's doubled forms (the adFinish derivations over the cums)
       (lit(2L) * (cumC - c) + c).as("_b2"),
       (lit(2L) * (col("cum_a") - col("ca")) + col("ca")).as("_ma2"),
       (lit(2L) * (col("cum_b") - col("cb")) + col("cb")).as("_mb2"),
-      // energy's strictly-smaller prefixes (the energyFinish
-      // exclusive-ization of the inclusive cums)
       (col("cum_a") - col("ca")).as("_eca"),
       (col("cum_b") - col("cb")).as("_ecb"),
       (col("_sa") - dec(col("ca")) * dec(col("v"))).as("_esa"),
       (col("_sb") - dec(col("cb")) * dec(col("v"))).as("_esb"))
+    // AD's denominator is 0 on an empty side or one distinct value:
+    // the term is not built there and ad is NULL
     val degAd = na == 0L || nb == 0L || nVals < 2L
     val aggCols = Seq(
       max(col("_gap")).as("dnum"),
@@ -2386,24 +2137,50 @@ object Eval {
        else Seq(coalesce(sum(adTermMicro(n, na, nb, col("_c"),
          col("_b2"), col("_ma2"), col("_mb2"))), lit(0L)).as("ad")))
     val f = wide.agg(aggCols.head, aggCols.tail: _*)
+    ((if (degAd) f.withColumn("ad", lit(null).cast("long")) else f)
       .withColumn("na", lit(na)).withColumn("nb", lit(nb))
-    val adStat =
-      if (degAd) lit(null).cast("double")
-      else col("ad").cast("double")
+      .withColumn("n_values", lit(nVals)), n, nVals)
+  }
+
+  /** The WHOLE two-sample family from ONE corpus aggregation — the
+    * drift dashboard a segment comparison actually runs: KS (sup of
+    * the CDF gap), W1 (its integral, in the column's units), the
+    * Mann–Whitney z (stochastic dominance), Anderson–Darling
+    * (tail-weighted), and energy distance (any-alternative) — the
+    * [[seriesPanel]] argument applied to the two-sample family. The
+    * corpus collapses ONCE to the distinct-value per-side count frame
+    * and the [[twoSample]] engine every standalone face runs computes
+    * all five from one celled pass and one aggregation, so each stat
+    * is bit-equal to its standalone operator given the same inputs
+    * (pinned in spec). Measured on q104 (sf0.1, 583k distinct values)
+    * when the five finishes were fused: 6 jobs over the value frame +
+    * 2 checkpoints + a second celled pass → 1 job + 1 checkpoint.
+    *
+    * `valueMicro` must be an integer quantization (W1/energy are
+    * unit-bearing; MW/AD read the same values as doubles, exact
+    * below 2^53). Returns (check, stat) rows ordered by check; NULL
+    * stats carry the operators' degenerate contracts. */
+  def driftPanel(df: DataFrame, valueMicro: Column, isA: Column,
+                 cells: Int = 1024): DataFrame = {
+    val (f, n, nVals) = twoSample(
+      splitCounts(df, valueMicro.cast("long"), isA), "driftPanel", cells)
+    // driver-loop counter (the q85 convention): the distinct-value
+    // cardinality is the panel's cost driver — rows flat but time up
+    // adjudicates as box/plan from the artifact alone
+    graft.ops.Counters.note("drift_panel", "stage",
+      Map("values" -> nVals, "rows" -> n))
     val rows = array(
-      struct(lit("ad_micro").as("check"), adStat.as("stat")),
+      struct(lit("ad_micro").as("check"),
+        col("ad").cast("double").as("stat")),
       struct(lit("energy_micro").as("check"),
-        energyStat(col("na"), col("nb"), col("sab"), col("saa2"),
-          col("sbb2")).cast("double").as("stat")),
+        energyStat.cast("double").as("stat")),
       struct(lit("ks_micro").as("check"),
-        when(col("na") > 0 && col("nb") > 0, expr(ksStatExpr))
-          .cast("double").as("stat")),
+        ksStat.cast("double").as("stat")),
       struct(lit("mw_z").as("check"),
         mwZ(col("mw_n"), col("mw_na"), col("mw_ra2"), col("mw_t"))
           .cast("double").as("stat")),
       struct(lit("w1_micro").as("check"),
-        when(col("na") > 0 && col("nb") > 0, expr(w1StatExpr))
-          .cast("double").as("stat")))
+        w1Stat.cast("double").as("stat")))
     f.select(explode(rows).as("_p"))
       .select(col("_p.check").as("check"), col("_p.stat").as("stat"))
       .orderBy("check")

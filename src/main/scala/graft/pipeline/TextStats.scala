@@ -487,7 +487,7 @@ object TextStats {
       .select(col(idCol).as("_id"), tokenCount(col(textCol)).as("x"))
       // ATTRIBUTE-DEPENDENT constant key (always 0): a lit(0) key
       // folds the bucketedRank stats equi-join to `true` and Catalyst
-      // plans the banned BroadcastNestedLoopJoin (the ksMicro `_one`
+      // plans the banned BroadcastNestedLoopJoin (the prAuc `_one`
       // rule; caught by PlanDisciplineSpec's whole-catalog sweep)
       .withColumn("_g", pmod(col("x"), lit(1L)))
     val ranked = graft.ops.DistributedRank.bucketedRank(

@@ -49,4 +49,10 @@ object GraftBridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
       .registerFunction(ident, info, builder)
+
+  /** Block until every event posted so far reached its listeners
+    * (`listenerBus` is `private[spark]`) — read a listener's counts
+    * only after this. */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -72,22 +72,6 @@ class DedupSpec extends AnyFunSuite {
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L)) // disjoint not paired
   }
 
-  test("simhash: identical texts hash equal; near-dups closer than disjoint") {
-    val s = spark
-    import s.implicits._
-    val base = (1 to 40).map(i => s"tok$i").mkString(" ")
-    val nearDup = base.replace("tok20", "changed")
-    val disjoint = (1 to 40).map(i => s"zz$i").mkString(" ")
-    val df = Seq((1L, base), (2L, base), (3L, nearDup), (4L, disjoint))
-      .toDF("doc_id", "text")
-      .select(col("doc_id"), Dedup.simhash64Expr("split(text, ' ')").as("h"))
-    val h = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(h(1L) === h(2L))
-    def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
-    assert(ham(h(1L), h(3L)) < ham(h(1L), h(4L)))
-    assert(ham(h(1L), h(3L)) <= 8)
-  }
-
   test("embedding near-dup: planted duplicate found with cosine 1, bucket-local") {
     val s = spark
     import s.implicits._

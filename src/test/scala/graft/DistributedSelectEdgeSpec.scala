@@ -93,9 +93,9 @@ class DistributedSelectEdgeSpec extends AnyFunSuite {
     assert(rows(equiDepthHistogram(df, "v", 2)) ===
       Seq(Seq(0L, null, Ninf, 2L), Seq(1L, Ninf, null, 1L)))
     // the median is -Inf, so |x − m| is NaN (excluded) for the -Inf
-    // rows: madFrame's rank 2 outruns the one deviation left, while
-    // groupedMad re-ranks the deviations by their own weight (3)
-    intercept[IllegalArgumentException](madFrame(df, "v"))
+    // rows: both operators rank the deviations that survive (one row
+    // for madFrame, weight 3 for groupedMad) and answer +Inf
+    assert(rows(madFrame(df, "v")) === Seq(Seq(Ninf, Pinf, 3L)))
     assert(rows(groupedMad(df, "g", "v", "w")) ===
       Seq(Seq("a", Ninf, Pinf, 6L)))
     // an infinite clamp has no micro-unit mean

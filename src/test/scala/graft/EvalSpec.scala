@@ -476,21 +476,69 @@ class EvalSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("guardedOneKey: the FromCounts cardinality guard passes " +
-    "below the cap and raises in-plan above it") {
+  test("two-sample cap: ksMicro past MaxWindowValues raises at " +
+    "construction, before any celled job runs") {
     val s = spark
-    import s.implicits._
-    val ok = Seq(3L).toDF("nvals")
-      .select(Eval.guardedOneKey(col("nvals"), 5L, "t").as("k"))
-      .head().getInt(0)
-    assert(ok === 0)
-    val ex = intercept[Exception] {
-      Seq(9L).toDF("nvals")
-        .select(Eval.guardedOneKey(col("nvals"), 5L, "t").as("k"))
-        .collect()
+    val group = "two-sample-cap"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
     }
-    assert(Option(ex.getMessage).exists(_.contains("cardinality")),
-      ex.toString)
+    // jobs one construction starts: the one totals fetch, nothing after
+    def constructionJobs(rows: Long)(build: org.apache.spark.sql.DataFrame
+        => Any): Int = {
+      val df = s.range(rows)
+        .withColumn("g", when(col("id") % 2 === 0, "a").otherwise("b"))
+      org.apache.spark.sql.GraftBridge.drainListeners(s)
+      val before = jobs.get
+      s.sparkContext.setJobGroup(group, group)
+      try build(df) finally s.sparkContext.clearJobGroup()
+      org.apache.spark.sql.GraftBridge.drainListeners(s)
+      jobs.get - before
+    }
+    s.sparkContext.addSparkListener(listener)
+    try {
+      val small = constructionJobs(10L) { df =>
+        Eval.ksMicro(df, col("id"), col("g"), "a", "b") }
+      val over = Eval.MaxWindowValues + 1
+      var ex: IllegalArgumentException = null
+      val capped = constructionJobs(over) { df =>
+        ex = intercept[IllegalArgumentException] {
+          Eval.ksMicro(df, col("id"), col("g"), "a", "b") } }
+      assert(ex.getMessage.contains(s"ksMicro: value cardinality $over"),
+        ex.getMessage)
+      assert(small >= 1 && capped === small,
+        s"jobs at construction: $capped over the cap, $small below it")
+    } finally s.sparkContext.removeSparkListener(listener)
+  }
+
+  test("one two-sample engine: no per-statistic pipeline, one cap, " +
+    "celledCums only behind the engine and the AUC operators") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val eval = Files.readString(
+      Paths.get("src/main/scala/graft/pipeline/Eval.scala"))
+    val gone = Seq("ksFromCounts", "ksFinish", "w1FromCounts",
+      "w1Finish", "mwFromValueCounts", "adFromCounts", "adFinish",
+      "energyFromCounts", "energyFinish", "guardedOneKey")
+    gone.foreach(n => assert(
+      s"(def|val)\\s+$n\\b".r.findFirstIn(eval).isEmpty, s"$n defined"))
+    val caps = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .map(p => "require\\(nVals <= MaxWindowValues".r
+        .findAllIn(Files.readString(p)).size).sum
+    assert(caps === 1, "the two-sample cap require")
+    // the enclosing member def of every celledCums call
+    val defs = "(?m)^  (?:private(?:\\[\\w+\\])? )?def (\\w+)".r
+      .findAllMatchIn(eval).map(m => (m.start, m.group(1))).toSeq
+    val callers = "celledCums\\(".r.findAllMatchIn(eval)
+      .map(m => defs.takeWhile(_._1 < m.start).last._2).toSet - "celledCums"
+    assert(callers ===
+      Set("twoSample", "rocAuc", "prAuc", "delongAucCompare"))
   }
 
   test("kllGroupedQuantileStream: one bounded sketch per domain, " +
