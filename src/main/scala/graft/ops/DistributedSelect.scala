@@ -398,15 +398,8 @@ object DistributedSelect {
     }
     val k = rank(0.5, med.total)
     val m = med.value(k)
-    // the deviations' head without a scan: |x − m| is monotone on each
-    // side of m, so the largest finite deviation sits at the finite min
-    // or max, 0 bounds the smallest (a range need only contain its
-    // values) and infinite values deviate by +∞ — unless m is infinite
-    // (NaN deviations) or a deviation overflows to +∞
-    val h = med.heads(NoGroup)
-    val top = math.max(math.abs(h.lo - m), math.abs(h.hi - m))
-    val known = Option.when(!m.isInfinite && !top.isInfinite)(
-      Map(NoGroup -> Head(0.0, top, h.wf, 0L, h.wn + h.wp, h.nf)))
+    val known = deviationHead(med.heads(NoGroup), m)
+      .map(h => Map(NoGroup -> h))
     // the MAD ranks the SURVIVING deviations (an infinite m makes the
     // same-signed infinities' deviations NaN, which drop) — the
     // groupedMad rule; with a finite m that is every value
@@ -415,6 +408,18 @@ object DistributedSelect {
         what = "non-null row count")(n => Seq(rank(0.5, n)))
     val mad = dev.value(rank(0.5, dev.total))
     table(df, "median", "mad", "n")(Seq((m, mad, med.total)))
+  }
+
+  /** The head of the deviations |x − m| without a scan: |x − m| is
+    * monotone on each side of m, so the largest finite deviation sits
+    * at the finite min or max, 0 bounds the smallest (a range need only
+    * contain its values) and infinite values deviate by +∞. None when
+    * m is infinite (NaN deviations drop) or a deviation overflows to
+    * +∞ — the head pass answers then. */
+  private def deviationHead(h: Head, m: Double): Option[Head] = {
+    val top = math.max(math.abs(h.lo - m), math.abs(h.hi - m))
+    Option.when(!m.isInfinite && !top.isInfinite)(
+      Head(0.0, top, h.wf, 0L, h.wn + h.wp, h.nf))
   }
 
   /** Exact per-group median absolute deviation — [[madFrame]] for
@@ -440,8 +445,13 @@ object DistributedSelect {
       g -> med.values((g, rank(0.5, h.total))) }
     val devs = vals.join(broadcast(table(df, "_mg", "_m")(ms.toSeq)),
       col("_g") === col("_mg"))
+    // every group's deviation head derived, or the head pass for all
+    val derived = med.heads.toSeq.map { case (g, h) =>
+      deviationHead(h, ms(g)).map(g -> _) }
     val mad = narrow(prepare(devs, abs(col("_v") - col("_m")), col("_g"),
-      col("_w")), grouped = true, buckets, threshold, maxGroups)(half)
+        col("_w")), grouped = true, buckets, threshold, maxGroups,
+      known = Option.when(derived.forall(_.isDefined))(
+        derived.flatten.toMap))(half)
     table(df, groupCol, "median", "mad", "w_total")(
       mad.heads.toSeq.sortBy(_._1).map { case (g, h) =>
         (g, ms(g), mad.values((g, rank(0.5, h.total))),

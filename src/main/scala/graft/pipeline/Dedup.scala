@@ -1581,13 +1581,24 @@ object Dedup {
     * of them — while the edge count never exceeds the input's (the
     * paper's size invariant), so no round shuffles more than the
     * original pair set. Each round is two aggregation+join passes over
-    * the shrinking edge set; lineage is truncated per round with an
-    * eager `localCheckpoint` (an iterative DataFrame plan otherwise
-    * grows a round deeper every iteration until the optimizer chokes).
-    * Convergence is an exact set-equality check (equal counts + empty
-    * one-sided EXCEPT — both sides are distinct); a fleet deployment
-    * that wants fewer driver round-trips can run the paper's bound of
-    * rounds unconditionally instead.
+    * the shrinking edge set, run through the graph family's one round
+    * driver ([[Rounds]]), which pins every round lazily.
+    *
+    * Stop test: `next` is a STAR FOREST — every leaf (the larger end
+    * `v` of a canonical edge) has exactly one centre, and no centre
+    * is also a leaf. One aggregate over `next` alone, one action per
+    * round, exact (no hash, no sample). Why it is exact: both star
+    * operations keep each component's node set and connectivity (the
+    * paper's invariant), so `next` has the input's components. In a
+    * star forest each star is one component; its centre is smaller
+    * than every leaf (edges are canonical, u < v), so the centre IS
+    * the component minimum and the min-neighbor read-out below
+    * returns it for every node. Conversely a star forest rooted at
+    * minima is the algorithm's fixed point (large-star and small-star
+    * both map it to itself), so the test fires on the first round
+    * whose output is the answer, without a second round to see the
+    * fixed point repeat. Not converging within [[CcRoundCap]] rounds
+    * is an `IllegalArgumentException`.
     *
     * At convergence the edges form stars rooted at each component's
     * minimum id. Output: (id, component) for every node of `pairs`,
@@ -1595,47 +1606,41 @@ object Dedup {
     * are singletons by definition and are not emitted — left-join +
     * `coalesce(component, id)` rebuilds the total corpus mapping
     * without shuffling the corpus through the iteration. */
-  def connectedComponents(pairs: DataFrame, idACol: String, idBCol: String,
-                          maxRounds: Int = 50): DataFrame = {
-    // LAZY checkpoints throughout the loop (round-11): an eager
-    // localCheckpoint is its own job and the count that follows is a
-    // second — lazy folds truncation+count into ONE action per round,
-    // halving the driver round-trips that dominate this iterative
-    // plan's wall-clock (the replay entries run several convergences
-    // back to back). The count() fully computes every partition, so
-    // the checkpoint it triggers is complete.
-    var edges = pairs
+  def connectedComponents(pairs: DataFrame, idACol: String,
+                          idBCol: String): DataFrame = {
+    val init = Rounds.pin(pairs
       .select(least(col(idACol), col(idBCol)).as("u"),
         greatest(col(idACol), col(idBCol)).as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull &&
         col("u") =!= col("v"))
-      .distinct().localCheckpoint(false)
-    // one count doubles as the emptiness test (isEmpty was a
-    // redundant extra job) and carries across rounds: the convergence
-    // test needs |next| == |edges| (round-10 review catch)
-    var edgeCount = edges.count()
-    var converged = edgeCount == 0L
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
-      val next = smallStar(largeStar(edges)).localCheckpoint(false)
-      val nextCount = next.count()
-      converged = nextCount == edgeCount && next.except(edges).isEmpty
-      edges = next
-      edgeCount = nextCount
-      rounds += 1
+      .distinct())
+    val run = Rounds.until("connected_components", CcRoundCap,
+        CcPinEvery, init)((e, _) => smallStar(largeStar(e))) {
+      (_, next, _) =>
+        val ends = next.select(col("u").as("id"), lit(0L).as("leaf"),
+            lit(true).as("centre"))
+          .unionAll(next.select(col("v").as("id"), lit(1L).as("leaf"),
+            lit(false).as("centre")))
+          .groupBy("id")
+          .agg(sum("leaf").as("leaf"), max("centre").as("centre"))
+        ends.agg(count(when(col("leaf") > 1L ||
+          (col("leaf") === 1L && col("centre")), 1)) === 0L)
     }
-    require(converged,
-      s"connectedComponents did not converge within $maxRounds rounds")
-    // driver-loop counter (Counters.note): contraction rounds are THE
-    // cost driver of every CC-shaped entry (d23, and d44 runs three
-    // of these sequentially); keep-last reports the final convergence
-    Counters.note("connected_components", "cc", Map(
-      "rounds" -> rounds.toLong, "star_edges" -> edgeCount))
+    require(run.stopped,
+      s"connectedComponents did not converge within $CcRoundCap rounds")
+    val edges = run.state
     val d = edges.select(col("u"), col("v"))
       .union(edges.select(col("v").as("u"), col("u").as("v")))
     d.groupBy("u").agg(min("v").as("mv"))
       .select(col("u").as("id"), least(col("u"), col("mv")).as("component"))
   }
+
+  /** Round cap of [[connectedComponents]]: O(log² n) rounds sit far
+    * below it on any real graph (a 256-node path takes under 10). */
+  private val CcRoundCap = 50
+
+  /** Every CC round runs the stop test, so every round pins. */
+  private val CcPinEvery = 1
 
   /** The star-edge form of a computed clustering: (component, id) for
     * every non-root node — exactly the shape [[connectedComponents]]
@@ -1662,11 +1667,10 @@ object Dedup {
     * by the batch are re-attached afterwards with their identity
     * component. */
   def mergeComponents(assign: DataFrame, newPairs: DataFrame,
-                      idACol: String, idBCol: String,
-                      maxRounds: Int = 50): DataFrame = {
+                      idACol: String, idBCol: String): DataFrame = {
     val stars = componentStarEdges(assign)
       .union(newPairs.select(col(idACol).as("u"), col(idBCol).as("v")))
-    val merged = connectedComponents(stars, "u", "v", maxRounds)
+    val merged = connectedComponents(stars, "u", "v")
     // full-outer on id: merged-only ids are new docs from the batch,
     // assign-only ids are untouched singletons (roots and non-roots of
     // touched clusters all sit on a star edge, so they are in merged)

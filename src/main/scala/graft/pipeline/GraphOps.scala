@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** One convergence-stopped PageRank run: the final rank vector, how
   * many iterations ran, whether the last measured delta was within
   * epsMicro, and how many blocking convergence probes were issued
-  * (the probe-batching contract — ≈ iterations / checkpointEvery). */
+  * (the probe-batching contract — one per pinned round plus the cap
+  * round, ⌈iterations / 5⌉). */
 final case class PageRankRun(ranks: DataFrame, iterations: Int,
                              converged: Boolean, probes: Int)
 
@@ -44,48 +45,48 @@ object GraphOps {
     * source id plus a partial-aggregating groupBy on the destination —
     * the corpus itself is never touched, only the (much smaller) pair
     * graph shuffles, co-partitioned on the node id across iterations.
-    * A fixed iteration count keeps the oracle expressible. Runs with
-    * many iterations should truncate lineage per round exactly as
-    * [[Dedup.connectedComponents]] does: `checkpointEvery = n` cuts
-    * the plan with an eager `localCheckpoint` after every n-th
-    * iteration (0 — the default, right for the oracle-expressible 3
-    * rounds — never checkpoints; the plan grows two joins per
-    * iteration otherwise, which the optimizer re-walks per action).
+    * A fixed iteration count keeps the oracle expressible. The rounds
+    * run through [[Rounds]], pinned every [[PageRankPinEvery]]-th: the
+    * oracle-expressible 3 rounds pin nothing, and a long run's plan
+    * never holds more than 5 rounds (two joins each) for the optimizer
+    * to re-walk.
     */
   def pageRankMicro(pairs: DataFrame, idACol: String, idBCol: String,
                     iterations: Int = 3,
-                    damping: Double = 0.85,
-                    checkpointEvery: Int = 0): DataFrame = {
+                    damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     require(damping > 0 && damping < 1, "damping must be in (0, 1)")
-    require(checkpointEvery >= 0, "checkpointEvery must be >= 0")
     val (edges, deg) = edgesAndDegrees(pairs, idACol, idBCol)
-    var ranks = deg.select(col("src").as("id"),
-      lit(1000000L).as("rank_micro"))
-    for (it <- 1 to iterations) {
-      ranks = pageRankStep(edges, deg, ranks, damping)
-      if (checkpointEvery > 0 && it % checkpointEvery == 0 &&
-        it < iterations)
-        ranks = ranks.localCheckpoint()
-    }
-    ranks
+    Rounds.fixed("pagerank", iterations, PageRankPinEvery,
+      initialRanks(deg))((ranks, _) =>
+      pageRankStep(edges, deg, ranks, damping))
   }
+
+  /** The PageRank family's pin cadence: a round adds two joins and a
+    * groupBy, so five rounds between pins bound the plan while the
+    * 3-round catalog entries (g1, g7, g9, g10) pin nothing. */
+  private val PageRankPinEvery = 5
+
+  /** r₀ = 1e6 on every node of the degree table. */
+  private def initialRanks(deg: DataFrame): DataFrame =
+    deg.select(col("src").as("id"), lit(1000000L).as("rank_micro"))
 
   /** Convergence-stopped PageRank — the production form next to the
     * oracle-expressible fixed-iteration [[pageRankMicro]]: iterates
     * until no node's rank moved by more than `epsMicro` micro-units
-    * between rounds (or `maxIterations`), checkpointing every
-    * `checkpointEvery` rounds so the plan depth stays bounded however
-    * long convergence takes. The convergence probe — a 1-row
+    * between rounds (or `maxIterations`), pinned every
+    * [[PageRankPinEvery]] rounds so the plan depth stays bounded
+    * however long convergence takes. The convergence probe — a 1-row
     * max-aggregate fetch over the two rank vectors joined on id, both
     * node-sized and co-partitioned; nothing data-sized reaches the
-    * driver — runs ONLY on checkpoint rounds, folded into the
-    * checkpoint barrier the loop already pays, never as a per-round
+    * driver — runs ONLY on pinned rounds and the cap round ([[Rounds]]),
+    * folded into the pin barrier the loop already pays, never as a
+    * per-round
     * blocking job (a per-round probe was measured driver-probe
     * dominated: 76 blocking jobs on a 76-round run, 44 s on a graph
     * whose rank steps cost far less). The cost of batching is a
     * bounded OVERSHOOT: convergence reached between probes is noticed
-    * at the next probe, so up to `checkpointEvery − 1` extra rounds
+    * at the next probe, so up to 4 extra rounds
     * run — and because the residual decays geometrically those rounds
     * move every rank by at most epsMicro·damping/(1−damping)
     * micro-units past the stopping point, noise-floor scale by the
@@ -110,48 +111,30 @@ object GraphOps {
     * rounding limit cycle under a too-small epsMicro, or maxIterations
     * hit, instead of silently shipping the last vector) and `probes`,
     * the number of blocking driver convergence checks the run issued,
-    * one per checkpoint round (≈ iterations / checkpointEvery) rather
-    * than one per round, so the probe-batching contract is assertable,
-    * not just claimed. */
+    * one per pinned round plus the cap round (⌈iterations / 5⌉)
+    * rather than one per round, so the probe-batching contract is
+    * assertable, not just claimed. The cap round's probe keeps the
+    * `converged` flag a measured delta, never a guess. */
   def pageRankUntilRun(pairs: DataFrame, idACol: String,
                        idBCol: String, epsMicro: Long = 0L,
                        maxIterations: Int = 50,
-                       damping: Double = 0.85,
-                       checkpointEvery: Int = 5): PageRankRun = {
+                       damping: Double = 0.85): PageRankRun = {
     require(epsMicro >= 0, "epsMicro must be >= 0")
     require(maxIterations >= 1, "maxIterations must be >= 1")
     require(damping > 0 && damping < 1, "damping must be in (0, 1)")
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
     val (edges0, deg0) = edgesAndDegrees(pairs, idACol, idBCol)
     // the loop re-reads edges and deg every round — pin them once
     val edges = edges0.localCheckpoint()
     val deg = deg0.localCheckpoint()
-    var ranks = deg.select(col("src").as("id"),
-      lit(1000000L).as("rank_micro")).localCheckpoint()
-    var it = 0
-    var probes = 0
-    var converged = false
-    while (it < maxIterations && !converged) {
-      it += 1
-      var next = pageRankStep(edges, deg, ranks, damping)
-      // probe only where the loop already materializes — the
-      // checkpoint barrier — plus the final round (so the returned
-      // `converged` flag always reflects a measured delta, never a
-      // guess). Unprobed rounds stay fully lazy: they extend lineage,
-      // cost nothing until the next checkpoint materializes them.
-      if (it % checkpointEvery == 0 || it == maxIterations) {
-        next = next.localCheckpoint()
-        probes += 1
-        val delta = next.as("n")
-          .join(ranks.as("p"), col("n.id") === col("p.id"))
-          .agg(max(abs(col("n.rank_micro") - col("p.rank_micro")))
-            .as("d"))
-          .head()
-        converged = delta.isNullAt(0) || delta.getLong(0) <= epsMicro
-      }
-      ranks = next
+    val run = Rounds.until("pagerank_until", maxIterations,
+        PageRankPinEvery, initialRanks(deg))((ranks, _) =>
+        pageRankStep(edges, deg, ranks, damping)) { (prev, next, _) =>
+      // an empty graph has no delta: converged
+      next.as("n").join(prev.as("p"), col("n.id") === col("p.id"))
+        .agg(coalesce(max(abs(col("n.rank_micro") -
+          col("p.rank_micro"))) <= epsMicro, lit(true)))
     }
-    PageRankRun(ranks, it, converged, probes)
+    PageRankRun(run.state, run.rounds, run.stopped, run.checks)
   }
 
   /** Shared per-iteration step: contributions along edges (exact
@@ -212,29 +195,22 @@ object GraphOps {
                                 idBCol: String, seeds: Seq[Long],
                                 iterations: Int = 3,
                                 damping: Double = 0.85,
-                                checkpointEvery: Int = 0,
                                 sparse: Boolean = false): DataFrame = {
     require(seeds.nonEmpty, "need at least one seed")
     require(iterations >= 1, "iterations must be >= 1")
     require(damping > 0 && damping < 1, "damping must be in (0, 1)")
-    require(checkpointEvery >= 0, "checkpointEvery must be >= 0")
     val baseMicro = math.round((1.0 - damping) * 1e6)
     def seedBase(id: Column): Column =
       when(id.isin(seeds.map(Long.box): _*), lit(baseMicro))
         .otherwise(lit(0L))
     val (edges, deg) = edgesAndDegrees(pairs, idACol, idBCol)
     if (sparse) return pprSparse(edges, deg, seeds, iterations,
-      damping, baseMicro, checkpointEvery)
-    var ranks = deg.select(col("src").as("id"),
-      when(col("src").isin(seeds.map(Long.box): _*), lit(1000000L))
-        .otherwise(lit(0L)).as("rank_micro"))
-    for (it <- 1 to iterations) {
-      ranks = pageRankStepWith(edges, deg, ranks, damping, seedBase)
-      if (checkpointEvery > 0 && it % checkpointEvery == 0 &&
-        it < iterations)
-        ranks = ranks.localCheckpoint()
-    }
-    ranks
+      damping, baseMicro)
+    Rounds.fixed("personalized_pagerank", iterations, PageRankPinEvery,
+      deg.select(col("src").as("id"),
+        when(col("src").isin(seeds.map(Long.box): _*), lit(1000000L))
+          .otherwise(lit(0L)).as("rank_micro")))((ranks, _) =>
+      pageRankStepWith(edges, deg, ranks, damping, seedBase))
   }
 
   /** SPARSE-FRONTIER personalized PageRank — bit-identical output to
@@ -259,8 +235,8 @@ object GraphOps {
     * nodes whose new rank is 0 drop out of the carried state. */
   private def pprSparse(edges: DataFrame, deg: DataFrame,
                         seeds: Seq[Long], iterations: Int,
-                        damping: Double, baseMicro: Long,
-                        checkpointEvery: Int): DataFrame = {
+                        damping: Double,
+                        baseMicro: Long): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // seeds restricted to graph nodes (an absent seed has no edges to
@@ -271,15 +247,15 @@ object GraphOps {
     // deg would be estimated at deg's size and lose the broadcast)
     val seedRows = deg.filter(col("src").isin(seeds.distinct: _*))
       .select(col("src")).as[Long].collect().toSeq.toDF("id")
-    var state = seedRows.select(col("id"),
-      lit(1000000L).as("rank_micro"))
-    for (it <- 1 to iterations) {
+    val state = Rounds.fixed("ppr_sparse", iterations, PageRankPinEvery,
+        seedRows.select(col("id"), lit(1000000L).as("rank_micro"))) {
+        (state, _) =>
       val inflow = edges
         .join(state, edges("src") === state("id"))
         .join(deg, "src")
         .select(col("dst"), expr("rank_micro div deg").as("contrib"))
         .groupBy("dst").agg(sum("contrib").as("inflow"))
-      state = inflow.as("i")
+      inflow.as("i")
         .join(seedRows.select(col("id").as("sid")).as("s"),
           col("i.dst") === col("s.sid"), "full")
         .select(coalesce(col("i.dst"), col("s.sid")).as("id"),
@@ -288,9 +264,6 @@ object GraphOps {
             round(lit(damping) * coalesce(col("i.inflow"), lit(0L)))
               .cast("long")).as("rank_micro"))
         .filter(col("rank_micro") > 0)
-      if (checkpointEvery > 0 && it % checkpointEvery == 0 &&
-        it < iterations)
-        state = state.localCheckpoint()
     }
     // deg is one row per node by construction (groupBy src) — no
     // distinct, so the final zero-fill is one join, not join+shuffle
@@ -347,10 +320,10 @@ object GraphOps {
     // is value-identical to the long path below 2^53.
     val wsum = edges.groupBy("src")
       .agg(sum(col("w").cast("decimal(38,0)")).as("wsum"))
-    var ranks = wsum.select(col("src").as("id"),
-      lit(1000000L).as("rank_micro"))
-    for (_ <- 1 to iterations) {
-      ranks = edges.join(ranks, edges("src") === ranks("id"))
+    Rounds.fixed("weighted_pagerank", iterations, PageRankPinEvery,
+        wsum.select(col("src").as("id"), lit(1000000L).as("rank_micro"))) {
+        (ranks, _) =>
+      edges.join(ranks, edges("src") === ranks("id"))
         .join(wsum, "src")
         .select(col("dst"),
           expr("(CAST(rank_micro AS DECIMAL(38,0)) * w) div wsum")
@@ -361,7 +334,6 @@ object GraphOps {
           (lit(base) + round(lit(damping) * col("inflow").cast("double"))
             .cast("long")).as("rank_micro"))
     }
-    ranks
   }
 
   /** Directed edge expansion + degree table of an undirected pair
@@ -494,10 +466,8 @@ object GraphOps {
     * Returns surviving (id, deg) — degrees IN the peeled subgraph.
     * Per round: one map-side-combining degree count + two semi-joins
     * co-partitioned on the vertex key the edges already carry; edge
-    * count never grows. At real scale, localCheckpoint the edge frame
-    * every few rounds (the connectedComponents contract) to cap
-    * lineage; at a fixed handful of rounds the lineage is bounded
-    * already. */
+    * count never grows. The edge frame is pinned every
+    * [[PeelPinEvery]] rounds through [[Rounds]]. */
   def kCorePeel(pairs: DataFrame, idACol: String, idBCol: String,
                 k: Int, rounds: Int): DataFrame =
     peeledDegrees(pairs, idACol, idBCol, k, rounds)
@@ -535,24 +505,24 @@ object GraphOps {
                             rounds: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(rounds >= 1, "rounds must be >= 1")
-    // localCheckpoint BEFORE the loop, and every few rounds inside it:
-    // each round's plan embeds the previous round's ~3× (e directly +
-    // twice through keep's degree frame), so an un-cut lineage grows
-    // 3^rounds copies of the upstream pair pipeline — at sf0.1 the
-    // LSH-verified input made round 4's ANALYSIS alone run minutes.
-    // Checkpointing makes every round start from a leaf (the
-    // pageRankMicro / connectedComponents contract).
-    var e = normalizedEdges(pairs, idACol, idBCol).localCheckpoint()
-    var deg = degreesOf(e)
-    (1 to rounds).foreach { r =>
-      val keep = deg.filter(col("deg") >= k).select("id")
-      e = e.join(keep, col("lo") === col("id"), "left_semi")
+    // pinned BEFORE the loop so round 1 starts from a leaf
+    val e0 = normalizedEdges(pairs, idACol, idBCol).localCheckpoint()
+    degreesOf(Rounds.fixed("kcore", rounds, PeelPinEvery, e0) { (e, _) =>
+      val keep = degreesOf(e).filter(col("deg") >= k).select("id")
+      e.join(keep, col("lo") === col("id"), "left_semi")
         .join(keep, col("hi") === col("id"), "left_semi")
-      if (r % 2 == 0 && r < rounds) e = e.localCheckpoint()
-      deg = degreesOf(e)
-    }
-    deg
+    })
   }
+
+  /** Pin cadence of the self-referencing loops (k-core peel, label
+    * propagation): each round's plan embeds the previous round's
+    * about 3× (the state directly plus twice through its own degree
+    * or label frame), so an un-cut lineage grows 3^rounds copies of
+    * the upstream pair pipeline — at sf0.1 the LSH-verified input made
+    * k-core round 4's ANALYSIS alone run minutes (PLANS.md "Iterated
+    * self-referencing plans blow up"). Every second round caps that at
+    * 9 copies. */
+  private val PeelPinEvery = 2
 
   /** Degrees over a normalized (lo, hi) edge frame. */
   private def degreesOf(e: DataFrame): DataFrame =
@@ -608,8 +578,8 @@ object GraphOps {
     * (max of a (count, −label) struct — no window, no sort); only the
     * edge relation shuffles, and a boilerplate hub is one wide groupBy
     * key that partial aggregation absorbs (the pageRankMicro
-    * argument). Lineage is cut every 2 rounds (the iterative-operator
-    * house contract). Ids must be non-negative longs (the −label
+    * argument). Lineage is cut every [[PeelPinEvery]] rounds through
+    * [[Rounds]]. Ids must be non-negative longs (the −label
     * tie-break negates them); isolated nodes never appear, as in every
     * operator of this family. Returns (id, label). */
   def labelPropagation(pairs: DataFrame, idACol: String, idBCol: String,
@@ -629,10 +599,10 @@ object GraphOps {
     val edges = e.select(col("lo").as("src"), col("hi").as("dst"))
       .union(e.select(col("hi").as("src"), col("lo").as("dst")))
       .localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-    (1 to rounds).foreach { r =>
-      labels = edges
+    Rounds.fixed("label_propagation", rounds, PeelPinEvery,
+        edges.select(col("src").as("id")).distinct()
+          .withColumn("label", col("id"))) { (labels, _) =>
+      edges
         .join(labels, edges("dst") === labels("id"))
         .groupBy(col("src"), col("label"))
         .agg(count(lit(1)).as("cnt"))
@@ -640,9 +610,7 @@ object GraphOps {
         .agg(max(struct(col("cnt").as("c"), (-col("label")).as("nl")))
           .as("m"))
         .select(col("src").as("id"), (-col("m.nl")).as("label"))
-      if (r % 2 == 0 && r < rounds) labels = labels.localCheckpoint()
     }
-    labels
   }
 
   /** Per-edge structural-support scores — the edge-pruning pass that
@@ -934,9 +902,12 @@ object GraphOps {
     * discipline, made safe by idempotence at the fixpoint. Shape at
     * scale: per level, one node-keyed join+groupBy for the round and
     * one edge contraction groupBy — all keyed exchanges; the graph
-    * SHRINKS every level, so level 1 dominates. Driver state is one
-    * Long per level (the move count — a bounded parameter); labels
-    * and edges stay DataFrames, pinned per level.
+    * SHRINKS every level, so level 1 dominates. The levels run
+    * through [[Rounds]], pinned every level ([[LouvainPinEvery]]); the
+    * stop test is one aggregate over the sweep's moves. A sweep's
+    * moves are applied at the START of the next level, so the level
+    * that finds no move leaves nothing to apply and the converged
+    * labels are the state as it stands.
     *
     * Returns one row per ORIGINAL node: (id, community, n_levels)
     * where community is the converged label and n_levels counts the
@@ -946,51 +917,73 @@ object GraphOps {
                        idBCol: String, maxLevels: Int = 4): DataFrame = {
     require(maxLevels >= 1 && maxLevels <= 16, "maxLevels in [1, 16]")
     val e0 = normalizedEdges(pairs, idACol, idBCol).localCheckpoint()
-    var ew = e0.withColumn("w", lit(1L))
-    var loops = e0.limit(0).select(col("lo").as("id"),
-      col("lo").as("w"))
-    var labels = degreesOf(e0).select(col("id"),
-      col("id").as("community"))
-    var nLevels = 0L
-    var moved = true
-    while (moved && nLevels < maxLevels) {
-      val r = louvainWeightedRound(ew, loops).localCheckpoint()
-      // 1-row bounded parameter: did this sweep move anything?
-      val nMoves = r.filter(col("community") =!= col("id")).count()
-      moved = nMoves > 0
-      if (moved) {
-        nLevels += 1
-        val asg = r.select(col("id"), col("community"))
-        labels = labels
-          .join(asg.select(col("community").as("_c"),
-            col("id").as("community")), "community")
-          .select(col("id"), col("_c").as("community"))
-          .localCheckpoint(false)
-        // contraction: inter-community weights sum, intra weights and
-        // mapped old self-loops fold into the new loops — total edge
-        // weight (and the Q scale) conserved
-        val ce = ew
-          .join(asg.select(col("id").as("lo"),
-            col("community").as("ca")), "lo")
-          .join(asg.select(col("id").as("hi"),
-            col("community").as("cb")), "hi")
-          .localCheckpoint(false)
-        ew = ce.filter(col("ca") =!= col("cb"))
+    val init = LouvainLevel(e0.withColumn("w", lit(1L)),
+      e0.limit(0).select(col("lo").as("id"), col("lo").as("w")),
+      degreesOf(e0).select(col("id"), col("id").as("community")),
+      moves = null) // no sweep yet: level 1 applies nothing
+    val run = Rounds.until("louvain", maxLevels, LouvainPinEvery, init) {
+      (l, r) =>
+        val c = if (r == 1) l else l.contracted
+        c.copy(moves = louvainWeightedRound(c.ew, c.loops))
+    } { (_, next, _) =>
+      next.moves.agg(count(when(col("community") =!= col("id"), 1)) === 0L)
+    }
+    // a stopped run's last sweep moved nothing; a capped one's moves
+    // are still to be applied
+    val (labels, nLevels) =
+      if (run.stopped) (run.state.labels, run.rounds - 1)
+      else (run.state.relabeled, run.rounds)
+    labels.withColumn("n_levels", lit(nLevels.toLong))
+  }
+
+  /** Every Louvain level runs the stop test, so every level pins. */
+  private val LouvainPinEvery = 1
+
+  /** [[louvainConverged]]'s loop state: the contracted weighted graph
+    * (`ew`, `loops`), each original node's current label, and the
+    * last sweep's moves, not yet applied. */
+  private final case class LouvainLevel(ew: DataFrame, loops: DataFrame,
+                                        labels: DataFrame,
+                                        moves: DataFrame) {
+    private def asg = moves.select(col("id"), col("community"))
+
+    /** The original nodes' labels after this level's moves. */
+    def relabeled: DataFrame = labels
+      .join(asg.select(col("community").as("_c"),
+        col("id").as("community")), "community")
+      .select(col("id"), col("_c").as("community"))
+
+    /** The next level's graph: inter-community weights sum, intra
+      * weights and mapped old self-loops fold into the new loops —
+      * total edge weight (and the Q scale) conserved. */
+    def contracted: LouvainLevel = {
+      // pinned within the step, as they are made: `ce` feeds both the
+      // edges and the loops, and those two feed this same step's sweep
+      // (pinned after it, their shuffles would run twice)
+      val ce = Rounds.pin(ew
+        .join(asg.select(col("id").as("lo"), col("community").as("ca")),
+          "lo")
+        .join(asg.select(col("id").as("hi"), col("community").as("cb")),
+          "hi"))
+      LouvainLevel(
+        Rounds.pin(ce.filter(col("ca") =!= col("cb"))
           .select(least(col("ca"), col("cb")).as("lo"),
             greatest(col("ca"), col("cb")).as("hi"), col("w"))
-          .groupBy("lo", "hi").agg(sum(col("w")).as("w"))
-          .localCheckpoint(false)
-        loops = ce.filter(col("ca") === col("cb"))
+          .groupBy("lo", "hi").agg(sum(col("w")).as("w"))),
+        Rounds.pin(ce.filter(col("ca") === col("cb"))
           .select(col("ca").as("id"), col("w"))
           .unionByName(loops.join(asg, "id")
             .select(col("community").as("id"), col("w")))
-          .groupBy("id").agg(sum(col("w")).as("w"))
-          .localCheckpoint(false)
-      }
+          .groupBy("id").agg(sum(col("w")).as("w"))),
+        relabeled, moves)
     }
-    graft.ops.Counters.note("louvain", "loop",
-      Map("levels" -> nLevels, "cap" -> maxLevels))
-    labels.withColumn("n_levels", lit(nLevels))
+  }
+
+  private object LouvainLevel {
+    /** The driver pins what crosses rounds unpinned: the labels chain
+      * and the sweep's moves (the graph is pinned where it is made). */
+    implicit val pin: Rounds.Pin[LouvainLevel] = l =>
+      l.copy(labels = Rounds.pin(l.labels), moves = Rounds.pin(l.moves))
   }
 
   /** Degree assortativity (Newman, Phys. Rev. Lett. 2002): the
@@ -1058,13 +1051,15 @@ object GraphOps {
     * seed with a known-bad document set and pull everything within
     * k near-dup hops for review.
     *
-    * Frontier-iterated exactly like the sparse PPR: each round is
+    * Frontier-iterated like the sparse PPR over ONE (id, hops) frame:
+    * the frontier is its rows at the previous hop, and each round is
     * ONE frontier⋈edges equi-join on the node id plus a distinct and
-    * an anti-join against the settled set — work scales with the
-    * frontier and its boundary, never the node count, and AQE
-    * broadcasts the frontier side when it is small. Settled/frontier
-    * frames are localCheckpointed per round (the iterative-operator
-    * lineage contract). BFS layers are set-determined (layer r =
+    * an anti-join against the reached set — the join work scales with
+    * the frontier and its boundary, never the node count, and AQE
+    * broadcasts the frontier side when it is small. The frame runs
+    * through [[Rounds]], pinned every round ([[BfsPinEvery]]), and the
+    * loop stops at the first round that adds no row (one aggregate
+    * over the pinned frame). BFS layers are set-determined (layer r =
     * nodes reachable in exactly r hops), so the output is exact and
     * SQL-replayable as one unrolled CTE chain per hop. Seeds absent
     * from the graph are dropped (the PPR seed contract). Returns
@@ -1083,25 +1078,23 @@ object GraphOps {
     // seeds absent from the graph drop out; the <= |seeds| present ids
     // come back to the driver, so the first frontier is a local
     // relation the planner knows is tiny
-    var settled = edges.select(col("src").as("id")).distinct()
+    val seeded = edges.select(col("src").as("id")).distinct()
       .filter(col("id").isin(seeds.distinct: _*))
       .as[Long].collect().toSeq.toDF("id")
       .select(col("id"), lit(0L).as("hops"))
-    var frontier = settled.select("id")
-    var hop = 1
-    while (hop <= maxHops && !frontier.isEmpty) {
-      val next = frontier.join(edges, col("id") === col("src"))
+    Rounds.until("bfs", maxHops, BfsPinEvery, seeded) { (reached, hop) =>
+      val next = reached.filter(col("hops") === hop - 1)
+        .join(edges, col("id") === col("src"))
         .select(col("dst").as("id")).distinct()
-        .join(settled, Seq("id"), "left_anti")
-        .localCheckpoint()
-      settled = settled
-        .unionAll(next.select(col("id"), lit(hop.toLong).as("hops")))
-        .localCheckpoint()
-      frontier = next
-      hop += 1
-    }
-    settled
+        .join(reached, Seq("id"), "left_anti")
+      reached.unionAll(next.select(col("id"), lit(hop.toLong).as("hops")))
+    } { (_, reached, hop) =>
+      reached.agg(coalesce(max(col("hops")), lit(-1L)) < hop)
+    }.state
   }
+
+  /** Every BFS round runs the stop test, so every round pins. */
+  private val BfsPinEvery = 1
 
   /** Resource-Allocation link prediction (Zhou, Lü & Zhang 2009) over
     * the undirected pair graph: for every NON-adjacent pair (a, b)

@@ -300,8 +300,8 @@ class DedupSpec extends AnyFunSuite {
     edges.toDF("id_a", "id_b")
   }
 
-  private def ccMap(edges: Seq[(Long, Long)], maxRounds: Int = 50) =
-    Dedup.connectedComponents(pairsDf(edges), "id_a", "id_b", maxRounds)
+  private def ccMap(edges: Seq[(Long, Long)]) =
+    Dedup.connectedComponents(pairsDf(edges), "id_a", "id_b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("connected components match a union-find reference on random graphs") {
@@ -332,8 +332,14 @@ class DedupSpec extends AnyFunSuite {
     // min-label propagation would need ~255 rounds here. The bound
     // below fails loudly if the algorithm ever degrades to O(diameter).
     val path = (0L until 255L).map(i => (i, i + 1))
-    val got = ccMap(path, maxRounds = 10)
+    graft.ops.Counters.drain() // isolate
+    val got = ccMap(path)
     assert(got === (0L to 255L).map(_ -> 0L).toMap)
+    // the round driver's note for this run
+    val note = graft.ops.Counters.drain().collectFirst {
+      case ("connected_components", "loop", m) => m }.get
+    assert(note("stopped") == true)
+    assert(note("rounds").asInstanceOf[Long] <= 10L, s"note $note")
   }
 
   test("incremental merge equals recomputing components from all pairs") {

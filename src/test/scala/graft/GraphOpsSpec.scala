@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import graft.pipeline.GraphOps
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -121,26 +125,43 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(total > 3990000L && total <= 4000000L, s"total $total")
   }
 
-  test("pageRank: checkpointEvery bounds plan depth, identical ranks") {
-    val p = pairs((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (1L, 3L),
+  /** Integer PageRank reference: every round's micro-rank vector,
+    * round 0 first — the operator's formula with its one IEEE
+    * multiply and Spark's half-up round. */
+  private def refRanks(edges: Seq[(Long, Long)], rounds: Int,
+                       damping: Double = 0.85): Seq[Map[Long, Long]] = {
+    val directed = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+    val deg = directed.groupBy(_._1).map { case (v, es) => v -> es.size }
+    val base = math.round((1.0 - damping) * 1e6)
+    def halfUp(x: Double): Long = BigDecimal(x)
+      .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+    Iterator.iterate(deg.map { case (v, _) => v -> 1000000L }) { r =>
+      directed.groupBy(_._2).map { case (v, in) =>
+        v -> (base + halfUp(damping * in.map { case (u, _) =>
+          r(u) / deg(u) }.sum.toDouble))
+      }
+    }.take(rounds + 1).toSeq
+  }
+
+  test("pageRank: the driver's pin bounds plan depth; ranks equal an integer reference") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (1L, 3L),
       (4L, 5L), (5L, 6L))
-    val plain = GraphOps.pageRankMicro(p, "id_a", "id_b",
+    val p = pairs(edges: _*)
+    val twelve = GraphOps.pageRankMicro(p, "id_a", "id_b",
       iterations = 12)
-    val cut = GraphOps.pageRankMicro(p, "id_a", "id_b",
-      iterations = 12, checkpointEvery = 3)
-    assert(ranks(plain) === ranks(cut))
-    // 12 uncheckpointed iterations carry 2 joins each; the last cut
-    // (round 9) leaves at most 3 iterations' worth in the final plan.
-    // Counted RELATIVELY (AQE's toString may print initial+final plan
-    // sections, duplicating nodes a constant factor both sides).
+    // unpinned, 12 rounds carry 2 joins each (~24); pinned every 5th
+    // round, the last pin (round 10) leaves 2 rounds in the final
+    // plan — no more than the 3 unpinned rounds of the oracle form.
+    // Both counted before any action (an executed AQE plan prints its
+    // initial and final sections, doubling every node).
     def joins(df: org.apache.spark.sql.DataFrame): Int =
       "(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)".r
         .findAllIn(df.queryExecution.executedPlan.toString).size
-    val jPlain = joins(plain)
-    val jCut = joins(cut)
-    assert(jPlain >= 20, s"expected ~24 joins uncheckpointed, got $jPlain")
-    assert(jCut * 3 <= jPlain,
-      s"checkpointed plan not bounded: $jCut joins vs $jPlain plain")
+    val j3 = joins(GraphOps.pageRankMicro(p, "id_a", "id_b"))
+    val j12 = joins(twelve)
+    assert(j3 >= 6, s"expected ~6 joins in 3 unpinned rounds, got $j3")
+    assert(j12 <= j3, s"12-round plan not bounded: $j12 joins vs $j3")
+    assert(ranks(twelve) === refRanks(edges, 12).last)
   }
 
   test("pageRankUntil converges to the integer fixed point; top order matches g1's") {
@@ -153,11 +174,11 @@ class GraphOpsSpec extends AnyFunSuite {
     val p = pairs((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L), (4L, 6L),
       (5L, 6L), (3L, 4L))
     val fixed = GraphOps.pageRankUntilRun(p, "id_a", "id_b",
-      epsMicro = 0L, maxIterations = 60, checkpointEvery = 4).ranks
+      epsMicro = 0L, maxIterations = 60).ranks
     val got = ranks(fixed)
     // a true fixed point: one more exact-integer step changes nothing
     val again = ranks(GraphOps.pageRankUntilRun(p, "id_a", "id_b",
-      epsMicro = 0L, maxIterations = 61, checkpointEvery = 4).ranks)
+      epsMicro = 0L, maxIterations = 61).ranks)
     assert(got === again)
     // the bridge endpoints are the centrality winners, mirror-equal;
     // ordering agrees with the oracle-expressible 3-iteration g1 form
@@ -173,30 +194,26 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(iso === Map(10L -> 1000000L, 11L -> 1000000L))
   }
 
-  test("pageRankUntilRun batches the convergence probe onto checkpoint rounds") {
-    val p = pairs((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L), (4L, 6L),
+  test("pageRankUntilRun batches the convergence probe onto pinned rounds") {
+    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L), (4L, 6L),
       (5L, 6L), (3L, 4L))
-    // checkpointEvery=1 is the per-round-probe form: the reference
-    // for both the fixed point and the probe count
-    val every = GraphOps.pageRankUntilRun(p, "id_a", "id_b",
-      epsMicro = 0L, maxIterations = 60, checkpointEvery = 1)
-    val batched = GraphOps.pageRankUntilRun(p, "id_a", "id_b",
-      epsMicro = 0L, maxIterations = 60, checkpointEvery = 4)
-    // identical fixed point and converged flag (a true fixed point is
-    // idempotent, so the <=3-round overshoot changes no rank)
-    assert(ranks(every.ranks) === ranks(batched.ranks))
-    assert(every.converged && batched.converged)
-    // per-round form probes once per iteration; the batched form one
-    // per checkpoint round — the blocking-driver-job count drops by
-    // ~checkpointEvery
-    assert(every.probes === every.iterations)
-    assert(batched.probes ===
-      (batched.iterations + 3) / 4,
+    val batched = GraphOps.pageRankUntilRun(pairs(edges: _*), "id_a",
+      "id_b", epsMicro = 0L, maxIterations = 60)
+    // the per-round reference: the first round whose vector equals
+    // its predecessor's is where a probe-every-round loop would stop
+    val ref = refRanks(edges, 60)
+    val first = (1 to 60).find(i => ref(i) == ref(i - 1)).get
+    // a true fixed point, reached and recognized
+    assert(batched.converged)
+    assert(ranks(batched.ranks) === ref(first))
+    // one probe per pinned round (every 5th) — the blocking-driver-job
+    // count drops 5×
+    assert(batched.probes === (batched.iterations + 4) / 5,
       s"probes=${batched.probes} iterations=${batched.iterations}")
     // overshoot is bounded: the batched run stops at the first probe
     // round at-or-after the per-round stopping point
-    assert(batched.iterations >= every.iterations &&
-      batched.iterations < every.iterations + 4)
+    assert(batched.iterations >= first &&
+      batched.iterations < first + 5)
   }
 
   test("hub skew: degree orientation bounds wedge fan-out on a 2k-star + cliques") {
@@ -806,5 +823,27 @@ class GraphOpsSpec extends AnyFunSuite {
     val got = GraphOps.louvainOneLevel(pairs((7L, 3L)), "id_a", "id_b")
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(got === Map(3L -> 3L, 7L -> 3L), got.toString)
+  }
+
+  test("one loop: the round driver is the graph family's only round loop") {
+    def read(f: String) =
+      Files.readString(Paths.get("src/main/scala/graft/pipeline", f))
+    val dedup = read("Dedup.scala")
+    val cc = dedup.substring(dedup.indexOf("def connectedComponents("),
+      dedup.indexOf("def componentStarEdges("))
+    val loop = "while \\(|for \\(|foreach".r
+    Seq("GraphOps.scala" -> read("GraphOps.scala"),
+      "connectedComponents" -> cc).foreach { case (name, src) =>
+      assert(loop.findFirstIn(src).isEmpty, name)
+      assert(src.contains("Rounds."), name)
+    }
+    assert("while \\(".r.findAllIn(read("Rounds.scala")).size === 1)
+    // the per-call loop knobs are gone
+    val knobs = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => "checkpointEvery|maxRounds".r
+        .findFirstIn(Files.readString(p)).nonEmpty)
+      .map(_.getFileName.toString).toSeq
+    assert(knobs.isEmpty, knobs)
   }
 }
